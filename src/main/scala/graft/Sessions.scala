@@ -14,22 +14,15 @@ import org.apache.spark.sql.SparkSession
   *    vectorized reader otherwise rejects (normalized in [[Tables.events]]).
   *  - UTC session timezone: date/timestamp semantics match the DuckDB
   *    oracle and are cluster-location-independent.
+  *  - Shuffle codec and scheduler mode stay at Spark's defaults (lz4,
+  *    FIFO): zstd and FAIR were measured and lost on local[32]
+  *    (OPTIMIZATION_r21.md).
   */
 object Sessions {
   private def builder(cpus: String) =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // Shuffle/spill codec, A/B-able per run (guide §2.3: "no
-      // universal answer — measure"). Default = Spark's own lz4; a
-      // bandwidth-constrained cluster flips to zstd via env.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      // Scheduler mode for concurrent driver-thread jobs (the ModelDag
-      // waves): FAIR interleaves concurrent models' stages instead of
-      // FIFO head-of-line blocking (guide §2.6) — A/B-able per run.
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FIFO"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

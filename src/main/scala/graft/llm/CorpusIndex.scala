@@ -178,10 +178,9 @@ object NearDupIndex {
   *     a ~TB rewrite per shard at 10^11 docs). `compactToBase` folds
   *     the delta chain's FILES; superseded row versions stay until a
   *     [[compactLabels]] rewrite (they are tiny relative to bands).
-  *     The pre-r18 full-SNAPSHOT layout remains readable and writable
-  *     ([[seedShards]]/[[addShard]] `snapshotLabels = true`) for
-  *     callers that want one plain self-contained table per commit;
-  *     [[loadLabels]] detects which layout a dir uses.
+  *     A pre-r18 full-SNAPSHOT labels dir stays readable
+  *     ([[loadLabels]] detects which layout a dir uses); folding a
+  *     shard onto one is refused.
   *   - `bands/` — [[AtomicTable.commitDelta]] APPENDS of each shard's
   *     banded signature rows. Shards are disjoint, so deltas are
   *     disjoint by construction and append == upsert; the per-shard
@@ -201,26 +200,19 @@ object ShardedNearDupIndex {
   private def bandsDir(dir: String) = s"$dir/bands"
   private val LabV = "lab_v"
 
-  /** Fail fast when `snapshotLabels` disagrees with the layout the
-    * labels dir was seeded with (r18 ADVICE): a delta commit onto a
-    * snapshot-seeded dir writes the `_layout_delta` marker and flips
-    * the dir, so readMerged would union full snapshot versions
-    * (lacking `lab_v`) as live deltas — duplicate rows plus a
-    * missing-column failure whose shape depends on which parquet file
-    * Spark samples for the schema. Mixed layouts are unsupported, so
-    * refuse them at the write boundary instead. */
-  private def requireLabelLayout(spark: SparkSession, dir: String,
-                                 snapshotLabels: Boolean): Unit = {
+  /** Fail fast on a labels dir committed in the legacy snapshot
+    * layout (r18 ADVICE): a delta commit onto it writes the
+    * `_layout_delta` marker and flips the dir, so readMerged would
+    * union full snapshot versions (lacking `lab_v`) as live deltas —
+    * duplicate rows plus a missing-column failure whose shape depends
+    * on which parquet file Spark samples for the schema. Mixed layouts
+    * are unsupported, so refuse them at the write boundary instead. */
+  private def requireLabelLayout(spark: SparkSession, dir: String): Unit = {
     val ld = labelsDir(dir)
-    if (AtomicTable.committedVersions(spark, ld).nonEmpty) {
-      val committedSnapshot = !AtomicTable.isDeltaLayout(spark, ld)
-      require(committedSnapshot == snapshotLabels,
-        s"labels dir $ld is committed with snapshotLabels=" +
-          s"$committedSnapshot but this call passed snapshotLabels=" +
-          s"$snapshotLabels; mixing the snapshot and upsert-delta " +
-          "layouts is unsupported — pass the matching flag or seed a " +
-          "fresh dir")
-    }
+    require(AtomicTable.committedVersions(spark, ld).isEmpty ||
+      AtomicTable.isDeltaLayout(spark, ld),
+      s"labels dir $ld is committed in the snapshot layout; folding " +
+        "upsert deltas onto it is unsupported — seed a fresh dir")
   }
 
   private def emptyLabels(spark: SparkSession): DataFrame =
@@ -277,9 +269,8 @@ object ShardedNearDupIndex {
     * needs (doc_id, simhash, shard). */
   def seedShards(spark: SparkSession, dir: String, sharded: DataFrame,
                  bits: Int, maxHamming: Int = 3,
-                 maxBucketSize: Int = Dedup.DefaultBucketCap,
-                 snapshotLabels: Boolean = false): DataFrame = {
-    requireLabelLayout(spark, dir, snapshotLabels)
+                 maxBucketSize: Int = Dedup.DefaultBucketCap): DataFrame = {
+    requireLabelLayout(spark, dir)
     // ONE simhash pass per seed (r21): `sharded` is the signature
     // aggregation over the corpus's exploded tokens, and both the
     // label chain and the bands delta below consume it in separately-
@@ -291,53 +282,43 @@ object ShardedNearDupIndex {
       maxBucketSize, bits).select(col("id"), col("component"))
     val bands = Dedup.bandRows(sh, bits, Nil)
     AtomicTable.commitDelta(withNullRank(bands), bandsDir(dir), 0L)
-    if (snapshotLabels)
-      AtomicTable.commit(labels, labelsDir(dir), 0L)
-    else
-      // the seed IS the first delta (every row is new). Deliberately
-      // NOT coalesced: unlike the per-fold deltas this one is
-      // corpus-sized — the bulk-migration write should stay as
-      // parallel as the labels plan, and compactLabels/compactToBase
-      // own the file-count budget afterwards.
-      AtomicTable.commitDelta(labels.withColumn(LabV, lit(0L)),
-        labelsDir(dir), 0L)
+    // the seed IS the first delta (every row is new). Deliberately NOT
+    // coalesced: unlike the per-fold deltas this one is corpus-sized —
+    // the bulk-migration write should stay as parallel as the labels
+    // plan, and compactLabels/compactToBase own the file-count budget
+    // afterwards.
+    AtomicTable.commitDelta(labels.withColumn(LabV, lit(0L)),
+      labelsDir(dir), 0L)
     loadLabels(spark, dir)
   }
 
   /** Fold one new shard into the committed state and commit: bands
     * delta first, labels delta second (see idempotency note above) —
-    * only the rows the merge CHANGED are written (upsert-delta layout;
-    * `snapshotLabels = true` keeps the legacy full-snapshot commit,
-    * and is required on a dir seeded that way). Returns the updated
+    * only the rows the merge CHANGED are written. Returns the updated
     * committed labels (resolved view — lazy, costs nothing unless
     * consumed). */
   def addShard(spark: SparkSession, dir: String, newShard: DataFrame,
                bits: Int, maxHamming: Int = 3,
                maxBucketSize: Int = Dedup.DefaultBucketCap,
                version: Option[Long] = None,
-               probeCap: Option[Int] = None,
-               snapshotLabels: Boolean = false): DataFrame = {
-    requireLabelLayout(spark, dir, snapshotLabels)
+               probeCap: Option[Int] = None): DataFrame = {
+    requireLabelLayout(spark, dir)
     val v = version.getOrElse(
       AtomicTable.nextVersion(spark, labelsDir(dir)))
     val m = Dedup.addShardNearDups(
       loadLabels(spark, dir), loadBands(spark, dir, bits),
       newShard, bits, maxHamming, maxBucketSize, probeCap)
-    if (snapshotLabels) {
-      AtomicTable.commitDelta(withNullRank(m.newBandRows), bandsDir(dir), v)
-      AtomicTable.commit(m.labels, labelsDir(dir), v)
-    } else
-      // both delta writes staged CONCURRENTLY, markers in bands→labels
-      // order (r21): the fold's commit tail was two sequential
-      // single-purpose jobs — the r18 lesson's fixed job-count term —
-      // and the visibility order (hence the idempotency/crash contract
-      // in the object scaladoc) rides the MARKER order, which stays
-      // sequential inside commitDeltasStaged.
-      AtomicTable.commitDeltasStaged(spark, Seq(
-        AtomicTable.StagedDelta(withNullRank(m.newBandRows),
-          bandsDir(dir), v),
-        AtomicTable.StagedDelta(m.labelsDelta.withColumn(LabV, lit(v)),
-          labelsDir(dir), v)))
+    // both delta writes staged CONCURRENTLY, markers in bands→labels
+    // order (r21): the fold's commit tail was two sequential
+    // single-purpose jobs — the r18 lesson's fixed job-count term — and
+    // the visibility order (hence the idempotency/crash contract in the
+    // object scaladoc) rides the MARKER order, which commitStaged keeps
+    // sequential.
+    AtomicTable.commitStaged(spark, Seq(
+      AtomicTable.Write(withNullRank(m.newBandRows), bandsDir(dir), v,
+        delta = true),
+      AtomicTable.Write(m.labelsDelta.withColumn(LabV, lit(v)),
+        labelsDir(dir), v, delta = true)))
     loadLabels(spark, dir)
   }
 

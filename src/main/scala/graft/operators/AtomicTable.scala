@@ -47,7 +47,7 @@ object AtomicTable {
   private val MarkerPrefix = "_commit_"
   private val WriterFile = "_writer"
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
+  private[operators] def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def dataPath(dir: String, version: Long) = new Path(s"$dir/v_$version")
@@ -55,17 +55,18 @@ object AtomicTable {
     new Path(s"$dir/$MarkerPrefix$version")
   private def writerPath(dir: String) = new Path(s"$dir/$WriterFile")
 
-  /** All committed versions, ascending (empty if the table never
-    * committed). */
-  def committedVersions(spark: SparkSession, dir: String): Seq[Long] = {
+  private def listMarkers(spark: SparkSession, dir: String,
+                          prefix: String): Seq[Long] = {
     val f = fs(spark, dir)
     if (!f.exists(new Path(dir))) Seq.empty
-    else f.listStatus(new Path(dir)).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(MarkerPrefix))
-      .map(_.stripPrefix(MarkerPrefix).toLong)
-      .sorted
+    else f.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix).toLong).sorted
   }
+
+  /** All committed versions, ascending (empty if the table never
+    * committed). */
+  def committedVersions(spark: SparkSession, dir: String): Seq[Long] =
+    listMarkers(spark, dir, MarkerPrefix)
 
   def isCommitted(spark: SparkSession, dir: String, version: Long): Boolean =
     fs(spark, dir).exists(markerPath(dir, version))
@@ -105,8 +106,10 @@ object AtomicTable {
     }
   }
 
-  /** Write `df` as version `version` and commit it. Idempotent: a
-    * version that already has a marker is left untouched. Retains the
+  /** Write `df` as version `version` and commit it ([[commitStaged]]
+    * with one write). Idempotent: a version that already has a marker
+    * is not rewritten, but the replay still prunes, so a crash between
+    * marker and prune converges on the next call. Retains the
     * `retainVersions` highest committed versions (pruned BY POSITION,
     * not by value, so a non-contiguous version jump still leaves the
     * immediately previous committed snapshot for reader grace); prunes
@@ -185,21 +188,126 @@ object AtomicTable {
              writerId: Option[String] = None,
              partitionCols: Seq[String] = Nil,
              retainVersions: Int = 2,
-             adoptExisting: Boolean = false): Unit = {
-    val spark = df.sparkSession
-    val f = fs(spark, dir)
-    bindWriter(spark, dir, writerId, adoptExisting)
-    if (isCommitted(spark, dir, version)) return
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(dataPath(dir, version).toString)
-    f.create(markerPath(dir, version), true).close()
-    committedVersions(spark, dir).dropRight(math.max(retainVersions, 1))
-      .foreach { v =>
-        f.delete(markerPath(dir, v), false)
-        f.delete(dataPath(dir, v), true)
-      }
+             adoptExisting: Boolean = false): Unit =
+    commitStaged(df.sparkSession, Seq(Write(df, dir, version,
+      retainVersions = retainVersions, partitionCols = partitionCols,
+      writerId = writerId, adoptExisting = adoptExisting)))
+
+  /** One write of [[commitStaged]]: [[commit]]'s and [[commitDelta]]'s
+    * parameters. `delta` appends a base+delta delta (never pruned). */
+  final case class Write(df: DataFrame, dir: String, version: Long,
+                         delta: Boolean = false,
+                         retainVersions: Int = 2,
+                         partitionCols: Seq[String] = Nil,
+                         writerId: Option[String] = None,
+                         adoptExisting: Boolean = false)
+
+  /** THE commit path: every publish ([[commit]], [[commitDelta]], the
+    * sharded fold, [[TxnCommit.commitAll]]) runs these steps in order —
+    * one protocol for batch, streaming and compaction writers, as in
+    * Delta Lake:
+    *   1. bind each write's lineage, write the layout marker for deltas
+    *      (before the marker check, so the snapshot-only guards see a
+    *      base+delta dir even across a replay's no-op), and skip
+    *      versions already committed;
+    *   2. stage the pending data — one write inline, several
+    *      concurrently (overlapping jobs back-fill task slots);
+    *   3. write `journal`, if given: the multi-table commit point;
+    *   4. create the markers in caller order — the per-table
+    *      visibility point, so ordering contracts ("bands before
+    *      labels") hold as under sequential commits, and a crash before
+    *      a marker leaves only invisible `v_<n>` orphans a replay
+    *      overwrites;
+    *   5. prune each snapshot write to its `retainVersions`;
+    *   6. publish a [[SnapshotManifest]] to `manifestDir`, if given.
+    * The (dir, version) pairs must be distinct — two writes of one pair
+    * would overwrite the same data path concurrently. */
+  def commitStaged(spark: SparkSession, writes: Seq[Write],
+                   journal: Option[String] = None,
+                   manifestDir: Option[String] = None): Unit = {
+    val all = writes.map(w => TxnCommit.Staged(w.dir, w.version))
+    require(all.distinct.size == all.size,
+      s"commitStaged: duplicate (dir, version) in ${all.mkString(", ")}")
+    val pending = writes.filter { w =>
+      bindWriter(spark, w.dir, w.writerId, w.adoptExisting)
+      if (w.delta) fs(spark, w.dir).create(layoutMarkerPath(w.dir), true).close()
+      !isCommitted(spark, w.dir, w.version)
+    }
+    val staged = pending.map(w => TxnCommit.Staged(w.dir, w.version))
+    stageWrites(spark, pending)
+    if (pending.nonEmpty)
+      journal.foreach(VersionRecord.write(spark, _, staged, manifestDir))
+    markers(spark, staged)
+    writes.filterNot(_.delta).foreach(w => prune(spark, w.dir, w.retainVersions))
+    manifestDir.foreach(SnapshotManifest.publish(spark, _, all))
   }
+
+  private def writeData(w: Write): Unit = {
+    val out = w.df.write.mode("overwrite")
+    (if (w.partitionCols.nonEmpty) out.partitionBy(w.partitionCols: _*)
+    else out).parquet(dataPath(w.dir, w.version).toString)
+  }
+
+  private[graft] val StageThreadName = "graft-commit-stage"
+
+  /** Step 2 of [[commitStaged]]. When one write fails, its siblings'
+    * jobs are cancelled and their threads awaited before the failure
+    * propagates: a retry must never race a still-running overwrite of
+    * the same `v_<n>`. */
+  private[operators] def stageWrites(spark: SparkSession,
+                                     writes: Seq[Write]): Unit =
+    if (writes.size == 1) writeData(writes.head)
+    else if (writes.nonEmpty) {
+      import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+      val sc = spark.sparkContext
+      val tag = s"graft-stage-${java.util.UUID.randomUUID}"
+      val pool = Executors.newFixedThreadPool(writes.size,
+        (r: Runnable) => new Thread(r, StageThreadName))
+      try writes.map(w => pool.submit(new Runnable { def run(): Unit = {
+        sc.addJobTag(tag)
+        sc.setInterruptOnCancel(true)
+        writeData(w)
+      }})).foreach { f =>
+        try f.get() catch { case e: ExecutionException => throw e.getCause }
+      } catch {
+        case e: Throwable =>
+          sc.cancelJobsWithTag(tag)
+          pool.shutdownNow()
+          pool.awaitTermination(1, TimeUnit.MINUTES)
+          throw e
+      } finally pool.shutdown()
+    }
+
+  /** Step 4 of [[commitStaged]] — the ONE place `_commit_<n>` markers
+    * are created, in the given order. An existing marker is left as is
+    * (its mtime is the commit time [[vacuum]] ages by). */
+  private[operators] def markers(spark: SparkSession,
+                                 staged: Seq[TxnCommit.Staged]): Unit =
+    staged.foreach(s =>
+      fs(spark, s.dir).createNewFile(markerPath(s.dir, s.version)))
+
+  /** Remove one version: marker first (new readers stop resolving it),
+    * then data. */
+  private[operators] def dropVersion(spark: SparkSession, dir: String,
+                                     version: Long): Unit = {
+    val f = fs(spark, dir)
+    f.delete(markerPath(dir, version), false)
+    f.delete(dataPath(dir, version), true)
+  }
+
+  /** Step 5 of [[commitStaged]]: keep the `retainVersions` highest
+    * committed versions BY POSITION (a non-contiguous version jump
+    * still leaves the immediately previous snapshot for reader grace). */
+  private def prune(spark: SparkSession, dir: String,
+                    retainVersions: Int): Unit =
+    committedVersions(spark, dir).dropRight(math.max(retainVersions, 1))
+      .foreach(dropVersion(spark, dir, _))
+
+  /** True when version `version`'s data dir exists, committed or not —
+    * [[TxnCommit.recover]]'s roll-forward test. */
+  private[operators] def hasData(spark: SparkSession, dir: String,
+                                 version: Long): Boolean =
+    fs(spark, dir).exists(dataPath(dir, version))
 
   final case class DeleteReport(version: Long, filesTotal: Int,
                                 filesRewritten: Int, filesCopied: Int,
@@ -259,12 +367,8 @@ object AtomicTable {
         new Path(dst, p.getName), false,
         spark.sparkContext.hadoopConfiguration)
     }
-    f.create(markerPath(dir, version), true).close()
-    committedVersions(spark, dir).dropRight(math.max(retainVersions, 1))
-      .foreach { v =>
-        f.delete(markerPath(dir, v), false)
-        f.delete(dataPath(dir, v), true)
-      }
+    markers(spark, Seq(TxnCommit.Staged(dir, version)))
+    prune(spark, dir, retainVersions)
     DeleteReport(version, all.size, affectedPaths.size, untouched.size,
       rowsDeleted)
   }
@@ -296,10 +400,7 @@ object AtomicTable {
           now - f.getFileStatus(markerPath(dir, v)).getModificationTime >= age
         }
       }
-    candidates.foreach { v =>
-      f.delete(markerPath(dir, v), false)
-      f.delete(dataPath(dir, v), true)
-    }
+    candidates.foreach(dropVersion(spark, dir, _))
     candidates
   }
 
@@ -419,7 +520,7 @@ object AtomicTable {
   // ------------------------------------------------------------------
 
   private val BaseMarkerPrefix = "_basecommit_"
-  private val DeltaLayoutMarker = "_layout_delta"
+  private def layoutMarkerPath(dir: String) = new Path(s"$dir/_layout_delta")
 
   private def baseDataPath(dir: String, version: Long) =
     new Path(s"$dir/base_$version")
@@ -435,7 +536,7 @@ object AtomicTable {
     * compacted before the marker existed). */
   def isDeltaLayout(spark: SparkSession, dir: String): Boolean = {
     val f = fs(spark, dir)
-    f.exists(new Path(s"$dir/$DeltaLayoutMarker")) ||
+    f.exists(layoutMarkerPath(dir)) ||
       committedBases(spark, dir).nonEmpty
   }
 
@@ -449,15 +550,8 @@ object AtomicTable {
 
   /** Committed base snapshots, ascending by the delta version they
     * cover. */
-  def committedBases(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    if (!f.exists(new Path(dir))) Seq.empty
-    else f.listStatus(new Path(dir)).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(BaseMarkerPrefix))
-      .map(_.stripPrefix(BaseMarkerPrefix).toLong)
-      .sorted
-  }
+  def committedBases(spark: SparkSession, dir: String): Seq[Long] =
+    listMarkers(spark, dir, BaseMarkerPrefix)
 
   /** Append `df` as the DELTA for `version` and commit it. Same
     * idempotency (marker per version) and writer-lineage binding as
@@ -467,76 +561,9 @@ object AtomicTable {
     * replayed batch overwrites. */
   def commitDelta(df: DataFrame, dir: String, version: Long,
                   writerId: Option[String] = None,
-                  adoptExisting: Boolean = false): Unit = {
-    val spark = df.sparkSession
-    val f = fs(spark, dir)
-    bindWriter(spark, dir, writerId, adoptExisting)
-    // layout marker FIRST (idempotent, before the marker check): the
-    // guard in vacuum/compact/deleteWhere must see the dir as
-    // base+delta even between a replayed batch's no-op commits.
-    f.create(new Path(s"$dir/$DeltaLayoutMarker"), true).close()
-    if (isCommitted(spark, dir, version)) return
-    df.write.mode("overwrite").parquet(dataPath(dir, version).toString)
-    f.create(markerPath(dir, version), true).close()
-  }
-
-  /** Two-phase [[commitDelta]] for MULTI-TABLE folds (r21; VERDICT r20
-    * task #3 — the sharded fold's fixed job count): stage the parquet
-    * DATA of several deltas CONCURRENTLY (each write is its own Spark
-    * job submitted from a driver thread; overlapping them back-fills
-    * task slots while the other write's tail drains — guide §2.6), then
-    * create the commit markers SEQUENTIALLY in caller order. Marker
-    * creation is this protocol's single atomic visibility point, so
-    * ordering-dependent crash contracts (e.g. [[graft.llm.
-    * ShardedNearDupIndex]]'s "bands visible before labels, labels
-    * last") hold exactly as under sequential commits: a crash after a
-    * later table's DATA landed but before an earlier table's MARKER
-    * leaves only invisible orphan `v_<n>` dirs, which the replayed fold
-    * overwrites. Idempotency per (dir, version) is unchanged —
-    * already-committed entries are skipped before staging. */
-  final case class StagedDelta(df: DataFrame, dir: String, version: Long,
-                               writerId: Option[String] = None,
-                               adoptExisting: Boolean = false)
-
-  def commitDeltasStaged(spark: SparkSession,
-                         deltas: Seq[StagedDelta]): Unit = {
-    val pending = deltas.filter { d =>
-      bindWriter(spark, d.dir, d.writerId, d.adoptExisting)
-      // layout marker FIRST, as in commitDelta (guards must see the dir
-      // as base+delta even between a replayed batch's no-op commits)
-      fs(spark, d.dir)
-        .create(new Path(s"${d.dir}/$DeltaLayoutMarker"), true).close()
-      !isCommitted(spark, d.dir, d.version)
-    }
-    if (pending.isEmpty) return
-    if (pending.size == 1) {
-      val d = pending.head
-      d.df.write.mode("overwrite")
-        .parquet(dataPath(d.dir, d.version).toString)
-    } else {
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(pending.size)
-      try {
-        val futs = pending.map { d =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = d.df.write.mode("overwrite")
-              .parquet(dataPath(d.dir, d.version).toString)
-          })
-        }
-        futs.foreach { f =>
-          try f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
-        }
-      } finally pool.shutdown()
-    }
-    // visibility strictly in caller order — the crash-contract half
-    pending.foreach { d =>
-      fs(spark, d.dir).create(markerPath(d.dir, d.version), true).close()
-    }
-  }
+                  adoptExisting: Boolean = false): Unit =
+    commitStaged(df.sparkSession, Seq(Write(df, dir, version, delta = true,
+      writerId = writerId, adoptExisting = adoptExisting)))
 
   private def hasDataFiles(f: FileSystem, p: Path): Boolean =
     f.exists(p) && f.listStatus(p).exists { st =>
@@ -619,10 +646,7 @@ object AtomicTable {
           // deltas covered by the retained PREVIOUS base have had a
           // full epoch of grace — superseded twice over; prune them.
           retained.headOption.filter(_ != cover).foreach { pb =>
-            versions.filter(_ <= pb).foreach { v =>
-              f.delete(markerPath(dir, v), false)
-              f.delete(dataPath(dir, v), true)
-            }
+            versions.filter(_ <= pb).foreach(dropVersion(spark, dir, _))
           }
           cover
         }

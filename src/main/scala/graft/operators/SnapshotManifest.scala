@@ -39,9 +39,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SnapshotManifest {
 
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def seqOf(name: String): Option[Long] =
     if (name.startsWith("manifest_") && name.endsWith(".json"))
       name.stripPrefix("manifest_").stripSuffix(".json").toLongOption
@@ -50,89 +47,43 @@ object SnapshotManifest {
   private def manifestPath(dir: String, seq: Long) =
     new Path(f"$dir/manifest_$seq%012d.json")
 
-  /** Strict parse: the payload must be the complete `[...]` array the
-    * writer produced — a truncated or zero-byte file (torn write on a
-    * store without atomic rename) must NOT silently read as an empty or
-    * partial pin map, or snapshot readers get spurious "not in
-    * snapshot" failures instead of the previous-manifest fallback the
-    * crash guarantee promises (r13 ADVICE). */
-  private def parseStrict(json: String): Option[Map[String, Long]] = {
-    val t = json.trim
-    if (!(t.startsWith("[") && t.endsWith("]"))) return None
-    val entries = """\{"dir":"([^"]+)","version":(\d+)\}""".r
-      .findAllMatchIn(t)
-      .map(mm => mm.group(1) -> mm.group(2).toLong).toSeq
-    // every byte between the brackets must belong to an entry or a
-    // separator — a half-written entry fails the round-trip
-    val rebuilt = entries
-      .map { case (d, v) => s"""{"dir":"$d","version":$v}""" }
-      .mkString("[", ",", "]")
-    if (rebuilt == t) Some(entries.toMap) else None
-  }
-
   /** Latest VALID (seq, {table dir → pinned version}), if any
-    * published. A manifest that fails strict parsing is skipped and the
-    * previous seq serves — readers degrade to an older consistent
-    * snapshot, never to a partial pin set. */
+    * published. A manifest that fails the strict [[VersionRecord]]
+    * parse (a torn or zero-byte file) is skipped and the previous seq
+    * serves — readers degrade to an older consistent snapshot, never to
+    * a partial pin set (a partial map would fail reads spuriously with
+    * "not in snapshot" instead of the previous-manifest fallback). */
   def latest(spark: SparkSession,
              manifestDir: String): Option[(Long, Map[String, Long])] = {
-    val f = fs(spark, manifestDir)
+    val f = AtomicTable.fs(spark, manifestDir)
     if (!f.exists(new Path(manifestDir))) return None
     val seqs = f.listStatus(new Path(manifestDir)).toSeq
       .flatMap(st => seqOf(st.getPath.getName))
       .sorted(Ordering[Long].reverse)
     seqs.iterator.flatMap { s =>
-      val in = f.open(manifestPath(manifestDir, s))
-      val json = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      parseStrict(json).map(m => (s, m))
+      VersionRecord.read(f, manifestPath(manifestDir, s)).collect {
+        case (pins, None) => (s, pins.map(p => p.dir -> p.version).toMap)
+      }
     }.nextOption()
   }
 
   /** Publish a new snapshot: previous manifest overlaid with `staged`
     * (freshly committed (dir, version) pairs). Call AFTER the tables'
-    * markers exist — [[TxnCommit.commitAllSnapshot]] sequences this.
-    * Returns the new manifest seq. */
+    * markers exist — [[AtomicTable.commitStaged]] sequences this. The
+    * write is [[VersionRecord.write]]'s tmp + rename, so a reader
+    * listing mid-write sees no `manifest_<seq>` or the complete one; a
+    * torn file from a crashed same-seq writer ([[latest]] skips it —
+    * that is how `seq` landed on it) is reclaimed, and a valid occupant
+    * (a concurrent publisher won the seq) fails loudly. Returns the new
+    * manifest seq. */
   def publish(spark: SparkSession, manifestDir: String,
               staged: Seq[TxnCommit.Staged]): Long = {
     val prev = latest(spark, manifestDir)
     val seq = prev.map(_._1 + 1L).getOrElse(0L)
     val merged = prev.map(_._2).getOrElse(Map.empty) ++
       staged.map(s => s.dir -> s.version)
-    val json = merged.toSeq.sortBy(_._1)
-      .map { case (d, v) => s"""{"dir":"$d","version":$v}""" }
-      .mkString("[", ",", "]")
-    val f = fs(spark, manifestDir)
-    f.mkdirs(new Path(manifestDir))
-    // ATOMIC visibility (r13 ADVICE): the payload is written to a tmp
-    // name [[seqOf]] never matches, then RENAMED into place — rename is
-    // atomic on local/HDFS, so a reader listing mid-write sees either
-    // no manifest_<seq> or the complete one, never a torn file. (On a
-    // rename-less object store the strict parser in [[latest]] is the
-    // second line of defense.)
-    val tmp = new Path(f"$manifestDir/.manifest_$seq%012d.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dest = manifestPath(manifestDir, seq)
-    if (!f.rename(tmp, dest)) {
-      // A TORN file from a crashed same-seq writer can occupy the dest
-      // name ([[latest]] already skips it — that's how `seq` landed on
-      // it): reclaim the slot. A VALID occupant means a concurrent
-      // publisher won the seq — fail loudly; silently overwriting would
-      // drop its pins (single-writer is the pipeline discipline, this
-      // guards the violation).
-      val occupant = try {
-        val in = f.open(dest)
-        try parseStrict(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)) finally in.close()
-      } catch { case _: java.io.IOException => None }
-      require(occupant.isEmpty,
-        s"SnapshotManifest: seq $seq already published (concurrent publish?)")
-      f.delete(dest, false)
-      require(f.rename(tmp, dest),
-        s"SnapshotManifest: rename to seq $seq failed twice")
-    }
+    VersionRecord.write(spark, manifestPath(manifestDir, seq).toString,
+      merged.toSeq.sortBy(_._1).map { case (d, v) => TxnCommit.Staged(d, v) })
     seq
   }
 

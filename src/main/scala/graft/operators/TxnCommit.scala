@@ -38,59 +38,24 @@ object TxnCommit {
 
   final case class Staged(dir: String, version: Long)
 
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def journalPath(journalDir: String, id: String) =
-    new Path(s"$journalDir/txn_$id.json")
+    s"$journalDir/txn_$id.json"
 
-  private def dataPath(dir: String, version: Long) =
-    new Path(s"$dir/v_$version")
-
-  private def markerPath(dir: String, version: Long) =
-    new Path(s"$dir/_commit_$version")
-
-  /** Journal payload. Snapshot transactions additionally record their
-    * `manifestDir` so [[recover]] can REPUBLISH the manifest when it
-    * rolls the transaction forward (r13 ADVICE: without it, a crash
-    * between the markers and the manifest publish left snapshot readers
-    * pinned to the pre-crash manifest forever). Plain [[commitAll]]
-    * journals keep the bare-array format; [[readJournal]] parses both. */
+  /** Journal seam (tests build crash states with it). A snapshot
+    * transaction records its `manifestDir`, which [[recover]]
+    * republishes when it rolls the transaction forward. */
   private[graft] def writeJournal(spark: SparkSession, journalDir: String,
                            id: String, staged: Seq[Staged],
-                           manifestDir: Option[String] = None): Unit = {
-    val f = fs(spark, journalDir)
-    f.mkdirs(new Path(journalDir))
-    val arr = staged.map(s =>
-      s"""{"dir":"${s.dir}","version":${s.version}}""")
-      .mkString("[", ",", "]")
-    val json = manifestDir match {
-      case Some(m) => s"""{"manifest":"$m","staged":$arr}"""
-      case None => arr
-    }
-    val out = f.create(journalPath(journalDir, id), true)
-    out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+                           manifestDir: Option[String] = None): Unit =
+    VersionRecord.write(spark, journalPath(journalDir, id), staged,
+      manifestDir)
+
+  private def journals(spark: SparkSession, journalDir: String): Seq[Path] = {
+    val jf = AtomicTable.fs(spark, journalDir)
+    if (!jf.exists(new Path(journalDir))) Nil
+    else jf.listStatus(new Path(journalDir)).toSeq.map(_.getPath)
+      .filter(p => p.getName.startsWith("txn_") && p.getName.endsWith(".json"))
   }
-
-  private def journalText(spark: SparkSession, p: Path): String = {
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
-
-  private def readJournal(spark: SparkSession,
-                          p: Path): Seq[Staged] =
-    """\{"dir":"([^"]+)","version":(\d+)\}""".r
-      .findAllMatchIn(journalText(spark, p))
-      .map(m => Staged(m.group(1), m.group(2).toLong)).toSeq
-
-  /** Manifest dir of a snapshot transaction's journal, if recorded. */
-  private def readManifestDir(spark: SparkSession,
-                              p: Path): Option[String] =
-    """^\{"manifest":"([^"]+)"""".r
-      .findFirstMatchIn(journalText(spark, p).trim).map(_.group(1))
 
   /** Versions already claimed by OUTSTANDING journals (crashed-but-
     * committed transactions awaiting [[recover]]), per table dir.
@@ -100,120 +65,94 @@ object TxnCommit {
     * later recover() publish the wrong transaction's data (r11 ADVICE). */
   private def journalReserved(spark: SparkSession,
                               journalDir: String): Map[String, Long] = {
-    val jf = fs(spark, journalDir)
-    if (!jf.exists(new Path(journalDir))) return Map.empty
-    jf.listStatus(new Path(journalDir)).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("txn_"))
-      .flatMap(readJournal(spark, _))
+    val jf = AtomicTable.fs(spark, journalDir)
+    journals(spark, journalDir)
+      .flatMap(VersionRecord.read(jf, _).toSeq.flatMap(_._1))
       .groupBy(_.dir).view.mapValues(_.map(_.version).max).toMap
   }
 
+  /** One [[AtomicTable.Write]] per table at its next version, past any
+    * version an outstanding journal reserves. Journaled tables keep
+    * every version (as they always have), so an uncrashed and a
+    * recovered transaction leave the same history. */
+  private def writes(spark: SparkSession, tables: Seq[(String, DataFrame)],
+                     journalDir: Option[String]): Seq[AtomicTable.Write] = {
+    val reserved = journalDir.map(journalReserved(spark, _))
+      .getOrElse(Map.empty)
+    tables.map { case (dir, df) =>
+      AtomicTable.Write(df, dir,
+        math.max(AtomicTable.nextVersion(spark, dir),
+          reserved.get(dir).map(_ + 1L).getOrElse(0L)),
+        retainVersions = Int.MaxValue)
+    }
+  }
+
   /** Stage-only (test seam): write every table's next version dir and
-    * return the staged set — no journal, no markers. `journalDir`, when
-    * given, reserves versions referenced by outstanding journals so a
-    * pre-recover commit can never collide with a crashed transaction. */
+    * return the staged set — no journal, no markers. */
   private[graft] def stage(spark: SparkSession,
                            tables: Seq[(String, DataFrame)],
                            journalDir: Option[String] = None)
       : Seq[Staged] = {
-    val reserved = journalDir.map(journalReserved(spark, _))
-      .getOrElse(Map.empty)
-    tables.map { case (dir, df) =>
-      val v = math.max(AtomicTable.nextVersion(spark, dir),
-        reserved.get(dir).map(_ + 1L).getOrElse(0L))
-      df.write.mode("overwrite").parquet(dataPath(dir, v).toString)
-      Staged(dir, v)
-    }
+    val ws = writes(spark, tables, journalDir)
+    AtomicTable.stageWrites(spark, ws)
+    ws.map(w => Staged(w.dir, w.version))
   }
 
-  /** Publish markers for a staged set (each an O(1) metadata op). */
-  private def markers(spark: SparkSession, staged: Seq[Staged]): Unit =
-    staged.foreach { s =>
-      val f = fs(spark, s.dir)
-      f.create(markerPath(s.dir, s.version), true).close()
-    }
-
-  private def dropJournal(spark: SparkSession, journalDir: String,
-                          id: String): Unit = {
-    fs(spark, journalDir).delete(journalPath(journalDir, id), false); ()
-  }
-
-  /** Atomically publish new versions of several tables. `id` must be
-    * unique per transaction (a batch id / run id). */
-  def commitAll(spark: SparkSession, journalDir: String, id: String,
-                tables: Seq[(String, DataFrame)]): Seq[Staged] = {
-    val staged = stage(spark, tables, Some(journalDir))
-    writeJournal(spark, journalDir, id, staged) // commit point
-    markers(spark, staged)
-    dropJournal(spark, journalDir, id)
-    staged
-  }
-
-  /** [[commitAll]] + cross-table SNAPSHOT publication: after the
-    * markers land, one manifest pinning every table's new version is
-    * written to `manifestDir` ([[SnapshotManifest]]). Readers that
-    * resolve through `SnapshotManifest.snapshot` get both-old or
-    * both-new across the whole published set — the marker-loop race
-    * window documented above no longer reaches them.
+  /** Atomically publish new versions of several tables through
+    * [[AtomicTable.commitStaged]] with the journal as commit point, then
+    * drop the journal. `id` must be unique per transaction (a batch id /
+    * run id).
     *
-    * The journal records `manifestDir` and outlives the manifest
-    * publish: a crash anywhere after the journal write is rolled
-    * FORWARD by [[recover]] including the manifest, so snapshot readers
-    * can never be stranded on the pre-crash manifest (r13 ADVICE). A
+    * `manifestDir` adds cross-table SNAPSHOT publication: after the
+    * markers land, one manifest pinning every table's new version is
+    * written there ([[SnapshotManifest]]). Readers that resolve through
+    * `SnapshotManifest.snapshot` get both-old or both-new across the
+    * whole published set — the marker-loop race window documented above
+    * no longer reaches them. The journal records `manifestDir` and
+    * outlives the manifest publish, so [[recover]] rolls a crash
+    * anywhere after the journal write forward INCLUDING the manifest; a
     * crash between the manifest publish and the journal delete makes
-    * recovery republish an extra manifest seq with an identical pin
-    * map — benign by idempotence of the pins. Returns
-    * (staged set, manifest seq). */
-  def commitAllSnapshot(spark: SparkSession, journalDir: String,
-                        manifestDir: String, id: String,
-                        tables: Seq[(String, DataFrame)])
-      : (Seq[Staged], Long) = {
-    val staged = stage(spark, tables, Some(journalDir))
-    writeJournal(spark, journalDir, id, staged, Some(manifestDir))
-    markers(spark, staged)
-    val seq = SnapshotManifest.publish(spark, manifestDir, staged)
-    dropJournal(spark, journalDir, id)
-    (staged, seq)
+    * recovery republish an extra manifest seq with an identical pin map
+    * — benign by idempotence of the pins. */
+  def commitAll(spark: SparkSession, journalDir: String, id: String,
+                tables: Seq[(String, DataFrame)],
+                manifestDir: Option[String] = None): Seq[Staged] = {
+    val ws = writes(spark, tables, Some(journalDir))
+    AtomicTable.commitStaged(spark, ws,
+      journal = Some(journalPath(journalDir, id)), manifestDir = manifestDir)
+    AtomicTable.fs(spark, journalDir)
+      .delete(new Path(journalPath(journalDir, id)), false)
+    ws.map(w => Staged(w.dir, w.version))
   }
 
   /** Repair after a crash: roll committed-but-unpublished transactions
-    * FORWARD, roll incompletely-staged journals BACK. Returns
-    * (rolledForward, rolledBack) transaction ids. */
+    * FORWARD (every staged data dir exists: create the missing markers,
+    * republish a recorded manifest), roll everything else BACK (staged
+    * versions dropped). A journal that fails the strict parse (torn) is
+    * never rolled forward — its writer crashed before the commit point
+    * completed, so it is dropped and its unmarked data dirs stay
+    * invisible orphans. Returns (rolledForward, rolledBack) ids. */
   def recover(spark: SparkSession, journalDir: String)
       : (Seq[String], Seq[String]) = {
-    val jf = fs(spark, journalDir)
-    if (!jf.exists(new Path(journalDir))) return (Nil, Nil)
-    val journals = jf.listStatus(new Path(journalDir)).toSeq
-      .map(_.getPath).filter(_.getName.startsWith("txn_"))
-    val (fwd, back) = journals.partition { p =>
-      readJournal(spark, p).forall(s =>
-        fs(spark, s.dir).exists(dataPath(s.dir, s.version)))
+    val jf = AtomicTable.fs(spark, journalDir)
+    val records = journals(spark, journalDir)
+      .map(p => p -> VersionRecord.read(jf, p))
+    val (fwd, back) = records.partition { case (_, r) =>
+      r.exists(_._1.forall(s => AtomicTable.hasData(spark, s.dir, s.version)))
     }
-    fwd.foreach { p =>
-      val staged = readJournal(spark, p)
-      staged.foreach { s =>
-        val f = fs(spark, s.dir)
-        if (!f.exists(markerPath(s.dir, s.version)))
-          f.create(markerPath(s.dir, s.version), true).close()
-      }
-      // snapshot transactions: REPUBLISH the manifest so snapshot
-      // readers advance with latest-readers (r13 ADVICE). Idempotent
-      // in the pins: if the crash fell after the pre-crash publish,
-      // this writes a same-pin manifest at the next seq.
-      readManifestDir(spark, p).foreach(m =>
-        SnapshotManifest.publish(spark, m, staged))
+    fwd.foreach { case (p, r) =>
+      val (staged, manifest) = r.get
+      AtomicTable.markers(spark, staged)
+      manifest.foreach(SnapshotManifest.publish(spark, _, staged))
       jf.delete(p, false)
     }
-    back.foreach { p =>
-      readJournal(spark, p).foreach { s =>
-        val f = fs(spark, s.dir)
-        f.delete(markerPath(s.dir, s.version), false)
-        f.delete(dataPath(s.dir, s.version), true)
-      }
+    back.foreach { case (p, r) =>
+      r.toSeq.flatMap(_._1)
+        .foreach(s => AtomicTable.dropVersion(spark, s.dir, s.version))
       jf.delete(p, false)
     }
     def id(p: Path) =
       p.getName.stripPrefix("txn_").stripSuffix(".json")
-    (fwd.map(id), back.map(id))
+    (fwd.map(r => id(r._1)), back.map(r => id(r._1)))
   }
 }

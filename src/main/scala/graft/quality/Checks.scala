@@ -183,6 +183,11 @@ object Checks {
                  checkNonEmpty: Boolean = false,
                  notNullCols: Seq[String] = Nil,
                  accepted: Seq[(String, Seq[String])] = Nil): SinglePass = {
+    // one unique column per call: several without `combination` would
+    // report only the first while grouping by all of them
+    require(combination || uniqueCols.size <= 1,
+      s"singlePass($table): unique(${uniqueCols.mkString(",")}) needs " +
+        "combination = true, or one call per column")
     val rowAggs: Seq[(String, org.apache.spark.sql.Column)] =
       notNullCols.map(c => s"_nn_$c" ->
         sum(when(col(c).isNull, 1L).otherwise(0L))) ++

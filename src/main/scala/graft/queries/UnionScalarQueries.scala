@@ -804,7 +804,7 @@ object UnionScalarQueries {
   }
 
   /** S16 — CROSS-TABLE SNAPSHOT-READ INVARIANCE through the REAL
-    * `TxnCommit.commitAllSnapshot` → `SnapshotManifest.snapshot` →
+    * `TxnCommit.commitAll(manifestDir)` → `SnapshotManifest.snapshot` →
     * `Snapshot.read` chain (the governance path `cli.Main` publishes
     * per run): epoch 1 commits two tables (a date-bounded orders subset
     * and a keyed customer subset) under one manifest; a reader pins
@@ -833,18 +833,18 @@ object UnionScalarQueries {
     val manifests = s"$base/_snapshots"
     val orders = Tables.orders(s, d)
     val cust = Tables.customer(s, d)
-    TxnCommit.commitAllSnapshot(s, journal, manifests, "epoch1", Seq(
+    TxnCommit.commitAll(s, journal, "epoch1", Seq(
       ta -> orders.filter(col("o_orderdate").cast("date") <
           to_date(lit("1996-01-01")))
         .select("o_orderpriority"),
       tb -> cust.filter(col("c_custkey") % 3 === 0)
-        .select("c_mktsegment")))
+        .select("c_mktsegment")), Some(manifests))
     val snap = SnapshotManifest.snapshot(s, manifests).get
     // epoch 2 advances latest on BOTH tables; the pinned reader must
     // not see it
-    TxnCommit.commitAllSnapshot(s, journal, manifests, "epoch2", Seq(
+    TxnCommit.commitAll(s, journal, "epoch2", Seq(
       ta -> orders.select("o_orderpriority"),
-      tb -> cust.select("c_mktsegment")))
+      tb -> cust.select("c_mktsegment")), Some(manifests))
     val c = snap.read(tb)
       .groupBy(col("c_mktsegment").as("k"))
       .agg(count(lit(1)).cast("long").as("n"))

@@ -31,14 +31,13 @@ object ModelDag {
     * while one model's final single-task stages drain. Failures
     * propagate with the original cause; the pool is bounded so a wide
     * wave cannot flood the scheduler. */
-  /** Wave-pool width (dbt `--threads`). Overridable via
-    * `SPARK_GRAFT_DAG_THREADS` for A/B measurement. */
-  private[ref] def dagThreads: Int =
-    sys.env.get("SPARK_GRAFT_DAG_THREADS").map(_.toInt).getOrElse(8)
+  /** Wave-pool width (dbt `--threads`): 8 — pools of 3 and the FAIR
+    * scheduler were measured slower (OPTIMIZATION_r21.md). */
+  private val DagThreads = 8
 
   private def par[A](thunks: (() => A)*): Seq[A] = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(thunks.size, dagThreads)))
+      math.max(1, math.min(thunks.size, DagThreads)))
     try {
       val futs = thunks.map(t =>
         pool.submit(new java.util.concurrent.Callable[A] {

@@ -327,6 +327,11 @@ class IngestSpec extends SparkSpec {
     val flat = Checks.singlePass(df, "t", notNullCols = Seq("name"))
     assert(flat.results == Seq(Checks.notNull(df, "t", "name")))
     assert(flat.rows == 4L)
+    // several unique columns without `combination` would group by all
+    // of them yet report unique(k): refused
+    intercept[IllegalArgumentException] {
+      Checks.singlePass(df, "t", uniqueCols = Seq("k", "name"))
+    }
   }
 
   test("StateStore: changed on new file, stable after markProcessed, changed on touch") {

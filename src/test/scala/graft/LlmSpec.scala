@@ -965,14 +965,13 @@ class LlmSpec extends SparkSpec {
       .readVersion(spark, s"$dir/labels", vReplay).get
       .select("id", "component").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((2L, 0L)))
-    // legacy snapshot layout stays readable and writable
+    // legacy snapshot layout (a pre-upsert-delta labels dir) stays
+    // readable
     val dir2 = java.nio.file.Files.createTempDirectory("graft_ups_spec2")
       .resolve("idx").toString
-    ShardedNearDupIndex.seedShards(spark, dir2,
-      sig(1L -> zeros, 3L -> ones).withColumn("shard", lit(0L)),
-      bits = 64, snapshotLabels = true)
-    ShardedNearDupIndex.addShard(spark, dir2, sig(2L -> zeros),
-      bits = 64, snapshotLabels = true)
+    graft.operators.AtomicTable.commit(
+      Seq(1L -> 1L, 2L -> 1L, 3L -> 3L).toDF("id", "component"),
+      s"$dir2/labels", 0L)
     assert(ShardedNearDupIndex.loadLabels(spark, dir2).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
@@ -982,10 +981,6 @@ class LlmSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       ShardedNearDupIndex.addShard(spark, dir2, sig(5L -> zeros),
         bits = 64)
-    }
-    assertThrows[IllegalArgumentException] {
-      ShardedNearDupIndex.addShard(spark, dir, sig(5L -> zeros),
-        bits = 64, snapshotLabels = true)
     }
   }
 

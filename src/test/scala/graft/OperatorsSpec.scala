@@ -348,7 +348,7 @@ class OperatorsSpec extends SparkSpec {
     assert(AtomicTable.readMerged(spark, dir2).forall(_.count() == 0L))
   }
 
-  test("commitDeltasStaged: parallel data writes, markers in order, idempotent per entry") {
+  test("commitStaged: parallel delta writes, markers in order, idempotent") {
     import graft.operators.AtomicTable
     val root = java.nio.file.Files.createTempDirectory("atomic_staged")
     val bandsDir = root.resolve("bands").toString
@@ -356,25 +356,68 @@ class OperatorsSpec extends SparkSpec {
     def df(ks: Long*) = ks.map(k => (k, s"v$k")).toDF("k", "v")
     def merged(dir: String): Set[Long] = AtomicTable.readMerged(spark, dir)
       .map(_.collect().map(_.getLong(0)).toSet).getOrElse(Set.empty)
-    AtomicTable.commitDeltasStaged(spark, Seq(
-      AtomicTable.StagedDelta(df(1L, 2L), bandsDir, 0L),
-      AtomicTable.StagedDelta(df(10L), labelsDir, 0L)))
+    AtomicTable.commitStaged(spark, Seq(
+      AtomicTable.Write(df(1L, 2L), bandsDir, 0L, delta = true),
+      AtomicTable.Write(df(10L), labelsDir, 0L, delta = true)))
     assert(merged(bandsDir) == Set(1L, 2L))
     assert(merged(labelsDir) == Set(10L))
     assert(AtomicTable.isDeltaLayout(spark, bandsDir))
     assert(AtomicTable.isDeltaLayout(spark, labelsDir))
     // mixed replay: an already-committed entry no-ops (its replayed
     // frame is discarded), a fresh entry commits
-    AtomicTable.commitDeltasStaged(spark, Seq(
-      AtomicTable.StagedDelta(df(99L), bandsDir, 0L),
-      AtomicTable.StagedDelta(df(11L), labelsDir, 1L)))
+    AtomicTable.commitStaged(spark, Seq(
+      AtomicTable.Write(df(99L), bandsDir, 0L, delta = true),
+      AtomicTable.Write(df(11L), labelsDir, 1L, delta = true)))
     assert(merged(bandsDir) == Set(1L, 2L))
     assert(merged(labelsDir) == Set(10L, 11L))
     // equivalent to sequential commitDelta for a downstream reader
-    AtomicTable.commitDeltasStaged(spark, Seq(
-      AtomicTable.StagedDelta(df(3L), bandsDir, 1L)))
+    AtomicTable.commitStaged(spark, Seq(
+      AtomicTable.Write(df(3L), bandsDir, 1L, delta = true)))
     assert(merged(bandsDir) == Set(1L, 2L, 3L))
     assert(AtomicTable.committedVersions(spark, bandsDir) == Seq(0L, 1L))
+  }
+
+  test("commitStaged: a failed write cancels its sibling and commits nothing") {
+    import graft.operators.AtomicTable
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Files.createTempDirectory("atomic_fail")
+    val (ta, tb) = (root.resolve("a").toString, root.resolve("b").toString)
+    val boom = udf((k: Long) =>
+      if (k >= 0L) throw new IllegalStateException("boom") else k)
+    val slow = udf((k: Long) => { Thread.sleep(30000L); k })
+    val failing = spark.range(1).select(boom(col("id")).as("k"))
+    val sleeping = spark.range(0, 2, 1, 2).select(slow(col("id")).as("k"))
+    val t0 = System.nanoTime()
+    intercept[Exception] {
+      AtomicTable.commitStaged(spark, Seq(
+        AtomicTable.Write(failing, ta, 0L),
+        AtomicTable.Write(sleeping, tb, 0L)))
+    }
+    assert((System.nanoTime() - t0) / 1e9 < 25.0)
+    assert(AtomicTable.committedVersions(spark, ta).isEmpty)
+    assert(AtomicTable.committedVersions(spark, tb).isEmpty)
+    // no staging thread outlives the call ...
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.getName == AtomicTable.StageThreadName && t.isAlive))
+    // ... and the sibling's Spark job was cancelled, not left writing
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 10L * 1000000000L
+    while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(100L)
+    assert(tracker.getActiveJobIds.isEmpty)
+  }
+
+  test("commitStaged: a duplicate (dir, version) pair is rejected before any write") {
+    import graft.operators.AtomicTable
+    val dir = java.nio.file.Files.createTempDirectory("atomic_dup")
+      .resolve("t").toString
+    def df(k: Long) = Seq(k).toDF("k")
+    intercept[IllegalArgumentException] {
+      AtomicTable.commitStaged(spark, Seq(
+        AtomicTable.Write(df(1L), dir, 0L, delta = true),
+        AtomicTable.Write(df(2L), dir, 0L, delta = true)))
+    }
+    assert(!new java.io.File(dir).exists())
   }
 
   test("base+delta guards: vacuum/deleteWhere refuse, compact delegates, Maintenance plans debt") {
@@ -800,13 +843,13 @@ class OperatorsSpec extends SparkSpec {
     val journal = base.resolve("_txn").toString
     val manifests = base.resolve("_snapshots").toString
     def df(n: Int) = (1 to n).map(i => (i.toLong, s"r$i")).toDF("k", "v")
-    TxnCommit.commitAllSnapshot(spark, journal, manifests, "t1",
-      Seq(ta -> df(3), tb -> df(3)))
+    TxnCommit.commitAll(spark, journal, "t1",
+      Seq(ta -> df(3), tb -> df(3)), Some(manifests))
     val snap0 = SnapshotManifest.snapshot(spark, manifests).get
     assert(snap0.read(ta).count() == 3L && snap0.read(tb).count() == 3L)
     // a reader opened BEFORE a publish stays on both-old after it lands
-    TxnCommit.commitAllSnapshot(spark, journal, manifests, "t2",
-      Seq(ta -> df(5), tb -> df(7)))
+    TxnCommit.commitAll(spark, journal, "t2",
+      Seq(ta -> df(5), tb -> df(7)), Some(manifests))
     assert(snap0.read(ta).count() == 3L && snap0.read(tb).count() == 3L)
     val snap1 = SnapshotManifest.snapshot(spark, manifests).get
     assert(snap1.read(ta).count() == 5L && snap1.read(tb).count() == 7L)
@@ -820,8 +863,8 @@ class OperatorsSpec extends SparkSpec {
     assert(snapMid.seq == snap1.seq)
     assert(snapMid.read(ta).count() == 5L && snapMid.read(tb).count() == 7L)
     // the next snapshot publish re-converges
-    TxnCommit.commitAllSnapshot(spark, journal, manifests, "t4",
-      Seq(ta -> df(2), tb -> df(2)))
+    TxnCommit.commitAll(spark, journal, "t4",
+      Seq(ta -> df(2), tb -> df(2)), Some(manifests))
     val snap2 = SnapshotManifest.snapshot(spark, manifests).get
     assert(snap2.read(ta).count() == 2L && snap2.read(tb).count() == 2L)
     // a snapshot older than the retention window fails LOUDLY on its
@@ -844,8 +887,8 @@ class OperatorsSpec extends SparkSpec {
     val journal = base.resolve("_txn").toString
     val manifests = base.resolve("_snapshots").toString
     def df(n: Int) = (1 to n).map(i => (i.toLong, s"r$i")).toDF("k", "v")
-    TxnCommit.commitAllSnapshot(spark, journal, manifests, "t1",
-      Seq(ta -> df(3), tb -> df(3)))
+    TxnCommit.commitAll(spark, journal, "t1",
+      Seq(ta -> df(3), tb -> df(3)), Some(manifests))
     // TORN manifest at the next seq (crashed writer without atomic
     // rename): strict parsing must reject it and serve seq 0 — not a
     // partial pin map that fails reads spuriously (r13 ADVICE)
