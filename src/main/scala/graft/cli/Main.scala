@@ -202,59 +202,18 @@ object Main {
     val idxRoot = new org.apache.hadoop.fs.Path(s"$warehouseRoot/index")
     val fs = idxRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     import graft.operators.AtomicTable
-    val indexes =
-      if (!fs.exists(idxRoot)) Nil
-      else {
-        // A ShardedNearDupIndex commits at <name>/{labels,bands}, never
-        // at <name> itself — recurse ONE extra level so nested dirs are
-        // swept too (r18 ADVICE: a flat listing planned Nil for them and
-        // their delta debt silently never compacted). A dir counts as a
-        // table when it has committed versions at its own level.
-        val level1 = fs.listStatus(idxRoot).toSeq.filter(_.isDirectory)
-          .map(_.getPath)
-        // Nested tables report as "<index>/<labels|bands>" — a flat
-        // Path.getName made every sharded index's dirs surface as just
-        // "labels"/"bands", indistinguishable when two indexes live
-        // under warehouse/index (r19 ADVICE). Qualification is decided
-        // HERE, where nesting depth is known, not by path comparison.
-        val tables: Seq[(org.apache.hadoop.fs.Path, Option[String])] =
-          level1.flatMap { p =>
-            if (AtomicTable.committedVersions(spark, p.toString).nonEmpty)
-              Seq((p, None))
-            else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
-              .filter(c =>
-                AtomicTable.committedVersions(spark, c.toString).nonEmpty)
-              .map(c => (c, Some(p.getName)))
-          }.sortBy(_._1.toString)
-        tables.flatMap { case (p, parentName) =>
-          val d = p.toString
-          def qualified(acts: Seq[Maintenance.Action])
-              : Seq[Maintenance.Action] =
-            parentName.fold(acts)(pn =>
-              acts.map(a => a.copy(table = s"$pn/${a.table}")))
-          qualified(
-          if (p.getName == "labels" && AtomicTable.isDeltaLayout(spark, d)) {
-            // labels dirs carry lab_v upsert rows: compact through the
-            // last-writer-wins resolve (dead row VERSIONS disappear, not
-            // just files) instead of the generic file fold.
-            val acts = Maintenance.plan(spark, d, Maintenance.Policy())
-            if (acts.exists(_.action == "compact_to_base"))
-              graft.llm.ShardedNearDupIndex.compactLabels(spark,
-                p.getParent.toString)
-            acts
-          } else if (p.getName == "bands" &&
-              AtomicTable.isDeltaLayout(spark, d)) {
-            // bands dirs compact through the rank-materializing fold so
-            // probeCap's committed-bulk filter has stored probe_rk rows
-            val acts = Maintenance.plan(spark, d, Maintenance.Policy())
-            if (acts.exists(_.action == "compact_to_base"))
-              graft.llm.ShardedNearDupIndex.compactBands(spark,
-                p.getParent.toString)
-            acts
-          } else Maintenance.run(spark, d, Maintenance.Policy()))
+    if (!fs.exists(idxRoot)) Nil
+      else fs.listStatus(idxRoot).toSeq.filter(_.isDirectory)
+        .map(_.getPath).sortBy(_.toString).flatMap { p =>
+          // A dir with committed versions at its own level is one table;
+          // any other is an index of nested tables (a ShardedNearDupIndex
+          // commits at <name>/{labels,bands}, never at <name> itself —
+          // r18 ADVICE: a flat listing planned Nil for them), swept and
+          // reported as "<index>/<table>" by the index itself.
+          if (AtomicTable.committedVersions(spark, p.toString).nonEmpty)
+            Maintenance.run(spark, p.toString, Maintenance.Policy())
+          else graft.llm.ShardedNearDupIndex.maintain(spark, p.toString)
         }
-      }
-    indexes
   }
 
   private def optValue(args: Array[String], flag: String): Option[String] =

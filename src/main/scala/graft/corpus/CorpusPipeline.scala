@@ -5,8 +5,9 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.llm.{CorpusIndex, Dedup, ShardedNearDupIndex, TextAnalysis}
-import graft.operators.{AtomicTable, MergeUpsert}
+import graft.llm.{BandIndex, CorpusIndex, Dedup, ShardedNearDupIndex,
+  TextAnalysis}
+import graft.operators.MergeUpsert
 import graft.quality.Checks
 import graft.ref.Catalog
 
@@ -313,7 +314,7 @@ object CorpusPipeline {
     // discipline (shard size, not corpus size, bounds bucket fill)
     val bits = Dedup.autoBandPolicy(
       math.max(1L, keptN / math.max(1, nSeedShards)))
-    val sharded = Dedup.simhashForWidth(bits, tokenRows(kept))
+    val sharded = Dedup.simhashFromTokens(tokenRows(kept), bits)
       .withColumn("shard", pmod(col("doc_id"), lit(nSeedShards.toLong)))
     ShardedNearDupIndex.seedShards(spark, neardupDir(wh), sharded, bits)
     cat.saveTable("corpus", "curated_docs", kept)
@@ -335,7 +336,7 @@ object CorpusPipeline {
     val decisions = decide(spark, cat, tag, curate(raw), wh, ordinal)
     val kept = keptDocs(decisions)
     val bits = ShardedNearDupIndex.committedBits(spark, neardupDir(wh)).get
-    val newShard = Dedup.simhashForWidth(bits, tokenRows(kept))
+    val newShard = Dedup.simhashFromTokens(tokenRows(kept), bits)
       .withColumn("shard", lit(ordinal))
     ShardedNearDupIndex.addShard(spark, neardupDir(wh), newShard, bits,
       version = Some(ordinal))
@@ -386,12 +387,9 @@ object CorpusPipeline {
             col("in_index"), col("keep"))
             .join(curated, Seq("doc_id")))
       }
-    val delta = decisions.filter(col("keep"))
-      .select(col(CorpusIndex.FpCol)).distinct()
-    AtomicTable.commitDelta(
-      delta.repartition(math.max(1,
-        spark.sparkContext.defaultParallelism / 4)),
-      exactDir(wh), ordinal)
+    BandIndex.commitKept(spark, exactDir(wh),
+      decisions.filter(col("keep")).select(col(CorpusIndex.FpCol)),
+      Some(ordinal))
     decisions
   }
 

@@ -1,9 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import graft.operators.AtomicTable
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
+import graft.operators.{AtomicTable, Maintenance}
 
 /** STORAGE HALF of the daily-crawl dedup discipline: a versioned,
   * committed corpus-fingerprint index that [[Dedup.incrementalExact]]
@@ -13,15 +14,9 @@ import graft.operators.AtomicTable
   * [[AtomicTable]] DELTA — so the daily WRITE is ∝ batch, not ∝ index
   * (r17; the previous index∪delta full rewrite was the measured r16
   * weak mark: at deployment grain day-365 rewrote the whole accumulated
-  * index, and the streaming sinks hit it per micro-batch). A crashed
-  * run leaves the committed index intact and the batch is safely
-  * re-runnable (the delta commit is idempotent per version, and
-  * re-deduping the same batch against the pre-batch index yields the
-  * same delta). Append == upsert here BY CONSTRUCTION: a kept doc's
-  * fingerprint missed the index by definition of `keep`, so deltas are
-  * provably disjoint from the committed set. [[compactToBase]] (or
-  * `compactEvery`) folds accumulated deltas into a new base so the
-  * merged read's file count stays bounded.
+  * index, and the streaming sinks hit it per micro-batch). Load, commit
+  * and compaction are the [[BandIndex]] core's; the crash and replay
+  * contract is in its scaladoc.
   *
   * At 100 TB the index is fingerprints only (16-byte md5 per KEPT doc),
   * orders of magnitude smaller than the corpus; with `bloom = true` the
@@ -34,27 +29,10 @@ object CorpusIndex {
 
   val FpCol = "content_fp"
 
-  /** Bounded task width for index DELTA writes (r19; VERDICT r18 #3).
-    * The previous `.coalesce(1)` kept one file per commit but — because
-    * coalesce NARROWS the parent stage — also collapsed the distinct's
-    * reduce side to ONE task, so at a billion-row daily batch the whole
-    * dedup tail ran single-threaded. A small round-robin
-    * `repartition(n)` AFTER the distinct keeps the distinct at full
-    * shuffle width and ships only the deduped fingerprint-grain output
-    * (tiny) through one extra exchange; merged-read file count becomes
-    * commits × n, still bounded by `compactEvery`. n = cores/4 keeps
-    * single-digit files per commit on the test rig and scales with the
-    * cluster. */
-  private[llm] def deltaWriteTasks(df: DataFrame): Int =
-    math.max(1, df.sparkSession.sparkContext.defaultParallelism / 4)
-
   /** Merged committed index at `dir` (base ∪ deltas); empty (zero-row)
-    * index when nothing is committed yet — day 1 bootstraps against
-    * it. */
+    * index when nothing is committed yet. */
   def load(spark: SparkSession, dir: String): DataFrame =
-    AtomicTable.readMerged(spark, dir).getOrElse(
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(Seq(StructField(FpCol, StringType)))))
+    BandIndex.load(spark, dir, StructType(Seq(StructField(FpCol, StringType))))
 
   /** One daily batch: annotate via the REAL [[Dedup.incrementalExact]]
     * (Bloom-pruned probe when `bloom` — bit-identical output, shuffle
@@ -71,16 +49,9 @@ object CorpusIndex {
     val annotated =
       if (bloom) Dedup.incrementalExactBloom(idx, batch, id, text)
       else Dedup.incrementalExact(idx, batch, id, text)
-    // Bounded repartition, NOT coalesce(1) — see [[deltaWriteTasks]]:
-    // index deltas are fingerprint-grain (≪ batch) so the extra
-    // exchange is tiny, and the distinct's reduce side stays parallel.
-    val delta = annotated.filter(col("keep")).select(col(FpCol))
-      .distinct()
-    val delta1 = delta.repartition(deltaWriteTasks(delta))
-    AtomicTable.commitDelta(delta1, dir, AtomicTable.nextVersion(spark, dir))
-    if (compactEvery > 0 &&
-      AtomicTable.deltasSinceBase(spark, dir) >= compactEvery)
-      AtomicTable.compactToBase(spark, dir)
+    BandIndex.commitKept(spark, dir,
+      annotated.filter(col("keep")).select(col(FpCol)),
+      compactEvery = compactEvery)
     annotated
   }
 }
@@ -92,13 +63,11 @@ object CorpusIndex {
   * `hit_index` when ANY of its band keys collides with the index (the
   * standard LSH decision: same recall knobs — bands × rowsPerBand — as
   * [[Dedup.lshCandidates]], no text re-read of history). Kept docs'
-  * bands are committed as the next [[AtomicTable]] DELTA (append ==
-  * upsert: a kept doc shares NO band key with the index, by definition
-  * of `keep`), so day-N work is one band equi-join against
-  * uniformly-hashed committed keys — never a re-scan of the historical
-  * corpus — and the daily WRITE is ∝ batch, not ∝ index (r17). Commit
-  * semantics (crash-safe, idempotent per version, re-runnable against
-  * the pre-batch index) are exactly [[CorpusIndex.processBatch]]'s.
+  * bands are committed as the next DELTA through the [[BandIndex]]
+  * core, so day-N work is one band equi-join against uniformly-hashed
+  * committed keys — never a re-scan of the historical corpus — and the
+  * daily WRITE is ∝ batch, not ∝ index (r17). No Hamming verify: 128-bit
+  * md5 band keys never collide by accident.
   *
   * Scope: batch-INTERNAL near-dup clustering stays with the composed
   * `simhashNearDups → connectedComponents → representative` chain
@@ -111,14 +80,11 @@ object NearDupIndex {
   /** Merged committed band index at `dir` (base ∪ deltas); empty when
     * none committed. */
   def load(spark: SparkSession, dir: String): DataFrame =
-    AtomicTable.readMerged(spark, dir).getOrElse(
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(Seq(
-          StructField("band", org.apache.spark.sql.types.IntegerType),
-          StructField("band_key", StringType)))))
+    BandIndex.load(spark, dir, StructType(Seq(
+      StructField("band", IntegerType), StructField("band_key", StringType))))
 
   /** One daily batch: shingle → [[Dedup.minhashBands]] → flag docs
-    * sharing any band with the committed index → commit index ∪ kept
+    * sharing any band with the committed index → commit the kept
     * docs' bands as the next version. Returns (doc_id, hit_index,
     * keep); docs too short to shingle have no bands — never flagged,
     * never indexed. `version`/`writerId` let a STREAMING caller pin
@@ -137,28 +103,10 @@ object NearDupIndex {
     val base = batch.select(id.as("doc_id"), text.as("text"))
     val shingled = TextAnalysis.shingleRows(base, col("doc_id"),
       col("text"), shingleN).distinct()
-    val bb = Dedup.minhashBands(shingled, nBands, rowsPerBand)
-    val idx = load(spark, dir)
-    val hits = bb.join(idx, Seq("band", "band_key"), "left_semi")
-      .select(col("doc_id")).distinct()
-      .withColumn("hit_index", lit(true))
-    val annotated = base.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .withColumn("hit_index", coalesce(col("hit_index"), lit(false)))
-      .withColumn("keep", !col("hit_index"))
-    val keptBands = bb
-      .join(annotated.filter(col("keep")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      .select(col("band"), col("band_key")).distinct()
-    val keptBands1 = // band-key grain ≪ batch; see CorpusIndex.deltaWriteTasks
-      keptBands.repartition(CorpusIndex.deltaWriteTasks(keptBands))
-    AtomicTable.commitDelta(keptBands1, dir,
-      version.getOrElse(AtomicTable.nextVersion(spark, dir)),
-      writerId = writerId)
-    if (compactEvery > 0 &&
-      AtomicTable.deltasSinceBase(spark, dir) >= compactEvery)
-      AtomicTable.compactToBase(spark, dir)
-    annotated
+    val p = BandIndex.probe(base,
+      Dedup.minhashBands(shingled, nBands, rowsPerBand), load(spark, dir))
+    BandIndex.commitKept(spark, dir, p.kept, version, writerId, compactEvery)
+    p.annotated
   }
 }
 
@@ -196,9 +144,13 @@ object NearDupIndex {
   * PRE-fold committed labels, so the re-committed delta is identical. */
 object ShardedNearDupIndex {
 
-  private def labelsDir(dir: String) = s"$dir/labels"
-  private def bandsDir(dir: String) = s"$dir/bands"
+  private val Labels = "labels"
+  private val Bands = "bands"
+  private def labelsDir(dir: String) = s"$dir/$Labels"
+  private def bandsDir(dir: String) = s"$dir/$Bands"
   private val LabV = "lab_v"
+  private val LabelSchema = StructType(Seq(
+    StructField("id", LongType), StructField("component", LongType)))
 
   /** Fail fast on a labels dir committed in the legacy snapshot
     * layout (r18 ADVICE): a delta commit onto it writes the
@@ -215,12 +167,6 @@ object ShardedNearDupIndex {
         "upsert deltas onto it is unsupported — seed a fresh dir")
   }
 
-  private def emptyLabels(spark: SparkSession): DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[Row](),
-      StructType(Seq(
-        StructField("id", org.apache.spark.sql.types.LongType),
-        StructField("component", org.apache.spark.sql.types.LongType))))
-
   /** Committed (id, component) labels; empty before the first shard.
     * On the upsert-delta layout this is the RESOLVED view — one
     * merge-on-read scan + a last-writer-wins hash aggregate per id
@@ -229,12 +175,10 @@ object ShardedNearDupIndex {
   def loadLabels(spark: SparkSession, dir: String): DataFrame = {
     val ld = labelsDir(dir)
     if (AtomicTable.isDeltaLayout(spark, ld))
-      AtomicTable.readMerged(spark, ld).map { merged =>
-        merged.groupBy(col("id"))
-          .agg(max_by(col("component"), col(LabV)).as("component"))
-      }.getOrElse(emptyLabels(spark))
-    else
-      AtomicTable.read(spark, ld).getOrElse(emptyLabels(spark))
+      BandIndex.load(spark, ld, LabelSchema, (s, d) =>
+        AtomicTable.readMerged(s, d).map(_.groupBy(col("id"))
+          .agg(max_by(col("component"), col(LabV)).as("component"))))
+    else BandIndex.load(spark, ld, LabelSchema, AtomicTable.read(_, _))
   }
 
   /** Null probe rank for fresh band DELTAS — [[compactBands]] fills it
@@ -247,17 +191,12 @@ object ShardedNearDupIndex {
     * Rows carry `probe_rk` — non-null on rows whose rank was
     * materialized by [[compactBands]], null on deltas since. */
   def loadBands(spark: SparkSession, dir: String, bits: Int): DataFrame =
-    AtomicTable.readMerged(spark, bandsDir(dir)).getOrElse {
-      val nWords = (bits + 31) / 32
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(
-          StructField("doc_id", org.apache.spark.sql.types.LongType) +:
-            (0 until nWords).map(w => StructField(s"h$w",
-              org.apache.spark.sql.types.LongType)) :+
-            StructField("band", org.apache.spark.sql.types.IntegerType) :+
-            StructField("band_key", StringType) :+
-            StructField("probe_rk", org.apache.spark.sql.types.LongType)))
-    }
+    BandIndex.load(spark, bandsDir(dir), StructType(
+      StructField("doc_id", LongType) +:
+        (0 until (bits + 31) / 32).map(w => StructField(s"h$w", LongType)) :+
+        StructField("band", IntegerType) :+
+        StructField("band_key", StringType) :+
+        StructField("probe_rk", LongType)))
 
   /** BULK-SEED committed state from an already-sharded corpus in ONE
     * single-pass run — the migration path for a deployment that
@@ -326,7 +265,7 @@ object ShardedNearDupIndex {
     * sniffed from ONE committed file's schema (the packed word columns
     * `h0..h{n-1}` count the width: 1 → 32-bit, 2 → 64, 4 → 128); None
     * before the first commit. The width is a per-dir POLICY pin, like
-    * [[PhashIndexAuto.committedWidth]]: folds MUST reuse the committed
+    * [[PhashIndex.committedWidth]]: folds MUST reuse the committed
     * width (the band layout is schema), so incremental drivers call
     * this instead of re-running the sizing policy every batch. */
   def committedBits(spark: SparkSession, dir: String): Option[Int] =
@@ -377,178 +316,77 @@ object ShardedNearDupIndex {
         .select(col("id"), col("w.component").as("component"),
           col(s"w.$LabV").as(LabV)))
   }
+
+  /** Maintenance sweep of one index dir: each committed table under
+    * `dir` gets [[Maintenance.plan]]'s verdict. A delta-layout `labels`
+    * table compacts through [[compactLabels]] (dead row VERSIONS
+    * disappear, not just files), a delta-layout `bands` table through
+    * [[compactBands]] (so probeCap's committed-bulk filter has stored
+    * `probe_rk` rows), any other table through [[Maintenance.run]].
+    * Actions report as `<index>/<table>`, so two sharded indexes under
+    * one root stay distinguishable. */
+  def maintain(spark: SparkSession, dir: String): Seq[Maintenance.Action] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
+      .filter(p => AtomicTable.committedVersions(spark, p.toString).nonEmpty)
+      .sortBy(_.toString).flatMap { p =>
+        val t = p.toString
+        val acts =
+          if (Seq(Labels, Bands).contains(p.getName) &&
+            AtomicTable.isDeltaLayout(spark, t)) {
+            val planned = Maintenance.plan(spark, t)
+            if (planned.exists(_.action == "compact_to_base")) {
+              if (p.getName == Labels) compactLabels(spark, dir)
+              else compactBands(spark, dir)
+            }
+            planned
+          } else Maintenance.run(spark, t)
+        acts.map(a => a.copy(table = s"${root.getName}/${a.table}"))
+      }
+  }
 }
 
 /** IMAGE sibling of [[NearDupIndex]] — persisted perceptual-hash index
   * for daily-crawl image dedup: the committed index holds, for every
-  * kept image, its 4×16-bit dHash pigeonhole band rows WITH the full
-  * 64-bit hash ((band, band_key, hash_lo, hash_hi)). A probe batch
-  * joins on (band, band_key) — candidates only, never all-pairs — and
-  * then VERIFIES Hamming ≤ maxHamming against the indexed hash before
-  * flagging. The verify step is load-bearing at scale: 16-bit band keys
-  * saturate as the index grows (≈ |index|·4/65536 expected candidates
-  * per probe), so band collision alone would flag nearly everything;
-  * carrying the hash into the index makes the decision exact-recall
-  * (pigeonhole, Hamming ≤ 3) AND exact-precision, unlike the text
-  * index whose 128-bit md5 band keys never collide by accident.
-  * Kept images' band rows are committed as DELTAS (append == upsert:
-  * an indexed 4-tuple identical to a kept image's would mean Hamming 0
-  * — a hit, so kept rows are provably absent from the index) — the
-  * daily WRITE is ∝ batch, not ∝ index (r17). Commit semantics
-  * (crash-safe, idempotent per version, re-runnable against the
-  * pre-batch index) are [[CorpusIndex.processBatch]]'s. */
-object PhashIndex {
-
-  /** Merged committed band+hash index at `dir` (base ∪ deltas); empty
-    * when none. */
-  def load(spark: SparkSession, dir: String): DataFrame =
-    PhashIndexCore.load(spark, dir, PhashWidth.W64)
-
-  /** One daily image batch: real decode → dHash → band-join the
-    * committed index → Hamming-verify → flag; kept images' band rows
-    * are upserted as the next version. Returns (doc_id, hit_index,
-    * keep). `version`/`writerId` let a STREAMING caller pin the commit
-    * to its micro-batch id under its checkpoint lineage
-    * ([[graft.streaming.EventStream.phashDedupSink]]) so a replayed
-    * batch is an idempotent already-committed no-op; batch callers
-    * take the default next-version numbering. */
-  def processBatch(spark: SparkSession, dir: String, images: DataFrame,
-                   maxHamming: Int = 3,
-                   version: Option[Long] = None,
-                   writerId: Option[String] = None,
-                   compactEvery: Int = 0): DataFrame =
-    PhashIndexCore.processBatch(spark, dir, images, PhashWidth.W64,
-      maxHamming, version, writerId, compactEvery)
-}
-
-/** WIDTH descriptor of a persisted perceptual-hash index — the one
-  * place the 64- and 128-bit layouts differ (r19; VERDICT r18 task #5:
-  * the two objects shared commit/verify logic nearly line-for-line,
-  * which is how default-vs-defense drift happened). `hashCols` are the
-  * packed non-negative BIGINT words that ride in every index row for
-  * the exact Hamming verify; `hash`/`bandRows` are the codec-boundary
-  * hasher and the pigeonhole banding of that width. */
-private[llm] final case class PhashWidth(
-    bits: Int, hashCols: Seq[String],
-    hash: DataFrame => DataFrame, bandRows: DataFrame => DataFrame)
-
-private[llm] object PhashWidth {
-  val W64 = PhashWidth(64, Seq("hash_lo", "hash_hi"),
-    Multimodal.dHash64, Multimodal.phashBands)
-  val W128 = PhashWidth(128, (0 until 4).map(w => s"h$w"),
-    Multimodal.dHash128, Multimodal.phash128Bands)
-  def of(bits: Int): PhashWidth = bits match {
-    case 64  => W64
-    case 128 => W128
-    case b => throw new IllegalArgumentException(
-      s"no phash index width for $b bits (shipped: 64, 128)")
-  }
-}
-
-/** Shared implementation of [[PhashIndex]] / [[Phash128Index]]: every
-  * step — band join for candidates, codegen'd xor+bit_count Hamming
-  * verify against the indexed words, kept-rows delta commit — is
-  * width-generic; only [[PhashWidth]] differs. */
-private[llm] object PhashIndexCore {
-
-  def load(spark: SparkSession, dir: String, w: PhashWidth): DataFrame =
-    AtomicTable.readMerged(spark, dir).getOrElse(
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(
-          StructField("band", org.apache.spark.sql.types.IntegerType) +:
-            StructField("band_key", org.apache.spark.sql.types.LongType) +:
-            w.hashCols.map(c => StructField(c,
-              org.apache.spark.sql.types.LongType)))))
-
-  def processBatch(spark: SparkSession, dir: String, images: DataFrame,
-                   w: PhashWidth, maxHamming: Int,
-                   version: Option[Long], writerId: Option[String],
-                   compactEvery: Int): DataFrame = {
-    // ONE codec pass per batch (r20): the hash frame is the only
-    // consumer of the image payloads, and downstream re-references it
-    // three times inside the commit job alone — `bands` feeds both the
-    // probe join and the kept-rows delta, plus the decision join on
-    // `hashes` — with no exchange boundary between them, so exchange
-    // reuse never dedups the synthesize+decode mapPartitions subtree
-    // (the r07 "recompute beats materialization" rule assumed reuse
-    // applies; here it can't). Callers then consume the RETURNED
-    // decisions frame in separately-executed plans (the migrate gate
-    // re-ran day 2's entire 64-bit probe chain inside the archive
-    // re-hash; Bench re-runs the codec just to count rows). The
-    // checkpoint truncates all of that at a (doc_id, 1–4 BIGINT words)
-    // frame — batch-sized metadata, ~20 bytes/row — so the codec runs
-    // exactly once per batch. One-shot checkpoint, NOT in a loop →
-    // plain localCheckpoint keeps carried stats (Ckpt.truncated is for
-    // iterative bodies only). Measured r20 (min-of-3, identical subset
-    // harness, quiet): dd_phash_policy_large 12.29→7.35 s,
-    // dd_phash_migrate_chain 14.68→10.05, dd_phash_policy_small
-    // 8.24→4.55, dd_phash_index_chain 6.78→5.09; byte columns
-    // unchanged (plan-shape-only change).
-    val hashes = w.hash(images).localCheckpoint(true)
-    val bands = w.bandRows(hashes)
-    val idx = w.hashCols.foldLeft(load(spark, dir, w))((d, c) =>
-      d.withColumnRenamed(c, s"idx_$c"))
-    val hits = bands.join(idx, Seq("band", "band_key"))
-      .filter(expr(w.hashCols.map(c => s"bit_count($c ^ idx_$c)")
-        .mkString(" + ") + s" <= $maxHamming"))
-      .select("doc_id").distinct()
-      .withColumn("hit_index", lit(true))
-    val annotated = hashes.select("doc_id")
-      .join(hits, Seq("doc_id"), "left")
-      .withColumn("hit_index", coalesce(col("hit_index"), lit(false)))
-      .withColumn("keep", !col("hit_index"))
-    val keptBands = bands
-      .join(annotated.filter(col("keep")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      .select((col("band") +: col("band_key") +: w.hashCols.map(col)): _*)
-      .distinct() // band-row grain ≪ batch; see CorpusIndex.deltaWriteTasks
-    val delta = keptBands.repartition(CorpusIndex.deltaWriteTasks(keptBands))
-    AtomicTable.commitDelta(delta, dir,
-      version.getOrElse(AtomicTable.nextVersion(spark, dir)),
-      writerId = writerId)
-    if (compactEvery > 0 &&
-      AtomicTable.deltasSinceBase(spark, dir) >= compactEvery)
-      AtomicTable.compactToBase(spark, dir)
-    annotated
-  }
-}
-
-/** WIDTH-POLICY front door for persisted image dedup (r19; closes the
-  * r18 `weak` mark: the 128-bit defense existed but nothing selected
-  * it, so default pipelines inherited [[PhashIndex]]'s measured
-  * 1.43@100× probe-saturation tail). Mirrors the text side's
-  * [[Dedup.autoBandPolicy]] discipline: the width is a POLICY decision
-  * from expected index size, made once per index dir and pinned by the
-  * committed schema thereafter.
+  * kept image, its four dHash pigeonhole band rows WITH the full packed
+  * hash ((band, band_key, words...)). A probe batch joins on (band,
+  * band_key) — candidates only, never all-pairs — and then VERIFIES
+  * Hamming ≤ maxHamming against the indexed words before flagging
+  * ([[BandIndex.probe]]). The verify is load-bearing at scale: narrow
+  * band keys saturate as the index grows, so band collision alone
+  * would flag nearly everything; carrying the hash into the index makes
+  * the decision exact-recall (pigeonhole: 4 bands, ≤ 3 flipped bits ⇒
+  * one band identical) AND exact-precision. Kept images' band rows are
+  * committed as DELTAS through the [[BandIndex]] core (append ==
+  * upsert: an indexed row identical to a kept image's would mean
+  * Hamming 0 — a hit).
   *
-  * Width rules:
+  * Two widths ([[PhashWidth]]): 64-bit = 9×8 payloads, four 16-bit
+  * bands over the hash, so accidental candidates grow ≈ |index|·4/2^16
+  * per probe (the measured 1.43@100× shuffle tail); 128-bit = 17×8
+  * payloads, bands are the four 32-bit words of [[Multimodal.dHash128]]
+  * (|index|·4/2^32 — the band width scales with the hash, not the
+  * corpus). Width rules:
   *   - An EXISTING index keeps its committed width forever — hashes of
   *     different grids are not convertible, so "migrating" an index
-  *     means a new dir plus a re-hash backfill of the source images,
-  *     never an in-place flip ([[committedWidth]] sniffs the schema).
-  *   - A FRESH dir takes [[autoPhashPolicy]]'s choice from
-  *     `expectedIndexRows`; the DEFAULT (`Long.MaxValue`) is the
-  *     scale-safe 128-bit layout — a pipeline built on defaults gets
-  *     the non-saturating index, and small deployments opt DOWN by
-  *     passing their expected corpus size.
+  *     means a new dir plus a re-hash backfill ([[migrate]]), never an
+  *     in-place flip; a batch pinning another width is refused.
+  *   - A FRESH dir takes the caller's pinned `bits`, else
+  *     [[BandIndex.width]] over the image ladder from
+  *     `expectedIndexRows` (64-bit up to the 16,384-row crossover). The
+  *     DEFAULT (`Long.MaxValue`) is the scale-safe 128-bit layout —
+  *     small deployments opt DOWN by passing their expected size.
   *
   * Callers receive the codec-boundary width through `toImages(bits)`
-  * (the resize target differs: 9×8 vs 17×8), and the CHOICE itself
-  * rides in the output as a `band_bits` column so oracle twins can
-  * replay it — the r16 text-side discipline. */
-object PhashIndexAuto {
+  * (the resize target differs: 9×8 vs 17×8), and the choice rides in
+  * the output as a `band_bits` column so oracle twins can replay it. */
+object PhashIndex {
 
-  /** 64 bits while the 64-bit layout's expected ACCIDENTAL candidates
-    * per probe — |index| · 4 bands / 2^16 keys — stay ≤
-    * `maxCandidatesPerProbe`; 128 above (crossover 16,384 rows at the
-    * default: past it every probe pays ≥1 wasted verify and the
-    * measured 1.43@100× saturation tail begins). The 128-bit layout's
-    * per-band keyspace is 2^32, pushing the same crossover to ~10^9
-    * rows — beyond any single index dir a sharded deployment holds. */
-  def autoPhashPolicy(expectedIndexRows: Long,
-                      maxCandidatesPerProbe: Double = 1.0): Int =
-    if (expectedIndexRows * 4.0 / 65536.0 <= maxCandidatesPerProbe) 64
-    else 128
+  /** Merged committed band+hash index at `dir` (base ∪ deltas) at its
+    * committed width; the empty 64-bit layout when none. */
+  def load(spark: SparkSession, dir: String): DataFrame =
+    BandIndex.load(spark, dir, PhashWidth.W64.schema)
 
   /** Width cache: once a dir has a committed width it is pinned
     * forever (see the width rules above), so the schema sniff needs to
@@ -618,8 +456,7 @@ object PhashIndexAuto {
     * its word-band rows committed as `newDir`'s version-0 delta and
     * immediately compacted to a base (the backfill is one clean base,
     * not a delta chain). Subsequent batches against `newDir` resolve
-    * width 128 from the committed schema — the policy front door stays
-    * the only write path.
+    * width 128 from the committed schema.
     *
     * RECALL across the flip: exact re-crawls are Hamming 0 at every
     * width, so the migrated index flags them identically; near-dups
@@ -642,66 +479,92 @@ object PhashIndexAuto {
     require(committedWidth(spark, newDir).isEmpty,
       s"migrate: $newDir already holds a committed index")
     val w = PhashWidth.W128
-    val bands = w.bandRows(w.hash(images))
-      .select((col("band") +: col("band_key") +: w.hashCols.map(col)): _*)
-      .distinct()
-    val delta = bands.repartition(CorpusIndex.deltaWriteTasks(bands))
-    AtomicTable.commitDelta(delta, newDir, 0L)
+    BandIndex.commitKept(spark, newDir,
+      w.bandRows(w.hash(images)).select(w.schema.fieldNames.map(col): _*),
+      version = Some(0L))
     AtomicTable.compactToBase(spark, newDir)
-    Phash128Index.load(spark, newDir).count()
+    load(spark, newDir).count()
   }
 
-  /** One daily image batch through the policy-chosen width: committed
-    * width wins, else [[autoPhashPolicy]](expectedIndexRows). The
-    * returned frame is the width's own `processBatch` output plus the
-    * gated `band_bits` column. */
+  /** One daily image batch: real decode → dHash → band-join the
+    * committed index → Hamming-verify → flag; kept images' band rows
+    * are committed as the next delta. The width is resolved once: the
+    * committed width, else the pinned `bits`, else the image-ladder
+    * policy from `expectedIndexRows`; a pin that disagrees with the
+    * committed width is refused. Returns (doc_id, hit_index, keep,
+    * band_bits). `version`/`writerId` let a STREAMING caller pin the
+    * commit to its micro-batch id under its checkpoint lineage
+    * ([[graft.streaming.EventStream.phashDedupSink]]) so a replayed
+    * batch is an idempotent already-committed no-op; batch callers
+    * take the default next-version numbering. */
   def processBatch(spark: SparkSession, dir: String,
                    toImages: Int => DataFrame,
+                   bits: Option[Int] = None,
                    expectedIndexRows: Long = Long.MaxValue,
                    maxHamming: Int = 3,
                    version: Option[Long] = None,
                    writerId: Option[String] = None,
                    compactEvery: Int = 0): DataFrame = {
-    val bits = committedWidth(spark, dir)
-      .getOrElse(autoPhashPolicy(expectedIndexRows))
-    PhashIndexCore.processBatch(spark, dir, toImages(bits),
-        PhashWidth.of(bits), maxHamming, version, writerId, compactEvery)
-      .withColumn("band_bits", lit(bits))
+    val width = committedWidth(spark, dir) match {
+      case Some(c) =>
+        require(bits.forall(_ == c), s"$dir is committed at $c bits; a " +
+          s"batch pinned to ${bits.getOrElse(c)} bits is refused (widths " +
+          "are not convertible — migrate to a new dir instead)")
+        c
+      case None =>
+        bits.getOrElse(BandIndex.width(expectedIndexRows, BandIndex.ImageLadder))
+    }
+    val w = PhashWidth.of(width)
+    // ONE codec pass per batch (r20): the hash frame is the only
+    // consumer of the image payloads, and downstream re-references it
+    // three times inside the commit job alone — `bands` feeds both the
+    // probe join and the kept-rows delta, plus the decision join on
+    // `hashes` — with no exchange boundary between them, so exchange
+    // reuse never dedups the synthesize+decode mapPartitions subtree.
+    // Callers then consume the RETURNED decisions frame in
+    // separately-executed plans (the migrate gate re-ran day 2's
+    // entire 64-bit probe chain inside the archive re-hash; Bench
+    // re-runs the codec just to count rows). The checkpoint truncates
+    // all of that at a (doc_id, 1–4 BIGINT words) frame — batch-sized
+    // metadata, ~20 bytes/row — so the codec runs exactly once per
+    // batch. One-shot checkpoint, NOT in a loop → plain localCheckpoint
+    // keeps carried stats (Ckpt.truncated is for iterative bodies
+    // only). Measured r20 (min-of-3, identical subset harness, quiet):
+    // dd_phash_policy_large 12.29→7.35 s, dd_phash_migrate_chain
+    // 14.68→10.05, dd_phash_policy_small 8.24→4.55,
+    // dd_phash_index_chain 6.78→5.09; byte columns unchanged.
+    val hashes = w.hash(toImages(width)).localCheckpoint(true)
+    val p = BandIndex.probe(hashes, w.bandRows(hashes),
+      BandIndex.load(spark, dir, w.schema), w.hashCols, maxHamming)
+    BandIndex.commitKept(spark, dir, p.kept, version, writerId, compactEvery)
+    p.annotated.withColumn("band_bits", lit(width))
   }
 }
 
-/** 128-BIT sibling of [[PhashIndex]] — the probe-saturation defense
-  * (r18; VERDICT r17 task #2): [[PhashIndex]]'s 16-bit band keys sit
-  * over a FIXED 64-bit hash, so probe candidates grow ≈ |index|·4/65536
-  * per probe regardless of corpus — the measured shuffle-tail 1.43@100×.
-  * Here the bands are the four 32-bit words of
-  * [[Multimodal.dHash128]], so the per-band keyspace is 2^32: expected
-  * accidental candidates per probe are |index|/2^32 — the band width
-  * scales with the hash, not the corpus (the same cure
-  * `simhash128FromTokens` applies on the text side), while the
-  * pigeonhole recall guarantee for Hamming ≤ 3 is unchanged (4 bands,
-  * ≤ 3 flipped bits ⇒ one band identical). Verify stays exact: the
-  * four packed words ride in the index rows and one codegen'd
-  * xor+bit_count sum per candidate confirms Hamming ≤ maxHamming.
-  * Commit semantics (append-only deltas, crash-safe, idempotent per
-  * version) are [[PhashIndex.processBatch]]'s. */
-object Phash128Index {
+/** WIDTH descriptor of a persisted perceptual-hash index — the one
+  * place the 64- and 128-bit layouts differ. `hashCols` are the packed
+  * non-negative BIGINT words that ride in every index row for the exact
+  * Hamming verify; `hash`/`bandRows` are the codec-boundary hasher and
+  * the pigeonhole banding of that width. */
+private[llm] final case class PhashWidth(
+    bits: Int, hashCols: Seq[String],
+    hash: DataFrame => DataFrame, bandRows: DataFrame => DataFrame) {
 
-  /** Merged committed band+hash index at `dir` (base ∪ deltas); empty
-    * when none. */
-  def load(spark: SparkSession, dir: String): DataFrame =
-    PhashIndexCore.load(spark, dir, PhashWidth.W128)
+  /** Index row schema: (band, band_key, hash words...). */
+  def schema: StructType = StructType(
+    StructField("band", IntegerType) +: StructField("band_key", LongType) +:
+      hashCols.map(StructField(_, LongType)))
+}
 
-  /** One daily image batch (17×8 payloads): real decode → 128-bit
-    * dHash → band-join the committed index on the 32-bit word keys →
-    * Hamming-verify over all four words → flag; kept images' band rows
-    * are upserted as the next delta. Returns (doc_id, hit_index,
-    * keep). */
-  def processBatch(spark: SparkSession, dir: String, images: DataFrame,
-                   maxHamming: Int = 3,
-                   version: Option[Long] = None,
-                   writerId: Option[String] = None,
-                   compactEvery: Int = 0): DataFrame =
-    PhashIndexCore.processBatch(spark, dir, images, PhashWidth.W128,
-      maxHamming, version, writerId, compactEvery)
+private[llm] object PhashWidth {
+  val W64 = PhashWidth(64, Seq("hash_lo", "hash_hi"),
+    Multimodal.dHash64, Multimodal.phashBands)
+  val W128 = PhashWidth(128, (0 until 4).map(w => s"h$w"),
+    Multimodal.dHash128, Multimodal.phash128Bands)
+  def of(bits: Int): PhashWidth = bits match {
+    case 64  => W64
+    case 128 => W128
+    case b => throw new IllegalArgumentException(
+      s"no phash index width for $b bits (shipped: 64, 128)")
+  }
 }

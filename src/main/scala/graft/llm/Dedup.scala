@@ -288,22 +288,10 @@ object Dedup {
     * explicitly; the two cluster-grain consumers call this with their
     * corpus count and gate the CHOICE via a `band_bits` column (both
     * gate SFs sit inside the 64-bit window: 500 and 5,000 docs vs
-    * bounds 256/65,536). */
+    * bounds 256/65,536). This is [[BandIndex.width]] over the text
+    * ladder — the same rule sizes the image index. */
   def autoBandPolicy(nDocs: Long): Int =
-    Seq(32, 64, 128).find(b => (1L << (b / 4)) >= nDocs).getOrElse(128)
-
-  /** Signature builder for a policy-chosen width — dispatches to the
-    * matching `simhash*FromTokens` rung (the widths are distinct
-    * hash-stream layouts, not a parameter, so the ladder stays three
-    * individually-gated functions). */
-  def simhashForWidth(bits: Int, tokenRows: DataFrame): DataFrame =
-    bits match {
-      case 32  => simhashFromTokens(tokenRows)
-      case 64  => simhash64FromTokens(tokenRows)
-      case 128 => simhash128FromTokens(tokenRows)
-      case b => throw new IllegalArgumentException(
-        s"no simhash rung for $b bits (shipped: 32, 64, 128)")
-    }
+    BandIndex.width(nDocs, BandIndex.TextLadder)
 
   /** SimHash NEAR-DUP pairS via PIGEONHOLE BANDING: split the 32-bit
     * signature into 4 exact-match bands of 8 bits — any pair within
@@ -770,11 +758,27 @@ object Dedup {
     concat(bitCols: _*)
   }
 
-  /** Distributed SimHash: same signature as [[simhashBits]] but computed
-    * from exploded (doc_id, token) rows — md5 evaluated once per token
-    * (the array form above gets inlined 32× by project-collapsing), and
-    * the per-bit votes become 32 conditional sums in ONE groupBy(doc_id)
-    * aggregate. This is the form to use on real corpora.
+  /** Distributed SimHash: same signature as [[simhashBits]] (at the
+    * default 32 bits) but computed from exploded (doc_id, token) rows —
+    * md5 evaluated once per token and stream (the array form above
+    * gets inlined 32× by project-collapsing), and the per-bit votes
+    * become `bits` conditional sums in ONE groupBy(doc_id) aggregate.
+    * This is the form to use on real corpora.
+    *
+    * WIDTH LADDER (32/64/128 bits = 8/16/32-bit bands under the
+    * 4-band pigeonhole — Hamming ≤ 3 recall stays exact at every
+    * width): bits 32(k-1)+1..32k vote on hash stream k, where stream 1
+    * is md5(token) and stream k ≥ 2 is md5('s{k}|' ∥ token) —
+    * independent streams, portable to the twin engine verbatim. So
+    * bits 1–32 of a wider signature ARE the 32-bit signature and bits
+    * 1–64 of the 128-bit ARE the 64-bit one. Wider bands push
+    * band-bucket saturation out (256 keys per band at 32 bits — the
+    * measured shuffle-exponent-1.5 regime; 65,536 at 64; 4.3B at 128)
+    * at the price of one extra md5 stream per 32 bits;
+    * [[autoBandPolicy]] picks the width. Pair with
+    * `simhashNearDups(..., bits = b)`, which packs any width into
+    * 32-bit words for the xor+bit_count verify. `bits` outside
+    * {32, 64, 128} throws IllegalArgumentException.
     *
     * Measured-and-REJECTED (r15): pre-aggregating to (doc, token, cnt)
     * so md5 + the bit tests run once per DISTINCT pair (votes as
@@ -783,69 +787,22 @@ object Dedup {
     * embarrassingly parallel) while shuffle bytes DOUBLED (533 MB →
     * 1.18 GB): the extra (doc, token) exchange ships distinct-pair
     * rows, whereas this form's single doc-grain exchange ships only
-    * 32 partial-sum longs per doc. At 100 TB shuffle dwarfs hash CPU —
-    * keep the one-exchange form. */
-  def simhashFromTokens(tokenRows: DataFrame): DataFrame = {
+    * `bits` partial-sum longs per doc. At 100 TB shuffle dwarfs hash
+    * CPU — keep the one-exchange form. */
+  def simhashFromTokens(tokenRows: DataFrame, bits: Int = 32): DataFrame = {
+    require(Seq(32, 64, 128).contains(bits),
+      s"no simhash rung for $bits bits (shipped: 32, 64, 128)")
     val highHex = Seq("8", "9", "a", "b", "c", "d", "e", "f").map(lit(_))
-    val h = md5(col("token"))
-    val votes = (1 to 32).map { i =>
-      sum(when(substring(h, i, 1).isin(highHex: _*), 1).otherwise(-1))
-        .as(s"v$i")
-    }
-    tokenRows.groupBy(col("doc_id"))
-      .agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"),
-        concat((1 to 32).map(i =>
-          when(col(s"v$i") > 0, "1").otherwise("0")): _*).as("simhash"))
-  }
-
-  /** 64-BIT SimHash from exploded (doc_id, token) rows — the WIDE-BAND
-    * variant the r14 ScaleBench measurement motivates: with 4 bands the
-    * Hamming ≤ 3 exact-recall pigeonhole holds at ANY band width, and
-    * 16-bit bands give 65,536 keys per band instead of 256 — pushing
-    * band-bucket saturation (the measured shuffle-exponent-1.5 regime
-    * of the 32-bit layout) out by 256× in corpus size. Bits 1–32 vote
-    * on md5(token) as in [[simhashFromTokens]]; bits 33–64 on
-    * md5('s2|' ∥ token) — an independent hash stream, portable to the
-    * twin engine verbatim. Pair with `simhashNearDups(..., bits = 64)`. */
-  def simhash64FromTokens(tokenRows: DataFrame): DataFrame = {
-    val highHex = Seq("8", "9", "a", "b", "c", "d", "e", "f").map(lit(_))
-    val h1 = md5(col("token"))
-    val h2 = md5(concat(lit("s2|"), col("token")))
-    val votes = (1 to 64).map { i =>
-      val src = if (i <= 32) substring(h1, i, 1) else substring(h2, i - 32, 1)
-      sum(when(src.isin(highHex: _*), 1).otherwise(-1)).as(s"v$i")
-    }
-    tokenRows.groupBy(col("doc_id"))
-      .agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"),
-        concat((1 to 64).map(i =>
-          when(col(s"v$i") > 0, "1").otherwise("0")): _*).as("simhash"))
-  }
-
-  /** 128-BIT SimHash — the NEXT band widening after
-    * [[simhash64FromTokens]], for shards past the measured 16-bit
-    * saturation onset (SCALE.md: the 64-bit layout's shuffle-tail
-    * rises from 1.16 at 150k docs to 1.74 at 500k; 4×32-bit bands give
-    * 4.3B keys per band, deferring saturation another 65,536× in
-    * corpus size with the identical Hamming ≤ 3 exact-recall
-    * pigeonhole). Bits 32(k-1)+1..32k vote on the independent stream
-    * md5('s{k}|' ∥ token) (k = 2..4; stream 1 is plain md5 — bits
-    * 1–64 ARE [[simhash64FromTokens]]'s signature). Pair with
-    * `simhashNearDups(..., bits = 128)`, which packs any width into
-    * 32-bit words for the xor+bit_count verify. */
-  def simhash128FromTokens(tokenRows: DataFrame): DataFrame = {
-    val highHex = Seq("8", "9", "a", "b", "c", "d", "e", "f").map(lit(_))
-    val streams = Seq(md5(col("token"))) ++ (2 to 4).map(k =>
+    val streams = md5(col("token")) +: (2 to bits / 32).map(k =>
       md5(concat(lit(s"s$k|"), col("token"))))
-    val votes = (1 to 128).map { i =>
+    val votes = (1 to bits).map { i =>
       val src = substring(streams((i - 1) / 32), (i - 1) % 32 + 1, 1)
       sum(when(src.isin(highHex: _*), 1).otherwise(-1)).as(s"v$i")
     }
     tokenRows.groupBy(col("doc_id"))
       .agg(votes.head, votes.tail: _*)
       .select(col("doc_id"),
-        concat((1 to 128).map(i =>
+        concat((1 to bits).map(i =>
           when(col(s"v$i") > 0, "1").otherwise("0")): _*).as("simhash"))
   }
 
@@ -1026,16 +983,28 @@ object Dedup {
     * label-grain BY CONSTRUCTION, and the size check runs on the
     * materialized frame before a single row is collected.
     *
-    * CONTRACT (r21): `edges` MUST already be materialized (all call
-    * sites localCheckpoint the contracted frame they pass in) and the
+    * CONTRACT (r21): `edges` MUST already be materialized — its plan a
+    * checkpoint or local-rows leaf, refused otherwise (all call sites
+    * localCheckpoint the contracted frame they pass in) — and the
     * closed node set IS the edge-ENDPOINT set — both were previously
     * re-derived here (a redundant second checkpoint job plus, at every
     * call site, an endpoints distinct + collect job whose ids the small
     * path's own edge collect already carries). Isolated nodes are the
     * CALLERS' left-join/coalesce fallback, unchanged. */
-  private[llm] def contractedClosure(edges: DataFrame,
-                                     driverMaxEdges: Long = 500000L)
+  private[graft] def contractedClosure(edges: DataFrame,
+                                       driverMaxEdges: Long = 500000L)
       : DataFrame = {
+    // the size gate and the collect below are two jobs over `edges`:
+    // only a materialized leaf guarantees both see the same rows
+    // (checked on the plan, no job)
+    require(edges.queryExecution.logical match {
+      case _: org.apache.spark.sql.execution.LogicalRDD => true
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        true
+      case _ => false
+    }, "contractedClosure: `edges` must be materialized (a " +
+      "localCheckpoint or local rows), got plan:\n" +
+      edges.queryExecution.logical.treeString)
     val spark = edges.sparkSession
     val e = edges.select(col("src"), col("dst"))
     if (e.count() > driverMaxEdges) {

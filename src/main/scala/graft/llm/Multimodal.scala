@@ -1200,8 +1200,8 @@ object Multimodal {
 
   /** The 4×32-bit pigeonhole band rows of each 128-bit dHash — the
     * bands ARE the packed words: (doc_id, h0..h3, band, band_key).
-    * Shared by the in-batch pairing and the persisted
-    * [[Phash128Index]]. */
+    * Shared by the in-batch pairing and the persisted 128-bit
+    * [[PhashIndex]]. */
   def phash128Bands(hashes: DataFrame): DataFrame = {
     val words = (0 until 4).map(w => col(s"h$w"))
     hashes.select((col("doc_id") +: words :+

@@ -1930,7 +1930,7 @@ object LlmQueries {
   }
 
   /** Dedup — the FULL production near-dup pipeline in one hash-gated
-    * chain: REAL `simhash64FromTokens` → `simhashNearDups` (banded
+    * chain: REAL 64-bit `simhashFromTokens` → `simhashNearDups` (banded
     * candidates + Hamming verify, hot-bucket cap on) → REAL
     * `nearDupLabels` (transitive clustering: endpoint-grain closure +
     * isolated-doc join — r18; the closure never iterates over a
@@ -2043,7 +2043,7 @@ object LlmQueries {
       // (r16 ADVICE, the knownN pattern).
       val bits = Dedup.autoBandPolicy(Tables.documentsCount(s, d))
       val pairs = Dedup.simhashNearDups(
-        Dedup.simhashForWidth(bits, tokenRows), bits = bits)
+        Dedup.simhashFromTokens(tokenRows, bits), bits = bits)
       val cc = Dedup.nearDupLabels(
         docs.select(col("doc_id").as("id")),
         pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
@@ -2153,7 +2153,7 @@ object LlmQueries {
       val docs = Tables.documents(s, d)
       val tokenRows = docs.select(col("doc_id"),
         explode(TA.tokens(col("text"))).as("token"))
-      val sharded = Dedup.simhash64FromTokens(tokenRows)
+      val sharded = Dedup.simhashFromTokens(tokenRows, 64)
         .withColumn("shard", col("doc_id") % 3)
       // Node set seeded from Tables.documents, not from the signature
       // frame (r16 ADVICE): a doc tokenizing to empty has no signature
@@ -2266,7 +2266,7 @@ object LlmQueries {
       // One signature pass shared by the seed and both addShard calls
       // (between-plans materialization: each step runs several
       // separately-executed commit jobs over its shard's slice).
-      val sig = Dedup.simhash64FromTokens(tokenRows).localCheckpoint(true)
+      val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
       val dir = Q.tempDir("graft_shardinc").toString
       // Seed shard 0 through the BULK migration path (seedShards — the
       // r18 trim: the left-fold theorem needs folds over committed
@@ -2395,7 +2395,7 @@ object LlmQueries {
           explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
         .unionByName(ids.select(col("doc_id"),
           concat(lit("v"), (col("doc_id") % 3).cast("string")).as("token")))
-      val sig = Dedup.simhash64FromTokens(tokenRows).localCheckpoint(true)
+      val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
       val sharded = sig.join(ids, Seq("doc_id"))
       val single = Dedup.shardedNearDupLabels(sharded,
           maxBucketSize = 8, bits = 64)
@@ -2530,7 +2530,7 @@ object LlmQueries {
           explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
         .unionByName(ids.select(col("doc_id"),
           concat(lit("v"), (col("doc_id") % 3).cast("string")).as("token")))
-      val sig = Dedup.simhash64FromTokens(tokenRows).localCheckpoint(true)
+      val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
       val dir = Q.tempDir("graft_shardpcap").toString
       graft.llm.ShardedNearDupIndex.seedShards(s, dir,
         sig.join(ids.filter(col("shard") === 0).select("doc_id"),
@@ -2678,7 +2678,7 @@ object LlmQueries {
         .unionByName(ids.select(col("doc_id"),
           concat(lit("v"),
             expr("(doc_id div 10) % 2").cast("string")).as("token")))
-      val sig = Dedup.simhash64FromTokens(tokenRows).localCheckpoint(true)
+      val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
       val dir = Q.tempDir("graft_shardrank").toString
       graft.llm.ShardedNearDupIndex.seedShards(s, dir,
         sig.join(ids.filter(col("shard") === 0).select("doc_id"),
@@ -3263,7 +3263,7 @@ object LlmQueries {
     * difference directly). Same Hamming ≤ 3 exact-recall pigeonhole
     * (4 bands at ANY width); the second 32 bits vote on an independent
     * salted md5 stream both engines replay verbatim
-    * ([[Dedup.simhash64FromTokens]]). */
+    * ([[Dedup.simhashFromTokens]]). */
   val ddSimhash64NearDup: Q = {
     val highHex = "('8','9','a','b','c','d','e','f')"
     val votes = (1 to 64).map { i =>
@@ -3306,7 +3306,7 @@ object LlmQueries {
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"),
           explode(TA.tokens(col("text"))).as("token"))
-      Dedup.simhashNearDups(Dedup.simhash64FromTokens(tokenRows),
+      Dedup.simhashNearDups(Dedup.simhashFromTokens(tokenRows, 64),
           maxBucketSize = 512, bits = 64)
         .withColumn("hamming", col("hamming").cast("long"))
         .orderBy("doc_a", "doc_b")
@@ -3314,7 +3314,7 @@ object LlmQueries {
   }
 
   /** Dedup — 128-BIT (4×32-bit-band) SimHash near-dup pairs: the NEXT
-    * band widening ([[Dedup.simhash128FromTokens]]) for shards past
+    * band widening ([[Dedup.simhashFromTokens]] at 128) for shards past
     * the measured 16-bit saturation onset (SCALE.md: 64-bit
     * shuffle-tail 1.16 at 150k docs → 1.74 at 500k; 32-bit bands
     * defer saturation another 65,536×). Same Hamming ≤ 3 exact-recall
@@ -3368,7 +3368,7 @@ object LlmQueries {
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"),
           explode(TA.tokens(col("text"))).as("token"))
-      Dedup.simhashNearDups(Dedup.simhash128FromTokens(tokenRows),
+      Dedup.simhashNearDups(Dedup.simhashFromTokens(tokenRows, 128),
           maxBucketSize = 512, bits = 128)
         .withColumn("hamming", col("hamming").cast("long"))
         .orderBy("doc_a", "doc_b")
@@ -3461,7 +3461,7 @@ object LlmQueries {
         .unionByName(ids.select(col("doc_id"),
           concat(lit("v"), (col("doc_id") % 3).cast("string")).as("token")))
       val pairs = Dedup.simhashNearDups(
-        Dedup.simhash64FromTokens(tokenRows),
+        Dedup.simhashFromTokens(tokenRows, 64),
         maxBucketSize = 8, bits = 64)
       val cc = Dedup.nearDupLabels(
         ids.select(col("doc_id").as("id")),
@@ -3489,7 +3489,7 @@ object LlmQueries {
     * width (Dedup.simhashNearDups scaladoc), so pred(t) is exactly
     * {pairs : hamming ≤ t}, not a sampled approximation. Bits 1–32 of
     * the 64-bit signature ARE the 32-bit signature (same md5 stream,
-    * [[Dedup.simhash64FromTokens]] scaladoc), so one token aggregation
+    * [[Dedup.simhashFromTokens]] scaladoc), so one token aggregation
     * feeds both arms. Same 1-in-10 doc sample and cap(512)-is-a-no-op
     * reasoning as `dd_simhash_neardup`. TP/FP/FN are integer counts
     * over the per-layout full-outer join of predicted and true pairs —
@@ -3574,9 +3574,9 @@ object LlmQueries {
       val docs = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
       val tokenRows = docs.select(col("doc_id"),
         explode(TA.tokens(col("text"))).as("token"))
-      // one 64-bit signature pass feeds both arms: bits 1–32 of
-      // simhash64FromTokens ARE simhashFromTokens' signature
-      val sh64 = Dedup.simhash64FromTokens(tokenRows)
+      // one 64-bit signature pass feeds both arms: its bits 1–32 ARE
+      // the 32-bit signature
+      val sh64 = Dedup.simhashFromTokens(tokenRows, 64)
       val sh32 = sh64.select(col("doc_id"),
         substring(col("simhash"), 1, 32).as("simhash"))
       val pred = Dedup.simhashNearDups(sh32,
@@ -4201,7 +4201,7 @@ object LlmQueries {
 
   /** Multimodal + incremental dedup — PERSISTED perceptual-hash index
     * (the daily-crawl discipline for IMAGES): day 1 commits the base
-    * images' dHash band+hash rows through the real `PhashIndex`
+    * images' dHash band+hash rows through the real 64-bit `PhashIndex`
     * AtomicTable; day 2 probes a mix of one-pixel near-copies, exact
     * re-crawls, and genuinely fresh images against the COMMITTED
     * version. Band join generates candidates, the indexed full hash
@@ -4248,15 +4248,17 @@ object LlmQueries {
         .select((col("doc_id") * 2 + 1000000L).as("doc_id")))
     val dir = Q.tempDir("graft_phidx")
       .toString
-    PhashIndex.processBatch(s, dir, Multimodal.asPhashImageTable(day1))
-    PhashIndex.processBatch(s, dir, Multimodal.asPhashImageTable(day2))
-      .orderBy("doc_id")
+    PhashIndex.processBatch(s, dir, _ => Multimodal.asPhashImageTable(day1),
+      bits = Some(64))
+    PhashIndex.processBatch(s, dir, _ => Multimodal.asPhashImageTable(day2),
+      bits = Some(64))
+      .drop("band_bits").orderBy("doc_id")
   }
 
   /** Multimodal + incremental dedup — the 128-BIT persisted
     * perceptual-hash index (r18: the probe-saturation defense VERDICT
     * r17 task #2 names). Same daily-crawl chain as
-    * `dd_phash_index_chain`, but through [[graft.llm.Phash128Index]]:
+    * `dd_phash_index_chain`, but through a 128-bit [[graft.llm.PhashIndex]]:
     * 17×8 payloads, real decode, 128-bit dHash packed as four 32-bit
     * words, and the pigeonhole bands ARE the words — per-band keyspace
     * 2^32, so probe candidates stay ∝ true near-dups as the committed
@@ -4264,7 +4266,7 @@ object LlmQueries {
     * |index|·4/65536 — its measured 1.43@100× shuffle tail). The twin
     * replays every pixel, all 128 comparison bits, the 4×32-bit
     * packing, the word-keyed band join, and the 4-word Hamming verify. */
-  val ddPhash128IndexChain: Q = Q.sql(
+  val ddPhashIndexChain128: Q = Q.sql(
     "dd_phash128_index_chain",
     s"""${phash128HashCtes(
          """SELECT doc_id FROM documents
@@ -4293,7 +4295,7 @@ object LlmQueries {
       |  p.doc_id NOT IN (SELECT doc_id FROM hits) AS keep
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
-    import graft.llm.Phash128Index
+    import graft.llm.PhashIndex
     val ids = Tables.documents(s, d).select("doc_id")
     val day1 = ids.filter(col("doc_id") % 5 =!= 4)
     val day2 = ids.filter(col("doc_id") % 5 === 4 ||
@@ -4301,15 +4303,15 @@ object LlmQueries {
       .unionByName(ids.filter(col("doc_id") % 9 === 0)
         .select((col("doc_id") * 2 + 1000000L).as("doc_id")))
     val dir = Q.tempDir("graft_ph128idx").toString
-    Phash128Index.processBatch(s, dir,
-      Multimodal.asPhash128ImageTable(day1))
-    Phash128Index.processBatch(s, dir,
-      Multimodal.asPhash128ImageTable(day2))
-      .orderBy("doc_id")
+    PhashIndex.processBatch(s, dir,
+      _ => Multimodal.asPhash128ImageTable(day1), bits = Some(128))
+    PhashIndex.processBatch(s, dir,
+      _ => Multimodal.asPhash128ImageTable(day2), bits = Some(128))
+      .drop("band_bits").orderBy("doc_id")
   }
 
   /** Multimodal + incremental dedup — the WIDTH-POLICY front door
-    * (r19; closes the r18 weak mark): `PhashIndexAuto` picks the index
+    * (r19; closes the r18 weak mark): `PhashIndex` picks the index
     * width from expected corpus size — 64-bit while the 16-bit band
     * keys' accidental candidates per probe (|index|·4/65536) stay ≤ 1,
     * 128-bit past the 16,384-row crossover — and the CHOICE rides in a
@@ -4351,7 +4353,7 @@ object LlmQueries {
       |            <= 1.0 THEN 64 ELSE 128 END AS INTEGER) AS band_bits
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
-    import graft.llm.PhashIndexAuto
+    import graft.llm.PhashIndex
     val ids = Tables.documents(s, d).select("doc_id")
     val day1 = ids.filter(col("doc_id") % 5 =!= 4)
     val day2 = ids.filter(col("doc_id") % 5 === 4 ||
@@ -4363,9 +4365,9 @@ object LlmQueries {
       else Multimodal.asPhash128ImageTable(day)
     val dir = Q.tempDir("graft_phpol_s").toString
     val expected = Tables.documentsCount(s, d)
-    PhashIndexAuto.processBatch(s, dir, toImages(day1),
+    PhashIndex.processBatch(s, dir, toImages(day1),
       expectedIndexRows = expected)
-    PhashIndexAuto.processBatch(s, dir, toImages(day2),
+    PhashIndex.processBatch(s, dir, toImages(day2),
       expectedIndexRows = expected)
       .orderBy("doc_id")
   }
@@ -4373,7 +4375,7 @@ object LlmQueries {
   /** Large-corpus arm of the width policy: expected index size is
     * documentsCount × 40 — past the 16,384 crossover at BOTH SFs
     * (20,000 / 200,000) — so the policy must pick the 128-bit layout
-    * and the chain must replay `Phash128Index` (17×8 grid, word-keyed
+    * and the chain must replay the 128-bit layout (17×8 grid, word-keyed
     * bands, 4-word Hamming verify) with `band_bits` = 128 recomputed
     * from the same inequality in the twin. Together with the small arm
     * this gates BOTH policy branches cross-engine. */
@@ -4409,7 +4411,7 @@ object LlmQueries {
       |    AS band_bits
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
-    import graft.llm.PhashIndexAuto
+    import graft.llm.PhashIndex
     val ids = Tables.documents(s, d).select("doc_id")
     val day1 = ids.filter(col("doc_id") % 5 =!= 4)
     val day2 = ids.filter(col("doc_id") % 5 === 4 ||
@@ -4421,9 +4423,9 @@ object LlmQueries {
       else Multimodal.asPhash128ImageTable(day)
     val dir = Q.tempDir("graft_phpol_l").toString
     val expected = Tables.documentsCount(s, d) * 40
-    PhashIndexAuto.processBatch(s, dir, toImages(day1),
+    PhashIndex.processBatch(s, dir, toImages(day1),
       expectedIndexRows = expected)
-    PhashIndexAuto.processBatch(s, dir, toImages(day2),
+    PhashIndex.processBatch(s, dir, toImages(day2),
       expectedIndexRows = expected)
       .orderBy("doc_id")
   }
@@ -4432,7 +4434,7 @@ object LlmQueries {
     * #3): day 1 commits a 64-bit index (the policy's small-corpus
     * choice), day 2 probes-and-folds against it — REAL 64-bit
     * decisions, near-copies and all — then
-    * [[graft.llm.PhashIndexAuto.migrate]] re-hashes the resulting
+    * [[graft.llm.PhashIndex.migrate]] re-hashes the resulting
     * archive at the 17×8 grid into a NEW dir (one compacted 128-bit
     * base), and day 3 folds against the MIGRATED dir through the
     * policy front door (committed schema resolves width 128). The twin
@@ -4494,7 +4496,7 @@ object LlmQueries {
       |  CAST((SELECT COUNT(*) FROM idx128) AS BIGINT) AS idx_rows
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
-    import graft.llm.PhashIndexAuto
+    import graft.llm.PhashIndex
     val ids = Tables.documents(s, d).select("doc_id")
     val day1 = ids.filter(col("doc_id") % 3 === 0)
     val day2 = ids.filter(col("doc_id") % 3 === 1)
@@ -4506,15 +4508,15 @@ object LlmQueries {
     val oldDir = Q.tempDir("graft_phmig_old").toString
     val newDir = Q.tempDir("graft_phmig_new").toString
     val expected = Tables.documentsCount(s, d) // ≤ crossover → 64-bit
-    PhashIndexAuto.processBatch(s, oldDir, toImages(day1),
+    PhashIndex.processBatch(s, oldDir, toImages(day1),
       expectedIndexRows = expected)
-    val ann2 = PhashIndexAuto.processBatch(s, oldDir, toImages(day2),
+    val ann2 = PhashIndex.processBatch(s, oldDir, toImages(day2),
       expectedIndexRows = expected)
     val archive = day1
       .unionByName(ann2.filter(col("keep")).select("doc_id"))
-    val nIdx = PhashIndexAuto.migrate(s, oldDir, newDir,
+    val nIdx = PhashIndex.migrate(s, oldDir, newDir,
       Multimodal.asPhash128ImageTable(archive))
-    PhashIndexAuto.processBatch(s, newDir, toImages(day3))
+    PhashIndex.processBatch(s, newDir, toImages(day3))
       .withColumn("idx_rows", lit(nIdx))
       .orderBy("doc_id")
   }
@@ -5131,7 +5133,7 @@ object LlmQueries {
   }
 
   /** LEAKAGE-SAFE SPLIT through the REAL near-dup pipeline:
-    * `simhash64FromTokens` → banded near-dup pairs →
+    * 64-bit `simhashFromTokens` → banded near-dup pairs →
     * `connectedComponents` → [[TextAnalysis.leakageSafeSplit]] —
     * train/val/test assignment hashed at the CLUSTER grain so no
     * near-dup pair can straddle the train/test wall. The gate pins
@@ -5250,7 +5252,7 @@ object LlmQueries {
       // Sizing count memoized per dir (r16 ADVICE, knownN pattern).
       val bits = Dedup.autoBandPolicy(Tables.documentsCount(s, d))
       val pairs = Dedup.simhashNearDups(
-        Dedup.simhashForWidth(bits, tokenRows), bits = bits)
+        Dedup.simhashFromTokens(tokenRows, bits), bits = bits)
       val cc = Dedup.nearDupLabels(
         docs.select(col("doc_id").as("id")),
         pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
@@ -5371,6 +5373,6 @@ object LlmQueries {
     mmMov,
     mmResize,
     mmFrameSample, mmDhash, mmPhashNearDup, mmAudioEnergy,
-    ddPhashIndexChain, ddPhash128IndexChain,
+    ddPhashIndexChain, ddPhashIndexChain128,
     ddPhashPolicySmall, ddPhashPolicyLarge, ddPhashMigrateChain)
 }

@@ -292,11 +292,11 @@ object EventStream {
     * hardest), folded into a base every `compactEvery` deltas so
     * merged-read file counts stay bounded.
     *
-    * WIDTH comes from [[graft.llm.PhashIndexAuto]] (r19; the r18 weak
-    * mark: this sink hard-wired the 64-bit [[graft.llm.PhashIndex]],
-    * whose 16-bit band keys saturate at the measured 1.43@100× tail):
-    * an existing index keeps its committed width; a fresh one takes
-    * `autoPhashPolicy(expectedIndexRows)` — and the DEFAULT is the
+    * WIDTH comes from [[graft.llm.PhashIndex]]'s width rules (r19; the
+    * r18 weak mark: this sink hard-wired the 64-bit layout, whose
+    * 16-bit band keys saturate at the measured 1.43@100× tail): an
+    * existing index keeps its committed width; a fresh one takes the
+    * image-ladder policy from `expectedIndexRows` — and the DEFAULT is the
     * scale-safe 128-bit layout, so a daily-crawl pipeline built on
     * defaults gets the non-saturating index. Pass the expected corpus
     * size to opt down to 64-bit below the 16,384-row crossover.
@@ -310,7 +310,7 @@ object EventStream {
     * `expectedIndexRows` ≤ the crossover to pin 64-bit). The FIRST
     * micro-batch of each run validates one decoded payload against
     * the chosen grid and fails with the policy decision named
-    * ([[graft.llm.PhashIndexAuto.validatePayloadGrid]]) instead of
+    * ([[graft.llm.PhashIndex.validatePayloadGrid]]) instead of
     * dHash's executor-side `require`. */
   def phashDedupSink(stream: DataFrame, indexDir: String,
                      checkpoint: String,
@@ -322,11 +322,11 @@ object EventStream {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.llm.PhashIndexAuto.processBatch(batch.sparkSession, indexDir,
+        graft.llm.PhashIndex.processBatch(batch.sparkSession, indexDir,
           bits => {
             val imgs = toImages(batch, bits)
             if (validated.compareAndSet(false, true))
-              graft.llm.PhashIndexAuto.validatePayloadGrid(imgs, bits)
+              graft.llm.PhashIndex.validatePayloadGrid(imgs, bits)
             imgs
           },
           expectedIndexRows = expectedIndexRows,

@@ -26,7 +26,7 @@ object ProfileCluster {
     val tokenRows = docs.select(col("doc_id"),
       explode(TA.tokens(col("text"))).as("token"))
     time("warm docs count")(docs.count())
-    val sh = Dedup.simhash64FromTokens(tokenRows)
+    val sh = Dedup.simhashFromTokens(tokenRows, 64)
     time("simhash64 count")(sh.count())
     time("simhash64 count again")(sh.count())
     val pairs = Dedup.simhashNearDups(sh, maxBucketSize = 512, bits = 64)

@@ -334,7 +334,7 @@ object ScaleBench {
       explode(TA.tokens(col("text"))).as("token"))
     val bits = Dedup.autoBandPolicy(Tables.documentsCount(s, dir))
     val pairs = Dedup.simhashNearDups(
-      Dedup.simhashForWidth(bits, tokenRows), bits = bits)
+      Dedup.simhashFromTokens(tokenRows, bits), bits = bits)
     val cc = Dedup.nearDupLabels(
       docs.select(col("doc_id").as("id")),
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
@@ -358,23 +358,23 @@ object ScaleBench {
     val tokenRows = docsOf(s, dir).filter(col("doc_id") % 10 === 0)
       .select(col("doc_id"),
         explode(TA.tokens(col("text"))).as("token"))
-    val sh = bits match {
-      case 32 => Dedup.simhashFromTokens(tokenRows)
-      case 64 => Dedup.simhash64FromTokens(tokenRows)
-      case _ => Dedup.simhash128FromTokens(tokenRows)
-    }
-    Dedup.simhashNearDups(sh, maxBucketSize = 512, bits = bits).count()
+    Dedup.simhashNearDups(Dedup.simhashFromTokens(tokenRows, bits),
+      maxBucketSize = 512, bits = bits).count()
   }
 
   /** The dd_phash_index_chain composition at scale: day-1 images
-    * synthesized + dHash'd + committed to a PhashIndex AtomicTable,
-    * day-2 probes (near-copies, re-crawls, fresh) verified against the
-    * committed version. Payload synthesis + JDK codec decode ∝ corpus
-    * (the codec boundary is mapPartitions — expect α≈1); the open
-    * question this measures is the PER-COMMIT overhead of the index
-    * AtomicTable versioning at growing batch sizes. Synthetic day-2 id
-    * offset sits above every amplified id (30× tops out ~3·10⁸). */
-  private def phashChain(s: SparkSession, dir: String): Long = {
+    * synthesized + dHash'd + committed to a [[graft.llm.PhashIndex]]
+    * AtomicTable at `bits`, day-2 probes (near-copies, re-crawls,
+    * fresh) verified against the committed version. Payload synthesis
+    * + JDK codec decode ∝ corpus (the codec boundary is mapPartitions —
+    * expect α≈1); the open question this measures is the PER-COMMIT
+    * overhead of the index AtomicTable versioning at growing batch
+    * sizes. The 64-bit arm keeps its measured 1.43@100× shuffle tail as
+    * the saturated contrast (16-bit band keys); the 128-bit arm's probe
+    * candidates are |index|/2^32 per band, so its expected shuffle tail
+    * is ≈ 1 at every measurable scale. Synthetic day-2 id offset sits
+    * above every amplified id (30× tops out ~3·10⁸). */
+  private def phashChain(s: SparkSession, dir: String, bits: Int): Long = {
     import graft.llm.{Multimodal, PhashIndex}
     val ids = docsOf(s, dir).select("doc_id")
     val day1 = ids.filter(col("doc_id") % 5 =!= 4)
@@ -382,35 +382,15 @@ object ScaleBench {
         (col("doc_id") % 7 === 0 && col("doc_id") % 5 =!= 4))
       .unionByName(ids.filter(col("doc_id") % 9 === 0)
         .select((col("doc_id") * 2 + 1000000000L).as("doc_id")))
-    val idx = java.nio.file.Files.createTempDirectory("graft_scale_ph")
+    def images(day: DataFrame)(b: Int) =
+      if (b == 64) Multimodal.asPhashImageTable(day)
+      else Multimodal.asPhash128ImageTable(day)
+    val idx = java.nio.file.Files.createTempDirectory(s"graft_scale_ph$bits")
     try {
-      PhashIndex.processBatch(s, idx.toString,
-        Multimodal.asPhashImageTable(day1)).count()
-      PhashIndex.processBatch(s, idx.toString,
-        Multimodal.asPhashImageTable(day2)).count()
-    } finally graft.queries.Q.deleteRecursively(idx)
-  }
-
-  /** The 128-bit probe-saturation defense, same chain shape (r18;
-    * VERDICT r17 task #2): 4×32-bit word bands over
-    * [[graft.llm.Phash128Index]]. The 64-bit family above keeps its
-    * measured 1.43@100× shuffle tail as the saturated contrast arm —
-    * this one's probe candidates are |index|/2^32 per band, so the
-    * expected shuffle tail is ≈ 1 at every measurable scale. */
-  private def phash128Chain(s: SparkSession, dir: String): Long = {
-    import graft.llm.{Multimodal, Phash128Index}
-    val ids = docsOf(s, dir).select("doc_id")
-    val day1 = ids.filter(col("doc_id") % 5 =!= 4)
-    val day2 = ids.filter(col("doc_id") % 5 === 4 ||
-        (col("doc_id") % 7 === 0 && col("doc_id") % 5 =!= 4))
-      .unionByName(ids.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") * 2 + 1000000000L).as("doc_id")))
-    val idx = java.nio.file.Files.createTempDirectory("graft_scale_ph128")
-    try {
-      Phash128Index.processBatch(s, idx.toString,
-        Multimodal.asPhash128ImageTable(day1)).count()
-      Phash128Index.processBatch(s, idx.toString,
-        Multimodal.asPhash128ImageTable(day2)).count()
+      PhashIndex.processBatch(s, idx.toString, images(day1),
+        bits = Some(bits)).count()
+      PhashIndex.processBatch(s, idx.toString, images(day2),
+        bits = Some(bits)).count()
     } finally graft.queries.Q.deleteRecursively(idx)
   }
 
@@ -425,7 +405,7 @@ object ScaleBench {
     // policy-driven width, mirroring the r16 consumer (128-bit at 100×)
     val bits = Dedup.autoBandPolicy(Tables.documentsCount(s, dir))
     val pairs = Dedup.simhashNearDups(
-      Dedup.simhashForWidth(bits, tokenRows), bits = bits)
+      Dedup.simhashFromTokens(tokenRows, bits), bits = bits)
     val cc = Dedup.nearDupLabels(
       docs.select(col("doc_id").as("id")),
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
@@ -493,7 +473,7 @@ object ScaleBench {
       explode(TA.tokens(col("text"))).as("token"))
     val bits = Dedup.autoBandPolicy(
       docs.filter(col("doc_id") < DocStride).count())
-    val sharded = Dedup.simhashForWidth(bits, tokenRows)
+    val sharded = Dedup.simhashFromTokens(tokenRows, bits)
       .withColumn("shard", expr(s"doc_id div ${DocStride}"))
     Dedup.shardedNearDupLabels(sharded, bits = bits).count()
   }
@@ -528,7 +508,7 @@ object ScaleBench {
       .write.mode("overwrite").parquet(s"$dir/new_shard.parquet")
     val tokenRows = docs.select(col("doc_id"),
       explode(TA.tokens(col("text"))).as("token"))
-    val sharded = Dedup.simhash64FromTokens(tokenRows)
+    val sharded = Dedup.simhashFromTokens(tokenRows, 64)
       .withColumn("shard", expr(s"doc_id div ${DocStride}"))
     graft.llm.ShardedNearDupIndex.seedShards(s,
       s"$dir/$state", sharded, bits = 64)
@@ -540,7 +520,7 @@ object ScaleBench {
     val tokenRows = newShard.select(col("doc_id"),
       explode(TA.tokens(col("text"))).as("token"))
     graft.llm.ShardedNearDupIndex.addShard(s, s"$dir/shardinc_state",
-      Dedup.simhash64FromTokens(tokenRows), bits = 64).count()
+      Dedup.simhashFromTokens(tokenRows, 64), bits = 64).count()
   }
 
   /** probeCap-ENABLED fold against a COMPACTED index (r19; VERDICT r18
@@ -557,7 +537,7 @@ object ScaleBench {
       explode(TA.tokens(col("text"))).as("token"))
     graft.llm.ShardedNearDupIndex.addShard(s,
       s"$dir/shardinc_state_capped",
-      Dedup.simhash64FromTokens(tokenRows), bits = 64,
+      Dedup.simhashFromTokens(tokenRows, 64), bits = 64,
       probeCap = Some(512)).count()
   }
 
@@ -815,9 +795,9 @@ object ScaleBench {
       (s, d, _) => lpaIncremental(s, d),
       prep = Some((s, d, _) => lpaPrep(s, d))),
     Fam("phash_index_chain", Set("documents"), rep = true,
-      (s, d, _) => phashChain(s, d)),
+      (s, d, _) => phashChain(s, d, bits = 64)),
     Fam("phash128_index_chain", Set("documents"), rep = true,
-      (s, d, _) => phash128Chain(s, d)),
+      (s, d, _) => phashChain(s, d, bits = 128)),
     Fam("leakage_split", Set("documents"), rep = true,
       (s, d, _) => leakageSplit(s, d)),
     Fam("ref_pricing_history", Set("refmarts"), rep = true,

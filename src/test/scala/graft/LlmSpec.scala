@@ -313,9 +313,9 @@ class LlmSpec extends SparkSpec {
     // 64-bit signature ARE the 32-bit signature, bits 1-64 of the
     // 128-bit ARE the 64-bit — one token pass can serve any width
     val tok = df.select($"doc_id", explode(TA.tokens($"text")).as("token"))
-    val s64 = Dedup.simhash64FromTokens(tok)
+    val s64 = Dedup.simhashFromTokens(tok, 64)
       .as[(Long, String)].collect().toMap
-    val s128 = Dedup.simhash128FromTokens(tok)
+    val s128 = Dedup.simhashFromTokens(tok, 128)
       .as[(Long, String)].collect().toMap
     assert(s64.forall { case (id, s) => s.take(32) == distForm(id) })
     assert(s128.forall { case (id, s) =>
@@ -426,14 +426,37 @@ class LlmSpec extends SparkSpec {
     // (the dd_cluster_canonical / t_leakage_safe_split twins pin 64)
     assert(Dedup.autoBandPolicy(500) == 64)
     assert(Dedup.autoBandPolicy(5000) == 64)
-    // dispatch produces the matching signature width
+    assert(Dedup.autoBandPolicy(Long.MaxValue) == 128)
+    // the image ladder, same rule with 4 bands probed per row:
+    // 2^16 / 4 = 16,384 rows is the 64-bit crossover
+    import graft.llm.BandIndex
+    assert(BandIndex.width(1, BandIndex.ImageLadder) == 64)
+    assert(BandIndex.width(16384, BandIndex.ImageLadder) == 64)
+    assert(BandIndex.width(16385, BandIndex.ImageLadder) == 128)
+    assert(BandIndex.width(Long.MaxValue, BandIndex.ImageLadder) == 128)
+    // simhashFromTokens emits a signature of the requested width
     val toks = Seq((1L, "alpha"), (1L, "beta"), (2L, "alpha"))
       .toDF("doc_id", "token")
     Seq(32, 64, 128).foreach { b =>
-      val sig = Dedup.simhashForWidth(b, toks).head().getString(1)
+      val sig = Dedup.simhashFromTokens(toks, b).head().getString(1)
       assert(sig.length == b && sig.forall(c => c == '0' || c == '1'))
     }
-    intercept[IllegalArgumentException](Dedup.simhashForWidth(48, toks))
+    intercept[IllegalArgumentException](Dedup.simhashFromTokens(toks, 48))
+  }
+
+  test("contractedClosure refuses edges that are not materialized") {
+    // the driverMaxEdges gate counts and the small path collects: on a
+    // recomputed (possibly nondeterministic) plan the two jobs could
+    // see different edge sets, so only a materialized leaf is accepted
+    val lazyEdges = spark.range(4)
+      .select($"id".as("src"), ($"id" + 1).as("dst"))
+    val e = intercept[IllegalArgumentException](
+      Dedup.contractedClosure(lazyEdges))
+    assert(e.getMessage.contains("materialized"), e.getMessage)
+    val cc = Dedup.contractedClosure(lazyEdges.localCheckpoint(true))
+    assert(cc.select("component").distinct().as[Long].collect().toSeq ==
+      Seq(0L))
+    assert(cc.count() == 5)
   }
 
   test("shardedNearDupLabels == single-pass labels (min-label assoc)") {
@@ -444,7 +467,7 @@ class LlmSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     val tokenRows = Tables.documents(spark, sf)
       .select(col("doc_id"), explode(TA.tokens(col("text"))).as("token"))
-    val sh = Dedup.simhash64FromTokens(tokenRows).cache()
+    val sh = Dedup.simhashFromTokens(tokenRows, 64).cache()
     val sharded = sh.withColumn("shard", col("doc_id") % 3)
     val within = Dedup.simhashNearDups(sharded, bits = 64,
       keyCols = Seq("shard"))
@@ -851,12 +874,12 @@ class LlmSpec extends SparkSpec {
     def imgs(ids: Seq[Long]) =
       Multimodal.asPhashImageTable(ids.toDF("doc_id"))
     val out1 = graft.llm.PhashIndex
-      .processBatch(spark, dir, imgs(Seq(0L, 1L, 2L, 3L)))
+      .processBatch(spark, dir, _ => imgs(Seq(0L, 1L, 2L, 3L)), Some(64))
     assert(out1.filter($"keep").count() == 4) // empty index: all kept
     // 0 = exact re-crawl (hamming 0), 4 = near-copy of doc 1 (<= 2 bits),
     // 100 = fresh content (its own base)
     val out2 = graft.llm.PhashIndex
-      .processBatch(spark, dir, imgs(Seq(4L, 0L, 100L)))
+      .processBatch(spark, dir, _ => imgs(Seq(4L, 0L, 100L)), Some(64))
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2))).toSeq
     assert(out2 == Seq((0L, true, false), (4L, true, false),
@@ -899,17 +922,66 @@ class LlmSpec extends SparkSpec {
       .toString
     def imgs(ids: Seq[Long]) =
       Multimodal.asPhash128ImageTable(ids.toDF("doc_id"))
-    val out1 = graft.llm.Phash128Index
-      .processBatch(spark, dir, imgs(Seq(0L, 1L, 2L, 3L)))
+    val out1 = graft.llm.PhashIndex
+      .processBatch(spark, dir, _ => imgs(Seq(0L, 1L, 2L, 3L)), Some(128))
     assert(out1.filter($"keep").count() == 4)
-    val out2 = graft.llm.Phash128Index
-      .processBatch(spark, dir, imgs(Seq(4L, 0L, 100L)))
+    val out2 = graft.llm.PhashIndex
+      .processBatch(spark, dir, _ => imgs(Seq(4L, 0L, 100L)), Some(128))
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2))).toSeq
     assert(out2 == Seq((0L, true, false), (4L, true, false),
       (100L, false, true)))
-    val idx = graft.llm.Phash128Index.load(spark, dir)
+    val idx = graft.llm.PhashIndex.load(spark, dir)
     assert(idx.select("h0", "h1", "h2", "h3").distinct().count() == 5)
+    // the committed width is pinned: a batch pinned to the other width
+    // is refused, and the error names the committed one
+    val e = intercept[IllegalArgumentException](graft.llm.PhashIndex
+      .processBatch(spark, dir, _ => imgs(Seq(7L)), Some(64)))
+    assert(e.getMessage.contains("committed at 128 bits"), e.getMessage)
+  }
+
+  test("compactEvery: every index loads the same rows as its uncompacted twin") {
+    import graft.llm.{CorpusIndex, NearDupIndex}
+    import graft.operators.AtomicTable
+    // three batches: a fresh one, one with a re-crawl (0) and a near
+    // copy (4), one with fresh docs — compactEvery = 2 folds after the
+    // second commit, so the third leaves one delta past the base
+    val batches = Seq(Seq(0L, 1L, 2L, 3L), Seq(4L, 0L, 100L),
+      Seq(5L, 101L, 1L))
+    def docs(ids: Seq[Long]) = ids.map(i => (i,
+      s"doc ${Multimodal.phBase(i)} says the quick brown fox jumps over")
+    ).toDF("doc_id", "text")
+    def check(name: String, load: String => org.apache.spark.sql.DataFrame)
+             (run: (String, Seq[Long], Int) => Unit): Unit = {
+      val dirs = Seq(2, 0).map { every =>
+        val d = java.nio.file.Files.createTempDirectory(s"ce_$name")
+          .toString
+        batches.foreach(run(d, _, every))
+        d
+      }
+      def rows(d: String) = load(d).collect().map(_.toString).sorted.toSeq
+      assert(rows(dirs(0)) == rows(dirs(1)), name)
+      assert(rows(dirs(0)).nonEmpty, name)
+      assert(AtomicTable.committedBases(spark, dirs(0)).nonEmpty, name)
+      assert(AtomicTable.deltasSinceBase(spark, dirs(0)) < 2, name)
+    }
+    check("exact", CorpusIndex.load(spark, _)) { (d, ids, every) =>
+      CorpusIndex.processBatch(spark, d, docs(ids), $"doc_id", $"text",
+        compactEvery = every); ()
+    }
+    check("neardup", NearDupIndex.load(spark, _)) { (d, ids, every) =>
+      NearDupIndex.processBatch(spark, d, docs(ids), $"doc_id", $"text",
+        compactEvery = every); ()
+    }
+    Seq(64, 128).foreach { bits =>
+      check(s"phash$bits", graft.llm.PhashIndex.load(spark, _)) {
+        (d, ids, every) =>
+          graft.llm.PhashIndex.processBatch(spark, d, b =>
+            if (b == 64) Multimodal.asPhashImageTable(ids.toDF("doc_id"))
+            else Multimodal.asPhash128ImageTable(ids.toDF("doc_id")),
+            Some(bits), compactEvery = every); ()
+      }
+    }
   }
 
   test("ShardedNearDupIndex upsert-delta: commits only changed label rows; compactLabels drops dead rows") {

@@ -614,8 +614,10 @@ class StreamingSpec extends SparkSpec {
       import spark.implicits._
       Multimodal.asPhashImageTable(ids.toDF("doc_id"))
     }
-    PhashIndex.processBatch(spark, bIdx, imgs(Seq(0L, 1L, 2L, 3L)))
-    PhashIndex.processBatch(spark, bIdx, imgs(Seq(4L, 0L, 100L)))
+    PhashIndex.processBatch(spark, bIdx, _ => imgs(Seq(0L, 1L, 2L, 3L)),
+      Some(64))
+    PhashIndex.processBatch(spark, bIdx, _ => imgs(Seq(4L, 0L, 100L)),
+      Some(64))
     def snap(dir: String) = PhashIndex.load(spark, dir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
@@ -627,7 +629,7 @@ class StreamingSpec extends SparkSpec {
     assert(snap(sIdx) == before)
     // DEFAULT-width arm (r19, the weak-mark closure): a fresh sink with
     // no expected size commits the scale-safe 128-bit layout and
-    // matches the Phash128Index batch twin
+    // matches the 128-bit PhashIndex batch twin
     val sIdx2 = java.nio.file.Files.createTempDirectory("ph_sidx2")
       .resolve("t").toString
     val bIdx2 = java.nio.file.Files.createTempDirectory("ph_bidx2")
@@ -650,17 +652,16 @@ class StreamingSpec extends SparkSpec {
     val nVersions = graft.operators.AtomicTable
       .committedVersions(spark, sIdx2).size
     if (nVersions == 1)
-      graft.llm.Phash128Index.processBatch(spark, bIdx2,
-        imgs128(Seq(0L, 1L, 2L, 3L, 4L, 100L)))
+      PhashIndex.processBatch(spark, bIdx2,
+        _ => imgs128(Seq(0L, 1L, 2L, 3L, 4L, 100L)), Some(128))
     else {
-      graft.llm.Phash128Index.processBatch(spark, bIdx2,
-        imgs128(Seq(0L, 1L, 2L, 3L)))
-      graft.llm.Phash128Index.processBatch(spark, bIdx2,
-        imgs128(Seq(4L, 0L, 100L)))
+      PhashIndex.processBatch(spark, bIdx2,
+        _ => imgs128(Seq(0L, 1L, 2L, 3L)), Some(128))
+      PhashIndex.processBatch(spark, bIdx2,
+        _ => imgs128(Seq(4L, 0L, 100L)), Some(128))
     }
-    assert(graft.llm.PhashIndexAuto.committedWidth(spark, sIdx2)
-      .contains(128))
-    def snap128(dir: String) = graft.llm.Phash128Index.load(spark, dir)
+    assert(PhashIndex.committedWidth(spark, sIdx2).contains(128))
+    def snap128(dir: String) = PhashIndex.load(spark, dir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toSet
     assert(snap128(sIdx2) == snap128(bIdx2))
