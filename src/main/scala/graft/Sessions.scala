@@ -17,6 +17,13 @@ import org.apache.spark.sql.SparkSession
   *  - Shuffle codec and scheduler mode stay at Spark's defaults (lz4,
   *    FIFO): zstd and FAIR were measured and lost on local[32]
   *    (OPTIMIZATION_r21.md).
+  *  - `file:` is [[LocalFs]], under both Hadoop keys (FileSystem and
+  *    FileContext): without libhadoop the stock local filesystem forks
+  *    `chmod` per mkdir and create and `readlink` per FileContext
+  *    rename; [[LocalFs]] makes those calls through java.nio.
+  *    An event_stream run launched ~2,000 processes before, ~120 after
+  *    (Spark's own `rm -rf`). Set here, before the context exists, so
+  *    the first cached `file:` instance is already the in-process one.
   */
 object Sessions {
   private def builder(cpus: String) =
@@ -28,6 +35,7 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs.confs)
 
   def local(cpus: String): SparkSession = builder(cpus).getOrCreate()
 

@@ -16,13 +16,14 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   *     names, attribute ids and cosmetic differences hash equal,
   *     semantic changes don't;
   *   - per input relation (every `HadoopFsRelation` scan in the plan):
-  *     root path + file count + total bytes + max modification time —
-  *     any upstream rewrite, append or recommit changes the key.
+  *     root paths + file count + a hash of each file's path, length
+  *     and modification time, over the files Spark will read — any
+  *     upstream rewrite, append or recommit changes the key.
   *
   * Results are committed [[AtomicTable]]s under `cacheDir/<key>`, so
   * cache writes are crash-safe and a reader never sees a half-written
-  * entry; re-validation is driver-side metadata (one file listing per
-  * input). At warehouse scale this is the difference between a
+  * entry; re-validation is driver-side metadata (the file listing
+  * each input's scan already holds). At warehouse scale this is the difference between a
   * dashboard refresh re-running a 30-minute aggregate and serving the
   * committed snapshot — with staleness exactly 'inputs unchanged',
   * never a TTL guess. */
@@ -43,17 +44,19 @@ object ResultCache {
   def fingerprint(df: DataFrame): String = {
     val plan = df.queryExecution.analyzed
     val planHash = plan.canonicalized.semanticHash()
-    val spark = df.sparkSession
     val inputs = plan.collect {
       case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map { p =>
-          val hfs = p.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          // RECURSIVE walk: a hive-partitioned input keeps its data
-          // files under partition subdirectories — a top-level-only
-          // listing would sign them as `0|0|0` and changes inside
-          // partitions would never invalidate the entry (r11 nit #1).
-          val it = hfs.listFiles(p, true)
+        case fs: HadoopFsRelation =>
+          // Sign the files Spark will read: the relation's own listing,
+          // already made when the DataFrame was built, with no filters.
+          // It holds data files under partition subdirectories too (a
+          // top-level-only listing would sign them as `0|0|0` and
+          // changes inside partitions would never invalidate the entry,
+          // r11 nit #1), and leaves out what Spark skips: `.crc`
+          // sidecars and `_table_stats.json`, which ANALYZE writes into
+          // a committed version dir and must not force rebuilds
+          // downstream (OperatorsSpec pins it).
+          //
           // Hash the SORTED per-file (path, len, mtime) tuples rather
           // than aggregating to count|sumBytes|maxMtime: an in-place
           // rewrite with unchanged length and a non-advancing mtime
@@ -61,17 +64,12 @@ object ResultCache {
           // preserving timestamps) must still perturb the signature —
           // under skipUnchanged a collision there silently serves a
           // stale committed mart (r12 ADVICE).
-          val files = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (it.hasNext) {
-            val f = it.next()
-            files +=
-              s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
-          }
+          val files = fs.location.listFiles(Nil, Nil).flatMap(_.files)
+            .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}")
           val fmd = java.security.MessageDigest.getInstance("MD5")
           files.sorted.foreach(s => fmd.update(s.getBytes("UTF-8")))
           val fileHash = fmd.digest().map("%02x".format(_)).mkString
-          s"$p|${files.size}|$fileHash"
-        }.mkString(";")
+          s"${fs.location.rootPaths.mkString(",")}|${files.size}|$fileHash"
         case _ => "other"
       }
     }.sorted.mkString("\n")

@@ -21,9 +21,15 @@ object EventStream {
 
   /** STATE-STORE partition policy for streaming passes (r21; VERDICT
     * r20 task #8): a stateful micro-batch instantiates one state-store
-    * instance PER shuffle partition per stateful operator — with the
-    * RocksDB provider that is a native DB open + commit + checkpoint
-    * upload each batch, a FIXED cost ∝ partition count, not data.
+    * instance PER shuffle partition per stateful operator, and each one
+    * commits every batch — with the RocksDB provider a native checkpoint
+    * plus its upload through the checkpoint file manager (a temp-file
+    * create and a FileContext rename per file), a FIXED cost ∝ partition
+    * count, not data. Measured on event_stream (4-core VM, 4 partitions,
+    * traced seed 3, median of 3): ~150 ms per partition per batch while
+    * Hadoop's local filesystem forked `chmod`/`readlink` per file, ~40 ms
+    * with [[graft.LocalFs]] (`state_commit_ms` 593 → 162 per batch).
+    * Cheaper, still per partition, so the count below still matters.
     * Leaving the count at the session default (= cores) therefore makes
     * a toy-volume pass SLOWER with more cores — the driver's r20 bench
     * measured st_session_timers at 8c/32c ratio 0.53 (8 cores beat 32).

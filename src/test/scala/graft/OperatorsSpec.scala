@@ -1024,6 +1024,22 @@ class OperatorsSpec extends SparkSpec {
     assert(r.df.head().getLong(0) == 5050L + 1000L)
   }
 
+  test("ResultCache: ANALYZE of an input leaves its fingerprint unchanged") {
+    import graft.operators.{AtomicTable, ResultCache, TableStats}
+    val dir = java.nio.file.Files.createTempDirectory("rcache_stats")
+      .resolve("t").toString
+    AtomicTable.commit((1L to 50L).map(i => (i, i % 3)).toDF("k", "g"),
+      dir, 0L)
+    def q() = AtomicTable.read(spark, dir).get
+      .groupBy("g").agg(count(lit(1)).as("n"))
+    val before = ResultCache.fingerprint(q())
+    // the stats manifest lands in the committed version dir; Spark never
+    // reads it, so a maintenance sweep must not force downstream rebuilds
+    TableStats.analyze(spark, dir, Seq("k", "g"))
+    assert(TableStats.committedRows(spark, dir).contains(50L))
+    assert(ResultCache.fingerprint(q()) == before)
+  }
+
   test("runtime bloom-filter join: injected filter reaches the fact scan, output invariant") {
     // Spark's InjectRuntimeFilter: a selective filter on the build side
     // of a shuffle join grows a bloom-filter subquery that pre-filters
