@@ -159,7 +159,8 @@ object Dedup {
     * packed rewrite below removed the joins the prune targeted.) */
   def jaccardVerify(candidates: DataFrame, shingled: DataFrame): DataFrame = {
     // PACKED two-stage verify (r17, closes the minhash_lsh 100× shuffle
-    // step — MinhashDiag measured the old shingle-row form): below
+    // step; a per-stage profile of the old shingle-row form, recorded
+    // in SCALE.md's minhash_lsh row, named it): below
     // ~30× AQE BROADCAST the full distinct-shingled table into both
     // intersection joins (no spill, shuffle small); at 100× the
     // broadcast flipped to sort-merge, shuffling the whole shingle
@@ -326,10 +327,10 @@ object Dedup {
     *
     * `maxBucketSize` DEFAULT (r16, from the r15 band8 saturation
     * data): under [[autoBandPolicy]] the expected UNIFORM band-bucket
-    * load is ≤ 1 doc, but band keys are majority-vote bits —
-    * `tools/ProfileCluster` measured hot buckets on the homogeneous
-    * testdata corpus filling to ~100–170× the uniform load long
-    * before uniform-hash math predicts. 512 ≈ 3–5× that measured
+    * load is ≤ 1 doc, but band keys are majority-vote bits — a
+    * per-stage profile of the near-dup chain measured hot buckets on
+    * the homogeneous testdata corpus filling to ~100–170× the uniform
+    * load long before uniform-hash math predicts. 512 ≈ 3–5× that measured
     * skew ceiling over the policy's load: every healthy bucket keeps
     * exact all-pairs recall (the cap is a measured no-op at both gate
     * SFs — the cluster-grain oracle twins REPLAY it, so a denser draw

@@ -639,8 +639,8 @@ object TextAnalysis {
     // isnotnull(doc_id) into their side's scan while aggregate-only
     // consumers (minhash signatures, simhash votes) don't — so the same
     // token exchange canonicalized TWO ways and materialized twice per
-    // query (MinhashDiag r17: two 305 MB shuffle writes at 100× where
-    // one suffices). Filtering at the source makes every lineage carry
+    // query (r17 per-stage profile: two 305 MB shuffle writes at 100×
+    // where one suffices). Filtering at the source makes every lineage carry
     // the filter, so all consumers reuse ONE exchange.
     val tok = docs.filter(id.isNotNull).select(id.as("doc_id"),
       posexplode(tokens(text)).as(Seq("pos", "token")))

@@ -454,19 +454,9 @@ object GraphQueries {
     * numbers. */
   val gModularity: Q = Q.sql(
     "g_modularity",
-    """WITH RECURSIVE nodes AS (
+    s"""WITH RECURSIVE nodes AS (
       |  SELECT doc_id FROM documents
-      |), star AS (
-      |  SELECT doc_id AS src, doc_id - (doc_id % 7) AS dst
-      |  FROM documents WHERE doc_id % 7 IN (1, 2, 3)
-      |), chain AS (
-      |  SELECT doc_id AS src, doc_id + 13 AS dst
-      |  FROM documents
-      |  WHERE doc_id % 13 = 0
-      |    AND doc_id + 13 IN (SELECT doc_id FROM documents)
-      |), edges AS (
-      |  SELECT src, dst FROM star UNION ALL SELECT src, dst FROM chain
-      |), sym AS (
+      |), ${Q.docGraphCtes}, sym AS (
       |  SELECT src, dst FROM edges UNION SELECT dst, src FROM edges
       |), r(a, b) AS (
       |  SELECT doc_id, doc_id FROM nodes
@@ -511,15 +501,8 @@ object GraphQueries {
       |GROUP BY 1, 2, 3
       |ORDER BY 1""".stripMargin) { (s, d) =>
     import graft.llm.Dedup
-    val docs = Tables.documents(s, d)
-    val id = col("doc_id")
-    val nodes = docs.select(id.as("id"))
-    val star = docs.filter((id % 7).isin(1, 2, 3))
-      .select(id.as("src"), (id - id % 7).as("dst"))
-    val chain = docs.filter(id % 13 === 0)
-      .select(id.as("src"), (id + 13).as("dst"))
-      .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-    val edges = star.unionByName(chain.select("src", "dst"))
+    val g = Q.docGraph(Tables.documents(s, d))
+    val (nodes, edges) = (g.nodes, g.edges)
     val sym = edges.unionByName(
       edges.select(col("dst").as("src"), col("src").as("dst"))).distinct()
     val deg = sym.groupBy(col("src").as("id"))
@@ -566,17 +549,7 @@ object GraphQueries {
     * label assignment, not just convergence. */
   val gLabelProp: Q = Q.sql(
     "g_label_prop",
-    s"""WITH star AS (
-      |  SELECT doc_id AS src, doc_id - (doc_id % 7) AS dst
-      |  FROM documents WHERE doc_id % 7 IN (1, 2, 3)
-      |), chain AS (
-      |  SELECT doc_id AS src, doc_id + 13 AS dst
-      |  FROM documents
-      |  WHERE doc_id % 13 = 0
-      |    AND doc_id + 13 IN (SELECT doc_id FROM documents)
-      |), edges AS (
-      |  SELECT src, dst FROM star UNION ALL SELECT src, dst FROM chain
-      |), dirs AS (
+    s"""WITH ${Q.docGraphCtes}, dirs AS (
       |  SELECT src AS u, dst AS v FROM edges
       |  UNION ALL SELECT dst, src FROM edges
       |)${GraphOps.labelPropagationOracleCtes(3)}
@@ -584,16 +557,8 @@ object GraphQueries {
       |  COUNT(*) OVER (PARTITION BY label) AS community_size
       |FROM lp3
       |ORDER BY node""".stripMargin) { (s, d) =>
-    val docs = Tables.documents(s, d)
-    val id = col("doc_id")
-    val nodes = docs.select(id.as("id"))
-    val star = docs.filter((id % 7).isin(1, 2, 3))
-      .select(id.as("src"), (id - id % 7).as("dst"))
-    val chain = docs.filter(id % 13 === 0)
-      .select(id.as("src"), (id + 13).as("dst"))
-      .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-    val edges = star.unionByName(chain.select("src", "dst"))
-    GraphOps.labelPropagation(edges, iters = 3)
+    GraphOps.labelPropagation(Q.docGraph(Tables.documents(s, d)).edges,
+        iters = 3)
       .withColumn("community_size",
         count(lit(1)).over(Window.partitionBy(col("label"))))
       .orderBy("node")
@@ -614,37 +579,16 @@ object GraphQueries {
     * operator. */
   val gLabelPropIncremental: Q = Q.sql(
     "g_label_prop_incremental",
-    s"""WITH star AS (
-      |  SELECT doc_id AS src, doc_id - (doc_id % 7) AS dst
-      |  FROM documents WHERE doc_id % 7 IN (1, 2, 3)
-      |), chain AS (
-      |  SELECT doc_id AS src, doc_id + 13 AS dst
-      |  FROM documents
-      |  WHERE doc_id % 13 = 0
-      |    AND doc_id + 13 IN (SELECT doc_id FROM documents)
-      |), edges AS (
-      |  SELECT src, dst FROM star UNION ALL SELECT src, dst FROM chain
-      |), dirs AS (
+    s"""WITH ${Q.docGraphCtes}, dirs AS (
       |  SELECT src AS u, dst AS v FROM edges
       |  UNION ALL SELECT dst, src FROM edges
       |)${GraphOps.labelPropagationOracleCtes(3)}
       |SELECT node, label, (node % 10 = 9) AS is_new_node
       |FROM lp3
       |ORDER BY node""".stripMargin) { (s, d) =>
-    val docs = Tables.documents(s, d)
-    val id = col("doc_id")
-    val nodes = docs.select(id.as("id"))
-    val star = docs.filter((id % 7).isin(1, 2, 3))
-      .select(id.as("src"), (id - id % 7).as("dst"))
-    val chain = docs.filter(id % 13 === 0)
-      .select(id.as("src"), (id + 13).as("dst"))
-      .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-    def old(c: org.apache.spark.sql.Column) = c % 10 =!= 9
-    val oldStar = star.filter(old(col("src")) && old(col("dst")))
-    val newEdges = star.filter(!(old(col("src")) && old(col("dst"))))
-      .unionByName(chain.select("src", "dst"))
-    val committed = GraphOps.labelPropagationRounds(oldStar, iters = 3)
-    GraphOps.incrementalLabelPropagation(committed, oldStar, newEdges)
+    val g = Q.docGraph(Tables.documents(s, d))
+    val committed = GraphOps.labelPropagationRounds(g.oldStar, iters = 3)
+    GraphOps.incrementalLabelPropagation(committed, g.oldStar, g.newEdges)
       .select(col("node"), col("label"),
         (col("node") % 10 === 9).as("is_new_node"))
       .orderBy("node")

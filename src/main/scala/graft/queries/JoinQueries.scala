@@ -631,13 +631,14 @@ object JoinQueries {
     * orders ⋈ lineitem spine committed as bucketed tables on the join
     * key (`bucketBy(8) + sortBy`), then joined and rolled up — the
     * 100 TB storage answer for every orderkey equi-join in the
-    * pipeline (SURVEY §2.3 scale note; BucketDemo is the tool-level
-    * proof, OperatorsSpec pins the ZERO-Exchange plan with broadcast
-    * disabled). The oracle twin reads the PLAIN parquet — same rows
-    * through the shuffled join — so the gate proves the bucketed
-    * layout is a pure physical change. The query pays the one-time
-    * layout write in-body (the real pipeline pays it at commit time
-    * and amortizes it over every downstream join). */
+    * pipeline (SURVEY §2.3 scale note; OperatorsSpec "bucketed join:
+    * co-bucketed tables join with zero Exchanges" pins the
+    * ZERO-Exchange plan with broadcast disabled). The oracle twin reads
+    * the PLAIN parquet — same rows through the shuffled join — so the
+    * gate proves the bucketed layout is a pure physical change. The
+    * query pays the one-time layout write in-body (the real pipeline
+    * pays it at commit time and amortizes it over every downstream
+    * join). */
   val j20BucketedColocated: Q = Q.sql(
     "j20_bucketed_colocated_join",
     """SELECT o.o_orderstatus,

@@ -1831,19 +1831,9 @@ object LlmQueries {
     * component_size doubles as a reachability-set check. */
   val ddConnectedComponents: Q = Q.sql(
     "dd_cc_components",
-    """WITH RECURSIVE nodes AS (
+    s"""WITH RECURSIVE nodes AS (
       |  SELECT doc_id FROM documents
-      |), star AS (
-      |  SELECT doc_id AS src, doc_id - (doc_id % 7) AS dst
-      |  FROM documents WHERE doc_id % 7 IN (1, 2, 3)
-      |), chain AS (
-      |  SELECT doc_id AS src, doc_id + 13 AS dst
-      |  FROM documents
-      |  WHERE doc_id % 13 = 0
-      |    AND doc_id + 13 IN (SELECT doc_id FROM documents)
-      |), edges AS (
-      |  SELECT src, dst FROM star UNION ALL SELECT src, dst FROM chain
-      |), sym AS (
+      |), ${Q.docGraphCtes}, sym AS (
       |  SELECT src, dst FROM edges UNION SELECT dst, src FROM edges
       |), r(a, b) AS (
       |  SELECT doc_id, doc_id FROM nodes
@@ -1855,17 +1845,9 @@ object LlmQueries {
       |  CAST(COUNT(*) AS BIGINT) AS component_size
       |FROM r GROUP BY a ORDER BY doc_id""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(s, d)
-    val id = col("doc_id")
-    val nodes = docs.select(id.as("id"))
-    val star = docs.filter((id % 7).isin(1, 2, 3))
-      .select(id.as("src"), (id - id % 7).as("dst"))
-    val chain = docs.filter(id % 13 === 0)
-      .select(id.as("src"), (id + 13).as("dst"))
-      .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-    val cc = Dedup.connectedComponents(nodes,
-      star.unionByName(chain.select(col("src"), col("dst"))))
-    cc.select(col("id").as("doc_id"), col("component"))
+    val g = Q.docGraph(Tables.documents(s, d))
+    Dedup.connectedComponents(g.nodes, g.edges)
+      .select(col("id").as("doc_id"), col("component"))
       .withColumn("component_size",
         count(lit(1)).over(Window.partitionBy(col("component")))
           .cast("long"))
@@ -1886,19 +1868,9 @@ object LlmQueries {
     * components. */
   val ddCcIncremental: Q = Q.sql(
     "dd_cc_incremental",
-    """WITH RECURSIVE nodes AS (
+    s"""WITH RECURSIVE nodes AS (
       |  SELECT doc_id FROM documents
-      |), star AS (
-      |  SELECT doc_id AS src, doc_id - (doc_id % 7) AS dst
-      |  FROM documents WHERE doc_id % 7 IN (1, 2, 3)
-      |), chain AS (
-      |  SELECT doc_id AS src, doc_id + 13 AS dst
-      |  FROM documents
-      |  WHERE doc_id % 13 = 0
-      |    AND doc_id + 13 IN (SELECT doc_id FROM documents)
-      |), edges AS (
-      |  SELECT src, dst FROM star UNION ALL SELECT src, dst FROM chain
-      |), sym AS (
+      |), ${Q.docGraphCtes}, sym AS (
       |  SELECT src, dst FROM edges UNION SELECT dst, src FROM edges
       |), r(a, b) AS (
       |  SELECT doc_id, doc_id FROM nodes
@@ -1908,23 +1880,11 @@ object LlmQueries {
       |SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS component,
       |  (a % 10 = 9) AS is_new_node
       |FROM r GROUP BY a ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val docs = Tables.documents(s, d)
-    val id = col("doc_id")
-    val nodes = docs.select(id.as("id"))
-    val star = docs.filter((id % 7).isin(1, 2, 3))
-      .select(id.as("src"), (id - id % 7).as("dst"))
-    val chain = docs.filter(id % 13 === 0)
-      .select(id.as("src"), (id + 13).as("dst"))
-      .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-    def old(c: org.apache.spark.sql.Column) = c % 10 =!= 9
-    val labels1 = Dedup.connectedComponents(
-      nodes.filter(old(col("id"))),
-      star.filter(old(col("src")) && old(col("dst"))))
-    val merged = Dedup.incrementalComponents(labels1,
-      nodes.filter(col("id") % 10 === 9),
-      star.filter(!(old(col("src")) && old(col("dst"))))
-        .unionByName(chain.select("src", "dst")))
-    merged.select(col("id").as("doc_id"), col("component"),
+    val g = Q.docGraph(Tables.documents(s, d))
+    Dedup.incrementalComponents(
+        Dedup.connectedComponents(g.oldNodes, g.oldStar),
+        g.newNodes, g.newEdges)
+      .select(col("id").as("doc_id"), col("component"),
         (col("id") % 10 === 9).as("is_new_node"))
       .orderBy("doc_id")
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Sessions, Tables}
 import graft.llm.{Clustering, CorpusIndex, Dedup, TextAnalysis => TA}
+import graft.queries.Q
 import graft.streaming.EventStream
 
 /** MEASURED SCALING EXPONENTS for the heaviest operator families — the
@@ -206,39 +207,16 @@ object ScaleBench {
   private def docsOf(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
 
-  private def ccGraph(docs: DataFrame): (DataFrame, DataFrame) = {
-    val id = col("doc_id")
-    val nodes = docs.select(id.as("id"))
-    val star = docs.filter((id % 7).isin(1, 2, 3))
-      .select(id.as("src"), (id - id % 7).as("dst"))
-    val chain = docs.filter(id % 13 === 0)
-      .select(id.as("src"), (id + 13).as("dst"))
-      .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-    (nodes, star.unionByName(chain.select(col("src"), col("dst"))))
-  }
-
   private def ccFull(s: SparkSession, dir: String): Long = {
-    val (nodes, edges) = ccGraph(docsOf(s, dir))
-    Dedup.connectedComponents(nodes, edges).count()
+    val g = Q.docGraph(docsOf(s, dir))
+    Dedup.connectedComponents(g.nodes, g.edges).count()
   }
 
   private def ccIncremental(s: SparkSession, dir: String): Long = {
-    val docs = docsOf(s, dir)
-    val id = col("doc_id")
-    val nodes = docs.select(id.as("id"))
-    val star = docs.filter((id % 7).isin(1, 2, 3))
-      .select(id.as("src"), (id - id % 7).as("dst"))
-    val chain = docs.filter(id % 13 === 0)
-      .select(id.as("src"), (id + 13).as("dst"))
-      .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-    def old(c: org.apache.spark.sql.Column) = c % 10 =!= 9
-    val labels1 = Dedup.connectedComponents(
-      nodes.filter(old(col("id"))),
-      star.filter(old(col("src")) && old(col("dst"))))
-    Dedup.incrementalComponents(labels1,
-      nodes.filter(col("id") % 10 === 9),
-      star.filter(!(old(col("src")) && old(col("dst"))))
-        .unionByName(chain.select("src", "dst"))).count()
+    val g = Q.docGraph(docsOf(s, dir))
+    Dedup.incrementalComponents(
+      Dedup.connectedComponents(g.oldNodes, g.oldStar),
+      g.newNodes, g.newEdges).count()
   }
 
   private def minhashLsh(s: SparkSession, dir: String): Long = {
@@ -280,7 +258,7 @@ object ScaleBench {
           .filter(col("keep")).count()
       }
       kept
-    } finally graft.queries.Q.deleteRecursively(idx)
+    } finally Q.deleteRecursively(idx)
   }
 
   /** Persisted-index daily-crawl chain: commit day 1 (even ids) into a
@@ -296,7 +274,7 @@ object ScaleBench {
       CorpusIndex.processBatch(s, idx.toString,
         docs.filter(col("doc_id") % 2 === 1),
         col("doc_id"), col("text")).count()
-    } finally graft.queries.Q.deleteRecursively(idx)
+    } finally Q.deleteRecursively(idx)
   }
 
   private def bpe(s: SparkSession, dir: String): Long =
@@ -391,7 +369,7 @@ object ScaleBench {
         bits = Some(bits)).count()
       PhashIndex.processBatch(s, idx.toString, images(day2),
         bits = Some(bits)).count()
-    } finally graft.queries.Q.deleteRecursively(idx)
+    } finally Q.deleteRecursively(idx)
   }
 
   /** The t_leakage_safe_split composition at scale: 64-bit simhash →
@@ -581,7 +559,7 @@ object ScaleBench {
       runPass()
       s.read.parquet(out).filter(col("user_id") >= 0).count()
     } finally {
-      graft.queries.Q.deleteRecursively(scratch)
+      Q.deleteRecursively(scratch)
       prev match {
         case Some(v) => s.conf.set(provKey, v)
         case None => s.conf.unset(provKey)
@@ -635,16 +613,9 @@ object ScaleBench {
     * one scan-shaped committed-label overlay join per round (linear
     * BYTES with a small constant, zero corpus-scale iteration). */
   private def lpaEdgeSplit(docs: DataFrame): (DataFrame, DataFrame) = {
-    val id = col("doc_id")
-    val nodes = docs.select(id.as("id"))
-    val star = docs.filter((id % 7).isin(1, 2, 3))
-      .select(id.as("src"), (id - id % 7).as("dst"))
-    val chain = docs.filter(id % 13 === 0)
-      .select(id.as("src"), (id + 13).as("dst"))
-      .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-    val batch = chain.filter(col("src") < DocStride)
-    val old = star.unionByName(chain.filter(col("src") >= DocStride))
-    (old, batch)
+    val g = Q.docGraph(docs)
+    (g.star.unionByName(g.chain.filter(col("src") >= DocStride)),
+      g.chain.filter(col("src") < DocStride))
   }
 
   private def lpaPrep(s: SparkSession, dir: String): Unit = {
@@ -837,24 +808,19 @@ object ScaleBench {
     require(fams.nonEmpty, s"no family matches $only — " +
       s"known: ${families.map(_.name).mkString(", ")}")
     val spark = Sessions.local(cpus)
-    // diagnostic conf overrides (runtime-settable keys only), e.g.
-    // SPARK_GRAFT_EXTRA_CONF="spark.sql.adaptive.enabled=false" — used
-    // to bisect scale pathologies like the cluster_canonical 30×
-    // planning stall without touching Sessions
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(",").foreach {
-      kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-        println(s"[scale] conf override: ${k.trim}=${v.trim}")
-    })
     spark.sparkContext.setLogLevel("ERROR")
     val metrics = new StageMetrics
     spark.sparkContext.addSparkListener(metrics)
     // absorb JIT/parquet/shuffle ramp outside the measured window
     Tables.documents(spark, sfDir).groupBy(col("lang")).count().collect()
 
+    // listener events are async: drain the bus before a sample's reset
+    // (prep stages stay out) and before its snapshot (late-completing
+    // stages stay in), as Bench does
+    def drain(): Unit = org.apache.spark.sql.graftinternal.ListenerBusDrain
+      .waitUntilEmpty(spark, 30000L)
     def reclaim(): Unit = {
-      spark.catalog.clearCache(); System.gc(); Thread.sleep(200)
+      spark.catalog.clearCache(); System.gc(); Thread.sleep(200); drain()
     }
     final case class Pt(k: Int, sec: Double, rows: Long,
                         shuffle: Long, spill: Long, peakMem: Long,
@@ -876,17 +842,13 @@ object ScaleBench {
           f.prep.foreach(p => p(spark, amp.toString, k))
           def sample(): Pt = {
             reclaim()
-            // listener events are async (listenerBus is private):
-            // the reclaim sleep drains the previous sample's events;
-            // a short post-run sleep drains this sample's tail before
-            // the snapshot. Diagnostic-grade attribution only.
             metrics.reset()
             val st0 = Steal.sample()
             val t0 = System.nanoTime()
             val n = f.run(spark, amp.toString, k)
             val sec = (System.nanoTime() - t0) / 1e9
             val stealPct = Steal.pct(st0, Steal.sample())
-            Thread.sleep(500)
+            drain()
             val (sh, sp, pm, ob) = metrics.snap
             Pt(k, sec, n, sh, sp, pm, ob, stealPct)
           }
@@ -907,7 +869,7 @@ object ScaleBench {
               f"$cutoff%.0f s — skipping larger scales")
           }
         }
-      } finally graft.queries.Q.deleteRecursively(amp)
+      } finally Q.deleteRecursively(amp)
     }
     spark.stop()
 

@@ -32,11 +32,11 @@ object InternalDf {
 }
 
 /** Same-package accessor for `SparkContext.listenerBus.waitUntilEmpty`
-  * (both `private[spark]`): lets diagnostic tools that read their own
-  * `SparkListener` state (`tools.MinhashDiag`'s stage table) DRAIN the
+  * (both `private[spark]`): lets Bench and ScaleBench, which read their
+  * own `SparkListener` state ([[graft.tools.StageMetrics]]), DRAIN the
   * async listener bus deterministically instead of guessing with a
-  * fixed sleep, which silently dropped late-completing stages from the
-  * printed table (r17 ADVICE). Forwarding call only, no behavior. */
+  * fixed sleep, which silently dropped late-completing stages (r17
+  * ADVICE). Forwarding call only, no behavior. */
 object ListenerBusDrain {
   def waitUntilEmpty(spark: SparkSession, timeoutMillis: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMillis)

@@ -6,7 +6,8 @@ import graft.tools.Steal
 
 /** Quietness-evidence plumbing (r19 VERDICT task #6): /proc/stat
   * parsing, window pct math, and the floor-commit REFUSAL verdict
-  * Bench applies before overwriting bench/BENCH.json. Pure JVM — no
+  * Bench applies before overwriting bench/BENCH.json, plus a guard that
+  * the docs' `runMain` lines name mains that exist. Pure JVM — no
   * Spark session needed. */
 class BenchInfraSpec extends AnyFunSuite {
 
@@ -58,5 +59,29 @@ class BenchInfraSpec extends AnyFunSuite {
     // no samples at all (off-Linux host): quiet by definition
     assert(Steal.verdict(Seq(None, None)) === (true, 0.0))
     assert(Steal.verdict(Nil) === (true, 0.0))
+  }
+
+  test("docs name only mains that exist: every runMain graft.<X> loads") {
+    val root = Iterator.iterate(
+        java.nio.file.Paths.get("").toAbsolutePath)(_.getParent)
+      .takeWhile(_ != null)
+      .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
+      .getOrElse(fail("no build.sbt above the working directory"))
+    val docs = Seq("README.md", "CLAUDE.md", ".claude/skills/verify/SKILL.md")
+    val runMain = """runMain (graft\.[\w.]+)""".r
+    val targets = docs.flatMap { doc =>
+      val text = java.nio.file.Files.readString(root.resolve(doc))
+      runMain.findAllMatchIn(text).map(m => doc -> m.group(1))
+    }.distinct
+    assert(targets.nonEmpty, "no runMain lines found in the docs")
+    val missing = targets.filterNot { case (_, main) =>
+      try { // load without initializing: object bodies may build state
+        Class.forName(s"$main$$", false, getClass.getClassLoader)
+          .getMethod("main", classOf[Array[String]]); true
+      } catch {
+        case _: ClassNotFoundException | _: NoSuchMethodException => false
+      }
+    }
+    assert(missing.isEmpty, s"docs name mains that do not exist: $missing")
   }
 }

@@ -83,6 +83,9 @@ class OperatorsSpec extends SparkSpec {
       (1L, "2024-01", 10.0), (2L, "2024-01", 20.0), (3L, "2024-02", 30.0))
       .toDF("id", "order_month", "amount")
     cat.saveTablePartitioned("mart", "part_demo", df, Seq("order_month"))
+    // a second commit of the same frame: two version dirs on disk, so a
+    // read of the table root would double-count
+    cat.saveTablePartitioned("mart", "part_demo", df, Seq("order_month"))
     val read = cat.load("mart", "part_demo")
       .filter(col("order_month") === "2024-01")
     assert(read.count() == 2)
@@ -96,6 +99,48 @@ class OperatorsSpec extends SparkSpec {
     val dataDir = graft.operators.AtomicTable
       .latestDataPath(spark, s"$root/mart/part_demo").get
     assert(new java.io.File(s"$dataDir/order_month=2024-02").exists())
+  }
+
+  test("bucketed join: co-bucketed tables join with zero Exchanges") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val dir = java.nio.file.Files.createTempDirectory("bucket_join")
+    val orders = (1L to 400L).map(k => (k, s"s${k % 3}"))
+      .toDF("o_orderkey", "o_orderstatus")
+    val lineitem = (1L to 1200L).map(i => (i % 400 + 1, i * 0.5))
+      .toDF("l_orderkey", "rev")
+    // the j20 layout: bucketBy + sortBy on the join key
+    def commitBucketed(df: DataFrame, key: String, name: String): Unit =
+      df.write.mode("overwrite").bucketBy(4, key).sortBy(key)
+        .option("path", s"$dir/$name").saveAsTable(name)
+    commitBucketed(orders, "o_orderkey", "spec_orders_b")
+    commitBucketed(lineitem, "l_orderkey", "spec_lineitem_b")
+    orders.write.parquet(s"$dir/orders_plain")
+    lineitem.write.parquet(s"$dir/lineitem_plain")
+    val helper = new AdaptiveSparkPlanHelper {}
+    def exchanges(l: DataFrame, r: DataFrame): Int = {
+      val joined = l.join(r, col("o_orderkey") === col("l_orderkey"))
+      assert(joined.collect().length == 1200)
+      helper.collect(joined.queryExecution.executedPlan) {
+        case e: Exchange => e }.size
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1") // a broadcast join needs no Exchange either
+    try {
+      val bucketed = exchanges(spark.table("spec_orders_b"),
+        spark.table("spec_lineitem_b"))
+      val plain = exchanges(spark.read.parquet(s"$dir/orders_plain"),
+        spark.read.parquet(s"$dir/lineitem_plain"))
+      assert(bucketed == 0 && bucketed < plain,
+        s"bucketed join exchanges=$bucketed, plain parquet=$plain")
+    } finally {
+      spark.conf.set(key, prev)
+      spark.sql("DROP TABLE IF EXISTS spec_orders_b")
+      spark.sql("DROP TABLE IF EXISTS spec_lineitem_b")
+      graft.queries.Q.deleteRecursively(dir)
+    }
   }
 
   test("compact: rewrites the latest snapshot with fewer files, same rows") {
