@@ -553,7 +553,10 @@ object Clustering {
     * codes, LUTs, probe routing, ADC ranking and the exact baseline
     * are all integer-exact — `ann_ivfpq` hash-gates the entire
     * composed lifecycle. Same top-`k`+`hit_exact` frame as [[pqTopK]]
-    * so recall of PQ-only vs IVF-PQ is directly comparable. */
+    * so recall of PQ-only vs IVF-PQ is directly comparable. It is the
+    * serve lifecycle end to end: [[ivfPqBuild]] over `emb`,
+    * [[ivfPqQueryTopK]] for the eval queries (vec_id % queryMod = 0),
+    * then the exact baseline. */
   def ivfPqTopK(spark: SparkSession, emb: DataFrame,
                 coarseStride: Int = 0, mSub: Int = 4, subDim: Int = 16,
                 stride: Int = 100, iters: Int = 2, queryMod: Int = 97,
@@ -561,74 +564,13 @@ object Clustering {
                 idCol: String = "vec_id",
                 vecCol: String = "embedding",
                 knownN: Long = -1L): DataFrame = {
+    val index = ivfPqBuild(spark, emb, coarseStride, mSub, subDim, stride,
+      iters, idCol, vecCol, knownN)
+    val queries = emb.filter(col(idCol) % queryMod === 0)
+    val ranked = ivfPqQueryTopK(index, queries, nProbe, k, idCol, vecCol)
     val base = emb.select(col(idCol).as("vec_id"), col(vecCol).as("emb"))
-    // coarseStride <= 0 (the default) applies [[autoCoarsePolicy]]:
-    // cells ∝ √n with the codebook trained on a ≤256·nlist sample —
-    // a caller-chosen CONSTANT cell count is the measured quadratic
-    // (ScaleBench ivfpq_fixed_stride α_bytes 1.92), and full-corpus
-    // training at √n cells would be n^1.5. The PQ `stride` stays a
-    // hyperparameter (codewords per subspace are a model size, not a
-    // corpus fraction — FAISS's 256).
-    // NOTE (r15 ADVICE): sizing the policy costs one eager count()
-    // action per call — fine at index-BUILD granularity, but callers
-    // that already know the corpus cardinality (table stats, a
-    // composed query building several arms over one frame) should
-    // pass it as `knownN` to skip the extra scan.
-    val gRows = quantRows(base, idCol = "vec_id", vecCol = "emb")
-    val (cs, trainRows) =
-      if (coarseStride > 0) (coarseStride, gRows)
-      else {
-        val (stride0, sampleMod) = autoCoarsePolicy(
-          if (knownN > 0) knownN else base.count())
-        (stride0, gRows.filter(col("vec_id") % sampleMod === 0))
-      }
-    // coarse router: full-dim codebook, one cell per corpus vector
-    val coarseCb = train(spark, trainRows, cs, iters)
-    val cells = assign(gRows, coarseCb)
-      .select(col("vec_id"), col("cid").as("cell"))
-    // PQ: per-subspace codebooks + codes (as in pqTopK)
-    val subRows = (0 until mSub).map { m =>
-      quantRows(base.select(col("vec_id"),
-        slice(col("emb"), m * subDim + 1, subDim).as("emb")),
-        idCol = "vec_id", vecCol = "emb")
-    }
-    val codebooks = subRows.map(r => train(spark, r, stride, iters))
-    val codes = subRows.lazyZip(codebooks).lazyZip(0 until mSub).map {
-      (r, cb, m) =>
-        assign(r, cb).select(col("vec_id"), lit(m).as("sub"),
-          col("cid").as("code"))
-    }.reduce(_ unionByName _)
     val qids = base.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("query_id"))
-    // probe routing: nProbe nearest cells per query
-    val qRows = gRows
-      .join(broadcast(qids), col("vec_id") === col("query_id"))
-      .select(col("vec_id"), col("pos"), col("qv"))
-    val probes = nearestCentroids(qRows, coarseCb, nProbe)
-      .select(col("vec_id").as("query_id"), col("cid").as("cell"))
-    val lut = subRows.lazyZip(codebooks).lazyZip(0 until mSub).map {
-      (r, cb, m) =>
-        r.join(broadcast(qids), col("vec_id") === col("query_id"))
-          .select(col("query_id"), col("pos"), col("qv"))
-          .join(broadcast(cb), Seq("pos"))
-          .groupBy(col("query_id"), col("cid"))
-          .agg(sum((col("qv") - col("cv")) * (col("qv") - col("cv")))
-            .as("d"))
-          .withColumn("sub", lit(m))
-    }.reduce(_ unionByName _)
-    // ADC restricted to probed cells
-    val approx = codes.join(cells, Seq("vec_id"))
-      .join(probes, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(lut.withColumnRenamed("cid", "code")),
-        Seq("query_id", "sub", "code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("d")).cast("long").as("approx_dist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_dist"), col("vec_id"))
-    val ranked = approx
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
     flagAgainstExact(ranked, base, qids, k)
   }
 
@@ -638,11 +580,10 @@ object Clustering {
     * ONCE (linear in corpus: one coarse assignment scan + capped-
     * sample Lloyd) and then serves MANY query batches whose per-query
     * cost is ∝ √n (nlist centroid routes + nProbe·n/nlist ADC
-    * candidates — the FAISS minimum at nlist ≈ √n). [[ivfPqTopK]]
-    * deliberately conflates the two (its oracle gates the whole
-    * lifecycle plus an exact-baseline eval); this pair is the shape a
-    * serving deployment persists — all four frames are plain columnar
-    * tables (parquet round-trip safe), `codebooks` k-row broadcasts.
+    * candidates — the FAISS minimum at nlist ≈ √n). This pair is the
+    * shape a serving deployment persists — all four frames are plain
+    * columnar tables (parquet round-trip safe), `codebooks` k-row
+    * broadcasts.
     * ScaleBench's `ivfpq_query_fixed` family measures the query half
     * alone: index built un-timed in prep, a FIXED query set served
     * per scale — the direct measurement of the served √n claim that
@@ -653,10 +594,9 @@ object Clustering {
                               mSub: Int, subDim: Int)
 
   /** Train coarse router + per-subspace PQ codebooks and encode the
-    * corpus. Same construction (and defaults) as [[ivfPqTopK]]'s build
-    * prefix — cells-∝-√n policy with capped-sample training unless
-    * `coarseStride` overrides; pass `knownN` to skip the sizing
-    * count(). */
+    * corpus: cells-∝-√n policy ([[autoCoarsePolicy]]) with
+    * capped-sample training unless `coarseStride` overrides; pass
+    * `knownN` to skip the sizing count(). */
   def ivfPqBuild(spark: SparkSession, emb: DataFrame,
                  coarseStride: Int = 0, mSub: Int = 4, subDim: Int = 16,
                  stride: Int = 100, iters: Int = 2,
@@ -665,6 +605,12 @@ object Clustering {
                  knownN: Long = -1L): IvfPqIndex = {
     val base = emb.select(col(idCol).as("vec_id"), col(vecCol).as("emb"))
     val gRows = quantRows(base, idCol = "vec_id", vecCol = "emb")
+    // A caller-chosen CONSTANT cell count is the measured quadratic
+    // (ScaleBench ivfpq_fixed_stride α_bytes 1.92), and full-corpus
+    // training at √n cells would be n^1.5. The PQ `stride` stays a
+    // hyperparameter (codewords per subspace are a model size, not a
+    // corpus fraction — FAISS's 256). Sizing the policy costs one
+    // eager count() per build (r15 ADVICE) unless `knownN` is passed.
     val (cs, trainRows) =
       if (coarseStride > 0) (coarseStride, gRows)
       else {

@@ -16,9 +16,37 @@ object ClusteringQueries {
 
   private val Stride = 50
   private val Iters  = 2
+  // PQ and IVF-PQ twins: subspace and coarse codebook strides, probes
+  private val PqStride = 100
+  private val CoarseStride = 100
+  private val NProbe = 2
 
-  private val qq = "CAST(ROUND(CAST(%s AS DOUBLE) * 1000000) AS BIGINT)"
-  private val dotSql = s"SUM(${qq.format("qv2")} * ${qq.format("cv2")})"
+  private val dotSql = Q.dotSql("qv2", "cv2")
+
+  /** The exact baseline of the recall queries: `qe`/`ce` rows of the
+    * first 100 vectors and of the corpus, `norms`, and `ex(query_id,
+    * cand_id)`: each query's exact cosine top 5 (ties to the smaller
+    * cand_id). */
+  private val exactTop5Ctes: String = {
+    val dims = Q.embeddingDimCtes("embeddings WHERE vec_id < 100",
+      "embeddings", qv = "qv2", cv = "cv2")
+    s"""$dims, ${Q.normsCte("embeddings")}, exact_dots AS (
+       |  SELECT query_id, cand_id, $dotSql AS dot
+       |  FROM qe JOIN ce USING (pos)
+       |  WHERE query_id <> cand_id
+       |  GROUP BY query_id, cand_id
+       |), ex AS (
+       |  SELECT query_id, cand_id FROM (
+       |    SELECT d.query_id, d.cand_id, ROW_NUMBER() OVER (
+       |      PARTITION BY d.query_id
+       |      ORDER BY CAST(dot AS DOUBLE) / (qn.norm * cn.norm) DESC,
+       |               d.cand_id) AS rank
+       |    FROM exact_dots d
+       |    JOIN norms qn ON qn.id = d.query_id
+       |    JOIN norms cn ON cn.id = d.cand_id
+       |  ) WHERE rank <= 5
+       |)""".stripMargin
+  }
 
   /** k-means — final assignment, exact integer distance, cluster size.
     * Two Lloyd rounds from the stride-sample init (stride=50 ⇒ k scales
@@ -57,26 +85,13 @@ object ClusteringQueries {
       |), prs AS (
       |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
       |  FROM mem a JOIN mem b ON a.cid = b.cid AND a.vec_id < b.vec_id
-      |), qe AS (
-      |  SELECT vec_id AS doc_a, unnest(embedding) AS qv2,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM corpus
-      |), ce AS (
-      |  SELECT vec_id AS doc_b, unnest(embedding) AS cv2,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM corpus
-      |), dots AS (
+      |), ${Q.embeddingDimCtes("corpus", "corpus", "doc_a", "doc_b", "qv2", "cv2")}, dots AS (
       |  SELECT prs.doc_a, prs.doc_b, $dotSql AS dot
       |  FROM prs
       |  JOIN qe ON qe.doc_a = prs.doc_a
       |  JOIN ce ON ce.doc_b = prs.doc_b AND ce.pos = qe.pos
       |  GROUP BY prs.doc_a, prs.doc_b
-      |), norms AS (
-      |  SELECT vec_id AS id,
-      |    SQRT(CAST(SUM(${qq.format("v")} * ${qq.format("v")}) AS DOUBLE)) AS norm
-      |  FROM (SELECT vec_id, unnest(embedding) AS v FROM corpus)
-      |  GROUP BY vec_id
-      |), matches AS (
+      |), ${Q.normsCte("corpus")}, matches AS (
       |  SELECT doc_b AS vec_id, MIN(doc_a) AS pruned_by
       |  FROM dots
       |  JOIN norms qn ON qn.id = doc_a
@@ -110,38 +125,7 @@ object ClusteringQueries {
       |  SELECT query_id, cand_id
       |  FROM probes JOIN assign USING (cid)
       |  WHERE query_id <> cand_id
-      |), qe AS (
-      |  SELECT vec_id AS query_id, unnest(embedding) AS qv2,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM embeddings
-      |), ce AS (
-      |  SELECT vec_id AS cand_id, unnest(embedding) AS cv2,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM embeddings
-      |), dots AS (
-      |  SELECT cand.query_id, cand.cand_id, $dotSql AS dot
-      |  FROM cand
-      |  JOIN qe ON qe.query_id = cand.query_id
-      |  JOIN ce ON ce.cand_id = cand.cand_id AND ce.pos = qe.pos
-      |  GROUP BY cand.query_id, cand.cand_id
-      |), norms AS (
-      |  SELECT vec_id AS id,
-      |    SQRT(CAST(SUM(${qq.format("v")} * ${qq.format("v")}) AS DOUBLE)) AS norm
-      |  FROM (SELECT vec_id, unnest(embedding) AS v FROM embeddings)
-      |  GROUP BY vec_id
-      |), scored AS (
-      |  SELECT query_id, cand_id,
-      |         CAST(dot AS DOUBLE) / (qn.norm * cn.norm) AS cosine
-      |  FROM dots
-      |  JOIN norms qn ON qn.id = query_id
-      |  JOIN norms cn ON cn.id = cand_id
-      |)
-      |SELECT query_id, cand_id, cosine, rank FROM (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      |    ORDER BY cosine DESC, cand_id) AS rank
-      |  FROM scored
-      |) WHERE rank <= 5
-      |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+      |), ${Q.candCosineTop5Sql("qv2", "cv2")}""".stripMargin) { (s, d) =>
     val emb = Tables.embeddings(s, d)
     val rows = Clustering.quantRows(emb)
     val cent = Clustering.train(s, rows, Stride, Iters)
@@ -172,35 +156,7 @@ object ClusteringQueries {
       |), probes AS (
       |  SELECT vec_id AS query_id, cid FROM af
       |  WHERE rn <= 2 AND vec_id < 100
-      |), qe AS (
-      |  SELECT vec_id AS query_id, unnest(embedding) AS qv2,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM embeddings WHERE vec_id < 100
-      |), ce AS (
-      |  SELECT vec_id AS cand_id, unnest(embedding) AS cv2,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM embeddings
-      |), norms AS (
-      |  SELECT vec_id AS id,
-      |    SQRT(CAST(SUM(${qq.format("v")} * ${qq.format("v")}) AS DOUBLE)) AS norm
-      |  FROM (SELECT vec_id, unnest(embedding) AS v FROM embeddings)
-      |  GROUP BY vec_id
-      |), exact_dots AS (
-      |  SELECT query_id, cand_id, $dotSql AS dot
-      |  FROM qe JOIN ce USING (pos)
-      |  WHERE query_id <> cand_id
-      |  GROUP BY query_id, cand_id
-      |), ex AS (
-      |  SELECT query_id, cand_id FROM (
-      |    SELECT d.query_id, d.cand_id, ROW_NUMBER() OVER (
-      |      PARTITION BY d.query_id
-      |      ORDER BY CAST(dot AS DOUBLE) / (qn.norm * cn.norm) DESC,
-      |               d.cand_id) AS rank
-      |    FROM exact_dots d
-      |    JOIN norms qn ON qn.id = d.query_id
-      |    JOIN norms cn ON cn.id = d.cand_id
-      |  ) WHERE rank <= 5
-      |), ivf_cand AS (
+      |), $exactTop5Ctes, ivf_cand AS (
       |  SELECT probes.query_id, assign.cand_id
       |  FROM probes JOIN assign USING (cid)
       |  WHERE probes.query_id <> assign.cand_id
@@ -283,35 +239,7 @@ object ClusteringQueries {
       |  SELECT pn.n_probe, af.vec_id AS query_id, af.cid
       |  FROM af CROSS JOIN pn
       |  WHERE af.vec_id < 100 AND af.rn <= pn.n_probe
-      |), qe AS (
-      |  SELECT vec_id AS query_id, unnest(embedding) AS qv2,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM embeddings WHERE vec_id < 100
-      |), ce AS (
-      |  SELECT vec_id AS cand_id, unnest(embedding) AS cv2,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM embeddings
-      |), norms AS (
-      |  SELECT vec_id AS id,
-      |    SQRT(CAST(SUM(${qq.format("v")} * ${qq.format("v")}) AS DOUBLE)) AS norm
-      |  FROM (SELECT vec_id, unnest(embedding) AS v FROM embeddings)
-      |  GROUP BY vec_id
-      |), exact_dots AS (
-      |  SELECT query_id, cand_id, $dotSql AS dot
-      |  FROM qe JOIN ce USING (pos)
-      |  WHERE query_id <> cand_id
-      |  GROUP BY query_id, cand_id
-      |), ex AS (
-      |  SELECT query_id, cand_id FROM (
-      |    SELECT d.query_id, d.cand_id, ROW_NUMBER() OVER (
-      |      PARTITION BY d.query_id
-      |      ORDER BY CAST(dot AS DOUBLE) / (qn.norm * cn.norm) DESC,
-      |               d.cand_id) AS rank
-      |    FROM exact_dots d
-      |    JOIN norms qn ON qn.id = d.query_id
-      |    JOIN norms cn ON cn.id = d.cand_id
-      |  ) WHERE rank <= 5
-      |), ivf_cand AS (
+      |), $exactTop5Ctes, ivf_cand AS (
       |  SELECT p.n_probe, p.query_id, a.cand_id
       |  FROM probes p JOIN assign a USING (cid)
       |  WHERE p.query_id <> a.cand_id
@@ -381,6 +309,22 @@ object ClusteringQueries {
       .orderBy("query_id", "rank")
   }
 
+  /** The OPQ rotation of `embeddings` as CTE `rot(vec_id, embedding)`
+    * (via `opq1`): the two block-Givens stages of [[Clustering.opqRotate]]
+    * as literal 64-element lists; to follow `WITH `. */
+  private val opqPrelude: String = {
+    val accIn = (j: Int) => s"CAST(embedding[${j + 1}] AS DOUBLE)"
+    val accR1 = (j: Int) => s"r1e[${j + 1}]"
+    val s1 = Clustering.opqStage1Exprs(64, accIn).mkString("[", ",\n    ", "]")
+    val s2 = Clustering.opqStage2Exprs(64, accR1).mkString("[", ",\n    ", "]")
+    s"""opq1 AS (
+       |  SELECT vec_id, $s1 AS r1e FROM embeddings
+       |), rot AS (
+       |  SELECT vec_id, $s2 AS embedding FROM opq1
+       |),
+       |""".stripMargin
+  }
+
   /** OPQ ARM ([[Clustering.opqRotate]] → [[Clustering.pqTopK]]) — the
     * seeded block-Givens orthogonal rotation applied BEFORE the PQ
     * subspace split, at IDENTICAL code budget to `ann_pq_adc` (same
@@ -391,25 +335,12 @@ object ClusteringQueries {
     * 64-element list CTEs — elementwise double arithmetic both engines
     * evaluate bit-identically — then the full 4-subspace training/
     * encode/LUT/ADC/baseline chain over the rotated space. */
-  val annOpq: Q = {
-    val accIn = (j: Int) => s"CAST(embedding[${j + 1}] AS DOUBLE)"
-    val accR1 = (j: Int) => s"r1e[${j + 1}]"
-    val s1 = Clustering.opqStage1Exprs(64, accIn).mkString("[", ",\n    ", "]")
-    val s2 = Clustering.opqStage2Exprs(64, accR1).mkString("[", ",\n    ", "]")
-    val prelude =
-      s"""opq1 AS (
-        |  SELECT vec_id, $s1 AS r1e FROM embeddings
-        |), rot AS (
-        |  SELECT vec_id, $s2 AS embedding FROM opq1
-        |),
-        |""".stripMargin
-    pqAdcQ("ann_opq", "rot", prelude) { (s, d) =>
-      Clustering.pqTopK(s,
-        Clustering.opqRotate(Tables.embeddings(s, d)),
-        mSub = 4, subDim = 16, stride = 100, iters = Iters,
-        queryMod = 97, k = 5)
-        .orderBy("query_id", "rank")
-    }
+  val annOpq: Q = pqAdcQ("ann_opq", "rot", opqPrelude) { (s, d) =>
+    Clustering.pqTopK(s,
+      Clustering.opqRotate(Tables.embeddings(s, d)),
+      mSub = 4, subDim = 16, stride = 100, iters = Iters,
+      queryMod = 97, k = 5)
+      .orderBy("query_id", "rank")
   }
 
   /** OPQ-vs-PQ RECALL A/B at equal code budget — the summary row
@@ -428,119 +359,137 @@ object ClusteringQueries {
     * (Ge et al. 2013, §1). Spark reuses the train memo from the
     * single-arm queries; the twin replays both chains with prefixed
     * CTEs ([[pqAdcArmCtes]]). */
-  val annOpqVsPq: Q = {
-    val accIn = (j: Int) => s"CAST(embedding[${j + 1}] AS DOUBLE)"
-    val accR1 = (j: Int) => s"r1e[${j + 1}]"
-    val s1 = Clustering.opqStage1Exprs(64, accIn).mkString("[", ",\n    ", "]")
-    val s2 = Clustering.opqStage2Exprs(64, accR1).mkString("[", ",\n    ", "]")
-    val prelude =
-      s"""opq1 AS (
-        |  SELECT vec_id, $s1 AS r1e FROM embeddings
-        |), rot AS (
-        |  SELECT vec_id, $s2 AS embedding FROM opq1
-        |),
-        |""".stripMargin
-    Q.sql(
-      "ann_opq_vs_pq",
-      s"""WITH $prelude${pqAdcArmCtes("embeddings", "a")},
-        |${pqAdcArmCtes("rot", "b")}
-        |SELECT method, n_results, n_hits FROM (
-        |  SELECT 'pq' AS method, CAST(COUNT(*) AS BIGINT) AS n_results,
-        |    CAST(SUM(CASE WHEN hit_exact THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_hits
-        |  FROM ares
-        |  UNION ALL
-        |  SELECT 'opq', CAST(COUNT(*) AS BIGINT),
-        |    CAST(SUM(CASE WHEN hit_exact THEN 1 ELSE 0 END) AS BIGINT)
-        |  FROM bres
-        |) ORDER BY method""".stripMargin) { (s, d) =>
-      def arm(df: org.apache.spark.sql.DataFrame, m: String) =
-        df.agg(count(lit(1)).cast("long").as("n_results"),
-            sum(when(col("hit_exact"), 1).otherwise(0)).cast("long")
-              .as("n_hits"))
-          .select(lit(m).as("method"), col("n_results"), col("n_hits"))
-      val pq = Clustering.pqTopK(s, Tables.embeddings(s, d),
-        mSub = 4, subDim = 16, stride = 100, iters = Iters,
-        queryMod = 97, k = 5)
-      val opq = Clustering.pqTopK(s,
-        Clustering.opqRotate(Tables.embeddings(s, d)),
-        mSub = 4, subDim = 16, stride = 100, iters = Iters,
-        queryMod = 97, k = 5)
-      arm(pq, "pq").unionByName(arm(opq, "opq")).orderBy("method")
-    }
+  val annOpqVsPq: Q = Q.sql(
+    "ann_opq_vs_pq",
+    s"""WITH $opqPrelude${pqAdcArmCtes("embeddings", "a")},
+      |${pqAdcArmCtes("rot", "b")}
+      |SELECT method, n_results, n_hits FROM (
+      |  SELECT 'pq' AS method, CAST(COUNT(*) AS BIGINT) AS n_results,
+      |    CAST(SUM(CASE WHEN hit_exact THEN 1 ELSE 0 END) AS BIGINT)
+      |      AS n_hits
+      |  FROM ares
+      |  UNION ALL
+      |  SELECT 'opq', CAST(COUNT(*) AS BIGINT),
+      |    CAST(SUM(CASE WHEN hit_exact THEN 1 ELSE 0 END) AS BIGINT)
+      |  FROM bres
+      |) ORDER BY method""".stripMargin) { (s, d) =>
+    def arm(df: org.apache.spark.sql.DataFrame, m: String) =
+      df.agg(count(lit(1)).cast("long").as("n_results"),
+          sum(when(col("hit_exact"), 1).otherwise(0)).cast("long")
+            .as("n_hits"))
+        .select(lit(m).as("method"), col("n_results"), col("n_hits"))
+    val pq = Clustering.pqTopK(s, Tables.embeddings(s, d),
+      mSub = 4, subDim = 16, stride = 100, iters = Iters,
+      queryMod = 97, k = 5)
+    val opq = Clustering.pqTopK(s,
+      Clustering.opqRotate(Tables.embeddings(s, d)),
+      mSub = 4, subDim = 16, stride = 100, iters = Iters,
+      queryMod = 97, k = 5)
+    arm(pq, "pq").unionByName(arm(opq, "opq")).orderBy("method")
   }
 
-  /** Full PQ-ADC lifecycle as a CTE block over `source`, every CTE
-    * name prefixed `p` so two arms can live in ONE query
-    * (`ann_opq_vs_pq`). Ends with `${p}res` =
-    * (query_id, rank, cand_id, approx_dist, hit_exact). */
-  private def pqAdcArmCtes(source: String, p: String): String = {
-    val PqStride = 100
-    val slices = (0 until 4).map(m =>
+  /** `<p>s0..<p>s3`: the four 16-dim subspace slices of `source`. */
+  private def pqSlicesSql(source: String, p: String): String =
+    (0 until 4).map(m =>
       s"${p}s$m AS (SELECT vec_id, embedding[${m * 16 + 1}:${(m + 1) * 16}]" +
         s" AS embedding FROM $source)").mkString(",\n")
-    val chains = (0 until 4).map(m =>
+
+  /** The Lloyd chains of the [[pqSlicesSql]] slices, prefixed
+    * `<p>q0..<p>q3` ([[Clustering.kmeansOracleCtes]]). */
+  private def pqChainsSql(p: String): String =
+    (0 until 4).map(m =>
       Clustering.kmeansOracleCtes(s"${p}s$m", PqStride, Iters,
         prefix = s"${p}q$m")).mkString(",\n")
-    val codesArms = (0 until 4).map(m =>
-      s"SELECT vec_id, $m AS sub, cid AS code FROM ${p}q${m}af WHERE rn = 1")
+
+  /** CTE `cte(vec_id, sub, code)`: each vector's nearest final centroid
+    * in the four subspace chains prefixed `<chain>0..<chain>3`. */
+  private def pqCodesCte(cte: String, chain: String): String = {
+    val arms = (0 until 4).map(m =>
+      s"SELECT vec_id, $m AS sub, cid AS code FROM $chain${m}af WHERE rn = 1")
       .mkString("\n  UNION ALL ")
-    val lutArms = (0 until 4).map(m =>
+    s"""$cte AS (
+       |  $arms
+       |)""".stripMargin
+  }
+
+  /** CTE `<p>lut(query_id, sub, cid, d)`: the squared distance from each
+    * query `<p>qids` slice to every final centroid of the chains
+    * `<p>q0..<p>q3`. */
+  private def pqLutCte(p: String): String = {
+    val arms = (0 until 4).map(m =>
       s"""SELECT v.vec_id AS query_id, $m AS sub, c.cid,
         |    CAST(SUM((v.qv - c.cv) * (v.qv - c.cv)) AS BIGINT) AS d
         |  FROM ${p}q${m}ve v JOIN ${p}qids ON ${p}qids.query_id = v.vec_id
         |  JOIN ${p}q${m}c$Iters c ON c.pos = v.pos GROUP BY 1, 2, 3"""
         .stripMargin).mkString("\n  UNION ALL ")
-    s"""$slices,
-      |$chains,
-      |${p}codes AS (
-      |  $codesArms
-      |), ${p}qids AS (
+    s"""${p}lut AS (
+       |  $arms
+       |)""".stripMargin
+  }
+
+  /** CTE `<p>ranked(query_id, vec_id, approx_dist, rank)`: each query's
+    * candidates in `<p>approx` by approximate distance, ties to the
+    * smaller vec_id. */
+  private def pqRankedCte(p: String): String =
+    s"""${p}ranked AS (
+       |  SELECT query_id, vec_id, approx_dist, CAST(ROW_NUMBER() OVER (
+       |    PARTITION BY query_id ORDER BY approx_dist, vec_id) AS BIGINT)
+       |    AS rank
+       |  FROM ${p}approx
+       |)""".stripMargin
+
+  /** The exact baseline over the quantized full-dimension rows
+    * `<p>gve(vec_id, pos, qv)`: `<p>qrows` holds the queries' rows,
+    * `<p>escored` every exact squared distance, and `<p>etop(query_id,
+    * vec_id)` each query's exact top 5. */
+  private def pqExactTopCtes(p: String): String =
+    s"""${p}qrows AS (
+       |  SELECT ${p}qids.query_id, g.pos, g.qv AS q_qv
+       |  FROM ${p}gve g JOIN ${p}qids ON ${p}qids.query_id = g.vec_id
+       |), ${p}escored AS (
+       |  SELECT q.query_id, g.vec_id,
+       |    CAST(SUM((q.q_qv - g.qv) * (q.q_qv - g.qv)) AS BIGINT)
+       |      AS exact_dist
+       |  FROM ${p}gve g JOIN ${p}qrows q ON q.pos = g.pos
+       |  WHERE g.vec_id <> q.query_id
+       |  GROUP BY 1, 2
+       |), ${p}etop AS (
+       |  SELECT query_id, vec_id FROM (
+       |    SELECT query_id, vec_id, ROW_NUMBER() OVER (
+       |      PARTITION BY query_id ORDER BY exact_dist, vec_id) AS ern
+       |    FROM ${p}escored) WHERE ern <= 5
+       |)""".stripMargin
+
+  /** Full PQ-ADC lifecycle as a CTE block over `source`, every CTE
+    * name prefixed `p` so two arms can live in ONE query
+    * (`ann_opq_vs_pq`). Ends with `${p}res` =
+    * (query_id, rank, cand_id, approx_dist, hit_exact). */
+  private def pqAdcArmCtes(source: String, p: String): String =
+    s"""${pqSlicesSql(source, p)},
+      |${pqChainsSql(p)},
+      |${pqCodesCte(s"${p}codes", s"${p}q")}, ${p}qids AS (
       |  SELECT vec_id AS query_id FROM $source WHERE vec_id % 97 = 0
-      |), ${p}lut AS (
-      |  $lutArms
-      |), ${p}approx AS (
+      |), ${pqLutCte(p)}, ${p}approx AS (
       |  SELECT l.query_id, ${p}codes.vec_id,
       |    CAST(SUM(l.d) AS BIGINT) AS approx_dist
       |  FROM ${p}codes JOIN ${p}lut l
       |    ON l.sub = ${p}codes.sub AND l.cid = ${p}codes.code
       |  WHERE ${p}codes.vec_id <> l.query_id
       |  GROUP BY 1, 2
-      |), ${p}ranked AS (
-      |  SELECT query_id, vec_id, approx_dist, CAST(ROW_NUMBER() OVER (
-      |    PARTITION BY query_id ORDER BY approx_dist, vec_id) AS BIGINT)
-      |    AS rank
-      |  FROM ${p}approx
-      |), ${p}gve AS (
+      |), ${pqRankedCte(p)}, ${p}gve AS (
       |  SELECT vec_id, pos,
       |    CAST(ROUND(CAST(v AS DOUBLE) * 1000000) AS BIGINT)
       |      + ${Clustering.Offset} AS qv
       |  FROM (SELECT vec_id, unnest(embedding) AS v,
       |        unnest(generate_series(1, len(embedding))) AS pos
       |        FROM $source)
-      |), ${p}qrows AS (
-      |  SELECT ${p}qids.query_id, g.pos, g.qv AS q_qv
-      |  FROM ${p}gve g JOIN ${p}qids ON ${p}qids.query_id = g.vec_id
-      |), ${p}escored AS (
-      |  SELECT q.query_id, g.vec_id,
-      |    CAST(SUM((q.q_qv - g.qv) * (q.q_qv - g.qv)) AS BIGINT)
-      |      AS exact_dist
-      |  FROM ${p}gve g JOIN ${p}qrows q ON q.pos = g.pos
-      |  WHERE g.vec_id <> q.query_id
-      |  GROUP BY 1, 2
-      |), ${p}etop AS (
-      |  SELECT query_id, vec_id FROM (
-      |    SELECT query_id, vec_id, ROW_NUMBER() OVER (
-      |      PARTITION BY query_id ORDER BY exact_dist, vec_id) AS ern
-      |    FROM ${p}escored) WHERE ern <= 5
-      |), ${p}res AS (
+      |), ${pqExactTopCtes(p)}, ${p}res AS (
       |  SELECT r.query_id, r.rank, r.vec_id AS cand_id, r.approx_dist,
       |    e.vec_id IS NOT NULL AS hit_exact
       |  FROM ${p}ranked r LEFT JOIN ${p}etop e
       |    ON e.query_id = r.query_id AND e.vec_id = r.vec_id
       |  WHERE r.rank <= 5
       |)""".stripMargin
-  }
 
   /** Shared PQ-ADC twin builder: the full 4-subspace index lifecycle
     * over `source` (a raw table or a prelude-defined rotated CTE). */
@@ -553,6 +502,40 @@ object ClusteringQueries {
         |SELECT query_id, rank, cand_id, approx_dist, hit_exact
         |FROM res ORDER BY query_id, rank""".stripMargin)(build)
 
+  /** The IVF twins' coarse chain: full-dimension Lloyd over embeddings,
+    * prefixed `g` ([[Clustering.kmeansOracleCtes]]). */
+  private val coarseChain = Clustering.kmeansOracleCtes("embeddings",
+    CoarseStride, Iters, prefix = "g")
+
+  /** Probe routing over [[coarseChain]]: `gq(query_id, cid, dist_sq)`
+    * from each query in `qids` to every coarse centroid, and
+    * `gprob(query_id, cell)` its `NProbe` nearest cells. */
+  private val coarseProbeCtes: String =
+    s"""gq AS (
+       |  SELECT v.vec_id AS query_id, c.cid,
+       |    CAST(SUM((v.qv - c.cv) * (v.qv - c.cv)) AS BIGINT) AS dist_sq
+       |  FROM gve v JOIN qids ON qids.query_id = v.vec_id
+       |  JOIN gc$Iters c ON c.pos = v.pos
+       |  GROUP BY 1, 2
+       |), gprob AS (
+       |  SELECT query_id, cid AS cell FROM (
+       |    SELECT query_id, cid, ROW_NUMBER() OVER (
+       |      PARTITION BY query_id ORDER BY dist_sq, cid) AS rn
+       |    FROM gq) WHERE rn <= $NProbe
+       |)""".stripMargin
+
+  /** The IVF-PQ result over `approx(query_id, vec_id, approx_dist)`:
+    * [[pqRankedCte]], [[pqExactTopCtes]], then each query's top 5,
+    * flagged `hit_exact` when also in its exact top 5. */
+  private val ivfPqResultSql: String =
+    s"""${pqRankedCte("")}, ${pqExactTopCtes("")}
+       |SELECT r.query_id, r.rank, r.vec_id AS cand_id, r.approx_dist,
+       |  e.vec_id IS NOT NULL AS hit_exact
+       |FROM ranked r LEFT JOIN etop e
+       |  ON e.query_id = r.query_id AND e.vec_id = r.vec_id
+       |WHERE r.rank <= 5
+       |ORDER BY r.query_id, r.rank""".stripMargin
+
   /** IVF-PQ COMPOSITE ([[Clustering.ivfPqTopK]]) — the FAISS IndexIVFPQ
     * architecture end to end: a coarse full-dimension Lloyd codebook
     * routes each query to its 2 nearest cells, PQ codes score only the
@@ -562,94 +545,31 @@ object ClusteringQueries {
     * restricted ADC and the baseline — one hash gate over the composed
     * index lifecycle. Output shape matches `ann_pq_adc`, so PQ-only vs
     * IVF-PQ recall is directly comparable in the dumped results. */
-  val annIvfPq: Q = {
-    val PqStride = 100
-    val CoarseStride = 100
-    val NProbe = 2
-    val slices = (0 until 4).map(m =>
-      s"s$m AS (SELECT vec_id, embedding[${m * 16 + 1}:${(m + 1) * 16}]" +
-        s" AS embedding FROM embeddings)").mkString(",\n")
-    val coarseChain = Clustering.kmeansOracleCtes("embeddings",
-      CoarseStride, Iters, prefix = "g")
-    val chains = (0 until 4).map(m =>
-      Clustering.kmeansOracleCtes(s"s$m", PqStride, Iters,
-        prefix = s"q$m")).mkString(",\n")
-    val codesArms = (0 until 4).map(m =>
-      s"SELECT vec_id, $m AS sub, cid AS code FROM q${m}af WHERE rn = 1")
-      .mkString("\n  UNION ALL ")
-    val lutArms = (0 until 4).map(m =>
-      s"""SELECT v.vec_id AS query_id, $m AS sub, c.cid,
-        |    CAST(SUM((v.qv - c.cv) * (v.qv - c.cv)) AS BIGINT) AS d
-        |  FROM q${m}ve v JOIN qids ON qids.query_id = v.vec_id
-        |  JOIN q${m}c$Iters c ON c.pos = v.pos GROUP BY 1, 2, 3"""
-        .stripMargin).mkString("\n  UNION ALL ")
-    Q.sql(
-      "ann_ivfpq",
-      s"""WITH $slices,
-        |$coarseChain,
-        |$chains,
-        |qids AS (
-        |  SELECT vec_id AS query_id FROM embeddings WHERE vec_id % 97 = 0
-        |), codes AS (
-        |  $codesArms
-        |), lut AS (
-        |  $lutArms
-        |), cells AS (
-        |  SELECT vec_id, cid AS cell FROM gaf WHERE rn = 1
-        |), gq AS (
-        |  SELECT v.vec_id AS query_id, c.cid,
-        |    CAST(SUM((v.qv - c.cv) * (v.qv - c.cv)) AS BIGINT) AS dist_sq
-        |  FROM gve v JOIN qids ON qids.query_id = v.vec_id
-        |  JOIN gc$Iters c ON c.pos = v.pos
-        |  GROUP BY 1, 2
-        |), gprob AS (
-        |  SELECT query_id, cid AS cell FROM (
-        |    SELECT query_id, cid, ROW_NUMBER() OVER (
-        |      PARTITION BY query_id ORDER BY dist_sq, cid) AS rn
-        |    FROM gq) WHERE rn <= $NProbe
-        |), approx AS (
-        |  SELECT p.query_id, codes.vec_id,
-        |    CAST(SUM(l.d) AS BIGINT) AS approx_dist
-        |  FROM codes
-        |  JOIN cells ON cells.vec_id = codes.vec_id
-        |  JOIN gprob p ON p.cell = cells.cell
-        |  JOIN lut l ON l.query_id = p.query_id AND l.sub = codes.sub
-        |    AND l.cid = codes.code
-        |  WHERE codes.vec_id <> p.query_id
-        |  GROUP BY 1, 2
-        |), ranked AS (
-        |  SELECT query_id, vec_id, approx_dist, CAST(ROW_NUMBER() OVER (
-        |    PARTITION BY query_id ORDER BY approx_dist, vec_id) AS BIGINT)
-        |    AS rank
-        |  FROM approx
-        |), qrows AS (
-        |  SELECT qids.query_id, g.pos, g.qv AS q_qv
-        |  FROM gve g JOIN qids ON qids.query_id = g.vec_id
-        |), escored AS (
-        |  SELECT q.query_id, g.vec_id,
-        |    CAST(SUM((q.q_qv - g.qv) * (q.q_qv - g.qv)) AS BIGINT)
-        |      AS exact_dist
-        |  FROM gve g JOIN qrows q ON q.pos = g.pos
-        |  WHERE g.vec_id <> q.query_id
-        |  GROUP BY 1, 2
-        |), etop AS (
-        |  SELECT query_id, vec_id FROM (
-        |    SELECT query_id, vec_id, ROW_NUMBER() OVER (
-        |      PARTITION BY query_id ORDER BY exact_dist, vec_id) AS ern
-        |    FROM escored) WHERE ern <= 5
-        |)
-        |SELECT r.query_id, r.rank, r.vec_id AS cand_id, r.approx_dist,
-        |  e.vec_id IS NOT NULL AS hit_exact
-        |FROM ranked r LEFT JOIN etop e
-        |  ON e.query_id = r.query_id AND e.vec_id = r.vec_id
-        |WHERE r.rank <= 5
-        |ORDER BY r.query_id, r.rank""".stripMargin) { (s, d) =>
-      Clustering.ivfPqTopK(s, Tables.embeddings(s, d),
-        coarseStride = CoarseStride, mSub = 4, subDim = 16,
-        stride = PqStride, iters = Iters, queryMod = 97, nProbe = NProbe,
-        k = 5)
-        .orderBy("query_id", "rank")
-    }
+  val annIvfPq: Q = Q.sql(
+    "ann_ivfpq",
+    s"""WITH ${pqSlicesSql("embeddings", "")},
+      |$coarseChain,
+      |${pqChainsSql("")},
+      |qids AS (
+      |  SELECT vec_id AS query_id FROM embeddings WHERE vec_id % 97 = 0
+      |), ${pqCodesCte("codes", "q")}, ${pqLutCte("")}, cells AS (
+      |  SELECT vec_id, cid AS cell FROM gaf WHERE rn = 1
+      |), $coarseProbeCtes, approx AS (
+      |  SELECT p.query_id, codes.vec_id,
+      |    CAST(SUM(l.d) AS BIGINT) AS approx_dist
+      |  FROM codes
+      |  JOIN cells ON cells.vec_id = codes.vec_id
+      |  JOIN gprob p ON p.cell = cells.cell
+      |  JOIN lut l ON l.query_id = p.query_id AND l.sub = codes.sub
+      |    AND l.cid = codes.code
+      |  WHERE codes.vec_id <> p.query_id
+      |  GROUP BY 1, 2
+      |), $ivfPqResultSql""".stripMargin) { (s, d) =>
+    Clustering.ivfPqTopK(s, Tables.embeddings(s, d),
+      coarseStride = CoarseStride, mSub = 4, subDim = 16,
+      stride = PqStride, iters = Iters, queryMod = 97, nProbe = NProbe,
+      k = 5)
+      .orderBy("query_id", "rank")
   }
 
   /** RESIDUAL IVF-PQ ([[Clustering.ivfPqResidualTopK]]) — the true
@@ -663,19 +583,11 @@ object ClusteringQueries {
     * recall at identical code budget is directly comparable in the
     * dumped results. */
   val annIvfPqResidual: Q = {
-    val PqStride = 100
-    val CoarseStride = 100
-    val NProbe = 2
-    val coarseChain = Clustering.kmeansOracleCtes("embeddings",
-      CoarseStride, Iters, prefix = "g")
     val chains = (0 until 4).map(m =>
       Clustering.kmeansOracleCtes("", PqStride, Iters, prefix = s"r$m",
         veSql = Some(s"SELECT vec_id, pos, qv FROM rve " +
           s"WHERE pos > ${m * 16} AND pos <= ${(m + 1) * 16}")))
       .mkString(",\n")
-    val codesArms = (0 until 4).map(m =>
-      s"SELECT vec_id, $m AS sub, cid AS code FROM r${m}af WHERE rn = 1")
-      .mkString("\n  UNION ALL ")
     val lutArms = (0 until 4).map(m =>
       s"""SELECT qr.query_id, qr.cell, $m AS sub, c.cid,
         |    CAST(SUM((qr.rqv - c.cv) * (qr.rqv - c.cv)) AS BIGINT) AS d
@@ -697,20 +609,7 @@ object ClusteringQueries {
         |  JOIN gc$Iters c ON c.cid = cells.cell AND c.pos = g.pos
         |),
         |$chains,
-        |codes AS (
-        |  $codesArms
-        |), gq AS (
-        |  SELECT v.vec_id AS query_id, c.cid,
-        |    CAST(SUM((v.qv - c.cv) * (v.qv - c.cv)) AS BIGINT) AS dist_sq
-        |  FROM gve v JOIN qids ON qids.query_id = v.vec_id
-        |  JOIN gc$Iters c ON c.pos = v.pos
-        |  GROUP BY 1, 2
-        |), gprob AS (
-        |  SELECT query_id, cid AS cell FROM (
-        |    SELECT query_id, cid, ROW_NUMBER() OVER (
-        |      PARTITION BY query_id ORDER BY dist_sq, cid) AS rn
-        |    FROM gq) WHERE rn <= $NProbe
-        |), qresid AS (
+        |${pqCodesCte("codes", "r")}, $coarseProbeCtes, qresid AS (
         |  SELECT q.query_id, p.cell, g.pos,
         |    g.qv - c.cv + ${Clustering.Offset} AS rqv
         |  FROM gve g JOIN qids q ON q.query_id = g.vec_id
@@ -728,33 +627,7 @@ object ClusteringQueries {
         |    AND l.sub = codes.sub AND l.cid = codes.code
         |  WHERE codes.vec_id <> p.query_id
         |  GROUP BY 1, 2
-        |), ranked AS (
-        |  SELECT query_id, vec_id, approx_dist, CAST(ROW_NUMBER() OVER (
-        |    PARTITION BY query_id ORDER BY approx_dist, vec_id) AS BIGINT)
-        |    AS rank
-        |  FROM approx
-        |), qrows AS (
-        |  SELECT qids.query_id, g.pos, g.qv AS q_qv
-        |  FROM gve g JOIN qids ON qids.query_id = g.vec_id
-        |), escored AS (
-        |  SELECT q.query_id, g.vec_id,
-        |    CAST(SUM((q.q_qv - g.qv) * (q.q_qv - g.qv)) AS BIGINT)
-        |      AS exact_dist
-        |  FROM gve g JOIN qrows q ON q.pos = g.pos
-        |  WHERE g.vec_id <> q.query_id
-        |  GROUP BY 1, 2
-        |), etop AS (
-        |  SELECT query_id, vec_id FROM (
-        |    SELECT query_id, vec_id, ROW_NUMBER() OVER (
-        |      PARTITION BY query_id ORDER BY exact_dist, vec_id) AS ern
-        |    FROM escored) WHERE ern <= 5
-        |)
-        |SELECT r.query_id, r.rank, r.vec_id AS cand_id, r.approx_dist,
-        |  e.vec_id IS NOT NULL AS hit_exact
-        |FROM ranked r LEFT JOIN etop e
-        |  ON e.query_id = r.query_id AND e.vec_id = r.vec_id
-        |WHERE r.rank <= 5
-        |ORDER BY r.query_id, r.rank""".stripMargin) { (s, d) =>
+        |), $ivfPqResultSql""".stripMargin) { (s, d) =>
       Clustering.ivfPqResidualTopK(s, Tables.embeddings(s, d),
         coarseStride = CoarseStride, mSub = 4, subDim = 16,
         stride = PqStride, iters = Iters, queryMod = 97, nProbe = NProbe,
@@ -771,8 +644,6 @@ object ClusteringQueries {
     * "feeds the clustering family" contract with a hash gate over the
     * full two-round chain. */
   val cKmeansText: Q = {
-    val toksSql =
-      """list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0)"""
     val h6 = graft.llm.TextAnalysis.hex6Expr("md5('fh|' || token)")
     val ve = s"""SELECT d.doc_id AS vec_id, p.pos,
       |    CAST(COALESCE(h.cnt, 0) AS BIGINT) AS qv
@@ -783,7 +654,7 @@ object ClusteringQueries {
     Q.sql(
       "c_kmeans_text",
       s"""WITH tok AS (
-        |  SELECT doc_id, unnest($toksSql) AS token FROM documents
+        |  SELECT doc_id, unnest(${Q.toksSql}) AS token FROM documents
         |), hv AS (
         |  SELECT doc_id, CAST($h6 % 64 AS BIGINT) AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS cnt

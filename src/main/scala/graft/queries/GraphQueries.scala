@@ -55,6 +55,18 @@ object GraphQueries {
       .orderBy("user_id")
   }
 
+  /** The co-purchase graph: `edges(src, dst, support)` joins two parts
+    * (src < dst) bought in at least 2 common orders (`li`). */
+  private val coPurchaseEdgeCtes: String =
+    """li AS (
+      |  SELECT DISTINCT l_orderkey AS g, l_partkey AS item FROM lineitem
+      |), edges AS (
+      |  SELECT a.item AS src, b.item AS dst,
+      |    CAST(COUNT(*) AS BIGINT) AS support
+      |  FROM li a JOIN li b ON b.g = a.g AND a.item < b.item
+      |  GROUP BY 1, 2 HAVING COUNT(*) >= 2
+      |)""".stripMargin
+
   /** Co-purchase graph (parts co-occurring in ≥2 orders) + triangle
     * count via the degree-oriented enumeration; emits the top-10
     * highest-degree parts with their local triangle counts plus the
@@ -63,14 +75,7 @@ object GraphQueries {
     * same arithmetic in DuckDB. */
   val gTriangles: Q = Q.sql(
     "g_copurchase_triangles",
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey AS g, l_partkey AS item FROM lineitem
-      |), edges AS (
-      |  SELECT a.item AS src, b.item AS dst,
-      |    CAST(COUNT(*) AS BIGINT) AS support
-      |  FROM li a JOIN li b ON b.g = a.g AND a.item < b.item
-      |  GROUP BY 1, 2 HAVING COUNT(*) >= 2
-      |), deg AS (
+    s"""WITH $coPurchaseEdgeCtes, deg AS (
       |  SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
       |    SELECT src AS node FROM edges
       |    UNION ALL SELECT dst FROM edges)
@@ -292,14 +297,7 @@ object GraphQueries {
     * engines. */
   val gBfsHops: Q = Q.sql(
     "g_bfs_hops",
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey AS g, l_partkey AS item FROM lineitem
-      |), edges AS (
-      |  SELECT a.item AS src, b.item AS dst,
-      |    CAST(COUNT(*) AS BIGINT) AS support
-      |  FROM li a JOIN li b ON b.g = a.g AND a.item < b.item
-      |  GROUP BY 1, 2 HAVING COUNT(*) >= 2
-      |), dirs AS (
+    s"""WITH $coPurchaseEdgeCtes, dirs AS (
       |  SELECT src AS u, dst AS v FROM edges
       |  UNION ALL SELECT dst, src FROM edges
       |), deg AS (
@@ -454,15 +452,7 @@ object GraphQueries {
     * numbers. */
   val gModularity: Q = Q.sql(
     "g_modularity",
-    s"""WITH RECURSIVE nodes AS (
-      |  SELECT doc_id FROM documents
-      |), ${Q.docGraphCtes}, sym AS (
-      |  SELECT src, dst FROM edges UNION SELECT dst, src FROM edges
-      |), r(a, b) AS (
-      |  SELECT doc_id, doc_id FROM nodes
-      |  UNION
-      |  SELECT r.a, s.dst FROM r JOIN sym s ON r.b = s.src
-      |), lab AS (
+    s"""WITH RECURSIVE ${Q.docGraphReachCtes}, lab AS (
       |  SELECT a AS id, MIN(b) AS c FROM r GROUP BY a
       |), deg AS (
       |  SELECT src AS id, CAST(COUNT(*) AS BIGINT) AS d

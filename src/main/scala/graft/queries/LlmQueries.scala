@@ -12,9 +12,211 @@ import graft.llm.{CorpusIndex, Dedup, Multimodal, NearDupIndex, Packing, Similar
   * SQL-expressible.
   */
 object LlmQueries {
+  import Q.toksSql
 
-  private val toksSql =
-    """list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0)"""
+  // ---- Twin fragments used by several queries of this file (the ones
+  // other files share live in object Q).
+
+  /** Hex digits with the high bit set: a pseudo-random ±1 from md5. */
+  private val highHex = "('8','9','a','b','c','d','e','f')"
+
+  /** `tok(doc_id, token)`: one row per token of `t(doc_id, toks)`. */
+  private val tokCte: String =
+    """tok AS (
+      |  SELECT doc_id, unnest(toks) AS token FROM t
+      |)""".stripMargin
+
+  /** SimHash twin CTE `v(doc_id, v1..v<width>)` over `tok(doc_id,
+    * token)`: bit i sums a ±1 vote per token, +1 when hex digit
+    * (i - 1) % 32 + 1 of md5 stream (i - 1) / 32 + 1 is 8–f. Stream 1
+    * is md5(token), stream k is md5('s<k>|' || token), as in
+    * [[Dedup.simhashFromTokens]]. */
+  private def simhashVoteCte(width: Int): String = {
+    val votes = (1 to width).map { i =>
+      val stream = (i - 1) / 32 + 1
+      val pos = (i - 1) % 32 + 1
+      val src = if (stream == 1) s"substr(md5(token), $pos, 1)"
+        else s"substr(md5('s$stream|' || token), $pos, 1)"
+      s"SUM(CASE WHEN $src IN $highHex THEN 1 ELSE -1 END) AS v$i"
+    }.mkString(",\n    ")
+    s"""v AS (
+       |  SELECT doc_id,
+       |    $votes
+       |  FROM tok GROUP BY doc_id
+       |)""".stripMargin
+  }
+
+  /** The votes of [[simhashVoteCte]] as a '0'/'1' signature string, bit
+    * 1 first. Past 64 bits it is one variadic CONCAT, not a ||-chain:
+    * 128 nested binary concats exceed DuckDB's binder recursion depth
+    * (max 128). */
+  private def simhashBitsSql(width: Int): String = {
+    val bits = (1 to width).map(i =>
+      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END")
+    if (width > 64) bits.mkString("CONCAT(", ",\n      ", ")")
+    else bits.mkString(" || ")
+  }
+
+  /** [[simhashVoteCte]], then `sh(doc_id, simhash)`: the signatures. */
+  private def simhashCtes(width: Int): String =
+    s"""${simhashVoteCte(width)}, sh AS (
+       |  SELECT doc_id, ${simhashBitsSql(width)} AS simhash FROM v
+       |)""".stripMargin
+
+  /** The near-dup pairs `pairs(doc_a, doc_b)` as symmetric edges
+    * `sym(src, dst)`, then [[Q.reachCte]] over `nodes`. */
+  private def pairReachCtes(nodes: String): String =
+    s"""sym AS (
+       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
+       |  UNION SELECT doc_b, doc_a FROM pairs
+       |), ${Q.reachCte(nodes)}""".stripMargin
+
+  /** The hot-bucket cap of [[Dedup.simhashNearDups]] over the 64-bit
+    * signatures `sh(doc_id, simhash)` cut into 4 × 16-bit bands:
+    * `sized` counts each (band, band_key) bucket, `cand` pairs every
+    * two members of a bucket of at most `cap` docs and chains each
+    * member of a larger one to its successor by doc_id, `pairs` keeps
+    * those within Hamming 3; then [[pairReachCtes]] over `nodes`. */
+  private def cappedReachCtes(cap: Int, nodes: String): String =
+    s"""sized AS (
+       |  SELECT doc_id, simhash, band, band_key,
+       |    COUNT(*) OVER (PARTITION BY band, band_key) AS bucket_size
+       |  FROM (
+       |    SELECT doc_id, simhash, b AS band,
+       |      substr(simhash, b * 16 + 1, 16) AS band_key
+       |    FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b))
+       |), cand AS (
+       |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
+       |    l.simhash AS sim_a, r.simhash AS sim_b
+       |  FROM (SELECT * FROM sized WHERE bucket_size <= $cap) l
+       |  JOIN (SELECT * FROM sized WHERE bucket_size <= $cap) r
+       |    USING (band, band_key)
+       |  WHERE l.doc_id < r.doc_id
+       |  UNION ALL
+       |  SELECT doc_a, doc_b, sim_a, sim_b FROM (
+       |    SELECT doc_id AS doc_a, LEAD(doc_id) OVER w AS doc_b,
+       |      simhash AS sim_a, LEAD(simhash) OVER w AS sim_b
+       |    FROM (SELECT * FROM sized WHERE bucket_size > $cap)
+       |    WINDOW w AS (PARTITION BY band, band_key ORDER BY doc_id))
+       |  WHERE doc_b IS NOT NULL
+       |), pairs AS (
+       |  SELECT DISTINCT doc_a, doc_b FROM cand
+       |  WHERE hamming(sim_a, sim_b) <= 3
+       |), ${pairReachCtes(nodes)}""".stripMargin
+
+  /** The in-shard arms of a sharded `cand`: the hot-bucket cap per
+    * (shard, band, band_key) bucket of `sized` — all pairs in a bucket
+    * of at most `cap` docs, successor chains in a larger one. The
+    * caller adds its cross-shard arms after a `UNION ALL`. */
+  private def shardCapArmsSql(cap: Int): String =
+    s"""SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
+       |    l.simhash AS sim_a, r.simhash AS sim_b
+       |  FROM (SELECT * FROM sized WHERE bucket_size <= $cap) l
+       |  JOIN (SELECT * FROM sized WHERE bucket_size <= $cap) r
+       |    USING (shard, band, band_key)
+       |  WHERE l.doc_id < r.doc_id
+       |  UNION ALL
+       |  SELECT doc_a, doc_b, sim_a, sim_b FROM (
+       |    SELECT doc_id AS doc_a, LEAD(doc_id) OVER w AS doc_b,
+       |      simhash AS sim_a, LEAD(simhash) OVER w AS sim_b
+       |    FROM (SELECT * FROM sized WHERE bucket_size > $cap)
+       |    WINDOW w AS (PARTITION BY shard, band, band_key
+       |      ORDER BY doc_id))
+       |  WHERE doc_b IS NOT NULL""".stripMargin
+
+  /** `comp(doc_id, component)`: each node's smallest reachable doc_id
+    * over `r(a, b)`. */
+  private val componentCte: String =
+    """comp AS (
+      |  SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS component
+      |  FROM r GROUP BY a
+      |)""".stripMargin
+
+  /** The single-pass twin of [[Dedup.shardedNearDupLabels]] over the
+    * whole corpus in 3 salted shards (doc_id % 3), through `comp`:
+    * capped in-shard candidates, uncapped cross-shard band collisions,
+    * Hamming-verified and closed from every document. */
+  private val shardedReachCtes: String =
+    s"""t AS (
+       |  SELECT doc_id, $toksSql AS toks FROM documents
+       |), $tokCte, ${simhashCtes(64)}, sized AS (
+       |  SELECT doc_id, shard, simhash, band, band_key,
+       |    COUNT(*) OVER (PARTITION BY shard, band, band_key)
+       |      AS bucket_size
+       |  FROM (
+       |    SELECT doc_id, doc_id % 3 AS shard, simhash, b AS band,
+       |      substr(simhash, b * 16 + 1, 16) AS band_key
+       |    FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b))
+       |), cand AS (
+       |  ${shardCapArmsSql(512)}
+       |  UNION ALL
+       |  SELECT l.doc_id, r.doc_id, l.simhash, r.simhash
+       |  FROM sized l JOIN sized r USING (band, band_key)
+       |  WHERE l.shard <> r.shard AND l.doc_id < r.doc_id
+       |), pairs AS (
+       |  SELECT DISTINCT doc_a, doc_b FROM cand
+       |  WHERE hamming(sim_a, sim_b) <= 3
+       |), ${pairReachCtes("t")}, $componentCte""".stripMargin
+
+  /** Seeded random-hyperplane signatures of the embeddings in the
+    * relation `from`, as [[Similarity.randomHyperplaneLshTopK]] with
+    * seed "7": `qv(vec_id, v, pos)` per dimension, `sums(vec_id, s0..)`
+    * the quantized projections on `bits` Rademacher hyperplanes (sign
+    * of dimension pos from md5('rh7|j|' || pos - 1)), and
+    * `buckets(vec_id, bucket)` their sign bits. */
+  private def rhBucketCtes(from: String, bits: Int): String = {
+    val sums = (0 until bits).map(j =>
+      s"""SUM(${Q.quantSql("v")} *
+         |      CASE WHEN substr(md5('rh7|$j|' || CAST(pos - 1 AS VARCHAR)), 1, 1) IN $highHex
+         |           THEN 1 ELSE -1 END) AS s$j""".stripMargin)
+      .mkString(",\n    ")
+    val bucket = (0 until bits).map(j =>
+      s"(CASE WHEN s$j >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
+    s"""qv AS (
+       |  SELECT vec_id, unnest(embedding) AS v,
+       |         unnest(generate_series(1, len(embedding))) AS pos
+       |  FROM $from
+       |), sums AS (
+       |  SELECT vec_id,
+       |    $sums
+       |  FROM qv GROUP BY vec_id
+       |), buckets AS (
+       |  SELECT vec_id, $bucket AS bucket FROM sums
+       |)""".stripMargin
+  }
+
+  /** `t(<cols>, text, toks)` over documents and `f(<cols>, n_tokens,
+    * punct_ratio, stopword_ratio, distinct_token_ratio)`: the features
+    * of [[TA.withQuality]]. `cols` is `doc_id` plus any carried
+    * documents columns. */
+  private def qualityFeatureCtes(cols: String): String =
+    s"""t AS (
+       |  SELECT $cols, text, $toksSql AS toks FROM documents
+       |), f AS (
+       |  SELECT $cols,
+       |    CAST(len(toks) AS BIGINT) AS n_tokens,
+       |    CASE WHEN length(text) > 0
+       |         THEN CAST(length(text) - length(regexp_replace(text, '[\\.,;:!\\?]', '', 'g')) AS DOUBLE) / length(text)
+       |         ELSE 0.0 END AS punct_ratio,
+       |    CASE WHEN len(toks) > 0
+       |         THEN CAST(len(list_filter(toks, x -> list_contains(['the','a','an','of','and','to','in','is','for','on','with'], x))) AS DOUBLE) / len(toks)
+       |         ELSE 0.0 END AS stopword_ratio,
+       |    CASE WHEN len(toks) > 0
+       |         THEN CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)
+       |         ELSE 0.0 END AS distinct_token_ratio
+       |  FROM t
+       |)""".stripMargin
+
+  /** `q(<cols>, qscore)`: the [[TA.withQuality]] score of the `f`
+    * features, ×1e6 rounded to BIGINT; `cols` are columns of `f`. */
+  private def qscoreCte(cols: String): String =
+    s"""q AS (
+       |  SELECT $cols, CAST(ROUND((
+       |    LEAST(1.0, CAST(n_tokens AS DOUBLE) / 50.0) * 0.4
+       |      + (1.0 - punct_ratio) * 0.2 + stopword_ratio * 0.2
+       |      + distinct_token_ratio * 0.2) * 1000000) AS BIGINT) AS qscore
+       |  FROM f
+       |)""".stripMargin
 
   /** Text analysis — token counting (whitespace + length stats). */
   val tTokens: Q = Q.sql(
@@ -132,22 +334,7 @@ object LlmQueries {
   /** Text analysis — quality scoring (length/punct/stopword/diversity). */
   val tQuality: Q = Q.sql(
     "t_text_quality",
-    s"""WITH t AS (
-      |  SELECT doc_id, text, $toksSql AS toks FROM documents
-      |), f AS (
-      |  SELECT doc_id,
-      |    CAST(len(toks) AS BIGINT) AS n_tokens,
-      |    CASE WHEN length(text) > 0
-      |         THEN CAST(length(text) - length(regexp_replace(text, '[\\.,;:!\\?]', '', 'g')) AS DOUBLE) / length(text)
-      |         ELSE 0.0 END AS punct_ratio,
-      |    CASE WHEN len(toks) > 0
-      |         THEN CAST(len(list_filter(toks, x -> list_contains(['the','a','an','of','and','to','in','is','for','on','with'], x))) AS DOUBLE) / len(toks)
-      |         ELSE 0.0 END AS stopword_ratio,
-      |    CASE WHEN len(toks) > 0
-      |         THEN CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)
-      |         ELSE 0.0 END AS distinct_token_ratio
-      |  FROM t
-      |)
+    s"""WITH ${qualityFeatureCtes("doc_id")}
       |SELECT doc_id, n_tokens, punct_ratio, stopword_ratio, distinct_token_ratio,
       |  LEAST(1.0, CAST(n_tokens AS DOUBLE) / 50.0) * 0.4
       |    + (1.0 - punct_ratio) * 0.2 + stopword_ratio * 0.2
@@ -158,6 +345,27 @@ object LlmQueries {
         "distinct_token_ratio", "quality_score")
       .orderBy("doc_id")
   }
+
+  /** `thr(k, t_k)`, k = 1..9: the smallest quantized score whose
+    * cumulative count reaches k tenths of `q(qscore)`, from the score
+    * histogram (`hist`, `cum`, `tot`). */
+  private val decileThresholdCtes: String =
+    """hist AS (
+      |  SELECT qscore, CAST(COUNT(*) AS BIGINT) AS cnt FROM q GROUP BY 1
+      |), cum AS (
+      |  SELECT qscore, CAST(SUM(cnt) OVER (ORDER BY qscore
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+      |    AS cum
+      |  FROM hist
+      |), tot AS (
+      |  SELECT MAX(cum) AS n_total FROM cum
+      |), thr AS (
+      |  SELECT k, MIN(qscore) AS t_k
+      |  FROM cum CROSS JOIN (SELECT unnest(generate_series(1, 9)) AS k),
+      |    tot
+      |  WHERE cum * 10 >= n_total * k
+      |  GROUP BY k
+      |)""".stripMargin
 
   /** Corpus-hygiene threshold — keep the top 3/4 of documents by the
     * composite quality score, EXACT quantile at scale: score-value
@@ -178,48 +386,12 @@ object LlmQueries {
     * assumes. All integer counts under the gate. */
   val tQualityDecileProfile: Q = Q.sql(
     "t_quality_decile_profile",
-    s"""WITH t AS (
-      |  SELECT doc_id, text, $toksSql AS toks FROM documents
-      |), f AS (
-      |  SELECT doc_id,
-      |    CAST(len(toks) AS BIGINT) AS n_tokens,
-      |    CASE WHEN length(text) > 0
-      |         THEN CAST(length(text) - length(regexp_replace(text, '[\\.,;:!\\?]', '', 'g')) AS DOUBLE) / length(text)
-      |         ELSE 0.0 END AS punct_ratio,
-      |    CASE WHEN len(toks) > 0
-      |         THEN CAST(len(list_filter(toks, x -> list_contains(['the','a','an','of','and','to','in','is','for','on','with'], x))) AS DOUBLE) / len(toks)
-      |         ELSE 0.0 END AS stopword_ratio,
-      |    CASE WHEN len(toks) > 0
-      |         THEN CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)
-      |         ELSE 0.0 END AS distinct_token_ratio
-      |  FROM t
-      |), q AS (
-      |  SELECT doc_id, n_tokens, CAST(ROUND((
-      |    LEAST(1.0, CAST(n_tokens AS DOUBLE) / 50.0) * 0.4
-      |      + (1.0 - punct_ratio) * 0.2 + stopword_ratio * 0.2
-      |      + distinct_token_ratio * 0.2) * 1000000) AS BIGINT) AS qscore
-      |  FROM f
-      |), dup AS (
+    s"""WITH ${qualityFeatureCtes("doc_id")}, ${qscoreCte("doc_id, n_tokens")}, dup AS (
       |  SELECT doc_id,
       |    doc_id <> MIN(doc_id) OVER (PARTITION BY md5(lower(trim(text))))
       |      AS is_dup
       |  FROM t
-      |), hist AS (
-      |  SELECT qscore, CAST(COUNT(*) AS BIGINT) AS cnt FROM q GROUP BY 1
-      |), cum AS (
-      |  SELECT qscore, CAST(SUM(cnt) OVER (ORDER BY qscore
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |    AS cum
-      |  FROM hist
-      |), tot AS (
-      |  SELECT MAX(cum) AS n_total FROM cum
-      |), thr AS (
-      |  SELECT k, MIN(qscore) AS t_k
-      |  FROM cum CROSS JOIN (SELECT unnest(generate_series(1, 9)) AS k),
-      |    tot
-      |  WHERE cum * 10 >= n_total * k
-      |  GROUP BY k
-      |), dec AS (
+      |), $decileThresholdCtes, dec AS (
       |  SELECT q.doc_id, q.n_tokens, q.qscore,
       |    CAST(1 + (SELECT COUNT(*) FROM thr WHERE q.qscore > thr.t_k)
       |      AS BIGINT) AS decile
@@ -279,43 +451,7 @@ object LlmQueries {
     * of the corpus by hash. */
   val tCurriculumOrder: Q = Q.sql(
     "t_curriculum_order",
-    s"""WITH t AS (
-      |  SELECT doc_id, text, $toksSql AS toks FROM documents
-      |), f AS (
-      |  SELECT doc_id,
-      |    CAST(len(toks) AS BIGINT) AS n_tokens,
-      |    CASE WHEN length(text) > 0
-      |         THEN CAST(length(text) - length(regexp_replace(text, '[\\.,;:!\\?]', '', 'g')) AS DOUBLE) / length(text)
-      |         ELSE 0.0 END AS punct_ratio,
-      |    CASE WHEN len(toks) > 0
-      |         THEN CAST(len(list_filter(toks, x -> list_contains(['the','a','an','of','and','to','in','is','for','on','with'], x))) AS DOUBLE) / len(toks)
-      |         ELSE 0.0 END AS stopword_ratio,
-      |    CASE WHEN len(toks) > 0
-      |         THEN CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)
-      |         ELSE 0.0 END AS distinct_token_ratio
-      |  FROM t
-      |), q AS (
-      |  SELECT doc_id, CAST(ROUND((
-      |    LEAST(1.0, CAST(n_tokens AS DOUBLE) / 50.0) * 0.4
-      |      + (1.0 - punct_ratio) * 0.2 + stopword_ratio * 0.2
-      |      + distinct_token_ratio * 0.2) * 1000000) AS BIGINT) AS qscore
-      |  FROM f
-      |), hist AS (
-      |  SELECT qscore, CAST(COUNT(*) AS BIGINT) AS cnt FROM q GROUP BY 1
-      |), cum AS (
-      |  SELECT qscore, CAST(SUM(cnt) OVER (ORDER BY qscore
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |    AS cum
-      |  FROM hist
-      |), tot AS (
-      |  SELECT MAX(cum) AS n_total FROM cum
-      |), thr AS (
-      |  SELECT k, MIN(qscore) AS t_k
-      |  FROM cum CROSS JOIN (SELECT unnest(generate_series(1, 9)) AS k),
-      |    tot
-      |  WHERE cum * 10 >= n_total * k
-      |  GROUP BY k
-      |), banded AS (
+    s"""WITH ${qualityFeatureCtes("doc_id")}, ${qscoreCte("doc_id")}, $decileThresholdCtes, banded AS (
       |  SELECT q.doc_id, q.qscore,
       |    CAST(1 + (SELECT COUNT(*) FROM thr WHERE q.qscore > thr.t_k)
       |      AS BIGINT) AS band
@@ -354,28 +490,7 @@ object LlmQueries {
 
   val tQualityQuantile: Q = Q.sql(
     "t_quality_quantile",
-    s"""WITH t AS (
-      |  SELECT doc_id, text, $toksSql AS toks FROM documents
-      |), f AS (
-      |  SELECT doc_id,
-      |    CAST(len(toks) AS BIGINT) AS n_tokens,
-      |    CASE WHEN length(text) > 0
-      |         THEN CAST(length(text) - length(regexp_replace(text, '[\\.,;:!\\?]', '', 'g')) AS DOUBLE) / length(text)
-      |         ELSE 0.0 END AS punct_ratio,
-      |    CASE WHEN len(toks) > 0
-      |         THEN CAST(len(list_filter(toks, x -> list_contains(['the','a','an','of','and','to','in','is','for','on','with'], x))) AS DOUBLE) / len(toks)
-      |         ELSE 0.0 END AS stopword_ratio,
-      |    CASE WHEN len(toks) > 0
-      |         THEN CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)
-      |         ELSE 0.0 END AS distinct_token_ratio
-      |  FROM t
-      |), q AS (
-      |  SELECT doc_id, CAST(ROUND((
-      |    LEAST(1.0, CAST(n_tokens AS DOUBLE) / 50.0) * 0.4
-      |      + (1.0 - punct_ratio) * 0.2 + stopword_ratio * 0.2
-      |      + distinct_token_ratio * 0.2) * 1000000) AS BIGINT) AS qscore
-      |  FROM f
-      |), hist AS (
+    s"""WITH ${qualityFeatureCtes("doc_id")}, ${qscoreCte("doc_id")}, hist AS (
       |  SELECT qscore, CAST(COUNT(*) AS BIGINT) AS cnt FROM q GROUP BY 1
       |), cum AS (
       |  SELECT qscore, CAST(SUM(cnt) OVER (ORDER BY qscore DESC
@@ -407,28 +522,7 @@ object LlmQueries {
     * the distribution's tails. */
   val tMadOutliers: Q = Q.sql(
     "t_mad_outliers",
-    s"""WITH t AS (
-      |  SELECT doc_id, text, $toksSql AS toks FROM documents
-      |), f AS (
-      |  SELECT doc_id,
-      |    CAST(len(toks) AS BIGINT) AS n_tokens,
-      |    CASE WHEN length(text) > 0
-      |         THEN CAST(length(text) - length(regexp_replace(text, '[\\.,;:!\\?]', '', 'g')) AS DOUBLE) / length(text)
-      |         ELSE 0.0 END AS punct_ratio,
-      |    CASE WHEN len(toks) > 0
-      |         THEN CAST(len(list_filter(toks, x -> list_contains(['the','a','an','of','and','to','in','is','for','on','with'], x))) AS DOUBLE) / len(toks)
-      |         ELSE 0.0 END AS stopword_ratio,
-      |    CASE WHEN len(toks) > 0
-      |         THEN CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)
-      |         ELSE 0.0 END AS distinct_token_ratio
-      |  FROM t
-      |), q AS (
-      |  SELECT doc_id, CAST(ROUND((
-      |    LEAST(1.0, CAST(n_tokens AS DOUBLE) / 50.0) * 0.4
-      |      + (1.0 - punct_ratio) * 0.2 + stopword_ratio * 0.2
-      |      + distinct_token_ratio * 0.2) * 1000000) AS BIGINT) AS qscore
-      |  FROM f
-      |), hist1 AS (
+    s"""WITH ${qualityFeatureCtes("doc_id")}, ${qscoreCte("doc_id")}, hist1 AS (
       |  SELECT qscore AS v, CAST(COUNT(*) AS BIGINT) AS cnt
       |  FROM q GROUP BY 1
       |), cum1 AS (
@@ -475,28 +569,7 @@ object LlmQueries {
     * thresholds joined back group-keyed. */
   val tQualityQuantileByLang: Q = Q.sql(
     "t_quality_quantile_by_lang",
-    s"""WITH t AS (
-      |  SELECT doc_id, lang, text, $toksSql AS toks FROM documents
-      |), f AS (
-      |  SELECT doc_id, lang,
-      |    CAST(len(toks) AS BIGINT) AS n_tokens,
-      |    CASE WHEN length(text) > 0
-      |         THEN CAST(length(text) - length(regexp_replace(text, '[\\.,;:!\\?]', '', 'g')) AS DOUBLE) / length(text)
-      |         ELSE 0.0 END AS punct_ratio,
-      |    CASE WHEN len(toks) > 0
-      |         THEN CAST(len(list_filter(toks, x -> list_contains(['the','a','an','of','and','to','in','is','for','on','with'], x))) AS DOUBLE) / len(toks)
-      |         ELSE 0.0 END AS stopword_ratio,
-      |    CASE WHEN len(toks) > 0
-      |         THEN CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)
-      |         ELSE 0.0 END AS distinct_token_ratio
-      |  FROM t
-      |), q AS (
-      |  SELECT doc_id, lang, CAST(ROUND((
-      |    LEAST(1.0, CAST(n_tokens AS DOUBLE) / 50.0) * 0.4
-      |      + (1.0 - punct_ratio) * 0.2 + stopword_ratio * 0.2
-      |      + distinct_token_ratio * 0.2) * 1000000) AS BIGINT) AS qscore
-      |  FROM f
-      |), hist AS (
+    s"""WITH ${qualityFeatureCtes("doc_id, lang")}, ${qscoreCte("doc_id, lang")}, hist AS (
       |  SELECT lang, qscore, CAST(COUNT(*) AS BIGINT) AS cnt
       |  FROM q GROUP BY 1, 2
       |), cum AS (
@@ -583,6 +656,23 @@ object LlmQueries {
     sb.toString
   }
 
+  /** `tk(doc_id, tok_idx, tok)`: the BPE-ish pre-tokens of each
+    * document, and `r0(doc_id, tok_idx, pos, sym)`: their characters,
+    * the input of [[bpeRoundCtes]]. */
+  private val bpeSymbolCtes: String =
+    s"""tk AS (
+       |  SELECT doc_id, tok_idx, tok FROM (
+       |    SELECT doc_id,
+       |      unnest(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS tok,
+       |      unnest(generate_series(1, len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')))) AS tok_idx
+       |    FROM documents)
+       |), r0 AS (
+       |  SELECT doc_id, tok_idx, i AS pos, substr(tok, i, 1) AS sym
+       |  FROM (SELECT doc_id, tok_idx, tok,
+       |          unnest(generate_series(1, length(tok))) AS i
+       |        FROM tk)
+       |)""".stripMargin
+
   /** Tokenizer training + application — two full distributed BPE
     * rounds: learn the globally most frequent adjacent symbol pair,
     * apply it greedy-leftmost inside pre-token boundaries, renumber,
@@ -591,18 +681,7 @@ object LlmQueries {
     * training AND application are hash-gated end to end. */
   val tBpeTrainApply: Q = Q.sql(
     "t_bpe_train_apply",
-    s"""WITH tk AS (
-      |  SELECT doc_id, tok_idx, tok FROM (
-      |    SELECT doc_id,
-      |      unnest(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS tok,
-      |      unnest(generate_series(1, len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')))) AS tok_idx
-      |    FROM documents)
-      |), r0 AS (
-      |  SELECT doc_id, tok_idx, i AS pos, substr(tok, i, 1) AS sym
-      |  FROM (SELECT doc_id, tok_idx, tok,
-      |          unnest(generate_series(1, length(tok))) AS i
-      |        FROM tk)
-      |)${bpeRoundCtes(2)}
+    s"""WITH $bpeSymbolCtes${bpeRoundCtes(2)}
       |, bef AS (
       |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_syms_before
       |  FROM r0 GROUP BY 1
@@ -638,18 +717,7 @@ object LlmQueries {
     * without the training half. */
   val tBpeApplyMerges: Q = Q.sql(
     "t_bpe_apply_merges",
-    s"""WITH tk AS (
-      |  SELECT doc_id, tok_idx, tok FROM (
-      |    SELECT doc_id,
-      |      unnest(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS tok,
-      |      unnest(generate_series(1, len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')))) AS tok_idx
-      |    FROM documents)
-      |), r0 AS (
-      |  SELECT doc_id, tok_idx, i AS pos, substr(tok, i, 1) AS sym
-      |  FROM (SELECT doc_id, tok_idx, tok,
-      |          unnest(generate_series(1, length(tok))) AS i
-      |        FROM tk)
-      |)${bpeRoundCtes(ApplyMerges.size, ApplyMerges)}
+    s"""WITH $bpeSymbolCtes${bpeRoundCtes(ApplyMerges.size, ApplyMerges)}
       |, bef AS (
       |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_syms_before
       |  FROM r0 GROUP BY 1
@@ -669,6 +737,17 @@ object LlmQueries {
       ApplyMerges)
       .orderBy("doc_id")
   }
+
+  /** `tok(token)`: every token 3-shingle of the corpus, one row each
+    * (via `t(doc_id, toks)`). */
+  private val shingleTokCtes: String =
+    s"""t AS (
+       |  SELECT doc_id, $toksSql AS toks FROM documents
+       |), tok AS (
+       |  SELECT unnest(list_transform(generate_series(1, len(toks) - 2),
+       |    i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS token
+       |  FROM t
+       |)""".stripMargin
 
   /** COUNT-MIN SKETCH — fixed-size frequency summary (d=3 hash rows ×
     * w=1024 buckets) built in one scan + one map-side-combined
@@ -690,13 +769,7 @@ object LlmQueries {
         .mkString("\n      |  UNION ALL ")
     Q.sql(
       "t_countmin_topk",
-      s"""WITH t AS (
-        |  SELECT doc_id, $toksSql AS toks FROM documents
-        |), tok AS (
-        |  SELECT unnest(list_transform(generate_series(1, len(toks) - 2),
-        |    i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS token
-        |  FROM t
-        |), hashed AS (
+      s"""WITH $shingleTokCtes, hashed AS (
         |  ${bucketUnion("tok")}
         |), sk AS (
         |  SELECT hash_idx, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -757,13 +830,7 @@ object LlmQueries {
     val maxRho = bits + 1
     Q.sql(
       "t_hll_distinct",
-      s"""WITH t AS (
-        |  SELECT doc_id, $toksSql AS toks FROM documents
-        |), tok AS (
-        |  SELECT unnest(list_transform(generate_series(1, len(toks) - 2),
-        |    i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS token
-        |  FROM t
-        |), h AS (
+      s"""WITH $shingleTokCtes, h AS (
         |  SELECT ${TA.hex6Expr("md5(token)")} AS hv FROM tok
         |), regs AS (
         |  SELECT hv % $m2 AS reg,
@@ -1034,6 +1101,18 @@ object LlmQueries {
     }
   }
 
+  /** `s(doc_id, shingle)`: the distinct token 3-shingles of each
+    * document (via `t(doc_id, toks)`). */
+  private val docShingleCtes: String =
+    s"""t AS (
+       |  SELECT doc_id, $toksSql AS toks FROM documents
+       |), s AS (
+       |  SELECT DISTINCT doc_id,
+       |    unnest(list_transform(generate_series(1, len(toks) - 2),
+       |      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS shingle
+       |  FROM t
+       |)""".stripMargin
+
   /** EXACT set-similarity join via prefix filtering — the
     * no-false-negative counterpart of `dd_minhash_lsh_jaccard`: docs
     * ordered by global shingle rarity keep only a ⌊(1−t)n⌋+1 prefix,
@@ -1043,14 +1122,7 @@ object LlmQueries {
     * the integer cross-multiplied threshold are all replayed in SQL. */
   val ddSsjoinPrefix: Q = Q.sql(
     "dd_ssjoin_prefix",
-    s"""WITH t AS (
-      |  SELECT doc_id, $toksSql AS toks FROM documents
-      |), s AS (
-      |  SELECT DISTINCT doc_id,
-      |    unnest(list_transform(generate_series(1, len(toks) - 2),
-      |      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS shingle
-      |  FROM t
-      |), dfq AS (
+    s"""WITH $docShingleCtes, dfq AS (
       |  SELECT shingle, COUNT(*) AS df FROM s GROUP BY 1
       |), sizes AS (
       |  SELECT doc_id, COUNT(*) AS set_size FROM s GROUP BY 1
@@ -1131,6 +1203,20 @@ object LlmQueries {
       .orderBy("doc_id", "rank")
   }
 
+  /** `p(doc_id, w1, w2)`: every adjacent token pair of each document
+    * (via `t(doc_id, toks)`). */
+  private val bigramCtes: String =
+    s"""t AS (
+       |  SELECT doc_id, $toksSql AS toks FROM documents
+       |), p AS (
+       |  SELECT doc_id,
+       |    unnest(list_transform(generate_series(1, len(toks) - 1),
+       |      i -> toks[i])) AS w1,
+       |    unnest(list_transform(generate_series(1, len(toks) - 1),
+       |      i -> toks[i+1])) AS w2
+       |  FROM t
+       |)""".stripMargin
+
   /** BIGRAM LM SCORING (TextAnalysis.bigramLmScore) — the CCNet-style
     * LM-quality gate in integer ppm: conditional-probability model
     * trained on the even-id split, every doc scored with summed
@@ -1139,16 +1225,7 @@ object LlmQueries {
     * ratio are all inside the hash gate. */
   val tBigramLm: Q = Q.sql(
     "t_bigram_lm_score",
-    s"""WITH t AS (
-      |  SELECT doc_id, $toksSql AS toks FROM documents
-      |), p AS (
-      |  SELECT doc_id,
-      |    unnest(list_transform(generate_series(1, len(toks) - 1),
-      |      i -> toks[i])) AS w1,
-      |    unnest(list_transform(generate_series(1, len(toks) - 1),
-      |      i -> toks[i+1])) AS w2
-      |  FROM t
-      |), train AS (
+    s"""WITH $bigramCtes, train AS (
       |  SELECT * FROM p WHERE doc_id % 2 = 0
       |), big AS (
       |  SELECT w1, w2, COUNT(*) AS c2 FROM train GROUP BY 1, 2
@@ -1585,23 +1662,12 @@ object LlmQueries {
       .orderBy("doc_id")
   }
 
-  /** Dedup — INCREMENTAL exact dedup through the REAL
-    * `Dedup.incrementalExact`: the "index" is the fingerprint set of
-    * every third doc (yesterday's corpus), the batch is the full
-    * corpus plus injected within-batch copies (doc_id+100000 carrying
-    * an existing doc's text) — so all three suppression reasons occur:
-    * already-in-index, batch-internal duplicate, and both. */
-  val ddIncrementalDedup: Q = Q.sql(
-    "dd_incremental_dedup",
-    """WITH batch AS (
-      |  SELECT doc_id, md5(lower(trim(text))) AS content_fp FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 100000, md5(lower(trim(text)))
-      |  FROM documents WHERE doc_id % 11 = 0
-      |), idx AS (
-      |  SELECT DISTINCT md5(lower(trim(text))) AS content_fp
-      |  FROM documents WHERE doc_id % 3 = 0
-      |), canon AS (
+  /** The annotate half of [[Dedup.incrementalExact]] over
+    * `batch(doc_id, content_fp)` and `idx(content_fp)`: each batch row
+    * with its batch-canonical id, whether the index holds its content,
+    * and `keep`, as the final select. */
+  private val incrementalKeepSql: String =
+    """canon AS (
       |  SELECT doc_id, content_fp,
       |    MIN(doc_id) OVER (PARTITION BY content_fp) AS batch_canonical_id
       |  FROM batch
@@ -1610,7 +1676,25 @@ object LlmQueries {
       |  i.content_fp IS NOT NULL AS in_index,
       |  c.doc_id = c.batch_canonical_id AND i.content_fp IS NULL AS keep
       |FROM canon c LEFT JOIN idx i USING (content_fp)
-      |ORDER BY c.doc_id""".stripMargin) { (s, d) =>
+      |ORDER BY c.doc_id""".stripMargin
+
+  /** Dedup — INCREMENTAL exact dedup through the REAL
+    * `Dedup.incrementalExact`: the "index" is the fingerprint set of
+    * every third doc (yesterday's corpus), the batch is the full
+    * corpus plus injected within-batch copies (doc_id+100000 carrying
+    * an existing doc's text) — so all three suppression reasons occur:
+    * already-in-index, batch-internal duplicate, and both. */
+  val ddIncrementalDedup: Q = Q.sql(
+    "dd_incremental_dedup",
+    s"""WITH batch AS (
+      |  SELECT doc_id, md5(lower(trim(text))) AS content_fp FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 100000, md5(lower(trim(text)))
+      |  FROM documents WHERE doc_id % 11 = 0
+      |), idx AS (
+      |  SELECT DISTINCT md5(lower(trim(text))) AS content_fp
+      |  FROM documents WHERE doc_id % 3 = 0
+      |), $incrementalKeepSql""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
     val batch = docs.select(col("doc_id"), col("text"))
       .unionByName(docs.filter(col("doc_id") % 11 === 0)
@@ -1635,7 +1719,7 @@ object LlmQueries {
     * both suppression arms (in-index, batch-internal) still occur. */
   val ddIncrementalBloom: Q = Q.sql(
     "dd_incremental_bloom",
-    """WITH batch AS (
+    s"""WITH batch AS (
       |  SELECT doc_id, md5(lower(trim(text))) AS content_fp FROM documents
       |  UNION ALL
       |  SELECT doc_id + 700000, md5(lower(trim(text)))
@@ -1643,16 +1727,7 @@ object LlmQueries {
       |), idx AS (
       |  SELECT DISTINCT md5(lower(trim(text))) AS content_fp
       |  FROM documents WHERE doc_id % 4 = 1
-      |), canon AS (
-      |  SELECT doc_id, content_fp,
-      |    MIN(doc_id) OVER (PARTITION BY content_fp) AS batch_canonical_id
-      |  FROM batch
-      |)
-      |SELECT c.doc_id, c.content_fp, c.batch_canonical_id,
-      |  i.content_fp IS NOT NULL AS in_index,
-      |  c.doc_id = c.batch_canonical_id AND i.content_fp IS NULL AS keep
-      |FROM canon c LEFT JOIN idx i USING (content_fp)
-      |ORDER BY c.doc_id""".stripMargin) { (s, d) =>
+      |), $incrementalKeepSql""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
     val batch = docs.select(col("doc_id"), col("text"))
       .unionByName(docs.filter(col("doc_id") % 13 === 0)
@@ -1831,15 +1906,7 @@ object LlmQueries {
     * component_size doubles as a reachability-set check. */
   val ddConnectedComponents: Q = Q.sql(
     "dd_cc_components",
-    s"""WITH RECURSIVE nodes AS (
-      |  SELECT doc_id FROM documents
-      |), ${Q.docGraphCtes}, sym AS (
-      |  SELECT src, dst FROM edges UNION SELECT dst, src FROM edges
-      |), r(a, b) AS (
-      |  SELECT doc_id, doc_id FROM nodes
-      |  UNION
-      |  SELECT r.a, s.dst FROM r JOIN sym s ON r.b = s.src
-      |)
+    s"""WITH RECURSIVE ${Q.docGraphReachCtes}
       |SELECT a AS doc_id,
       |  CAST(MIN(b) AS BIGINT) AS component,
       |  CAST(COUNT(*) AS BIGINT) AS component_size
@@ -1868,15 +1935,7 @@ object LlmQueries {
     * components. */
   val ddCcIncremental: Q = Q.sql(
     "dd_cc_incremental",
-    s"""WITH RECURSIVE nodes AS (
-      |  SELECT doc_id FROM documents
-      |), ${Q.docGraphCtes}, sym AS (
-      |  SELECT src, dst FROM edges UNION SELECT dst, src FROM edges
-      |), r(a, b) AS (
-      |  SELECT doc_id, doc_id FROM nodes
-      |  UNION
-      |  SELECT r.a, s.dst FROM r JOIN sym s ON r.b = s.src
-      |)
+    s"""WITH RECURSIVE ${Q.docGraphReachCtes}
       |SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS component,
       |  (a % 10 = 9) AS is_new_node
       |FROM r GROUP BY a ORDER BY doc_id""".stripMargin) { (s, d) =>
@@ -1915,116 +1974,67 @@ object LlmQueries {
     * of silently flipping Spark to chain pairs. The DuckDB twin
     * recomputes pairs, closes them with a recursive CTE, and picks
     * representatives with the same ordered window. */
-  val ddClusterCanonical: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 64).map { i =>
-      val src = if (i <= 32) s"substr(md5(token), $i, 1)"
-        else s"substr(md5('s2|' || token), ${i - 32}, 1)"
-      s"SUM(CASE WHEN $src IN $highHex THEN 1 ELSE -1 END) AS v$i"
-    }.mkString(",\n      |    ")
-    val bits = (1 to 64).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    Q.sql(
-      "dd_cluster_canonical",
-      s"""WITH RECURSIVE t AS (
-        |  SELECT doc_id, $toksSql AS toks,
-        |    CAST(length(trim(text)) AS BIGINT) AS text_len
-        |  FROM documents
-        |), tok AS (
-        |  SELECT doc_id, unnest(toks) AS token FROM t
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |), sh AS (
-        |  SELECT doc_id, $bits AS simhash FROM v
-        |), sized AS (
-        |  SELECT doc_id, simhash, band, band_key,
-        |    COUNT(*) OVER (PARTITION BY band, band_key) AS bucket_size
-        |  FROM (
-        |    SELECT doc_id, simhash, b AS band,
-        |      substr(simhash, b * 16 + 1, 16) AS band_key
-        |    FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b))
-        |), cand AS (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |    l.simhash AS sim_a, r.simhash AS sim_b
-        |  FROM (SELECT * FROM sized WHERE bucket_size <= 512) l
-        |  JOIN (SELECT * FROM sized WHERE bucket_size <= 512) r
-        |    USING (band, band_key)
-        |  WHERE l.doc_id < r.doc_id
-        |  UNION ALL
-        |  SELECT doc_a, doc_b, sim_a, sim_b FROM (
-        |    SELECT doc_id AS doc_a, LEAD(doc_id) OVER w AS doc_b,
-        |      simhash AS sim_a, LEAD(simhash) OVER w AS sim_b
-        |    FROM (SELECT * FROM sized WHERE bucket_size > 512)
-        |    WINDOW w AS (PARTITION BY band, band_key ORDER BY doc_id))
-        |  WHERE doc_b IS NOT NULL
-        |), pairs AS (
-        |  SELECT DISTINCT doc_a, doc_b FROM cand
-        |  WHERE hamming(sim_a, sim_b) <= 3
-        |), sym AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |), r(a, b) AS (
-        |  SELECT doc_id, doc_id FROM t
-        |  UNION
-        |  SELECT r.a, s.dst FROM r JOIN sym s ON r.b = s.src
-        |), comp AS (
-        |  SELECT a AS doc_id, MIN(b) AS component FROM r GROUP BY a
-        |)
-        |SELECT c.doc_id, CAST(c.component AS BIGINT) AS component,
-        |  CAST(COUNT(*) OVER (PARTITION BY c.component) AS BIGINT)
-        |    AS component_size,
-        |  FIRST_VALUE(c.doc_id) OVER (PARTITION BY c.component
-        |    ORDER BY t.text_len DESC, c.doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |    AS representative_id,
-        |  c.doc_id = FIRST_VALUE(c.doc_id) OVER (PARTITION BY c.component
-        |    ORDER BY t.text_len DESC, c.doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |    AS is_representative,
-        |  CAST(64 AS BIGINT) AS band_bits
-        |FROM comp c JOIN t USING (doc_id)
-        |ORDER BY c.doc_id""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, d)
-      val tokenRows = docs.select(col("doc_id"),
-        explode(TA.tokens(col("text"))).as("token"))
-      // Width from Dedup.autoBandPolicy (r16): picks 64-bit at both
-      // gate SFs (500/5,000 docs inside the (256, 65536] window);
-      // the choice itself is GATED via the band_bits
-      // output column (twin pins 64), so a regenerated-testdata draw
-      // that flips the policy fails the hash gate on a self-naming
-      // column instead of a confusing pair-set diff. The cap
-      // (DefaultBucketCap=512) is REPLAYED by the twin's bucket-size
-      // window, so equivalence no longer rests on the cap staying a
-      // no-op (r15 ADVICE). Sizing count is the memoized
-      // Tables.documentsCount — one action per JVM, not per run
-      // (r16 ADVICE, the knownN pattern).
-      val bits = Dedup.autoBandPolicy(Tables.documentsCount(s, d))
-      val pairs = Dedup.simhashNearDups(
-        Dedup.simhashFromTokens(tokenRows, bits), bits = bits)
-      val cc = Dedup.nearDupLabels(
-        docs.select(col("doc_id").as("id")),
-        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-      val w = Window.partitionBy(col("component"))
-        .orderBy(col("text_len").desc, col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      cc.select(col("id").as("doc_id"), col("component"))
-        .join(docs.select(col("doc_id"),
-          length(trim(col("text"))).cast("long").as("text_len")),
-          Seq("doc_id"))
-        .withColumn("component_size",
-          count(lit(1)).over(Window.partitionBy(col("component")))
-            .cast("long"))
-        .withColumn("representative_id", first(col("doc_id")).over(w))
-        .withColumn("is_representative",
-          col("doc_id") === col("representative_id"))
-        .withColumn("band_bits", lit(bits).cast("long"))
-        .select("doc_id", "component", "component_size",
-          "representative_id", "is_representative", "band_bits")
-        .orderBy("doc_id")
-    }
+  val ddClusterCanonical: Q = Q.sql(
+    "dd_cluster_canonical",
+    s"""WITH RECURSIVE t AS (
+      |  SELECT doc_id, $toksSql AS toks,
+      |    CAST(length(trim(text)) AS BIGINT) AS text_len
+      |  FROM documents
+      |), $tokCte, ${simhashCtes(64)}, ${cappedReachCtes(512, "t")}, comp AS (
+      |  SELECT a AS doc_id, MIN(b) AS component FROM r GROUP BY a
+      |)
+      |SELECT c.doc_id, CAST(c.component AS BIGINT) AS component,
+      |  CAST(COUNT(*) OVER (PARTITION BY c.component) AS BIGINT)
+      |    AS component_size,
+      |  FIRST_VALUE(c.doc_id) OVER (PARTITION BY c.component
+      |    ORDER BY t.text_len DESC, c.doc_id
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+      |    AS representative_id,
+      |  c.doc_id = FIRST_VALUE(c.doc_id) OVER (PARTITION BY c.component
+      |    ORDER BY t.text_len DESC, c.doc_id
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+      |    AS is_representative,
+      |  CAST(64 AS BIGINT) AS band_bits
+      |FROM comp c JOIN t USING (doc_id)
+      |ORDER BY c.doc_id""".stripMargin) { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val docs = Tables.documents(s, d)
+    val tokenRows = docs.select(col("doc_id"),
+      explode(TA.tokens(col("text"))).as("token"))
+    // Width from Dedup.autoBandPolicy (r16): picks 64-bit at both
+    // gate SFs (500/5,000 docs inside the (256, 65536] window);
+    // the choice itself is GATED via the band_bits
+    // output column (twin pins 64), so a regenerated-testdata draw
+    // that flips the policy fails the hash gate on a self-naming
+    // column instead of a confusing pair-set diff. The cap
+    // (DefaultBucketCap=512) is REPLAYED by the twin's bucket-size
+    // window, so equivalence no longer rests on the cap staying a
+    // no-op (r15 ADVICE). Sizing count is the memoized
+    // Tables.documentsCount — one action per JVM, not per run
+    // (r16 ADVICE, the knownN pattern).
+    val bits = Dedup.autoBandPolicy(Tables.documentsCount(s, d))
+    val pairs = Dedup.simhashNearDups(
+      Dedup.simhashFromTokens(tokenRows, bits), bits = bits)
+    val cc = Dedup.nearDupLabels(
+      docs.select(col("doc_id").as("id")),
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+    val w = Window.partitionBy(col("component"))
+      .orderBy(col("text_len").desc, col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    cc.select(col("id").as("doc_id"), col("component"))
+      .join(docs.select(col("doc_id"),
+        length(trim(col("text"))).cast("long").as("text_len")),
+        Seq("doc_id"))
+      .withColumn("component_size",
+        count(lit(1)).over(Window.partitionBy(col("component")))
+          .cast("long"))
+      .withColumn("representative_id", first(col("doc_id")).over(w))
+      .withColumn("is_representative",
+        col("doc_id") === col("representative_id"))
+      .withColumn("band_bits", lit(bits).cast("long"))
+      .select("doc_id", "component", "component_size",
+        "representative_id", "is_representative", "band_bits")
+      .orderBy("doc_id")
   }
 
   /** Dedup — CROSS-SHARD near-dup merge through the REAL
@@ -2043,94 +2053,34 @@ object LlmQueries {
     * Width pinned at 64-bit in both engines (oracle override, the
     * autoCoarsePolicy precedent): the theorem needs both arms on ONE
     * width, and the twin's band substrings are 16 chars. */
-  val ddShardedClusterMerge: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 64).map { i =>
-      val src = if (i <= 32) s"substr(md5(token), $i, 1)"
-        else s"substr(md5('s2|' || token), ${i - 32}, 1)"
-      s"SUM(CASE WHEN $src IN $highHex THEN 1 ELSE -1 END) AS v$i"
-    }.mkString(",\n      |    ")
-    val bits = (1 to 64).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    Q.sql(
-      "dd_sharded_cluster_merge",
-      s"""WITH RECURSIVE t AS (
-        |  SELECT doc_id, $toksSql AS toks FROM documents
-        |), tok AS (
-        |  SELECT doc_id, unnest(toks) AS token FROM t
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |), sh AS (
-        |  SELECT doc_id, $bits AS simhash FROM v
-        |), sized AS (
-        |  SELECT doc_id, shard, simhash, band, band_key,
-        |    COUNT(*) OVER (PARTITION BY shard, band, band_key)
-        |      AS bucket_size
-        |  FROM (
-        |    SELECT doc_id, doc_id % 3 AS shard, simhash, b AS band,
-        |      substr(simhash, b * 16 + 1, 16) AS band_key
-        |    FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b))
-        |), cand AS (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |    l.simhash AS sim_a, r.simhash AS sim_b
-        |  FROM (SELECT * FROM sized WHERE bucket_size <= 512) l
-        |  JOIN (SELECT * FROM sized WHERE bucket_size <= 512) r
-        |    USING (shard, band, band_key)
-        |  WHERE l.doc_id < r.doc_id
-        |  UNION ALL
-        |  SELECT doc_a, doc_b, sim_a, sim_b FROM (
-        |    SELECT doc_id AS doc_a, LEAD(doc_id) OVER w AS doc_b,
-        |      simhash AS sim_a, LEAD(simhash) OVER w AS sim_b
-        |    FROM (SELECT * FROM sized WHERE bucket_size > 512)
-        |    WINDOW w AS (PARTITION BY shard, band, band_key
-        |      ORDER BY doc_id))
-        |  WHERE doc_b IS NOT NULL
-        |  UNION ALL
-        |  SELECT l.doc_id, r.doc_id, l.simhash, r.simhash
-        |  FROM sized l JOIN sized r USING (band, band_key)
-        |  WHERE l.shard <> r.shard AND l.doc_id < r.doc_id
-        |), pairs AS (
-        |  SELECT DISTINCT doc_a, doc_b FROM cand
-        |  WHERE hamming(sim_a, sim_b) <= 3
-        |), sym AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |), r(a, b) AS (
-        |  SELECT doc_id, doc_id FROM t
-        |  UNION
-        |  SELECT r.a, s.dst FROM r JOIN sym s ON r.b = s.src
-        |), comp AS (
-        |  SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS component
-        |  FROM r GROUP BY a
-        |)
-        |SELECT doc_id, CAST(doc_id % 3 AS BIGINT) AS shard, component,
-        |  CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT)
-        |    AS component_size
-        |FROM comp ORDER BY doc_id""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, d)
-      val tokenRows = docs.select(col("doc_id"),
-        explode(TA.tokens(col("text"))).as("token"))
-      val sharded = Dedup.simhashFromTokens(tokenRows, 64)
-        .withColumn("shard", col("doc_id") % 3)
-      // Node set seeded from Tables.documents, not from the signature
-      // frame (r16 ADVICE): a doc tokenizing to empty has no signature
-      // row — it can't pair with anything, so its component is itself —
-      // while the twin seeds the closure from every documents row.
-      val labels = docs.select(col("doc_id").as("id"))
-        .join(Dedup.shardedNearDupLabels(sharded, bits = 64),
-          Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("component"), col("id")).as("component"))
-      labels.select(col("id").as("doc_id"),
-          (col("id") % 3).cast("long").as("shard"), col("component"))
-        .withColumn("component_size",
-          count(lit(1)).over(Window.partitionBy(col("component")))
-            .cast("long"))
-        .orderBy("doc_id")
-    }
+  val ddShardedClusterMerge: Q = Q.sql(
+    "dd_sharded_cluster_merge",
+    s"""WITH RECURSIVE $shardedReachCtes
+      |SELECT doc_id, CAST(doc_id % 3 AS BIGINT) AS shard, component,
+      |  CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT)
+      |    AS component_size
+      |FROM comp ORDER BY doc_id""".stripMargin) { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val docs = Tables.documents(s, d)
+    val tokenRows = docs.select(col("doc_id"),
+      explode(TA.tokens(col("text"))).as("token"))
+    val sharded = Dedup.simhashFromTokens(tokenRows, 64)
+      .withColumn("shard", col("doc_id") % 3)
+    // Node set seeded from Tables.documents, not from the signature
+    // frame (r16 ADVICE): a doc tokenizing to empty has no signature
+    // row — it can't pair with anything, so its component is itself —
+    // while the twin seeds the closure from every documents row.
+    val labels = docs.select(col("doc_id").as("id"))
+      .join(Dedup.shardedNearDupLabels(sharded, bits = 64),
+        Seq("id"), "left")
+      .select(col("id"),
+        coalesce(col("component"), col("id")).as("component"))
+    labels.select(col("id").as("doc_id"),
+        (col("id") % 3).cast("long").as("shard"), col("component"))
+      .withColumn("component_size",
+        count(lit(1)).over(Window.partitionBy(col("component")))
+          .cast("long"))
+      .orderBy("doc_id")
   }
 
   /** Dedup — INCREMENTAL cross-shard merge through the REAL persisted
@@ -2152,109 +2102,64 @@ object LlmQueries {
     * pinned at 64-bit in both engines (oracle override; the twin's
     * band substrings are 16 chars); node set seeded from
     * Tables.documents in both engines (r16 ADVICE). */
-  val ddShardedIncrementalMerge: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 64).map { i =>
-      val src = if (i <= 32) s"substr(md5(token), $i, 1)"
-        else s"substr(md5('s2|' || token), ${i - 32}, 1)"
-      s"SUM(CASE WHEN $src IN $highHex THEN 1 ELSE -1 END) AS v$i"
-    }.mkString(",\n      |    ")
-    val bits = (1 to 64).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    Q.sql(
-      "dd_sharded_incremental_merge",
-      s"""WITH RECURSIVE t AS (
-        |  SELECT doc_id, $toksSql AS toks FROM documents
-        |), tok AS (
-        |  SELECT doc_id, unnest(toks) AS token FROM t
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |), sh AS (
-        |  SELECT doc_id, $bits AS simhash FROM v
-        |), sized AS (
-        |  SELECT doc_id, shard, simhash, band, band_key,
-        |    COUNT(*) OVER (PARTITION BY shard, band, band_key)
-        |      AS bucket_size
-        |  FROM (
-        |    SELECT doc_id, doc_id % 3 AS shard, simhash, b AS band,
-        |      substr(simhash, b * 16 + 1, 16) AS band_key
-        |    FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b))
-        |), cand AS (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |    l.simhash AS sim_a, r.simhash AS sim_b
-        |  FROM (SELECT * FROM sized WHERE bucket_size <= 512) l
-        |  JOIN (SELECT * FROM sized WHERE bucket_size <= 512) r
-        |    USING (shard, band, band_key)
-        |  WHERE l.doc_id < r.doc_id
-        |  UNION ALL
-        |  SELECT doc_a, doc_b, sim_a, sim_b FROM (
-        |    SELECT doc_id AS doc_a, LEAD(doc_id) OVER w AS doc_b,
-        |      simhash AS sim_a, LEAD(simhash) OVER w AS sim_b
-        |    FROM (SELECT * FROM sized WHERE bucket_size > 512)
-        |    WINDOW w AS (PARTITION BY shard, band, band_key
-        |      ORDER BY doc_id))
-        |  WHERE doc_b IS NOT NULL
-        |  UNION ALL
-        |  SELECT l.doc_id, r.doc_id, l.simhash, r.simhash
-        |  FROM sized l JOIN sized r USING (band, band_key)
-        |  WHERE l.shard <> r.shard AND l.doc_id < r.doc_id
-        |), pairs AS (
-        |  SELECT DISTINCT doc_a, doc_b FROM cand
-        |  WHERE hamming(sim_a, sim_b) <= 3
-        |), sym AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |), r(a, b) AS (
-        |  SELECT doc_id, doc_id FROM t
-        |  UNION
-        |  SELECT r.a, s.dst FROM r JOIN sym s ON r.b = s.src
-        |), comp AS (
-        |  SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS component
-        |  FROM r GROUP BY a
-        |)
-        |SELECT doc_id, CAST(doc_id % 3 AS BIGINT) AS shard, component,
-        |  CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT)
-        |    AS component_size,
-        |  CAST(3 AS BIGINT) AS shards_processed
-        |FROM comp ORDER BY doc_id""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, d)
-      val tokenRows = docs.select(col("doc_id"),
-        explode(TA.tokens(col("text"))).as("token"))
-      // One signature pass shared by the seed and both addShard calls
-      // (between-plans materialization: each step runs several
-      // separately-executed commit jobs over its shard's slice).
-      val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
-      val dir = Q.tempDir("graft_shardinc").toString
-      // Seed shard 0 through the BULK migration path (seedShards — the
-      // r18 trim: the left-fold theorem needs folds over committed
-      // state, not a maximal replay, and seeding exercises the
-      // single-pass bootstrap the deployment migration uses), then fold
-      // shards 1 and 2 through the committed chain.
-      graft.llm.ShardedNearDupIndex.seedShards(s, dir,
-        sig.filter(col("doc_id") % 3 === 0).withColumn("shard", lit(0L)),
-        bits = 64)
-      (1 to 2).foreach { k =>
-        graft.llm.ShardedNearDupIndex.addShard(s, dir,
-          sig.filter(col("doc_id") % 3 === k), bits = 64)
-        ()
-      }
-      val labels = graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
-        .withColumnRenamed("id", "doc_id")
-      docs.select(col("doc_id"))
-        .join(labels, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          (col("doc_id") % 3).cast("long").as("shard"),
-          coalesce(col("component"), col("doc_id")).as("component"))
-        .withColumn("component_size",
-          count(lit(1)).over(Window.partitionBy(col("component")))
-            .cast("long"))
-        .withColumn("shards_processed", lit(3L))
-        .orderBy("doc_id")
+  val ddShardedIncrementalMerge: Q = Q.sql(
+    "dd_sharded_incremental_merge",
+    s"""WITH RECURSIVE $shardedReachCtes
+      |SELECT doc_id, CAST(doc_id % 3 AS BIGINT) AS shard, component,
+      |  CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT)
+      |    AS component_size,
+      |  CAST(3 AS BIGINT) AS shards_processed
+      |FROM comp ORDER BY doc_id""".stripMargin) { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val docs = Tables.documents(s, d)
+    val tokenRows = docs.select(col("doc_id"),
+      explode(TA.tokens(col("text"))).as("token"))
+    // One signature pass shared by the seed and both addShard calls
+    // (between-plans materialization: each step runs several
+    // separately-executed commit jobs over its shard's slice).
+    val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
+    val dir = Q.tempDir("graft_shardinc").toString
+    // Seed shard 0 through the BULK migration path (seedShards — the
+    // r18 trim: the left-fold theorem needs folds over committed
+    // state, not a maximal replay, and seeding exercises the
+    // single-pass bootstrap the deployment migration uses), then fold
+    // shards 1 and 2 through the committed chain.
+    graft.llm.ShardedNearDupIndex.seedShards(s, dir,
+      sig.filter(col("doc_id") % 3 === 0).withColumn("shard", lit(0L)),
+      bits = 64)
+    (1 to 2).foreach { k =>
+      graft.llm.ShardedNearDupIndex.addShard(s, dir,
+        sig.filter(col("doc_id") % 3 === k), bits = 64)
+      ()
     }
+    val labels = graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
+      .withColumnRenamed("id", "doc_id")
+    docs.select(col("doc_id"))
+      .join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        (col("doc_id") % 3).cast("long").as("shard"),
+        coalesce(col("component"), col("doc_id")).as("component"))
+      .withColumn("component_size",
+        count(lit(1)).over(Window.partitionBy(col("component")))
+          .cast("long"))
+      .withColumn("shards_processed", lit(3L))
+      .orderBy("doc_id")
   }
+
+  /** The homogeneous 2-shard fixture of the sharded cap gates:
+    * `ids(doc_id, shard)` every 10th document, shard (doc_id // 10) %
+    * 2, and `tok`: 12 shared tokens plus one of 3 variants per doc. */
+  private val hotShardTokCtes: String =
+    """ids AS (
+      |  SELECT doc_id, CAST((doc_id // 10) % 2 AS BIGINT) AS shard
+      |  FROM documents WHERE doc_id % 10 = 0
+      |), tok AS (
+      |  SELECT doc_id,
+      |    'w' || CAST(unnest(generate_series(0, 11)) AS VARCHAR) AS token
+      |  FROM ids
+      |  UNION ALL
+      |  SELECT doc_id, 'v' || CAST(doc_id % 3 AS VARCHAR) FROM ids
+      |)""".stripMargin
 
   /** Dedup — HOT-BUCKET CAP fixture for the SHARDED near-dup paths
     * (r16 ADVICE #2): the single-pass sharded gate's twin replays a
@@ -2275,113 +2180,94 @@ object LlmQueries {
     * whether keyed in one pass or banded shard-at-a-time), so
     * engine equivalence in the cap-ENGAGED regime is now gated, not
     * reasoned. */
-  val ddShardedHotBucketMerge: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 64).map { i =>
-      val src = if (i <= 32) s"substr(md5(token), $i, 1)"
-        else s"substr(md5('s2|' || token), ${i - 32}, 1)"
-      s"SUM(CASE WHEN $src IN $highHex THEN 1 ELSE -1 END) AS v$i"
-    }.mkString(",\n      |    ")
-    val bits = (1 to 64).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    Q.sql(
-      "dd_sharded_hot_bucket_merge",
-      s"""WITH RECURSIVE ids AS (
-        |  SELECT doc_id, CAST((doc_id // 10) % 2 AS BIGINT) AS shard
-        |  FROM documents WHERE doc_id % 10 = 0
-        |), tok AS (
-        |  SELECT doc_id,
-        |    'w' || CAST(unnest(generate_series(0, 11)) AS VARCHAR) AS token
-        |  FROM ids
-        |  UNION ALL
-        |  SELECT doc_id, 'v' || CAST(doc_id % 3 AS VARCHAR) FROM ids
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |), sh AS (
-        |  SELECT doc_id, $bits AS simhash FROM v
-        |), sized AS (
-        |  SELECT s.doc_id, i.shard, s.simhash, b.band,
-        |    substr(s.simhash, b.band * 16 + 1, 16) AS band_key,
-        |    COUNT(*) OVER (PARTITION BY i.shard, b.band,
-        |      substr(s.simhash, b.band * 16 + 1, 16)) AS bucket_size
-        |  FROM sh s JOIN ids i USING (doc_id)
-        |  CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) b
-        |), cand AS (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |    l.simhash AS sim_a, r.simhash AS sim_b
-        |  FROM (SELECT * FROM sized WHERE bucket_size <= 8) l
-        |  JOIN (SELECT * FROM sized WHERE bucket_size <= 8) r
-        |    USING (shard, band, band_key)
-        |  WHERE l.doc_id < r.doc_id
-        |  UNION ALL
-        |  SELECT doc_a, doc_b, sim_a, sim_b FROM (
-        |    SELECT doc_id AS doc_a, LEAD(doc_id) OVER w AS doc_b,
-        |      simhash AS sim_a, LEAD(simhash) OVER w AS sim_b
-        |    FROM (SELECT * FROM sized WHERE bucket_size > 8)
-        |    WINDOW w AS (PARTITION BY shard, band, band_key
-        |      ORDER BY doc_id))
-        |  WHERE doc_b IS NOT NULL
-        |  UNION ALL
-        |  SELECT l.doc_id, r.doc_id, l.simhash, r.simhash
-        |  FROM sized l JOIN sized r USING (band, band_key)
-        |  WHERE l.shard <> r.shard AND l.doc_id < r.doc_id
-        |), pairs AS (
-        |  SELECT DISTINCT doc_a, doc_b FROM cand
-        |  WHERE hamming(sim_a, sim_b) <= 3
-        |), sym AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |), r(a, b) AS (
-        |  SELECT doc_id, doc_id FROM ids
-        |  UNION
-        |  SELECT r.a, s.dst FROM r JOIN sym s ON r.b = s.src
-        |), comp AS (
-        |  SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS component
-        |  FROM r GROUP BY a
-        |)
-        |SELECT c.doc_id, i.shard, c.component,
-        |  c.component AS incr_component,
-        |  CAST(COUNT(*) OVER (PARTITION BY c.component) AS BIGINT)
-        |    AS component_size
-        |FROM comp c JOIN ids i USING (doc_id)
-        |ORDER BY c.doc_id""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val ids = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          expr("(doc_id div 10) % 2").cast("long").as("shard"))
-      val tokenRows = ids.select(col("doc_id"),
-          explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
-        .unionByName(ids.select(col("doc_id"),
-          concat(lit("v"), (col("doc_id") % 3).cast("string")).as("token")))
-      val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
-      val sharded = sig.join(ids, Seq("doc_id"))
-      val single = Dedup.shardedNearDupLabels(sharded,
-          maxBucketSize = 8, bits = 64)
-        .withColumnRenamed("id", "doc_id")
-      val dir = Q.tempDir("graft_shardhot").toString
-      (0 to 1).foreach { k =>
-        graft.llm.ShardedNearDupIndex.addShard(s, dir,
-          sig.join(ids.filter(col("shard") === k).select("doc_id"),
-            Seq("doc_id"), "left_semi"),
-          bits = 64, maxBucketSize = 8)
-        ()
-      }
-      val incr = graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
-        .select(col("id").as("doc_id"),
-          col("component").as("incr_component"))
-      ids.select(col("doc_id"), col("shard"))
-        .join(single, Seq("doc_id"))
-        .join(incr, Seq("doc_id"))
-        .withColumn("component_size",
-          count(lit(1)).over(Window.partitionBy(col("component")))
-            .cast("long"))
-        .select("doc_id", "shard", "component", "incr_component",
-          "component_size")
-        .orderBy("doc_id")
+  val ddShardedHotBucketMerge: Q = Q.sql(
+    "dd_sharded_hot_bucket_merge",
+    s"""WITH RECURSIVE $hotShardTokCtes, ${simhashCtes(64)}, sized AS (
+      |  SELECT s.doc_id, i.shard, s.simhash, b.band,
+      |    substr(s.simhash, b.band * 16 + 1, 16) AS band_key,
+      |    COUNT(*) OVER (PARTITION BY i.shard, b.band,
+      |      substr(s.simhash, b.band * 16 + 1, 16)) AS bucket_size
+      |  FROM sh s JOIN ids i USING (doc_id)
+      |  CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) b
+      |), cand AS (
+      |  ${shardCapArmsSql(8)}
+      |  UNION ALL
+      |  SELECT l.doc_id, r.doc_id, l.simhash, r.simhash
+      |  FROM sized l JOIN sized r USING (band, band_key)
+      |  WHERE l.shard <> r.shard AND l.doc_id < r.doc_id
+      |), pairs AS (
+      |  SELECT DISTINCT doc_a, doc_b FROM cand
+      |  WHERE hamming(sim_a, sim_b) <= 3
+      |), ${pairReachCtes("ids")}, $componentCte
+      |SELECT c.doc_id, i.shard, c.component,
+      |  c.component AS incr_component,
+      |  CAST(COUNT(*) OVER (PARTITION BY c.component) AS BIGINT)
+      |    AS component_size
+      |FROM comp c JOIN ids i USING (doc_id)
+      |ORDER BY c.doc_id""".stripMargin) { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val ids = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id"),
+        expr("(doc_id div 10) % 2").cast("long").as("shard"))
+    val tokenRows = ids.select(col("doc_id"),
+        explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
+      .unionByName(ids.select(col("doc_id"),
+        concat(lit("v"), (col("doc_id") % 3).cast("string")).as("token")))
+    val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
+    val sharded = sig.join(ids, Seq("doc_id"))
+    val single = Dedup.shardedNearDupLabels(sharded,
+        maxBucketSize = 8, bits = 64)
+      .withColumnRenamed("id", "doc_id")
+    val dir = Q.tempDir("graft_shardhot").toString
+    (0 to 1).foreach { k =>
+      graft.llm.ShardedNearDupIndex.addShard(s, dir,
+        sig.join(ids.filter(col("shard") === k).select("doc_id"),
+          Seq("doc_id"), "left_semi"),
+        bits = 64, maxBucketSize = 8)
+      ()
     }
+    val incr = graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
+      .select(col("id").as("doc_id"),
+        col("component").as("incr_component"))
+    ids.select(col("doc_id"), col("shard"))
+      .join(single, Seq("doc_id"))
+      .join(incr, Seq("doc_id"))
+      .withColumn("component_size",
+        count(lit(1)).over(Window.partitionBy(col("component")))
+          .cast("long"))
+      .select("doc_id", "shard", "component", "incr_component",
+        "component_size")
+      .orderBy("doc_id")
   }
+
+  /** 64-bit [[simhashCtes]] of `tok`, then `banded` (4 × 16-bit bands
+    * of each signature with its `ids` shard) and `sized`: each row with
+    * its (shard, band, band_key) bucket size. */
+  private val shardBandedCtes: String =
+    s"""${simhashCtes(64)}, banded AS (
+       |  SELECT s.doc_id, i.shard, s.simhash, b.band,
+       |    substr(s.simhash, b.band * 16 + 1, 16) AS band_key
+       |  FROM sh s JOIN ids i USING (doc_id)
+       |  CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) b
+       |), sized AS (
+       |  SELECT *, COUNT(*) OVER (PARTITION BY shard, band, band_key)
+       |    AS bucket_size
+       |  FROM banded
+       |)""".stripMargin
+
+  /** The labels of the probe-cap gates: `cand` verified within
+    * Hamming 3, closed over `ids`, as the final select (doc_id, shard,
+    * component, component_size). */
+  private val shardLabelsSql: String =
+    s"""pairs AS (
+       |  SELECT DISTINCT doc_a, doc_b FROM cand
+       |  WHERE hamming(sim_a, sim_b) <= 3 AND doc_a <> doc_b
+       |), ${pairReachCtes("ids")}, $componentCte
+       |SELECT c.doc_id, i.shard, c.component,
+       |  CAST(COUNT(*) OVER (PARTITION BY c.component) AS BIGINT)
+       |    AS component_size
+       |FROM comp c JOIN ids i USING (doc_id)
+       |ORDER BY c.doc_id""".stripMargin
 
   /** Dedup — INDEX-SIDE PROBE CAP for the incremental cross-shard
     * merge (r18; VERDICT r17 stretch #8): a pathologically hot band
@@ -2401,116 +2287,51 @@ object LlmQueries {
     * sets). Exactness vs the UNCAPPED single pass is deliberately
     * sacrificed when the cap engages — same graceful-degradation
     * contract as `maxBucketSize`. */
-  val ddShardedProbeCapMerge: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 64).map { i =>
-      val src = if (i <= 32) s"substr(md5(token), $i, 1)"
-        else s"substr(md5('s2|' || token), ${i - 32}, 1)"
-      s"SUM(CASE WHEN $src IN $highHex THEN 1 ELSE -1 END) AS v$i"
-    }.mkString(",\n      |    ")
-    val bits = (1 to 64).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    Q.sql(
-      "dd_sharded_probe_cap_merge",
-      s"""WITH RECURSIVE ids AS (
-        |  SELECT doc_id, CAST((doc_id // 10) % 2 AS BIGINT) AS shard
-        |  FROM documents WHERE doc_id % 10 = 0
-        |), tok AS (
-        |  SELECT doc_id,
-        |    'w' || CAST(unnest(generate_series(0, 11)) AS VARCHAR) AS token
-        |  FROM ids
-        |  UNION ALL
-        |  SELECT doc_id, 'v' || CAST(doc_id % 3 AS VARCHAR) FROM ids
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |), sh AS (
-        |  SELECT doc_id, $bits AS simhash FROM v
-        |), banded AS (
-        |  SELECT s.doc_id, i.shard, s.simhash, b.band,
-        |    substr(s.simhash, b.band * 16 + 1, 16) AS band_key
-        |  FROM sh s JOIN ids i USING (doc_id)
-        |  CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) b
-        |), sized AS (
-        |  SELECT *, COUNT(*) OVER (PARTITION BY shard, band, band_key)
-        |    AS bucket_size
-        |  FROM banded
-        |), idxcap AS (
-        |  SELECT * FROM (
-        |    SELECT doc_id, simhash, band, band_key,
-        |      ROW_NUMBER() OVER (PARTITION BY band, band_key
-        |        ORDER BY doc_id) AS rk
-        |    FROM banded WHERE shard = 0)
-        |  WHERE rk <= 4
-        |), cand AS (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |    l.simhash AS sim_a, r.simhash AS sim_b
-        |  FROM (SELECT * FROM sized WHERE bucket_size <= 512) l
-        |  JOIN (SELECT * FROM sized WHERE bucket_size <= 512) r
-        |    USING (shard, band, band_key)
-        |  WHERE l.doc_id < r.doc_id
-        |  UNION ALL
-        |  SELECT doc_a, doc_b, sim_a, sim_b FROM (
-        |    SELECT doc_id AS doc_a, LEAD(doc_id) OVER w AS doc_b,
-        |      simhash AS sim_a, LEAD(simhash) OVER w AS sim_b
-        |    FROM (SELECT * FROM sized WHERE bucket_size > 512)
-        |    WINDOW w AS (PARTITION BY shard, band, band_key
-        |      ORDER BY doc_id))
-        |  WHERE doc_b IS NOT NULL
-        |  UNION ALL
-        |  SELECT l.doc_id, r.doc_id, l.simhash, r.simhash
-        |  FROM idxcap l
-        |  JOIN (SELECT * FROM banded WHERE shard = 1) r
-        |    USING (band, band_key)
-        |), pairs AS (
-        |  SELECT DISTINCT doc_a, doc_b FROM cand
-        |  WHERE hamming(sim_a, sim_b) <= 3 AND doc_a <> doc_b
-        |), sym AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |), r(a, b) AS (
-        |  SELECT doc_id, doc_id FROM ids
-        |  UNION
-        |  SELECT r.a, s.dst FROM r JOIN sym s ON r.b = s.src
-        |), comp AS (
-        |  SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS component
-        |  FROM r GROUP BY a
-        |)
-        |SELECT c.doc_id, i.shard, c.component,
-        |  CAST(COUNT(*) OVER (PARTITION BY c.component) AS BIGINT)
-        |    AS component_size
-        |FROM comp c JOIN ids i USING (doc_id)
-        |ORDER BY c.doc_id""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val ids = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          expr("(doc_id div 10) % 2").cast("long").as("shard"))
-      val tokenRows = ids.select(col("doc_id"),
-          explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
-        .unionByName(ids.select(col("doc_id"),
-          concat(lit("v"), (col("doc_id") % 3).cast("string")).as("token")))
-      val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
-      val dir = Q.tempDir("graft_shardpcap").toString
-      graft.llm.ShardedNearDupIndex.seedShards(s, dir,
-        sig.join(ids.filter(col("shard") === 0).select("doc_id"),
-            Seq("doc_id"), "left_semi")
-          .withColumn("shard", lit(0L)),
-        bits = 64)
-      graft.llm.ShardedNearDupIndex.addShard(s, dir,
-        sig.join(ids.filter(col("shard") === 1).select("doc_id"),
-          Seq("doc_id"), "left_semi"),
-        bits = 64, probeCap = Some(4))
-      val labels = graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
-        .withColumnRenamed("id", "doc_id")
-      ids.select(col("doc_id"), col("shard"))
-        .join(labels, Seq("doc_id"))
-        .withColumn("component_size",
-          count(lit(1)).over(Window.partitionBy(col("component")))
-            .cast("long"))
-        .select("doc_id", "shard", "component", "component_size")
-        .orderBy("doc_id")
-    }
+  val ddShardedProbeCapMerge: Q = Q.sql(
+    "dd_sharded_probe_cap_merge",
+    s"""WITH RECURSIVE $hotShardTokCtes, $shardBandedCtes, idxcap AS (
+      |  SELECT * FROM (
+      |    SELECT doc_id, simhash, band, band_key,
+      |      ROW_NUMBER() OVER (PARTITION BY band, band_key
+      |        ORDER BY doc_id) AS rk
+      |    FROM banded WHERE shard = 0)
+      |  WHERE rk <= 4
+      |), cand AS (
+      |  ${shardCapArmsSql(512)}
+      |  UNION ALL
+      |  SELECT l.doc_id, r.doc_id, l.simhash, r.simhash
+      |  FROM idxcap l
+      |  JOIN (SELECT * FROM banded WHERE shard = 1) r
+      |    USING (band, band_key)
+      |), $shardLabelsSql""".stripMargin) { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val ids = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id"),
+        expr("(doc_id div 10) % 2").cast("long").as("shard"))
+    val tokenRows = ids.select(col("doc_id"),
+        explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
+      .unionByName(ids.select(col("doc_id"),
+        concat(lit("v"), (col("doc_id") % 3).cast("string")).as("token")))
+    val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
+    val dir = Q.tempDir("graft_shardpcap").toString
+    graft.llm.ShardedNearDupIndex.seedShards(s, dir,
+      sig.join(ids.filter(col("shard") === 0).select("doc_id"),
+          Seq("doc_id"), "left_semi")
+        .withColumn("shard", lit(0L)),
+      bits = 64)
+    graft.llm.ShardedNearDupIndex.addShard(s, dir,
+      sig.join(ids.filter(col("shard") === 1).select("doc_id"),
+        Seq("doc_id"), "left_semi"),
+      bits = 64, probeCap = Some(4))
+    val labels = graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
+      .withColumnRenamed("id", "doc_id")
+    ids.select(col("doc_id"), col("shard"))
+      .join(labels, Seq("doc_id"))
+      .withColumn("component_size",
+        count(lit(1)).over(Window.partitionBy(col("component")))
+          .cast("long"))
+      .select("doc_id", "shard", "component", "component_size")
+      .orderBy("doc_id")
   }
 
   /** Dedup — STORED probe rank (r19; VERDICT r18 task #2): compaction
@@ -2529,140 +2350,84 @@ object LlmQueries {
     * buckets ≈ 5–6 < 12 leave slots for shard-1 rows) and the sf0.1
     * draw exercises base SATURATION (buckets ≈ 55 > 12 — delta tier
     * contributes zero), covering both regimes across the gate SFs. */
-  val ddShardedProbeRankCompact: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 64).map { i =>
-      val src = if (i <= 32) s"substr(md5(token), $i, 1)"
-        else s"substr(md5('s2|' || token), ${i - 32}, 1)"
-      s"SUM(CASE WHEN $src IN $highHex THEN 1 ELSE -1 END) AS v$i"
-    }.mkString(",\n      |    ")
-    val bits = (1 to 64).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    Q.sql(
-      "dd_sharded_probe_rank_compact",
-      s"""WITH RECURSIVE ids AS (
-        |  SELECT doc_id, CAST((doc_id // 10) % 3 AS BIGINT) AS shard
-        |  FROM documents WHERE doc_id % 10 = 0
-        |), tok AS (
-        |  SELECT doc_id,
-        |    'w' || CAST(unnest(generate_series(0, 11)) AS VARCHAR) AS token
-        |  FROM ids
-        |  UNION ALL
-        |  SELECT doc_id, 'v' || CAST((doc_id // 10) % 2 AS VARCHAR) FROM ids
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |), sh AS (
-        |  SELECT doc_id, $bits AS simhash FROM v
-        |), banded AS (
-        |  SELECT s.doc_id, i.shard, s.simhash, b.band,
-        |    substr(s.simhash, b.band * 16 + 1, 16) AS band_key
-        |  FROM sh s JOIN ids i USING (doc_id)
-        |  CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) b
-        |), sized AS (
-        |  SELECT *, COUNT(*) OVER (PARTITION BY shard, band, band_key)
-        |    AS bucket_size
-        |  FROM banded
-        |), base_rk AS (
-        |  SELECT doc_id, simhash, band, band_key,
-        |    ROW_NUMBER() OVER (PARTITION BY band, band_key
-        |      ORDER BY doc_id) AS rk
-        |  FROM banded WHERE shard = 0
-        |), base_cap AS (
-        |  SELECT * FROM base_rk WHERE rk <= 12
-        |), basec AS (
-        |  SELECT band, band_key, COUNT(*) AS n FROM base_cap
-        |  GROUP BY 1, 2
-        |), d1_rk AS (
-        |  SELECT doc_id, simhash, band, band_key,
-        |    ROW_NUMBER() OVER (PARTITION BY band, band_key
-        |      ORDER BY doc_id) AS rk
-        |  FROM banded WHERE shard = 1
-        |), d1_cap AS (
-        |  SELECT d.doc_id, d.simhash, d.band, d.band_key
-        |  FROM d1_rk d LEFT JOIN basec b USING (band, band_key)
-        |  WHERE d.rk + COALESCE(b.n, 0) <= 12
-        |), cand AS (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |    l.simhash AS sim_a, r.simhash AS sim_b
-        |  FROM (SELECT * FROM sized WHERE bucket_size <= 512) l
-        |  JOIN (SELECT * FROM sized WHERE bucket_size <= 512) r
-        |    USING (shard, band, band_key)
-        |  WHERE l.doc_id < r.doc_id
-        |  UNION ALL
-        |  SELECT doc_a, doc_b, sim_a, sim_b FROM (
-        |    SELECT doc_id AS doc_a, LEAD(doc_id) OVER w AS doc_b,
-        |      simhash AS sim_a, LEAD(simhash) OVER w AS sim_b
-        |    FROM (SELECT * FROM sized WHERE bucket_size > 512)
-        |    WINDOW w AS (PARTITION BY shard, band, band_key
-        |      ORDER BY doc_id))
-        |  WHERE doc_b IS NOT NULL
-        |  UNION ALL
-        |  SELECT c.doc_id, p.doc_id, c.simhash, p.simhash
-        |  FROM base_cap c
-        |  JOIN (SELECT * FROM banded WHERE shard = 1) p
-        |    USING (band, band_key)
-        |  UNION ALL
-        |  SELECT c.doc_id, p.doc_id, c.simhash, p.simhash
-        |  FROM (SELECT doc_id, simhash, band, band_key FROM base_cap
-        |        UNION ALL
-        |        SELECT doc_id, simhash, band, band_key FROM d1_cap) c
-        |  JOIN (SELECT * FROM banded WHERE shard = 2) p
-        |    USING (band, band_key)
-        |), pairs AS (
-        |  SELECT DISTINCT doc_a, doc_b FROM cand
-        |  WHERE hamming(sim_a, sim_b) <= 3 AND doc_a <> doc_b
-        |), sym AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |), r(a, b) AS (
-        |  SELECT doc_id, doc_id FROM ids
-        |  UNION
-        |  SELECT r.a, s.dst FROM r JOIN sym s ON r.b = s.src
-        |), comp AS (
-        |  SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS component
-        |  FROM r GROUP BY a
-        |)
-        |SELECT c.doc_id, i.shard, c.component,
-        |  CAST(COUNT(*) OVER (PARTITION BY c.component) AS BIGINT)
-        |    AS component_size
-        |FROM comp c JOIN ids i USING (doc_id)
-        |ORDER BY c.doc_id""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val ids = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          expr("(doc_id div 10) % 3").cast("long").as("shard"))
-      val tokenRows = ids.select(col("doc_id"),
-          explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
-        .unionByName(ids.select(col("doc_id"),
-          concat(lit("v"),
-            expr("(doc_id div 10) % 2").cast("string")).as("token")))
-      val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
-      val dir = Q.tempDir("graft_shardrank").toString
-      graft.llm.ShardedNearDupIndex.seedShards(s, dir,
-        sig.join(ids.filter(col("shard") === 0).select("doc_id"),
-            Seq("doc_id"), "left_semi")
-          .withColumn("shard", lit(0L)),
-        bits = 64)
-      graft.llm.ShardedNearDupIndex.compactBands(s, dir)
-      (1 to 2).foreach { k =>
-        graft.llm.ShardedNearDupIndex.addShard(s, dir,
-          sig.join(ids.filter(col("shard") === k).select("doc_id"),
-            Seq("doc_id"), "left_semi"),
-          bits = 64, probeCap = Some(12))
-        ()
-      }
-      val labels = graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
-        .withColumnRenamed("id", "doc_id")
-      ids.select(col("doc_id"), col("shard"))
-        .join(labels, Seq("doc_id"))
-        .withColumn("component_size",
-          count(lit(1)).over(Window.partitionBy(col("component")))
-            .cast("long"))
-        .select("doc_id", "shard", "component", "component_size")
-        .orderBy("doc_id")
+  val ddShardedProbeRankCompact: Q = Q.sql(
+    "dd_sharded_probe_rank_compact",
+    s"""WITH RECURSIVE ids AS (
+      |  SELECT doc_id, CAST((doc_id // 10) % 3 AS BIGINT) AS shard
+      |  FROM documents WHERE doc_id % 10 = 0
+      |), tok AS (
+      |  SELECT doc_id,
+      |    'w' || CAST(unnest(generate_series(0, 11)) AS VARCHAR) AS token
+      |  FROM ids
+      |  UNION ALL
+      |  SELECT doc_id, 'v' || CAST((doc_id // 10) % 2 AS VARCHAR) FROM ids
+      |), $shardBandedCtes, base_rk AS (
+      |  SELECT doc_id, simhash, band, band_key,
+      |    ROW_NUMBER() OVER (PARTITION BY band, band_key
+      |      ORDER BY doc_id) AS rk
+      |  FROM banded WHERE shard = 0
+      |), base_cap AS (
+      |  SELECT * FROM base_rk WHERE rk <= 12
+      |), basec AS (
+      |  SELECT band, band_key, COUNT(*) AS n FROM base_cap
+      |  GROUP BY 1, 2
+      |), d1_rk AS (
+      |  SELECT doc_id, simhash, band, band_key,
+      |    ROW_NUMBER() OVER (PARTITION BY band, band_key
+      |      ORDER BY doc_id) AS rk
+      |  FROM banded WHERE shard = 1
+      |), d1_cap AS (
+      |  SELECT d.doc_id, d.simhash, d.band, d.band_key
+      |  FROM d1_rk d LEFT JOIN basec b USING (band, band_key)
+      |  WHERE d.rk + COALESCE(b.n, 0) <= 12
+      |), cand AS (
+      |  ${shardCapArmsSql(512)}
+      |  UNION ALL
+      |  SELECT c.doc_id, p.doc_id, c.simhash, p.simhash
+      |  FROM base_cap c
+      |  JOIN (SELECT * FROM banded WHERE shard = 1) p
+      |    USING (band, band_key)
+      |  UNION ALL
+      |  SELECT c.doc_id, p.doc_id, c.simhash, p.simhash
+      |  FROM (SELECT doc_id, simhash, band, band_key FROM base_cap
+      |        UNION ALL
+      |        SELECT doc_id, simhash, band, band_key FROM d1_cap) c
+      |  JOIN (SELECT * FROM banded WHERE shard = 2) p
+      |    USING (band, band_key)
+      |), $shardLabelsSql""".stripMargin) { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val ids = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id"),
+        expr("(doc_id div 10) % 3").cast("long").as("shard"))
+    val tokenRows = ids.select(col("doc_id"),
+        explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
+      .unionByName(ids.select(col("doc_id"),
+        concat(lit("v"),
+          expr("(doc_id div 10) % 2").cast("string")).as("token")))
+    val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
+    val dir = Q.tempDir("graft_shardrank").toString
+    graft.llm.ShardedNearDupIndex.seedShards(s, dir,
+      sig.join(ids.filter(col("shard") === 0).select("doc_id"),
+          Seq("doc_id"), "left_semi")
+        .withColumn("shard", lit(0L)),
+      bits = 64)
+    graft.llm.ShardedNearDupIndex.compactBands(s, dir)
+    (1 to 2).foreach { k =>
+      graft.llm.ShardedNearDupIndex.addShard(s, dir,
+        sig.join(ids.filter(col("shard") === k).select("doc_id"),
+          Seq("doc_id"), "left_semi"),
+        bits = 64, probeCap = Some(12))
+      ()
     }
+    val labels = graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
+      .withColumnRenamed("id", "doc_id")
+    ids.select(col("doc_id"), col("shard"))
+      .join(labels, Seq("doc_id"))
+      .withColumn("component_size",
+        count(lit(1)).over(Window.partitionBy(col("component")))
+          .cast("long"))
+      .select("doc_id", "shard", "component", "component_size")
+      .orderBy("doc_id")
   }
 
   /** Dedup — URL canonicalization + dedup through the REAL
@@ -2795,6 +2560,19 @@ object LlmQueries {
       .orderBy("doc_id")
   }
 
+  /** `t(doc_id, toks)` over documents and `sh(doc_id, start, fp)`:
+    * the md5 of every token 5-gram, `start` 0-based. */
+  private val fiveGramCtes: String =
+    s"""t AS (
+       |  SELECT doc_id, $toksSql AS toks FROM documents
+       |), sh AS (
+       |  SELECT doc_id,
+       |    unnest(generate_series(1, len(toks) - 4)) - 1 AS start,
+       |    unnest(list_transform(generate_series(1, len(toks) - 4),
+       |      i -> md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4])))) AS fp
+       |  FROM t
+       |)""".stripMargin
+
   /** Dedup — duplicated-substring span coverage (Lee et al. exact-substring
     * signal): per doc, token positions covered by 5-grams that occur in
     * another document, via cross-doc k-gram frequency + interval union.
@@ -2803,15 +2581,7 @@ object LlmQueries {
     * interval merge is the same window in both engines. */
   val ddDupSpanCoverage: Q = Q.sql(
     "dd_dup_span_coverage",
-    s"""WITH t AS (
-      |  SELECT doc_id, $toksSql AS toks FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    unnest(generate_series(1, len(toks) - 4)) - 1 AS start,
-      |    unnest(list_transform(generate_series(1, len(toks) - 4),
-      |      i -> md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4])))) AS fp
-      |  FROM t
-      |), shared AS (
+    s"""WITH $fiveGramCtes, shared AS (
       |  SELECT fp FROM sh GROUP BY fp HAVING COUNT(DISTINCT doc_id) > 1
       |), spans AS (
       |  SELECT doc_id, start, start + 4 AS fin FROM sh JOIN shared USING (fp)
@@ -2846,15 +2616,7 @@ object LlmQueries {
     * reassembly order all have to be exact. */
   val ddDupSpanRemoval: Q = Q.sql(
     "dd_dup_span_removal",
-    s"""WITH t AS (
-      |  SELECT doc_id, $toksSql AS toks FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    unnest(generate_series(1, len(toks) - 4)) - 1 AS start,
-      |    unnest(list_transform(generate_series(1, len(toks) - 4),
-      |      i -> md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4])))) AS fp
-      |  FROM t
-      |), owners AS (
+    s"""WITH $fiveGramCtes, owners AS (
       |  SELECT fp, MIN(doc_id) AS owner FROM sh
       |  GROUP BY fp HAVING COUNT(DISTINCT doc_id) > 1
       |), marks AS (
@@ -2887,20 +2649,23 @@ object LlmQueries {
       .orderBy("doc_id")
   }
 
-  /** Dedup — MinHash + LSH banding (4 bands × 2 rows, md5-seeded) with
-    * exact n-gram-Jaccard verification of the candidates; emits pairs
-    * with jaccard >= 0.8. Covers both the minhash-LSH and ngram-jaccard
-    * operators end-to-end. */
-  val ddMinhashLsh: Q = Q.sql(
-    "dd_minhash_lsh_jaccard",
-    s"""WITH t AS (
-      |  SELECT doc_id, $toksSql AS toks FROM documents
-      |), s AS (
-      |  SELECT doc_id,
-      |    list_transform(generate_series(1, len(toks) - 2),
-      |      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) AS sh
-      |  FROM t
-      |), bands AS (
+  /** `t(doc_id, toks)` over documents and `s(doc_id, sh)`: each
+    * document's list of token 3-shingles. */
+  private val shingleCtes: String =
+    s"""t AS (
+       |  SELECT doc_id, $toksSql AS toks FROM documents
+       |), s AS (
+       |  SELECT doc_id,
+       |    list_transform(generate_series(1, len(toks) - 2),
+       |      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) AS sh
+       |  FROM t
+       |)""".stripMargin
+
+  /** MinHash LSH over the shingles `s`: 4 bands of 2 md5-seeded
+    * minima each (`bands`), and `cand(doc_a, doc_b)`: the pairs that
+    * share a band key. */
+  private val minhashCandCtes: String =
+    """bands AS (
       |  SELECT doc_id, b AS band,
       |    md5(concat_ws('|',
       |      list_min(list_transform(sh, x -> md5('mh' || CAST(b*2 AS VARCHAR) || '|' || x))),
@@ -2910,17 +2675,31 @@ object LlmQueries {
       |  SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
       |  FROM bands a JOIN bands c USING (band, band_key)
       |  WHERE a.doc_id < c.doc_id
-      |), shd AS (
-      |  SELECT DISTINCT doc_id, unnest(sh) AS shingle FROM s
-      |), sizes AS (
-      |  SELECT doc_id, COUNT(*) AS n FROM shd GROUP BY doc_id
-      |), inter AS (
-      |  SELECT doc_a, doc_b, COUNT(*) AS intersection_size
-      |  FROM cand
-      |  JOIN shd x ON x.doc_id = doc_a
-      |  JOIN shd y ON y.doc_id = doc_b AND y.shingle = x.shingle
-      |  GROUP BY doc_a, doc_b
-      |)
+      |)""".stripMargin
+
+  /** Exact shingle-set overlap of the pairs `pairs(doc_a, doc_b)`:
+    * `shd` the distinct shingles of `s`, `sizes(doc_id, n)` and
+    * `inter(doc_a, doc_b, intersection_size)`. */
+  private def shingleOverlapCtes(pairs: String): String =
+    s"""shd AS (
+       |  SELECT DISTINCT doc_id, unnest(sh) AS shingle FROM s
+       |), sizes AS (
+       |  SELECT doc_id, COUNT(*) AS n FROM shd GROUP BY doc_id
+       |), inter AS (
+       |  SELECT doc_a, doc_b, COUNT(*) AS intersection_size
+       |  FROM $pairs
+       |  JOIN shd x ON x.doc_id = doc_a
+       |  JOIN shd y ON y.doc_id = doc_b AND y.shingle = x.shingle
+       |  GROUP BY doc_a, doc_b
+       |)""".stripMargin
+
+  /** Dedup — MinHash + LSH banding (4 bands × 2 rows, md5-seeded) with
+    * exact n-gram-Jaccard verification of the candidates; emits pairs
+    * with jaccard >= 0.8. Covers both the minhash-LSH and ngram-jaccard
+    * operators end-to-end. */
+  val ddMinhashLsh: Q = Q.sql(
+    "dd_minhash_lsh_jaccard",
+    s"""WITH $shingleCtes, $minhashCandCtes, ${shingleOverlapCtes("cand")}
       |SELECT doc_a, doc_b, intersection_size,
       |  sa.n + sb.n - intersection_size AS union_size,
       |  CAST(intersection_size AS DOUBLE) / (sa.n + sb.n - intersection_size) AS jaccard
@@ -2961,46 +2740,19 @@ object LlmQueries {
     * threshold — and the error itself is hash-gated. */
   val ddMinhashEstimate: Q = Q.sql(
     "dd_minhash_estimate",
-    s"""WITH t AS (
-      |  SELECT doc_id, $toksSql AS toks FROM documents
-      |), s AS (
-      |  SELECT doc_id,
-      |    list_transform(generate_series(1, len(toks) - 2),
-      |      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) AS sh
-      |  FROM t
-      |), sigs AS (
+    s"""WITH $shingleCtes, sigs AS (
       |  SELECT doc_id, i,
       |    list_min(list_transform(sh,
       |      x -> md5('mh' || CAST(i AS VARCHAR) || '|' || x))) AS sig
       |  FROM s CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i) ii
-      |), bands AS (
-      |  SELECT doc_id, b AS band,
-      |    md5(concat_ws('|',
-      |      list_min(list_transform(sh, x -> md5('mh' || CAST(b*2 AS VARCHAR) || '|' || x))),
-      |      list_min(list_transform(sh, x -> md5('mh' || CAST(b*2+1 AS VARCHAR) || '|' || x))))) AS band_key
-      |  FROM s CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)
-      |), cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
-      |  FROM bands a JOIN bands c USING (band, band_key)
-      |  WHERE a.doc_id < c.doc_id
-      |), m AS (
+      |), $minhashCandCtes, m AS (
       |  SELECT c.doc_a, c.doc_b,
       |    CAST(SUM(CASE WHEN x.sig = y.sig THEN 1 ELSE 0 END) AS BIGINT)
       |      AS est_matches
       |  FROM cand c JOIN sigs x ON x.doc_id = c.doc_a
       |  JOIN sigs y ON y.doc_id = c.doc_b AND y.i = x.i
       |  GROUP BY 1, 2
-      |), shd AS (
-      |  SELECT DISTINCT doc_id, unnest(sh) AS shingle FROM s
-      |), sizes AS (
-      |  SELECT doc_id, COUNT(*) AS n FROM shd GROUP BY doc_id
-      |), inter AS (
-      |  SELECT doc_a, doc_b, COUNT(*) AS intersection_size
-      |  FROM cand
-      |  JOIN shd x ON x.doc_id = doc_a
-      |  JOIN shd y ON y.doc_id = doc_b AND y.shingle = x.shingle
-      |  GROUP BY doc_a, doc_b
-      |)
+      |), ${shingleOverlapCtes("cand")}
       |SELECT m.doc_a, m.doc_b, m.est_matches,
       |  CAST(i.intersection_size AS BIGINT) AS intersection_size,
       |  CAST(sa.n + sb.n - i.intersection_size AS BIGINT) AS union_size,
@@ -3052,30 +2804,13 @@ object LlmQueries {
         |  WHERE a.doc_id < c.doc_id""".stripMargin
     Q.sql(
       "dd_lsh_band_sweep",
-      s"""WITH t AS (
-        |  SELECT doc_id, $toksSql AS toks FROM documents
-        |), s AS (
-        |  SELECT doc_id,
-        |    list_transform(generate_series(1, len(toks) - 2),
-        |      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) AS sh
-        |  FROM t
-        |), allc AS (
+      s"""WITH $shingleCtes, allc AS (
         |  ${candArm(8, 1)}
         |  UNION ALL ${candArm(4, 2)}
         |  UNION ALL ${candArm(2, 4)}
         |), pairs AS (
         |  SELECT DISTINCT doc_a, doc_b FROM allc
-        |), shd AS (
-        |  SELECT DISTINCT doc_id, unnest(sh) AS shingle FROM s
-        |), sizes AS (
-        |  SELECT doc_id, COUNT(*) AS n FROM shd GROUP BY doc_id
-        |), inter AS (
-        |  SELECT doc_a, doc_b, COUNT(*) AS intersection_size
-        |  FROM pairs
-        |  JOIN shd x ON x.doc_id = doc_a
-        |  JOIN shd y ON y.doc_id = doc_b AND y.shingle = x.shingle
-        |  GROUP BY doc_a, doc_b
-        |), verdicts AS (
+        |), ${shingleOverlapCtes("pairs")}, verdicts AS (
         |  SELECT p.doc_a, p.doc_b,
         |    COALESCE(i.intersection_size * 10 >=
         |      8 * (sa.n + sb.n - i.intersection_size), FALSE) AS is_dup
@@ -3121,32 +2856,40 @@ object LlmQueries {
 
   /** Dedup — SimHash signatures (32-bit, md5-vote construction),
     * computed the distributed way (explode + one groupBy). */
-  val ddSimhash: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 32).map(i =>
-      s"SUM(CASE WHEN substr(md5(token), $i, 1) IN $highHex THEN 1 ELSE -1 END) AS v$i")
-      .mkString(",\n      |    ")
-    val bits = (1 to 32).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    Q.sql(
-      "dd_simhash",
-      s"""WITH t AS (
-        |  SELECT doc_id, $toksSql AS toks FROM documents
-        |), tok AS (
-        |  SELECT doc_id, unnest(toks) AS token FROM t
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |)
-        |SELECT doc_id, $bits AS simhash
-        |FROM v ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val tokenRows = Tables.documents(s, d)
-        .select(col("doc_id"),
-          explode(TA.tokens(col("text"))).as("token"))
-      Dedup.simhashFromTokens(tokenRows).orderBy("doc_id")
-    }
+  val ddSimhash: Q = Q.sql(
+    "dd_simhash",
+    s"""WITH t AS (
+      |  SELECT doc_id, $toksSql AS toks FROM documents
+      |), $tokCte, ${simhashVoteCte(32)}
+      |SELECT doc_id, ${simhashBitsSql(32)} AS simhash
+      |FROM v ORDER BY doc_id""".stripMargin) { (s, d) =>
+    val tokenRows = Tables.documents(s, d)
+      .select(col("doc_id"),
+        explode(TA.tokens(col("text"))).as("token"))
+    Dedup.simhashFromTokens(tokenRows).orderBy("doc_id")
   }
+
+  /** Near-dup pairs of the token lists `t(doc_id, toks)`:
+    * [[simhashCtes]] at `width` bits cut into 4 bands of width / 4 bits,
+    * band-collision candidates kept within Hamming 3, as the final
+    * select (doc_a, doc_b, hamming, canonical_id). */
+  private def simhashNearDupSql(width: Int): String =
+    s"""$tokCte, ${simhashCtes(width)}, banded AS (
+       |  SELECT doc_id, simhash, b AS band,
+       |    substr(simhash, b * ${width / 4} + 1, ${width / 4}) AS band_key
+       |  FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)
+       |), cand AS (
+       |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
+       |    l.simhash AS sim_a, r.simhash AS sim_b
+       |  FROM banded l JOIN banded r USING (band, band_key)
+       |  WHERE l.doc_id < r.doc_id
+       |)
+       |SELECT doc_a, doc_b,
+       |  CAST(hamming(sim_a, sim_b) AS BIGINT) AS hamming,
+       |  LEAST(doc_a, doc_b) AS canonical_id
+       |FROM cand
+       |WHERE hamming(sim_a, sim_b) <= 3
+       |ORDER BY doc_a, doc_b""".stripMargin
 
   /** Dedup — SimHash near-dup pairs: 4×8-bit pigeonhole bands generate
     * candidates (exact recall for Hamming ≤ 3), full Hamming distance
@@ -3159,60 +2902,29 @@ object LlmQueries {
     * `dd_simhash64_neardup` run the corpus-scale 64-bit/16-bit layout
     * ScaleBench measured linear. `dd_simhash_eval` gates BOTH layouts'
     * precision/recall side by side on shared ground truth. */
-  val ddSimhashNearDup: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 32).map(i =>
-      s"SUM(CASE WHEN substr(md5(token), $i, 1) IN $highHex THEN 1 ELSE -1 END) AS v$i")
-      .mkString(",\n      |    ")
-    val bits = (1 to 32).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    Q.sql(
-      "dd_simhash_neardup",
-      s"""WITH t AS (
-        |  -- deterministic 1-in-10 sample: the synthetic corpus is DENSE
-        |  -- in near-dups (short similar docs), so the full pair set is
-        |  -- oracle-hostile; the operator itself is scope-free.
-        |  SELECT doc_id, $toksSql AS toks FROM documents
-        |  WHERE doc_id % 10 = 0
-        |), tok AS (
-        |  SELECT doc_id, unnest(toks) AS token FROM t
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |), sh AS (
-        |  SELECT doc_id, $bits AS simhash FROM v
-        |), banded AS (
-        |  SELECT doc_id, simhash, b AS band,
-        |    substr(simhash, b * 8 + 1, 8) AS band_key
-        |  FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)
-        |), cand AS (
-        |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |    l.simhash AS sim_a, r.simhash AS sim_b
-        |  FROM banded l JOIN banded r USING (band, band_key)
-        |  WHERE l.doc_id < r.doc_id
-        |)
-        |SELECT doc_a, doc_b,
-        |  CAST(hamming(sim_a, sim_b) AS BIGINT) AS hamming,
-        |  LEAST(doc_a, doc_b) AS canonical_id
-        |FROM cand
-        |WHERE hamming(sim_a, sim_b) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
-      val tokenRows = Tables.documents(s, d)
-        .filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          explode(TA.tokens(col("text"))).as("token"))
-      // Production path: hot-bucket cap ON. Each 8-bit band has only
-      // 256 possible keys, so at corpus scale EVERY bucket is hot;
-      // 512 is a no-op on testdata (measured max bucket: 36 at
-      // sf0.01, 325 at sf0.1 — oracle hash unchanged) but converts
-      // the O(n²/256) blow-up to linear chain pairs beyond the cap
-      // (Dedup.simhashNearDups scaladoc; hot-bucket test LlmSpec).
-      Dedup.simhashNearDups(Dedup.simhashFromTokens(tokenRows),
-          maxBucketSize = 512)
-        .withColumn("hamming", col("hamming").cast("long"))
-        .orderBy("doc_a", "doc_b")
-    }
+  val ddSimhashNearDup: Q = Q.sql(
+    "dd_simhash_neardup",
+    s"""WITH t AS (
+      |  -- deterministic 1-in-10 sample: the synthetic corpus is DENSE
+      |  -- in near-dups (short similar docs), so the full pair set is
+      |  -- oracle-hostile; the operator itself is scope-free.
+      |  SELECT doc_id, $toksSql AS toks FROM documents
+      |  WHERE doc_id % 10 = 0
+      |), ${simhashNearDupSql(32)}""".stripMargin) { (s, d) =>
+    val tokenRows = Tables.documents(s, d)
+      .filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id"),
+        explode(TA.tokens(col("text"))).as("token"))
+    // Production path: hot-bucket cap ON. Each 8-bit band has only
+    // 256 possible keys, so at corpus scale EVERY bucket is hot;
+    // 512 is a no-op on testdata (measured max bucket: 36 at
+    // sf0.01, 325 at sf0.1 — oracle hash unchanged) but converts
+    // the O(n²/256) blow-up to linear chain pairs beyond the cap
+    // (Dedup.simhashNearDups scaladoc; hot-bucket test LlmSpec).
+    Dedup.simhashNearDups(Dedup.simhashFromTokens(tokenRows),
+        maxBucketSize = 512)
+      .withColumn("hamming", col("hamming").cast("long"))
+      .orderBy("doc_a", "doc_b")
   }
 
   /** Dedup — WIDE-BAND (64-bit, 4×16-bit) SimHash near-dup pairs: the
@@ -3224,53 +2936,20 @@ object LlmQueries {
     * (4 bands at ANY width); the second 32 bits vote on an independent
     * salted md5 stream both engines replay verbatim
     * ([[Dedup.simhashFromTokens]]). */
-  val ddSimhash64NearDup: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 64).map { i =>
-      val src = if (i <= 32) s"substr(md5(token), $i, 1)"
-        else s"substr(md5('s2|' || token), ${i - 32}, 1)"
-      s"SUM(CASE WHEN $src IN $highHex THEN 1 ELSE -1 END) AS v$i"
-    }.mkString(",\n      |    ")
-    val bits = (1 to 64).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    Q.sql(
-      "dd_simhash64_neardup",
-      s"""WITH t AS (
-        |  SELECT doc_id, $toksSql AS toks FROM documents
-        |  WHERE doc_id % 10 = 0
-        |), tok AS (
-        |  SELECT doc_id, unnest(toks) AS token FROM t
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |), sh AS (
-        |  SELECT doc_id, $bits AS simhash FROM v
-        |), banded AS (
-        |  SELECT doc_id, simhash, b AS band,
-        |    substr(simhash, b * 16 + 1, 16) AS band_key
-        |  FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)
-        |), cand AS (
-        |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |    l.simhash AS sim_a, r.simhash AS sim_b
-        |  FROM banded l JOIN banded r USING (band, band_key)
-        |  WHERE l.doc_id < r.doc_id
-        |)
-        |SELECT doc_a, doc_b,
-        |  CAST(hamming(sim_a, sim_b) AS BIGINT) AS hamming,
-        |  LEAST(doc_a, doc_b) AS canonical_id
-        |FROM cand
-        |WHERE hamming(sim_a, sim_b) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
-      val tokenRows = Tables.documents(s, d)
-        .filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          explode(TA.tokens(col("text"))).as("token"))
-      Dedup.simhashNearDups(Dedup.simhashFromTokens(tokenRows, 64),
-          maxBucketSize = 512, bits = 64)
-        .withColumn("hamming", col("hamming").cast("long"))
-        .orderBy("doc_a", "doc_b")
-    }
+  val ddSimhash64NearDup: Q = Q.sql(
+    "dd_simhash64_neardup",
+    s"""WITH t AS (
+      |  SELECT doc_id, $toksSql AS toks FROM documents
+      |  WHERE doc_id % 10 = 0
+      |), ${simhashNearDupSql(64)}""".stripMargin) { (s, d) =>
+    val tokenRows = Tables.documents(s, d)
+      .filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id"),
+        explode(TA.tokens(col("text"))).as("token"))
+    Dedup.simhashNearDups(Dedup.simhashFromTokens(tokenRows, 64),
+        maxBucketSize = 512, bits = 64)
+      .withColumn("hamming", col("hamming").cast("long"))
+      .orderBy("doc_a", "doc_b")
   }
 
   /** Dedup — 128-BIT (4×32-bit-band) SimHash near-dup pairs: the NEXT
@@ -3281,58 +2960,20 @@ object LlmQueries {
     * pigeonhole at any width; streams 3–4 vote on md5('s3|'/'s4|' ∥
     * token), replayed verbatim by the twin. Completes the measured
     * band-width ladder (8 → 16 → 32-bit keys) as CODE, not prose. */
-  val ddSimhash128NearDup: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 128).map { i =>
-      val stream = (i - 1) / 32 + 1
-      val pos = (i - 1) % 32 + 1
-      val src = if (stream == 1) s"substr(md5(token), $pos, 1)"
-        else s"substr(md5('s$stream|' || token), $pos, 1)"
-      s"SUM(CASE WHEN $src IN $highHex THEN 1 ELSE -1 END) AS v$i"
-    }.mkString(",\n      |    ")
-    // variadic CONCAT, not a ||-chain: 128 nested binary concats
-    // exceed DuckDB's binder recursion depth (max 128)
-    val bits = (1 to 128).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END")
-      .mkString("CONCAT(", ",\n      |      ", ")")
-    Q.sql(
-      "dd_simhash128_neardup",
-      s"""WITH t AS (
-        |  SELECT doc_id, $toksSql AS toks FROM documents
-        |  WHERE doc_id % 10 = 0
-        |), tok AS (
-        |  SELECT doc_id, unnest(toks) AS token FROM t
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |), sh AS (
-        |  SELECT doc_id, $bits AS simhash FROM v
-        |), banded AS (
-        |  SELECT doc_id, simhash, b AS band,
-        |    substr(simhash, b * 32 + 1, 32) AS band_key
-        |  FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)
-        |), cand AS (
-        |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |    l.simhash AS sim_a, r.simhash AS sim_b
-        |  FROM banded l JOIN banded r USING (band, band_key)
-        |  WHERE l.doc_id < r.doc_id
-        |)
-        |SELECT doc_a, doc_b,
-        |  CAST(hamming(sim_a, sim_b) AS BIGINT) AS hamming,
-        |  LEAST(doc_a, doc_b) AS canonical_id
-        |FROM cand
-        |WHERE hamming(sim_a, sim_b) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
-      val tokenRows = Tables.documents(s, d)
-        .filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          explode(TA.tokens(col("text"))).as("token"))
-      Dedup.simhashNearDups(Dedup.simhashFromTokens(tokenRows, 128),
-          maxBucketSize = 512, bits = 128)
-        .withColumn("hamming", col("hamming").cast("long"))
-        .orderBy("doc_a", "doc_b")
-    }
+  val ddSimhash128NearDup: Q = Q.sql(
+    "dd_simhash128_neardup",
+    s"""WITH t AS (
+      |  SELECT doc_id, $toksSql AS toks FROM documents
+      |  WHERE doc_id % 10 = 0
+      |), ${simhashNearDupSql(128)}""".stripMargin) { (s, d) =>
+    val tokenRows = Tables.documents(s, d)
+      .filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id"),
+        explode(TA.tokens(col("text"))).as("token"))
+    Dedup.simhashNearDups(Dedup.simhashFromTokens(tokenRows, 128),
+        maxBucketSize = 512, bits = 128)
+      .withColumn("hamming", col("hamming").cast("long"))
+      .orderBy("doc_a", "doc_b")
   }
 
   /** Dedup — the HOT-BUCKET CAP path of [[Dedup.simhashNearDups]],
@@ -3349,89 +2990,39 @@ object LlmQueries {
     * "recall inside pathological buckets degrades gracefully, never
     * precision" as the operator scaladoc claims. At sf0.01 the ~8-9
     * doc groups straddle the cap so BOTH branches execute. */
-  val ddSimhashHotBucketChain: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 64).map { i =>
-      val src = if (i <= 32) s"substr(md5(token), $i, 1)"
-        else s"substr(md5('s2|' || token), ${i - 32}, 1)"
-      s"SUM(CASE WHEN $src IN $highHex THEN 1 ELSE -1 END) AS v$i"
-    }.mkString(",\n      |    ")
-    val bits = (1 to 64).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    Q.sql(
-      "dd_simhash_hot_bucket_chain",
-      s"""WITH RECURSIVE ids AS (
-        |  SELECT doc_id FROM documents WHERE doc_id % 20 = 0
-        |), tok AS (
-        |  SELECT doc_id,
-        |    'w' || CAST(unnest(generate_series(0, 11)) AS VARCHAR) AS token
-        |  FROM ids
-        |  UNION ALL
-        |  SELECT doc_id, 'v' || CAST(doc_id % 3 AS VARCHAR) FROM ids
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |), sh AS (
-        |  SELECT doc_id, $bits AS simhash FROM v
-        |), sized AS (
-        |  SELECT doc_id, simhash, band, band_key,
-        |    COUNT(*) OVER (PARTITION BY band, band_key) AS bucket_size
-        |  FROM (
-        |    SELECT doc_id, simhash, b AS band,
-        |      substr(simhash, b * 16 + 1, 16) AS band_key
-        |    FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b))
-        |), cand AS (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |    l.simhash AS sim_a, r.simhash AS sim_b
-        |  FROM (SELECT * FROM sized WHERE bucket_size <= 8) l
-        |  JOIN (SELECT * FROM sized WHERE bucket_size <= 8) r
-        |    USING (band, band_key)
-        |  WHERE l.doc_id < r.doc_id
-        |  UNION ALL
-        |  SELECT doc_a, doc_b, sim_a, sim_b FROM (
-        |    SELECT doc_id AS doc_a, LEAD(doc_id) OVER w AS doc_b,
-        |      simhash AS sim_a, LEAD(simhash) OVER w AS sim_b
-        |    FROM (SELECT * FROM sized WHERE bucket_size > 8)
-        |    WINDOW w AS (PARTITION BY band, band_key ORDER BY doc_id))
-        |  WHERE doc_b IS NOT NULL
-        |), pairs AS (
-        |  SELECT DISTINCT doc_a, doc_b FROM cand
-        |  WHERE hamming(sim_a, sim_b) <= 3
-        |), sym AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |), r(a, b) AS (
-        |  SELECT doc_id, doc_id FROM ids
-        |  UNION
-        |  SELECT r.a, s.dst FROM r JOIN sym s ON r.b = s.src
-        |), comp AS (
-        |  SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS component
-        |  FROM r GROUP BY a
-        |)
-        |SELECT doc_id, component,
-        |  CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT)
-        |    AS component_size
-        |FROM comp ORDER BY doc_id""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val ids = Tables.documents(s, d).filter(col("doc_id") % 20 === 0)
-        .select("doc_id")
-      val tokenRows = ids.select(col("doc_id"),
-          explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
-        .unionByName(ids.select(col("doc_id"),
-          concat(lit("v"), (col("doc_id") % 3).cast("string")).as("token")))
-      val pairs = Dedup.simhashNearDups(
-        Dedup.simhashFromTokens(tokenRows, 64),
-        maxBucketSize = 8, bits = 64)
-      val cc = Dedup.nearDupLabels(
-        ids.select(col("doc_id").as("id")),
-        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-      cc.select(col("id").as("doc_id"), col("component"))
-        .withColumn("component_size",
-          count(lit(1)).over(Window.partitionBy(col("component")))
-            .cast("long"))
-        .orderBy("doc_id")
-    }
+  val ddSimhashHotBucketChain: Q = Q.sql(
+    "dd_simhash_hot_bucket_chain",
+    s"""WITH RECURSIVE ids AS (
+      |  SELECT doc_id FROM documents WHERE doc_id % 20 = 0
+      |), tok AS (
+      |  SELECT doc_id,
+      |    'w' || CAST(unnest(generate_series(0, 11)) AS VARCHAR) AS token
+      |  FROM ids
+      |  UNION ALL
+      |  SELECT doc_id, 'v' || CAST(doc_id % 3 AS VARCHAR) FROM ids
+      |), ${simhashCtes(64)}, ${cappedReachCtes(8, "ids")}, $componentCte
+      |SELECT doc_id, component,
+      |  CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT)
+      |    AS component_size
+      |FROM comp ORDER BY doc_id""".stripMargin) { (s, d) =>
+    import org.apache.spark.sql.expressions.Window
+    val ids = Tables.documents(s, d).filter(col("doc_id") % 20 === 0)
+      .select("doc_id")
+    val tokenRows = ids.select(col("doc_id"),
+        explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
+      .unionByName(ids.select(col("doc_id"),
+        concat(lit("v"), (col("doc_id") % 3).cast("string")).as("token")))
+    val pairs = Dedup.simhashNearDups(
+      Dedup.simhashFromTokens(tokenRows, 64),
+      maxBucketSize = 8, bits = 64)
+    val cc = Dedup.nearDupLabels(
+      ids.select(col("doc_id").as("id")),
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+    cc.select(col("id").as("doc_id"), col("component"))
+      .withColumn("component_size",
+        count(lit(1)).over(Window.partitionBy(col("component")))
+          .cast("long"))
+      .orderBy("doc_id")
   }
 
   /** SimHash QUALITY EVAL — precision/recall of the banded simhash
@@ -3454,136 +3045,120 @@ object LlmQueries {
     * reasoning as `dd_simhash_neardup`. TP/FP/FN are integer counts
     * over the per-layout full-outer join of predicted and true pairs —
     * the whole confusion matrix is hash-gated in both engines. */
-  val ddSimhashEval: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 64).map { i =>
-      val src = if (i <= 32) s"substr(md5(token), $i, 1)"
-        else s"substr(md5('s2|' || token), ${i - 32}, 1)"
-      s"SUM(CASE WHEN $src IN $highHex THEN 1 ELSE -1 END) AS v$i"
-    }.mkString(",\n      |    ")
-    val bits = (1 to 64).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    Q.sql(
-      "dd_simhash_eval",
-      s"""WITH t AS (
-        |  SELECT doc_id, $toksSql AS toks FROM documents
-        |  WHERE doc_id % 10 = 0
-        |), tok AS (
-        |  SELECT doc_id, unnest(toks) AS token FROM t
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |), sh AS (
-        |  SELECT doc_id, $bits AS sh64 FROM v
-        |), sigs AS (
-        |  SELECT 'b32' AS layout, doc_id, substr(sh64, 1, 32) AS sig,
-        |    8 AS w FROM sh
-        |  UNION ALL
-        |  SELECT 'b64' AS layout, doc_id, sh64 AS sig, 16 AS w FROM sh
-        |), banded AS (
-        |  SELECT layout, doc_id, sig, b AS band,
-        |    substr(sig, b * w + 1, w) AS band_key
-        |  FROM sigs CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)
-        |), pred AS (
-        |  SELECT layout, doc_a, doc_b, MIN(h) AS h FROM (
-        |    SELECT l.layout, l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |      hamming(l.sig, r.sig) AS h
-        |    FROM banded l JOIN banded r USING (layout, band, band_key)
-        |    WHERE l.doc_id < r.doc_id)
-        |  WHERE h <= 3 GROUP BY 1, 2, 3
-        |), sets AS (
-        |  SELECT DISTINCT doc_id, unnest(toks) AS token FROM t
-        |), sizes AS (
-        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz FROM sets GROUP BY 1
-        |), isect AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(COUNT(*) AS BIGINT) AS inter
-        |  FROM sets a JOIN sets b USING (token)
-        |  WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-        |), gt AS (
-        |  SELECT doc_a, doc_b FROM isect
-        |  JOIN sizes sa ON sa.doc_id = doc_a
-        |  JOIN sizes sb ON sb.doc_id = doc_b
-        |  WHERE inter * 10 >= (sa.sz + sb.sz - inter) * 7
-        |), gtl AS (
-        |  SELECT layout, doc_a, doc_b FROM gt
-        |  CROSS JOIN (SELECT unnest(['b32', 'b64']) AS layout)
-        |), f AS (
-        |  SELECT COALESCE(p.layout, g.layout) AS layout, p.h,
-        |    g.doc_a IS NOT NULL AS is_gt,
-        |    p.doc_a IS NOT NULL AS is_pred
-        |  FROM pred p FULL OUTER JOIN gtl g
-        |    ON g.layout = p.layout
-        |    AND g.doc_a = p.doc_a AND g.doc_b = p.doc_b
-        |)
-        |SELECT layout, thr,
-        |  CAST(SUM(CASE WHEN is_pred AND h <= thr THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_pred,
-        |  CAST(SUM(CASE WHEN is_gt THEN 1 ELSE 0 END) AS BIGINT) AS n_gt,
-        |  CAST(SUM(CASE WHEN is_pred AND h <= thr AND is_gt
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |  CAST(SUM(CASE WHEN is_pred AND h <= thr AND NOT is_gt
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        |  CAST(SUM(CASE WHEN is_gt AND (h IS NULL OR h > thr)
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS fn
-        |FROM f CROSS JOIN (SELECT
-        |  CAST(unnest(generate_series(0, 3)) AS BIGINT) AS thr)
-        |GROUP BY layout, thr ORDER BY layout, thr""".stripMargin) { (s, d) =>
-      import graft.Tables
-      val docs = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-      val tokenRows = docs.select(col("doc_id"),
-        explode(TA.tokens(col("text"))).as("token"))
-      // one 64-bit signature pass feeds both arms: its bits 1–32 ARE
-      // the 32-bit signature
-      val sh64 = Dedup.simhashFromTokens(tokenRows, 64)
-      val sh32 = sh64.select(col("doc_id"),
-        substring(col("simhash"), 1, 32).as("simhash"))
-      val pred = Dedup.simhashNearDups(sh32,
-          maxHamming = 3, maxBucketSize = 512)
-        .select(lit("b32").as("layout"), col("doc_a"), col("doc_b"),
-          col("hamming").as("h"))
-        .unionByName(Dedup.simhashNearDups(sh64,
-            maxHamming = 3, maxBucketSize = 512, bits = 64)
-          .select(lit("b64").as("layout"), col("doc_a"), col("doc_b"),
-            col("hamming").as("h")))
-      val sets = tokenRows.distinct()
-      val sizes = sets.groupBy("doc_id")
-        .agg(count(lit(1)).cast("long").as("sz"))
-      val isect = sets.toDF("doc_a", "token")
-        .join(sets.toDF("doc_b", "token"), Seq("token"))
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(count(lit(1)).cast("long").as("inter"))
-      val gt = isect
-        .join(sizes.toDF("doc_a", "sz_a"), Seq("doc_a"))
-        .join(sizes.toDF("doc_b", "sz_b"), Seq("doc_b"))
-        .filter(col("inter") * 10 >=
-          (col("sz_a") + col("sz_b") - col("inter")) * 7)
-        .select("doc_a", "doc_b")
-      val gtl = gt.withColumn("layout", lit("b32"))
-        .unionByName(gt.withColumn("layout", lit("b64")))
-      val f = pred.join(gtl.withColumn("is_gt", lit(true)),
-          Seq("layout", "doc_a", "doc_b"), "full_outer")
-        .select(col("layout"), col("h"),
-          coalesce(col("is_gt"), lit(false)).as("is_gt"),
-          col("h").isNotNull.as("is_pred"))
-      val thr = s.range(0, 4).select(col("id").as("thr"))
-      f.crossJoin(broadcast(thr))
-        .groupBy("layout", "thr")
-        .agg(
-          sum(when(col("is_pred") && col("h") <= col("thr"), 1)
-            .otherwise(0)).cast("long").as("n_pred"),
-          sum(when(col("is_gt"), 1).otherwise(0)).cast("long").as("n_gt"),
-          sum(when(col("is_pred") && col("h") <= col("thr") &&
-            col("is_gt"), 1).otherwise(0)).cast("long").as("tp"),
-          sum(when(col("is_pred") && col("h") <= col("thr") &&
-            !col("is_gt"), 1).otherwise(0)).cast("long").as("fp"),
-          sum(when(col("is_gt") &&
-            (col("h").isNull || col("h") > col("thr")), 1)
-            .otherwise(0)).cast("long").as("fn"))
-        .orderBy("layout", "thr")
-    }
+  val ddSimhashEval: Q = Q.sql(
+    "dd_simhash_eval",
+    s"""WITH t AS (
+      |  SELECT doc_id, $toksSql AS toks FROM documents
+      |  WHERE doc_id % 10 = 0
+      |), $tokCte, ${simhashVoteCte(64)}, sh AS (
+      |  SELECT doc_id, ${simhashBitsSql(64)} AS sh64 FROM v
+      |), sigs AS (
+      |  SELECT 'b32' AS layout, doc_id, substr(sh64, 1, 32) AS sig,
+      |    8 AS w FROM sh
+      |  UNION ALL
+      |  SELECT 'b64' AS layout, doc_id, sh64 AS sig, 16 AS w FROM sh
+      |), banded AS (
+      |  SELECT layout, doc_id, sig, b AS band,
+      |    substr(sig, b * w + 1, w) AS band_key
+      |  FROM sigs CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)
+      |), pred AS (
+      |  SELECT layout, doc_a, doc_b, MIN(h) AS h FROM (
+      |    SELECT l.layout, l.doc_id AS doc_a, r.doc_id AS doc_b,
+      |      hamming(l.sig, r.sig) AS h
+      |    FROM banded l JOIN banded r USING (layout, band, band_key)
+      |    WHERE l.doc_id < r.doc_id)
+      |  WHERE h <= 3 GROUP BY 1, 2, 3
+      |), sets AS (
+      |  SELECT DISTINCT doc_id, unnest(toks) AS token FROM t
+      |), sizes AS (
+      |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz FROM sets GROUP BY 1
+      |), isect AS (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      |    CAST(COUNT(*) AS BIGINT) AS inter
+      |  FROM sets a JOIN sets b USING (token)
+      |  WHERE a.doc_id < b.doc_id GROUP BY 1, 2
+      |), gt AS (
+      |  SELECT doc_a, doc_b FROM isect
+      |  JOIN sizes sa ON sa.doc_id = doc_a
+      |  JOIN sizes sb ON sb.doc_id = doc_b
+      |  WHERE inter * 10 >= (sa.sz + sb.sz - inter) * 7
+      |), gtl AS (
+      |  SELECT layout, doc_a, doc_b FROM gt
+      |  CROSS JOIN (SELECT unnest(['b32', 'b64']) AS layout)
+      |), f AS (
+      |  SELECT COALESCE(p.layout, g.layout) AS layout, p.h,
+      |    g.doc_a IS NOT NULL AS is_gt,
+      |    p.doc_a IS NOT NULL AS is_pred
+      |  FROM pred p FULL OUTER JOIN gtl g
+      |    ON g.layout = p.layout
+      |    AND g.doc_a = p.doc_a AND g.doc_b = p.doc_b
+      |)
+      |SELECT layout, thr,
+      |  CAST(SUM(CASE WHEN is_pred AND h <= thr THEN 1 ELSE 0 END)
+      |    AS BIGINT) AS n_pred,
+      |  CAST(SUM(CASE WHEN is_gt THEN 1 ELSE 0 END) AS BIGINT) AS n_gt,
+      |  CAST(SUM(CASE WHEN is_pred AND h <= thr AND is_gt
+      |    THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+      |  CAST(SUM(CASE WHEN is_pred AND h <= thr AND NOT is_gt
+      |    THEN 1 ELSE 0 END) AS BIGINT) AS fp,
+      |  CAST(SUM(CASE WHEN is_gt AND (h IS NULL OR h > thr)
+      |    THEN 1 ELSE 0 END) AS BIGINT) AS fn
+      |FROM f CROSS JOIN (SELECT
+      |  CAST(unnest(generate_series(0, 3)) AS BIGINT) AS thr)
+      |GROUP BY layout, thr ORDER BY layout, thr""".stripMargin) { (s, d) =>
+    import graft.Tables
+    val docs = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
+    val tokenRows = docs.select(col("doc_id"),
+      explode(TA.tokens(col("text"))).as("token"))
+    // one 64-bit signature pass feeds both arms: its bits 1–32 ARE
+    // the 32-bit signature
+    val sh64 = Dedup.simhashFromTokens(tokenRows, 64)
+    val sh32 = sh64.select(col("doc_id"),
+      substring(col("simhash"), 1, 32).as("simhash"))
+    val pred = Dedup.simhashNearDups(sh32,
+        maxHamming = 3, maxBucketSize = 512)
+      .select(lit("b32").as("layout"), col("doc_a"), col("doc_b"),
+        col("hamming").as("h"))
+      .unionByName(Dedup.simhashNearDups(sh64,
+          maxHamming = 3, maxBucketSize = 512, bits = 64)
+        .select(lit("b64").as("layout"), col("doc_a"), col("doc_b"),
+          col("hamming").as("h")))
+    val sets = tokenRows.distinct()
+    val sizes = sets.groupBy("doc_id")
+      .agg(count(lit(1)).cast("long").as("sz"))
+    val isect = sets.toDF("doc_a", "token")
+      .join(sets.toDF("doc_b", "token"), Seq("token"))
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).cast("long").as("inter"))
+    val gt = isect
+      .join(sizes.toDF("doc_a", "sz_a"), Seq("doc_a"))
+      .join(sizes.toDF("doc_b", "sz_b"), Seq("doc_b"))
+      .filter(col("inter") * 10 >=
+        (col("sz_a") + col("sz_b") - col("inter")) * 7)
+      .select("doc_a", "doc_b")
+    val gtl = gt.withColumn("layout", lit("b32"))
+      .unionByName(gt.withColumn("layout", lit("b64")))
+    val f = pred.join(gtl.withColumn("is_gt", lit(true)),
+        Seq("layout", "doc_a", "doc_b"), "full_outer")
+      .select(col("layout"), col("h"),
+        coalesce(col("is_gt"), lit(false)).as("is_gt"),
+        col("h").isNotNull.as("is_pred"))
+    val thr = s.range(0, 4).select(col("id").as("thr"))
+    f.crossJoin(broadcast(thr))
+      .groupBy("layout", "thr")
+      .agg(
+        sum(when(col("is_pred") && col("h") <= col("thr"), 1)
+          .otherwise(0)).cast("long").as("n_pred"),
+        sum(when(col("is_gt"), 1).otherwise(0)).cast("long").as("n_gt"),
+        sum(when(col("is_pred") && col("h") <= col("thr") &&
+          col("is_gt"), 1).otherwise(0)).cast("long").as("tp"),
+        sum(when(col("is_pred") && col("h") <= col("thr") &&
+          !col("is_gt"), 1).otherwise(0)).cast("long").as("fp"),
+        sum(when(col("is_gt") &&
+          (col("h").isNull || col("h") > col("thr")), 1)
+          .otherwise(0)).cast("long").as("fn"))
+      .orderBy("layout", "thr")
   }
 
   /** Text — DOMAIN POLICY FILTER ([[TA.domainPolicyFilter]]): the
@@ -3647,49 +3222,18 @@ object LlmQueries {
       .orderBy("doc_id")
   }
 
-  // Integer-quantized scores (see Similarity scaladoc): float→double,
-  // ×1e6, away-from-zero round, BIGINT sums — exact in both engines.
-  private val qq = "CAST(ROUND(CAST(%s AS DOUBLE) * 1000000) AS BIGINT)"
-  private val dotSql =
-    s"SUM(${qq.format("qv")} * ${qq.format("cv")})"
-  private val normSql =
-    s"""SELECT vec_id AS id,
-      |    SQRT(CAST(SUM(${qq.format("v")} * ${qq.format("v")}) AS DOUBLE)) AS norm
-      |  FROM (SELECT vec_id, unnest(embedding) AS v FROM embeddings)
-      |  GROUP BY vec_id""".stripMargin
+  private val dotSql = Q.dotSql("qv", "cv")
 
   /** Similarity — brute-force cosine top-5 for the first 10 query
     * vectors, decimal-exact dot products, deterministic tie-break. */
   val annBruteForce: Q = Q.sql(
     "ann_cosine_topk",
-    s"""WITH qe AS (
-      |  SELECT vec_id AS query_id, unnest(embedding) AS qv,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM embeddings WHERE vec_id < 10
-      |), ce AS (
-      |  SELECT vec_id AS cand_id, unnest(embedding) AS cv,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM embeddings
-      |), dots AS (
+    s"""WITH ${Q.embeddingDimCtes("embeddings WHERE vec_id < 10", "embeddings")}, dots AS (
       |  SELECT query_id, cand_id, $dotSql AS dot
       |  FROM qe JOIN ce USING (pos)
       |  WHERE query_id <> cand_id
       |  GROUP BY query_id, cand_id
-      |), norms AS (
-      |  $normSql
-      |), scored AS (
-      |  SELECT query_id, cand_id,
-      |         CAST(dot AS DOUBLE) / (qn.norm * cn.norm) AS cosine
-      |  FROM dots
-      |  JOIN norms qn ON qn.id = query_id
-      |  JOIN norms cn ON cn.id = cand_id
-      |)
-      |SELECT query_id, cand_id, cosine, rank FROM (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      |    ORDER BY cosine DESC, cand_id) AS rank
-      |  FROM scored
-      |) WHERE rank <= 5
-      |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+      |), ${Q.normsCte("embeddings")}, ${Q.cosineTop5Sql}""".stripMargin) { (s, d) =>
     val emb = Tables.embeddings(s, d)
     Similarity.bruteForceTopK(
       emb.filter(col("vec_id") < 10), emb, k = 5)
@@ -3705,21 +3249,12 @@ object LlmQueries {
     * negatives by construction, not filtered afterwards. */
   val annHardNegatives: Q = Q.sql(
     "ann_hard_negatives",
-    s"""WITH qe AS (
-      |  SELECT vec_id AS query_id, unnest(embedding) AS qv,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM embeddings WHERE vec_id % 91 = 0
-      |), ce AS (
-      |  SELECT vec_id AS cand_id, unnest(embedding) AS cv,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM embeddings WHERE vec_id % 7 <> 0
-      |), dots AS (
+    s"""WITH ${Q.embeddingDimCtes("embeddings WHERE vec_id % 91 = 0",
+                                  "embeddings WHERE vec_id % 7 <> 0")}, dots AS (
       |  SELECT query_id, cand_id, $dotSql AS dot
       |  FROM qe JOIN ce USING (pos)
       |  GROUP BY query_id, cand_id
-      |), norms AS (
-      |  $normSql
-      |), scored AS (
+      |), ${Q.normsCte("embeddings")}, scored AS (
       |  SELECT query_id, cand_id,
       |         CAST(dot AS DOUBLE) / (qn.norm * cn.norm) AS cosine
       |  FROM dots
@@ -3794,23 +3329,13 @@ object LlmQueries {
       |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id, q.bucket
       |  FROM bucketed q JOIN bucketed c USING (bucket)
       |  WHERE q.vec_id <> c.vec_id
-      |), qe AS (
-      |  SELECT vec_id AS query_id, unnest(embedding) AS qv,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM bucketed
-      |), ce AS (
-      |  SELECT vec_id AS cand_id, unnest(embedding) AS cv,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM bucketed
-      |), dots AS (
+      |), ${Q.embeddingDimCtes("bucketed", "bucketed")}, dots AS (
       |  SELECT cand.query_id, cand.cand_id, cand.bucket, $dotSql AS dot
       |  FROM cand
       |  JOIN qe ON qe.query_id = cand.query_id
       |  JOIN ce ON ce.cand_id = cand.cand_id AND ce.pos = qe.pos
       |  GROUP BY cand.query_id, cand.cand_id, cand.bucket
-      |), norms AS (
-      |  $normSql
-      |), scored AS (
+      |), ${Q.normsCte("embeddings")}, scored AS (
       |  SELECT query_id, cand_id, bucket,
       |         CAST(dot AS DOUBLE) / (qn.norm * cn.norm) AS cosine
       |  FROM dots
@@ -3835,27 +3360,9 @@ object LlmQueries {
     * buckets. */
   val annRhLsh: Q = {
     val bits = 6
-    val hh = "('8','9','a','b','c','d','e','f')"
-    val sumsSql = (0 until bits).map(j =>
-      s"""SUM(${qq.format("v")} *
-        |      CASE WHEN substr(md5('rh7|$j|' || CAST(pos - 1 AS VARCHAR)), 1, 1) IN $hh
-        |           THEN 1 ELSE -1 END) AS s$j""".stripMargin)
-      .mkString(",\n      |    ")
-    val bucketSql = (0 until bits).map(j =>
-      s"(CASE WHEN s$j >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
     Q.sql(
       "ann_rh_lsh_topk",
-      s"""WITH qv AS (
-        |  SELECT vec_id, unnest(embedding) AS v,
-        |         unnest(generate_series(1, len(embedding))) AS pos
-        |  FROM embeddings
-        |), sums AS (
-        |  SELECT vec_id,
-        |    $sumsSql
-        |  FROM qv GROUP BY vec_id
-        |), buckets AS (
-        |  SELECT vec_id, $bucketSql AS bucket FROM sums
-        |), capped AS (
+      s"""WITH ${rhBucketCtes("embeddings", bits)}, capped AS (
         |  SELECT vec_id, bucket FROM (
         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY bucket
         |      ORDER BY vec_id) AS rn FROM buckets)
@@ -3872,35 +3379,7 @@ object LlmQueries {
         |  SELECT DISTINCT p.query_id, c.vec_id AS cand_id
         |  FROM probes p JOIN capped c USING (bucket)
         |  WHERE p.query_id <> c.vec_id
-        |), qe AS (
-        |  SELECT vec_id AS query_id, unnest(embedding) AS qv,
-        |         unnest(generate_series(1, len(embedding))) AS pos
-        |  FROM embeddings
-        |), ce AS (
-        |  SELECT vec_id AS cand_id, unnest(embedding) AS cv,
-        |         unnest(generate_series(1, len(embedding))) AS pos
-        |  FROM embeddings
-        |), dots AS (
-        |  SELECT cand.query_id, cand.cand_id, $dotSql AS dot
-        |  FROM cand
-        |  JOIN qe ON qe.query_id = cand.query_id
-        |  JOIN ce ON ce.cand_id = cand.cand_id AND ce.pos = qe.pos
-        |  GROUP BY cand.query_id, cand.cand_id
-        |), norms AS (
-        |  $normSql
-        |), scored AS (
-        |  SELECT query_id, cand_id,
-        |         CAST(dot AS DOUBLE) / (qn.norm * cn.norm) AS cosine
-        |  FROM dots
-        |  JOIN norms qn ON qn.id = query_id
-        |  JOIN norms cn ON cn.id = cand_id
-        |)
-        |SELECT query_id, cand_id, cosine, rank FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, cand_id) AS rank
-        |  FROM scored
-        |) WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+        |), ${Q.candCosineTop5Sql("qv", "cv")}""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       Similarity.randomHyperplaneLshTopK(emb, emb.select("vec_id"),
         k = 5, bits = bits, seed = "7", maxBucketSize = 32)
@@ -3924,11 +3403,9 @@ object LlmQueries {
       |  SELECT centroid_id, unnest(cent_vec) AS cv,
       |         unnest(generate_series(1, len(cent_vec))) AS pos
       |  FROM cent
-      |), norms AS (
-      |  $normSql
-      |), adots AS (
+      |), ${Q.normsCte("embeddings")}, adots AS (
       |  SELECT ve.vec_id, cente.centroid_id,
-      |    SUM(${qq.format("v")} * ${qq.format("cv")}) AS dot
+      |    ${Q.dotSql("v", "cv")} AS dot
       |  FROM ve JOIN cente ON cente.pos = ve.pos
       |  GROUP BY 1, 2
       |), ranked AS (
@@ -3947,33 +3424,7 @@ object LlmQueries {
       |  SELECT query_id, cand_id
       |  FROM probes JOIN assign USING (centroid_id)
       |  WHERE query_id <> cand_id
-      |), qe AS (
-      |  SELECT vec_id AS query_id, unnest(embedding) AS qv,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM embeddings
-      |), ce AS (
-      |  SELECT vec_id AS cand_id, unnest(embedding) AS cv,
-      |         unnest(generate_series(1, len(embedding))) AS pos
-      |  FROM embeddings
-      |), dots AS (
-      |  SELECT cand.query_id, cand.cand_id, $dotSql AS dot
-      |  FROM cand
-      |  JOIN qe ON qe.query_id = cand.query_id
-      |  JOIN ce ON ce.cand_id = cand.cand_id AND ce.pos = qe.pos
-      |  GROUP BY cand.query_id, cand.cand_id
-      |), scored AS (
-      |  SELECT query_id, cand_id,
-      |         CAST(dot AS DOUBLE) / (qn.norm * cn.norm) AS cosine
-      |  FROM dots
-      |  JOIN norms qn ON qn.id = query_id
-      |  JOIN norms cn ON cn.id = cand_id
-      |)
-      |SELECT query_id, cand_id, cosine, rank FROM (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      |    ORDER BY cosine DESC, cand_id) AS rank
-      |  FROM scored
-      |) WHERE rank <= 5
-      |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+      |), ${Q.candDotCtes("qv", "cv")}, ${Q.cosineTop5Sql}""".stripMargin) { (s, d) =>
     val emb = Tables.embeddings(s, d)
     Similarity.ivfTopK(emb, emb.select("vec_id"), k = 5,
       centroidStride = 50, nProbe = 2)
@@ -3988,14 +3439,6 @@ object LlmQueries {
     * signature, so bucket recall on true dups is 1. */
   val ddEmbeddingNearDup: Q = {
     val bits = 6
-    val hh = "('8','9','a','b','c','d','e','f')"
-    val sumsSql = (0 until bits).map(j =>
-      s"""SUM(${qq.format("v")} *
-        |      CASE WHEN substr(md5('rh7|$j|' || CAST(pos - 1 AS VARCHAR)), 1, 1) IN $hh
-        |           THEN 1 ELSE -1 END) AS s$j""".stripMargin)
-      .mkString(",\n      |    ")
-    val bucketSql = (0 until bits).map(j =>
-      s"(CASE WHEN s$j >= 0 THEN '1' ELSE '0' END)").mkString(" || ")
     Q.sql(
       "dd_embedding_neardup",
       s"""WITH corpus AS (
@@ -4003,40 +3446,17 @@ object LlmQueries {
         |  UNION ALL
         |  SELECT vec_id + 100000 AS vec_id, embedding
         |  FROM embeddings WHERE vec_id < 50
-        |), qv AS (
-        |  SELECT vec_id, unnest(embedding) AS v,
-        |         unnest(generate_series(1, len(embedding))) AS pos
-        |  FROM corpus
-        |), sums AS (
-        |  SELECT vec_id,
-        |    $sumsSql
-        |  FROM qv GROUP BY vec_id
-        |), buckets AS (
-        |  SELECT vec_id, $bucketSql AS bucket FROM sums
-        |), cand AS (
+        |), ${rhBucketCtes("corpus", bits)}, cand AS (
         |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
         |  FROM buckets a JOIN buckets b USING (bucket)
         |  WHERE a.vec_id < b.vec_id
-        |), qe AS (
-        |  SELECT vec_id AS doc_a, unnest(embedding) AS qv,
-        |         unnest(generate_series(1, len(embedding))) AS pos
-        |  FROM corpus
-        |), ce AS (
-        |  SELECT vec_id AS doc_b, unnest(embedding) AS cv,
-        |         unnest(generate_series(1, len(embedding))) AS pos
-        |  FROM corpus
-        |), dots AS (
+        |), ${Q.embeddingDimCtes("corpus", "corpus", "doc_a", "doc_b")}, dots AS (
         |  SELECT cand.doc_a, cand.doc_b, $dotSql AS dot
         |  FROM cand
         |  JOIN qe ON qe.doc_a = cand.doc_a
         |  JOIN ce ON ce.doc_b = cand.doc_b AND ce.pos = qe.pos
         |  GROUP BY cand.doc_a, cand.doc_b
-        |), norms AS (
-        |  SELECT vec_id AS id,
-        |    SQRT(CAST(SUM(${qq.format("v")} * ${qq.format("v")}) AS DOUBLE)) AS norm
-        |  FROM (SELECT vec_id, unnest(embedding) AS v FROM corpus)
-        |  GROUP BY vec_id
-        |)
+        |), ${Q.normsCte("corpus")}
         |SELECT doc_a, doc_b,
         |  CAST(dot AS DOUBLE) / (qn.norm * cn.norm) AS cosine,
         |  LEAST(doc_a, doc_b) AS canonical_id
@@ -4159,21 +3579,19 @@ object LlmQueries {
       .orderBy("doc_id")
   }
 
-  /** Multimodal + incremental dedup — PERSISTED perceptual-hash index
-    * (the daily-crawl discipline for IMAGES): day 1 commits the base
-    * images' dHash band+hash rows through the real 64-bit `PhashIndex`
-    * AtomicTable; day 2 probes a mix of one-pixel near-copies, exact
-    * re-crawls, and genuinely fresh images against the COMMITTED
-    * version. Band join generates candidates, the indexed full hash
-    * Hamming-verifies them (load-bearing: 16-bit bands saturate with
-    * index size — see PhashIndex scaladoc). Expected and gate-checked:
-    * every near-copy and re-crawl flagged, every fresh image kept. */
-  val ddPhashIndexChain: Q = Q.sql(
-    "dd_phash_index_chain",
-    s"""${phashHashCtes(
-         """SELECT doc_id FROM documents
-           |  UNION
-           |  SELECT doc_id * 2 + 1000000 FROM documents WHERE doc_id % 9 = 0""".stripMargin)}, bnd AS (
+  /** Ids of the two-day phash index chains: every document plus a
+    * re-crawl copy (doc_id * 2 + 1000000) of every 9th. */
+  private val phashChainDocs =
+    """SELECT doc_id FROM documents
+      |  UNION
+      |  SELECT doc_id * 2 + 1000000 FROM documents WHERE doc_id % 9 = 0""".stripMargin
+
+  /** The 64-bit two-day chain over [[phashChainDocs]]: day 1 (id % 5
+    * <> 4, no copies) is the index, day 2 (near-copies, every 7th, the
+    * re-crawls) probes it by band and verifies within Hamming 3. Ends
+    * inside the final select, after (doc_id, hit_index, keep). */
+  private val phash64ProbeSql: String =
+    s"""${phashHashCtes(phashChainDocs)}, bnd AS (
       |  SELECT h.doc_id, h.hash_lo, h.hash_hi, bs.band,
       |    CASE bs.band WHEN 0 THEN h.hash_lo % 65536
       |                 WHEN 1 THEN h.hash_lo // 65536
@@ -4196,7 +3614,48 @@ object LlmQueries {
       |)
       |SELECT p.doc_id,
       |  p.doc_id IN (SELECT doc_id FROM hits) AS hit_index,
-      |  p.doc_id NOT IN (SELECT doc_id FROM hits) AS keep
+      |  p.doc_id NOT IN (SELECT doc_id FROM hits) AS keep""".stripMargin
+
+  /** The 128-bit two-day chain over [[phashChainDocs]]: day 1 (id % 5
+    * <> 4, no copies) is the index, day 2 (near-copies, every 7th, the
+    * re-crawls) probes it by band and verifies within Hamming 3. Ends
+    * inside the final select, after (doc_id, hit_index, keep). */
+  private val phash128ProbeSql: String =
+    s"""${phash128HashCtes(phashChainDocs)}, bnd AS (
+      |  SELECT h.doc_id, h.h0, h.h1, h.h2, h.h3, bs.band,
+      |    CASE bs.band WHEN 0 THEN h.h0 WHEN 1 THEN h.h1
+      |                 WHEN 2 THEN h.h2 ELSE h.h3 END AS band_key
+      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) bs
+      |), idx AS (
+      |  SELECT DISTINCT band, band_key, h0, h1, h2, h3
+      |  FROM bnd WHERE doc_id < 1000000 AND doc_id % 5 <> 4
+      |), probe AS (
+      |  SELECT * FROM bnd
+      |  WHERE doc_id >= 1000000 OR doc_id % 5 = 4
+      |     OR (doc_id % 7 = 0 AND doc_id % 5 <> 4)
+      |), hits AS (
+      |  SELECT DISTINCT p.doc_id
+      |  FROM probe p JOIN idx i
+      |    ON i.band = p.band AND i.band_key = p.band_key
+      |  WHERE bit_count(xor(p.h0, i.h0)) + bit_count(xor(p.h1, i.h1))
+      |      + bit_count(xor(p.h2, i.h2)) + bit_count(xor(p.h3, i.h3)) <= 3
+      |)
+      |SELECT p.doc_id,
+      |  p.doc_id IN (SELECT doc_id FROM hits) AS hit_index,
+      |  p.doc_id NOT IN (SELECT doc_id FROM hits) AS keep""".stripMargin
+
+  /** Multimodal + incremental dedup — PERSISTED perceptual-hash index
+    * (the daily-crawl discipline for IMAGES): day 1 commits the base
+    * images' dHash band+hash rows through the real 64-bit `PhashIndex`
+    * AtomicTable; day 2 probes a mix of one-pixel near-copies, exact
+    * re-crawls, and genuinely fresh images against the COMMITTED
+    * version. Band join generates candidates, the indexed full hash
+    * Hamming-verifies them (load-bearing: 16-bit bands saturate with
+    * index size — see PhashIndex scaladoc). Expected and gate-checked:
+    * every near-copy and re-crawl flagged, every fresh image kept. */
+  val ddPhashIndexChain: Q = Q.sql(
+    "dd_phash_index_chain",
+    s"""$phash64ProbeSql
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
     import graft.llm.PhashIndex
@@ -4228,31 +3687,7 @@ object LlmQueries {
     * packing, the word-keyed band join, and the 4-word Hamming verify. */
   val ddPhashIndexChain128: Q = Q.sql(
     "dd_phash128_index_chain",
-    s"""${phash128HashCtes(
-         """SELECT doc_id FROM documents
-           |  UNION
-           |  SELECT doc_id * 2 + 1000000 FROM documents WHERE doc_id % 9 = 0""".stripMargin)}, bnd AS (
-      |  SELECT h.doc_id, h.h0, h.h1, h.h2, h.h3, bs.band,
-      |    CASE bs.band WHEN 0 THEN h.h0 WHEN 1 THEN h.h1
-      |                 WHEN 2 THEN h.h2 ELSE h.h3 END AS band_key
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) bs
-      |), idx AS (
-      |  SELECT DISTINCT band, band_key, h0, h1, h2, h3
-      |  FROM bnd WHERE doc_id < 1000000 AND doc_id % 5 <> 4
-      |), probe AS (
-      |  SELECT * FROM bnd
-      |  WHERE doc_id >= 1000000 OR doc_id % 5 = 4
-      |     OR (doc_id % 7 = 0 AND doc_id % 5 <> 4)
-      |), hits AS (
-      |  SELECT DISTINCT p.doc_id
-      |  FROM probe p JOIN idx i
-      |    ON i.band = p.band AND i.band_key = p.band_key
-      |  WHERE bit_count(xor(p.h0, i.h0)) + bit_count(xor(p.h1, i.h1))
-      |      + bit_count(xor(p.h2, i.h2)) + bit_count(xor(p.h3, i.h3)) <= 3
-      |)
-      |SELECT p.doc_id,
-      |  p.doc_id IN (SELECT doc_id FROM hits) AS hit_index,
-      |  p.doc_id NOT IN (SELECT doc_id FROM hits) AS keep
+    s"""$phash128ProbeSql
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
     import graft.llm.PhashIndex
@@ -4282,33 +3717,7 @@ object LlmQueries {
     * byte-for-byte. */
   val ddPhashPolicySmall: Q = Q.sql(
     "dd_phash_policy_small",
-    s"""${phashHashCtes(
-         """SELECT doc_id FROM documents
-           |  UNION
-           |  SELECT doc_id * 2 + 1000000 FROM documents WHERE doc_id % 9 = 0""".stripMargin)}, bnd AS (
-      |  SELECT h.doc_id, h.hash_lo, h.hash_hi, bs.band,
-      |    CASE bs.band WHEN 0 THEN h.hash_lo % 65536
-      |                 WHEN 1 THEN h.hash_lo // 65536
-      |                 WHEN 2 THEN h.hash_hi % 65536
-      |                 ELSE h.hash_hi // 65536 END AS band_key
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) bs
-      |), idx AS (
-      |  SELECT DISTINCT band, band_key, hash_lo, hash_hi
-      |  FROM bnd WHERE doc_id < 1000000 AND doc_id % 5 <> 4
-      |), probe AS (
-      |  SELECT * FROM bnd
-      |  WHERE doc_id >= 1000000 OR doc_id % 5 = 4
-      |     OR (doc_id % 7 = 0 AND doc_id % 5 <> 4)
-      |), hits AS (
-      |  SELECT DISTINCT p.doc_id
-      |  FROM probe p JOIN idx i
-      |    ON i.band = p.band AND i.band_key = p.band_key
-      |  WHERE bit_count(xor(p.hash_lo, i.hash_lo))
-      |      + bit_count(xor(p.hash_hi, i.hash_hi)) <= 3
-      |)
-      |SELECT p.doc_id,
-      |  p.doc_id IN (SELECT doc_id FROM hits) AS hit_index,
-      |  p.doc_id NOT IN (SELECT doc_id FROM hits) AS keep,
+    s"""$phash64ProbeSql,
       |  CAST(CASE WHEN (SELECT COUNT(*) FROM documents) * 4.0 / 65536.0
       |            <= 1.0 THEN 64 ELSE 128 END AS INTEGER) AS band_bits
       |FROM (SELECT DISTINCT doc_id FROM probe) p
@@ -4341,31 +3750,7 @@ object LlmQueries {
     * this gates BOTH policy branches cross-engine. */
   val ddPhashPolicyLarge: Q = Q.sql(
     "dd_phash_policy_large",
-    s"""${phash128HashCtes(
-         """SELECT doc_id FROM documents
-           |  UNION
-           |  SELECT doc_id * 2 + 1000000 FROM documents WHERE doc_id % 9 = 0""".stripMargin)}, bnd AS (
-      |  SELECT h.doc_id, h.h0, h.h1, h.h2, h.h3, bs.band,
-      |    CASE bs.band WHEN 0 THEN h.h0 WHEN 1 THEN h.h1
-      |                 WHEN 2 THEN h.h2 ELSE h.h3 END AS band_key
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) bs
-      |), idx AS (
-      |  SELECT DISTINCT band, band_key, h0, h1, h2, h3
-      |  FROM bnd WHERE doc_id < 1000000 AND doc_id % 5 <> 4
-      |), probe AS (
-      |  SELECT * FROM bnd
-      |  WHERE doc_id >= 1000000 OR doc_id % 5 = 4
-      |     OR (doc_id % 7 = 0 AND doc_id % 5 <> 4)
-      |), hits AS (
-      |  SELECT DISTINCT p.doc_id
-      |  FROM probe p JOIN idx i
-      |    ON i.band = p.band AND i.band_key = p.band_key
-      |  WHERE bit_count(xor(p.h0, i.h0)) + bit_count(xor(p.h1, i.h1))
-      |      + bit_count(xor(p.h2, i.h2)) + bit_count(xor(p.h3, i.h3)) <= 3
-      |)
-      |SELECT p.doc_id,
-      |  p.doc_id IN (SELECT doc_id FROM hits) AS hit_index,
-      |  p.doc_id NOT IN (SELECT doc_id FROM hits) AS keep,
+    s"""$phash128ProbeSql,
       |  CAST(CASE WHEN (SELECT COUNT(*) FROM documents) * 40 * 4.0
       |            / 65536.0 <= 1.0 THEN 64 ELSE 128 END AS INTEGER)
       |    AS band_bits
@@ -4735,34 +4120,8 @@ object LlmQueries {
   private def phashHashCtes(
       phdocs: String = "SELECT doc_id FROM documents",
       prefix: String = "", lead: Boolean = true): String = {
-    val h6 = TA.hex6Expr("md5('ph|' || b || '|' || x || '|' || y)")
     val p = prefix
-    val w = if (lead) "WITH " else ""
-    s"""$w${p}phdocs AS ($phdocs), ${p}d AS (
-      |  SELECT doc_id,
-      |    CASE WHEN doc_id % 5 = 4 AND doc_id >= 4
-      |         THEN doc_id - 3 ELSE doc_id END AS b
-      |  FROM ${p}phdocs
-      |), ${p}px AS (
-      |  SELECT d.doc_id, d.b, xs.x, ys.y
-      |  FROM ${p}d d
-      |  CROSS JOIN (SELECT unnest(generate_series(0, 8)) AS x) xs
-      |  CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS y) ys
-      |), ${p}g0 AS (
-      |  SELECT doc_id, x, y, $h6 % 251 AS gray0,
-      |    doc_id <> b AND x = doc_id % 9 AND y = (doc_id // 9) % 8 AS pert
-      |  FROM ${p}px
-      |), ${p}g AS (
-      |  SELECT doc_id, x, y,
-      |    CASE WHEN pert THEN (gray0 + 100) % 251 ELSE gray0 END AS gray
-      |  FROM ${p}g0
-      |), ${p}bits AS (
-      |  SELECT a.doc_id, a.y * 8 + a.x AS pos,
-      |    CASE WHEN bb.gray > a.gray THEN 1 ELSE 0 END AS bit
-      |  FROM ${p}g a JOIN ${p}g bb
-      |    ON bb.doc_id = a.doc_id AND bb.y = a.y AND bb.x = a.x + 1
-      |  WHERE a.x < 8
-      |), ${p}h AS (
+    s"""${phashBitsCtes(9, phdocs, p, lead)}, ${p}h AS (
       |  SELECT doc_id,
       |    CAST(SUM(CASE WHEN pos < 32
       |      THEN bit * CAST(POWER(2, pos) AS BIGINT) ELSE 0 END) AS BIGINT)
@@ -4782,14 +4141,31 @@ object LlmQueries {
   private def phash128HashCtes(
       phdocs: String = "SELECT doc_id FROM documents",
       prefix: String = "", lead: Boolean = true): String = {
-    val h6 = TA.hex6Expr("md5('ph|' || b || '|' || x || '|' || y)")
     val words = (0 until 4).map(w =>
       s"""CAST(SUM(CASE WHEN pos // 32 = $w
       |      THEN bit * CAST(POWER(2, pos % 32) AS BIGINT) ELSE 0 END)
       |      AS BIGINT) AS h$w""".stripMargin).mkString(",\n      |    ")
     val p = prefix
-    val lw = if (lead) "WITH " else ""
-    s"""$lw${p}phdocs AS ($phdocs), ${p}d AS (
+    s"""${phashBitsCtes(17, phdocs, p, lead)}, ${p}h AS (
+      |  SELECT doc_id,
+      |    $words
+      |  FROM ${p}bits GROUP BY 1
+      |)""".stripMargin
+  }
+
+  /** The dHash pixel grid shared by [[phashHashCtes]] (`cols` 9) and
+    * [[phash128HashCtes]] (`cols` 17), over the ids `phdocs`: each image
+    * `b` is its doc_id, or doc_id - 3 for the one-pixel near-copies
+    * (doc_id % 5 = 4), pixel gray = md5 hex6 of (b, x, y) % 251, the
+    * copy's pixel (doc_id % cols, (doc_id // cols) % 8) shifted by 100.
+    * Ends at CTE `<prefix>bits(doc_id, pos, bit)`: one bit per
+    * horizontal neighbour pair, pos = y * (cols - 1) + x. Leads with
+    * `WITH ` when `lead`. */
+  private def phashBitsCtes(cols: Int, phdocs: String, p: String,
+                            lead: Boolean): String = {
+    val h6 = TA.hex6Expr("md5('ph|' || b || '|' || x || '|' || y)")
+    val w = if (lead) "WITH " else ""
+    s"""$w${p}phdocs AS ($phdocs), ${p}d AS (
       |  SELECT doc_id,
       |    CASE WHEN doc_id % 5 = 4 AND doc_id >= 4
       |         THEN doc_id - 3 ELSE doc_id END AS b
@@ -4797,26 +4173,22 @@ object LlmQueries {
       |), ${p}px AS (
       |  SELECT d.doc_id, d.b, xs.x, ys.y
       |  FROM ${p}d d
-      |  CROSS JOIN (SELECT unnest(generate_series(0, 16)) AS x) xs
+      |  CROSS JOIN (SELECT unnest(generate_series(0, ${cols - 1})) AS x) xs
       |  CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS y) ys
       |), ${p}g0 AS (
       |  SELECT doc_id, x, y, $h6 % 251 AS gray0,
-      |    doc_id <> b AND x = doc_id % 17 AND y = (doc_id // 17) % 8 AS pert
+      |    doc_id <> b AND x = doc_id % $cols AND y = (doc_id // $cols) % 8 AS pert
       |  FROM ${p}px
       |), ${p}g AS (
       |  SELECT doc_id, x, y,
       |    CASE WHEN pert THEN (gray0 + 100) % 251 ELSE gray0 END AS gray
       |  FROM ${p}g0
       |), ${p}bits AS (
-      |  SELECT a.doc_id, a.y * 16 + a.x AS pos,
+      |  SELECT a.doc_id, a.y * ${cols - 1} + a.x AS pos,
       |    CASE WHEN bb.gray > a.gray THEN 1 ELSE 0 END AS bit
       |  FROM ${p}g a JOIN ${p}g bb
       |    ON bb.doc_id = a.doc_id AND bb.y = a.y AND bb.x = a.x + 1
-      |  WHERE a.x < 16
-      |), ${p}h AS (
-      |  SELECT doc_id,
-      |    $words
-      |  FROM ${p}bits GROUP BY 1
+      |  WHERE a.x < ${cols - 1}
       |)""".stripMargin
   }
 
@@ -4907,14 +4279,7 @@ object LlmQueries {
     * (Contamination.contaminationScores). */
   val tContamination: Q = Q.sql(
     "t_contamination",
-    s"""WITH t AS (
-      |  SELECT doc_id, $toksSql AS toks FROM documents
-      |), s AS (
-      |  SELECT DISTINCT doc_id,
-      |    unnest(list_transform(generate_series(1, len(toks) - 2),
-      |      i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS shingle
-      |  FROM t
-      |), bench AS (
+    s"""WITH $docShingleCtes, bench AS (
       |  SELECT DISTINCT shingle FROM s WHERE doc_id % 97 = 0
       |), corpus AS (
       |  SELECT * FROM s WHERE doc_id % 97 <> 0
@@ -5117,125 +4482,73 @@ object LlmQueries {
     * recomputes pairs,
     * closes them with a recursive CTE, and replays both hash
     * assignments with the portable instr-based hex expansion. */
-  val tLeakageSafeSplit: Q = {
-    val highHex = "('8','9','a','b','c','d','e','f')"
-    val votes = (1 to 64).map { i =>
-      val src = if (i <= 32) s"substr(md5(token), $i, 1)"
-        else s"substr(md5('s2|' || token), ${i - 32}, 1)"
-      s"SUM(CASE WHEN $src IN $highHex THEN 1 ELSE -1 END) AS v$i"
-    }.mkString(",\n      |    ")
-    val bits = (1 to 64).map(i =>
-      s"CASE WHEN v$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    Q.sql(
-      "t_leakage_safe_split",
-      s"""WITH RECURSIVE t AS (
-        |  SELECT doc_id, $toksSql AS toks FROM documents
-        |), tok AS (
-        |  SELECT doc_id, unnest(toks) AS token FROM t
-        |), v AS (
-        |  SELECT doc_id,
-        |    $votes
-        |  FROM tok GROUP BY doc_id
-        |), sh AS (
-        |  SELECT doc_id, $bits AS simhash FROM v
-        |), sized AS (
-        |  SELECT doc_id, simhash, band, band_key,
-        |    COUNT(*) OVER (PARTITION BY band, band_key) AS bucket_size
-        |  FROM (
-        |    SELECT doc_id, simhash, b AS band,
-        |      substr(simhash, b * 16 + 1, 16) AS band_key
-        |    FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b))
-        |), cand AS (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |    l.simhash AS sim_a, r.simhash AS sim_b
-        |  FROM (SELECT * FROM sized WHERE bucket_size <= 512) l
-        |  JOIN (SELECT * FROM sized WHERE bucket_size <= 512) r
-        |    USING (band, band_key)
-        |  WHERE l.doc_id < r.doc_id
-        |  UNION ALL
-        |  SELECT doc_a, doc_b, sim_a, sim_b FROM (
-        |    SELECT doc_id AS doc_a, LEAD(doc_id) OVER w AS doc_b,
-        |      simhash AS sim_a, LEAD(simhash) OVER w AS sim_b
-        |    FROM (SELECT * FROM sized WHERE bucket_size > 512)
-        |    WINDOW w AS (PARTITION BY band, band_key ORDER BY doc_id))
-        |  WHERE doc_b IS NOT NULL
-        |), pairs AS (
-        |  SELECT DISTINCT doc_a, doc_b FROM cand
-        |  WHERE hamming(sim_a, sim_b) <= 3
-        |), sym AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |), r(a, b) AS (
-        |  SELECT doc_id, doc_id FROM t
-        |  UNION
-        |  SELECT r.a, s.dst FROM r JOIN sym s ON r.b = s.src
-        |), comp AS (
-        |  SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS component
-        |  FROM r GROUP BY a
-        |), hashed AS (
-        |  SELECT doc_id, component,
-        |    md5('split14|' || CAST(component AS VARCHAR)) AS ch,
-        |    md5('split14|' || CAST(doc_id AS VARCHAR)) AS nh
-        |  FROM comp
-        |), b AS (
-        |  SELECT doc_id, component,
-        |    CAST(${TA.hex6Expr("ch")} % 100 AS BIGINT) AS sample_bucket,
-        |    CAST(${TA.hex6Expr("nh")} % 100 AS BIGINT) AS naive_bucket
-        |  FROM hashed
-        |), sp AS (
-        |  SELECT doc_id, component, sample_bucket,
-        |    CASE WHEN sample_bucket < 80 THEN 'train'
-        |         WHEN sample_bucket < 90 THEN 'val'
-        |         ELSE 'test' END AS split,
-        |    CASE WHEN naive_bucket < 80 THEN 'train'
-        |         WHEN naive_bucket < 90 THEN 'val'
-        |         ELSE 'test' END AS naive_split
-        |  FROM b
-        |), cs AS (
-        |  SELECT component, CAST(COUNT(*) AS BIGINT) AS component_size,
-        |    COUNT(DISTINCT split) > 1 AS cluster_is_leaky,
-        |    COUNT(DISTINCT naive_split) > 1 AS naive_is_leaky
-        |  FROM sp GROUP BY component
-        |)
-        |SELECT sp.doc_id, sp.component, sp.sample_bucket, sp.split,
-        |  sp.naive_split, cs.component_size, cs.cluster_is_leaky,
-        |  cs.naive_is_leaky, CAST(64 AS BIGINT) AS band_bits
-        |FROM sp JOIN cs USING (component)
-        |ORDER BY sp.doc_id""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val tokenRows = docs.select(col("doc_id"),
-        explode(TA.tokens(col("text"))).as("token"))
-      // autoBandPolicy width + twin-replayed DefaultBucketCap, gated
-      // via band_bits — see dd_cluster_canonical (identical r16
-      // migration; this is the consumer where band saturation
-      // silently under-merges = LEAKS, so the policy matters most).
-      // Sizing count memoized per dir (r16 ADVICE, knownN pattern).
-      val bits = Dedup.autoBandPolicy(Tables.documentsCount(s, d))
-      val pairs = Dedup.simhashNearDups(
-        Dedup.simhashFromTokens(tokenRows, bits), bits = bits)
-      val cc = Dedup.nearDupLabels(
-        docs.select(col("doc_id").as("id")),
-        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-      val sp = TA.leakageSafeSplit(cc, seed = "split14",
-          valPct = 10, testPct = 10)
-        .withColumn("nh",
-          md5(concat(lit("split14|"), col("doc_id").cast("string"))))
-        .withColumn("naive_bucket", expr(s"${TA.hex6Expr("nh")} % 100L"))
-        .withColumn("naive_split",
-          when(col("naive_bucket") < 80, "train")
-            .when(col("naive_bucket") < 90, "val")
-            .otherwise("test"))
-      val cs = sp.groupBy(col("component"))
-        .agg(count(lit(1)).as("component_size"),
-          (countDistinct(col("split")) > 1).as("cluster_is_leaky"),
-          (countDistinct(col("naive_split")) > 1).as("naive_is_leaky"))
-      sp.join(cs, Seq("component"))
-        .select(col("doc_id"), col("component"), col("sample_bucket"),
-          col("split"), col("naive_split"), col("component_size"),
-          col("cluster_is_leaky"), col("naive_is_leaky"),
-          lit(bits).cast("long").as("band_bits"))
-        .orderBy("doc_id")
-    }
+  val tLeakageSafeSplit: Q = Q.sql(
+    "t_leakage_safe_split",
+    s"""WITH RECURSIVE t AS (
+      |  SELECT doc_id, $toksSql AS toks FROM documents
+      |), $tokCte, ${simhashCtes(64)}, ${cappedReachCtes(512, "t")}, $componentCte, hashed AS (
+      |  SELECT doc_id, component,
+      |    md5('split14|' || CAST(component AS VARCHAR)) AS ch,
+      |    md5('split14|' || CAST(doc_id AS VARCHAR)) AS nh
+      |  FROM comp
+      |), b AS (
+      |  SELECT doc_id, component,
+      |    CAST(${TA.hex6Expr("ch")} % 100 AS BIGINT) AS sample_bucket,
+      |    CAST(${TA.hex6Expr("nh")} % 100 AS BIGINT) AS naive_bucket
+      |  FROM hashed
+      |), sp AS (
+      |  SELECT doc_id, component, sample_bucket,
+      |    CASE WHEN sample_bucket < 80 THEN 'train'
+      |         WHEN sample_bucket < 90 THEN 'val'
+      |         ELSE 'test' END AS split,
+      |    CASE WHEN naive_bucket < 80 THEN 'train'
+      |         WHEN naive_bucket < 90 THEN 'val'
+      |         ELSE 'test' END AS naive_split
+      |  FROM b
+      |), cs AS (
+      |  SELECT component, CAST(COUNT(*) AS BIGINT) AS component_size,
+      |    COUNT(DISTINCT split) > 1 AS cluster_is_leaky,
+      |    COUNT(DISTINCT naive_split) > 1 AS naive_is_leaky
+      |  FROM sp GROUP BY component
+      |)
+      |SELECT sp.doc_id, sp.component, sp.sample_bucket, sp.split,
+      |  sp.naive_split, cs.component_size, cs.cluster_is_leaky,
+      |  cs.naive_is_leaky, CAST(64 AS BIGINT) AS band_bits
+      |FROM sp JOIN cs USING (component)
+      |ORDER BY sp.doc_id""".stripMargin) { (s, d) =>
+    val docs = Tables.documents(s, d)
+    val tokenRows = docs.select(col("doc_id"),
+      explode(TA.tokens(col("text"))).as("token"))
+    // autoBandPolicy width + twin-replayed DefaultBucketCap, gated
+    // via band_bits — see dd_cluster_canonical (identical r16
+    // migration; this is the consumer where band saturation
+    // silently under-merges = LEAKS, so the policy matters most).
+    // Sizing count memoized per dir (r16 ADVICE, knownN pattern).
+    val bits = Dedup.autoBandPolicy(Tables.documentsCount(s, d))
+    val pairs = Dedup.simhashNearDups(
+      Dedup.simhashFromTokens(tokenRows, bits), bits = bits)
+    val cc = Dedup.nearDupLabels(
+      docs.select(col("doc_id").as("id")),
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+    val sp = TA.leakageSafeSplit(cc, seed = "split14",
+        valPct = 10, testPct = 10)
+      .withColumn("nh",
+        md5(concat(lit("split14|"), col("doc_id").cast("string"))))
+      .withColumn("naive_bucket", expr(s"${TA.hex6Expr("nh")} % 100L"))
+      .withColumn("naive_split",
+        when(col("naive_bucket") < 80, "train")
+          .when(col("naive_bucket") < 90, "val")
+          .otherwise("test"))
+    val cs = sp.groupBy(col("component"))
+      .agg(count(lit(1)).as("component_size"),
+        (countDistinct(col("split")) > 1).as("cluster_is_leaky"),
+        (countDistinct(col("naive_split")) > 1).as("naive_is_leaky"))
+    sp.join(cs, Seq("component"))
+      .select(col("doc_id"), col("component"), col("sample_bucket"),
+        col("split"), col("naive_split"), col("component_size"),
+        col("cluster_is_leaky"), col("naive_is_leaky"),
+        lit(bits).cast("long").as("band_bits"))
+      .orderBy("doc_id")
   }
 
   /** SHARDED TOP-K HEAVY HITTERS through the REAL
@@ -5258,16 +4571,7 @@ object LlmQueries {
     * global window runs over ≤ 2,400 candidate rows. */
   val tTopkShardedVerified: Q = Q.sql(
     "t_topk_sharded_verified",
-    s"""WITH t AS (
-      |  SELECT doc_id, $toksSql AS toks FROM documents
-      |), p AS (
-      |  SELECT doc_id,
-      |    unnest(list_transform(generate_series(1, len(toks) - 1),
-      |      i -> toks[i])) AS w1,
-      |    unnest(list_transform(generate_series(1, len(toks) - 1),
-      |      i -> toks[i+1])) AS w2
-      |  FROM t
-      |), tok AS (
+    s"""WITH $bigramCtes, tok AS (
       |  SELECT doc_id % 8 AS shard, w1 || ' ' || w2 AS token FROM p
       |), sc AS (
       |  SELECT shard, token, CAST(COUNT(*) AS BIGINT) AS cnt

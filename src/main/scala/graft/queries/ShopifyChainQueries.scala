@@ -27,6 +27,20 @@ import graft.ref.Shopify
   */
 object ShopifyChainQueries {
 
+  /** `src`: the synthetic Shopify order attributes (source, discounts,
+    * utm source, referrer) derived from each order key. */
+  private val shopifySrcCte: String =
+    """src AS (
+      |  SELECT o_orderkey,
+      |    CASE WHEN o_orderkey % 2 = 0 THEN 'web' ELSE 'pos' END AS source_name,
+      |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice * 0.01 ELSE 0.0 END AS total_discounts,
+      |    CASE WHEN o_orderkey % 4 = 0 THEN 'google_ads' END AS utm_source,
+      |    CASE WHEN o_orderkey % 5 = 0 THEN 'https://www.google.com/search'
+      |         WHEN o_orderkey % 5 = 1 THEN 'https://partner.example.com/link'
+      |         END AS referrer
+      |  FROM orders
+      |)""".stripMargin
+
   /** P15/A5/J9 — raw fulfillments (child rows with `_dlt_parent_id`)
     * staged at row grain via the REAL `orderFulfillments` (optional
     * tracking columns included), collapsed to order grain and joined
@@ -35,7 +49,7 @@ object ShopifyChainQueries {
     * (orders with no fulfillment rows). */
   val a5FulfillmentChain: Q = Q.sql(
     "a5_fulfillment_collapse_chain",
-    """WITH raw_f AS (
+    s"""WITH raw_f AS (
       |  SELECT l_orderkey * 10 + l_linenumber AS id,
       |    l_orderkey,
       |    CASE WHEN l_linestatus = 'F' THEN 'success' ELSE 'pending' END AS status,
@@ -55,16 +69,7 @@ object ShopifyChainQueries {
       |    MAX(tracking_company) AS tracking_company,
       |    MAX(fulfilled_ts) AS fulfilled_at
       |  FROM raw_f GROUP BY l_orderkey
-      |), src AS (
-      |  SELECT o_orderkey,
-      |    CASE WHEN o_orderkey % 2 = 0 THEN 'web' ELSE 'pos' END AS source_name,
-      |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice * 0.01 ELSE 0.0 END AS total_discounts,
-      |    CASE WHEN o_orderkey % 4 = 0 THEN 'google_ads' END AS utm_source,
-      |    CASE WHEN o_orderkey % 5 = 0 THEN 'https://www.google.com/search'
-      |         WHEN o_orderkey % 5 = 1 THEN 'https://partner.example.com/link'
-      |         END AS referrer
-      |  FROM orders
-      |)
+      |), $shopifySrcCte
       |SELECT s.o_orderkey AS shopify_order_id,
       |  c.fulfillment_latest_status, c.tracking_number, c.tracking_company,
       |  CAST(c.fulfilled_at AS VARCHAR) AS fulfilled_at,
@@ -222,16 +227,7 @@ object ShopifyChainQueries {
     * an oracle that hard-codes the degraded columns. */
   val j4ExistenceGuard: Q = Q.sql(
     "j4_existence_guard",
-    """WITH src AS (
-      |  SELECT o_orderkey,
-      |    CASE WHEN o_orderkey % 2 = 0 THEN 'web' ELSE 'pos' END AS source_name,
-      |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice * 0.01 ELSE 0.0 END AS total_discounts,
-      |    CASE WHEN o_orderkey % 4 = 0 THEN 'google_ads' END AS utm_source,
-      |    CASE WHEN o_orderkey % 5 = 0 THEN 'https://www.google.com/search'
-      |         WHEN o_orderkey % 5 = 1 THEN 'https://partner.example.com/link'
-      |         END AS referrer
-      |  FROM orders
-      |)
+    s"""WITH $shopifySrcCte
       |SELECT o_orderkey AS shopify_order_id,
       |  CAST(NULL AS VARCHAR) AS fulfillment_latest_status,
       |  CAST(NULL AS VARCHAR) AS tracking_number,

@@ -190,6 +190,16 @@ object StreamingQueries {
       .orderBy("user_tier")
   }
 
+  /** The two sides of the interval joins: `clicks` and `purchases`
+    * from `events`. */
+  private val clickPurchaseCtes: String =
+    """clicks AS (
+      |  SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'
+      |), purchases AS (
+      |  SELECT user_id, event_id, ts, value FROM events
+      |  WHERE event_type = 'purchase'
+      |)""".stripMargin
+
   /** Batch twin of the STREAM-STREAM interval join
     * (EventStream.intervalJoin, run here on batch frames where
     * withWatermark is a no-op — the REAL function under the gate):
@@ -200,12 +210,7 @@ object StreamingQueries {
     * integer-micros lag). */
   val stIntervalJoin: Q = Q.sql(
     "st_interval_join",
-    """WITH clicks AS (
-      |  SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'
-      |), purchases AS (
-      |  SELECT user_id, event_id, ts, value FROM events
-      |  WHERE event_type = 'purchase'
-      |)
+    s"""WITH $clickPurchaseCtes
       |SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
       |  CAST(DATE_TRUNC('second', c.ts) AS VARCHAR) AS click_ts,
       |  CAST(DATE_TRUNC('second', p.ts) AS VARCHAR) AS purchase_ts,
@@ -242,12 +247,7 @@ object StreamingQueries {
     * emitted so the hash gate pins exactly WHICH clicks converted. */
   val stIntervalJoinOuter: Q = Q.sql(
     "st_interval_join_outer",
-    """WITH clicks AS (
-      |  SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'
-      |), purchases AS (
-      |  SELECT user_id, event_id, ts, value FROM events
-      |  WHERE event_type = 'purchase'
-      |)
+    s"""WITH $clickPurchaseCtes
       |SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
       |  CAST(DATE_TRUNC('second', c.ts) AS VARCHAR) AS click_ts,
       |  CAST(epoch_us(p.ts) - epoch_us(c.ts) AS BIGINT) AS lag_us,
@@ -348,6 +348,24 @@ object StreamingQueries {
       .orderBy("user_id")
   }
 
+  /** Sessionized `events` in integer micros: `flagged` marks each
+    * user's first event and every event 30 minutes or more after the
+    * previous one, `sess` numbers the sessions per user (`session_id`). */
+  private val sessionCtes: String =
+    """flagged AS (
+      |  SELECT user_id, event_id, ts, value,
+      |    CASE WHEN LAG(ts) OVER w IS NULL THEN 1
+      |         WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER w)
+      |              >= 1800000000 THEN 1
+      |         ELSE 0 END AS new_session
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+      |), sess AS (
+      |  SELECT *, SUM(new_session) OVER (PARTITION BY user_id
+      |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
+      |  FROM flagged
+      |)""".stripMargin
+
   /** The REAL transformWithState EVENT-TIME-TIMER processor under the
     * batch oracle gate ([[graft.streaming.EventStream.timerSessions]]):
     * gap sessionization where session CLOSE is watermark-driven — one
@@ -364,19 +382,7 @@ object StreamingQueries {
     * both (state clears on close). */
   val stSessionTimers: Q = Q.sql(
     "st_session_timers",
-    """WITH flagged AS (
-      |  SELECT user_id, event_id, ts, value,
-      |    CASE WHEN LAG(ts) OVER w IS NULL THEN 1
-      |         WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER w)
-      |              >= 1800000000 THEN 1
-      |         ELSE 0 END AS new_session
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      |), sess AS (
-      |  SELECT *, SUM(new_session) OVER (PARTITION BY user_id
-      |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-      |  FROM flagged
-      |)
+    s"""WITH $sessionCtes
       |SELECT user_id,
       |  CAST(MIN(epoch_us(ts)) AS BIGINT) AS session_start_us,
       |  CAST(MAX(epoch_us(ts)) AS BIGINT) AS session_end_us,
@@ -469,19 +475,7 @@ object StreamingQueries {
     * implements incrementally. */
   val w12NativeSession: Q = Q.sql(
     "w12_native_session",
-    """WITH flagged AS (
-      |  SELECT user_id, event_id, ts, value,
-      |    CASE WHEN LAG(ts) OVER w IS NULL THEN 1
-      |         WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER w)
-      |              >= 1800000000 THEN 1
-      |         ELSE 0 END AS new_session
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      |), sess AS (
-      |  SELECT *, SUM(new_session) OVER (PARTITION BY user_id
-      |    ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-      |  FROM flagged
-      |)
+    s"""WITH $sessionCtes
       |SELECT user_id,
       |  CAST(MIN(epoch_us(ts)) AS BIGINT) AS session_start_us,
       |  CAST(MAX(epoch_us(ts)) + 1800000000 AS BIGINT) AS session_end_us,

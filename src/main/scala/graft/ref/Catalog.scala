@@ -234,33 +234,24 @@ final class Catalog(val spark: SparkSession, val root: String,
     * Returns the committed snapshot and the observed check results. */
   def saveTableObserved(layer: String, name: String, df: DataFrame,
                         notNullCols: Seq[String])
-      : (DataFrame, Seq[graft.quality.Checks.Result]) =
-      timed(layer, name) {
-    // Fingerprint the RAW frame, not the instrumented one: on a
-    // skip-unchanged hit no action ever runs on the observed plan, and
-    // Observation.get would block the run forever (r12 ADVICE). A skip
-    // serves the committed snapshot with explicitly-'skipped' results
-    // (pass=0 failures — the metrics were green when the version was
-    // committed; nothing about the table changed since).
-    val p = path(layer, name)
-    recordDeps(layer, name, df)
-    val (key, hit) = fingerprintHit(p, df)
-    if (hit) {
-      skippedSet(s"$layer.$name") = true
-      val skippedResults = graft.quality.Checks.Result(
-        "non_empty_observed(skipped)", name, 0L) +:
-        notNullCols.map(c => graft.quality.Checks.Result(
-          s"not_null_observed($c)(skipped)", name, 0L))
-      recordCommit(p)
-      (AtomicTable.read(spark, p).get, skippedResults)
-    } else {
-      val pending = graft.quality.Observed.instrument(df, name, notNullCols)
-      val v = AtomicTable.nextVersion(spark, p)
-      AtomicTable.commit(pending.df, p, v)
-      key.foreach(recordFp(p, v, _))
-      recordCommit(p)
-      (AtomicTable.read(spark, p).get, pending.results())
+      : (DataFrame, Seq[graft.quality.Checks.Result]) = {
+    // Instrument inside the commit only: the skip check fingerprints the
+    // RAW frame, and on a skip-unchanged hit no action ever runs on an
+    // observed plan, so Observation.get would block the run forever
+    // (r12 ADVICE). A skip serves the committed snapshot with
+    // explicitly-'skipped' results (0 violations — the metrics were
+    // green when the version was committed; nothing changed since).
+    var pending: Option[graft.quality.Observed.Pending] = None
+    val out = commitUnlessUnchanged(layer, name, df) { v =>
+      val obs = graft.quality.Observed.instrument(df, name, notNullCols)
+      AtomicTable.commit(obs.df, path(layer, name), v)
+      pending = Some(obs)
     }
+    val results = pending.fold(
+      graft.quality.Checks.Result("non_empty_observed(skipped)", name, 0L) +:
+        notNullCols.map(c => graft.quality.Checks.Result(
+          s"not_null_observed($c)(skipped)", name, 0L)))(_.results())
+    (out, results)
   }
 
   /** `materialized='table'` with HIVE-PARTITIONED layout: rows land in

@@ -4,6 +4,29 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.Steal
 
+/** SHA-256 of every oracle SQL string in [[SparkEntry.oracleSql]], as
+  * `name hash` lines sorted by name: the committed content of
+  * `src/test/resources/oracle_sql.sha256`. A deliberate oracle change
+  * rewrites that file with `sbt "Test/runMain graft.OracleSqlDigest"`
+  * in the same commit. */
+object OracleSqlDigest {
+  val resource = "oracle_sql.sha256"
+
+  def lines: Seq[String] = SparkEntry.oracleSql.toSeq.sorted.map {
+    case (name, sql) =>
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      val hex = md.digest(sql.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .map(b => f"${b & 0xff}%02x").mkString
+      s"$name $hex"
+  }
+
+  def main(args: Array[String]): Unit = {
+    val out = java.nio.file.Paths.get("src/test/resources", resource)
+    java.nio.file.Files.writeString(out, lines.mkString("", "\n", "\n"))
+    println(s"wrote ${lines.size} digests to $out")
+  }
+}
+
 /** Quietness-evidence plumbing (r19 VERDICT task #6): /proc/stat
   * parsing, window pct math, and the floor-commit REFUSAL verdict
   * Bench applies before overwriting bench/BENCH.json, plus a guard that
@@ -83,5 +106,29 @@ class BenchInfraSpec extends AnyFunSuite {
       }
     }
     assert(missing.isEmpty, s"docs name mains that do not exist: $missing")
+  }
+
+  test("oracle SQL is byte-stable: every query's text matches its committed digest") {
+    val in = getClass.getResourceAsStream(s"/${OracleSqlDigest.resource}")
+    assert(in != null, s"missing test resource ${OracleSqlDigest.resource}")
+    val committed =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .filter(_.nonEmpty).map { l =>
+          val Array(name, hash) = l.split(" ", 2); name -> hash }.toMap
+      finally in.close()
+    val current = OracleSqlDigest.lines.map { l =>
+      val Array(name, hash) = l.split(" ", 2); name -> hash }.toMap
+    val changed = (committed.keySet ++ current.keySet).toSeq.sorted.flatMap {
+      n => (committed.get(n), current.get(n)) match {
+        case (Some(a), Some(b)) if a == b => None
+        case (Some(_), Some(_)) => Some(s"$n: text changed")
+        case (None, _) => Some(s"$n: appeared")
+        case (_, None) => Some(s"$n: disappeared")
+      }
+    }
+    if (changed.nonEmpty)
+      fail(s"oracle SQL differs from ${OracleSqlDigest.resource} (a " +
+        "deliberate change regenerates it with OracleSqlDigest.main):\n  " +
+        changed.mkString("\n  "))
   }
 }

@@ -144,6 +144,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("saveTableObserved: metrics ride the commit write, no extra action needed") {
+    import graft.operators.AtomicTable
     import graft.ref.Catalog
     val root = Files.createTempDirectory("cat_obs").toString
     val cat = new Catalog(spark, root)
@@ -158,6 +159,26 @@ class IngestSpec extends SparkSpec {
     assert(byCheck("not_null_observed(id)") == 0L)
     assert(byCheck("not_null_observed(maybe)") == 2L)
     assert(out.count() == 3L)
+
+    // skip-unchanged hit: the same frame again serves the committed
+    // version with the (skipped) results and never reads an Observation
+    // (which would block forever), so the second call is time-bounded
+    val skipCat = new Catalog(spark, root, skipUnchanged = true)
+    skipCat.saveTableObserved("mart", "obs_s", df, Seq("id", "maybe"))
+    val versions = AtomicTable.committedVersions(spark, s"$root/mart/obs_s")
+    val again = scala.concurrent.Future(
+      skipCat.saveTableObserved("mart", "obs_s", df, Seq("id", "maybe")))(
+      scala.concurrent.ExecutionContext.global)
+    val (served, skipped) = scala.concurrent.Await.result(again,
+      scala.concurrent.duration.Duration(120, "s"))
+    assert(skipCat.skipped == Seq("mart.obs_s"))
+    assert(skipped.map(r => r.check -> r.violations) == Seq(
+      "non_empty_observed(skipped)" -> 0L,
+      "not_null_observed(id)(skipped)" -> 0L,
+      "not_null_observed(maybe)(skipped)" -> 0L))
+    assert(AtomicTable.committedVersions(spark, s"$root/mart/obs_s") ==
+      versions, "a skip commits no new version")
+    assert(served.count() == 3L)
   }
 
   test("xlsx: discover finds the workbook, both sheets decode with typed cells") {

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Code-only line counts for the Scala sources.
 
-Usage: python3 tools/loc.py [repo_root] [--files]
+Usage: python3 tools/loc.py [repo_root] [--files] [--dups]
 
 Counts lines that carry code: blank lines, `//` line comments and
 `/* ... */` block comments (scaladoc included, nesting honoured) do not
@@ -11,16 +11,30 @@ one row per `graft.*` package (the first directory under `graft/`, or
 `graft` for top-level files) with code and raw (`wc -l`) lines, then
 totals for src/main and src/test. `--files` adds one row per file.
 Deleting comments does not reduce the code figure; deleting code does.
+
+`--dups` reports, per package of src/main, the code lines that lie
+inside a window of 6 consecutive code lines (each stripped of leading
+and trailing whitespace) that appears at least twice anywhere in
+src/main: a measure of copied text, for finding what to share.
 """
+import collections
 import os
 import sys
 
 
+DUP_WINDOW = 6
+
+
 def code_lines(text):
     """Number of lines in `text` that hold code outside comments."""
+    return sum(code_line_flags(text))
+
+
+def code_line_flags(text):
+    """Per line of `text`, whether it holds code outside comments."""
+    flags = []
     depth = 0          # block-comment nesting depth
     in_triple = False  # inside a """...""" literal
-    count = 0
     for line in text.split("\n"):
         has_code = False
         i, n = 0, len(line)
@@ -64,9 +78,8 @@ def code_lines(text):
                 if not line[i].isspace():
                     has_code = True
                 i += 1
-        if has_code:
-            count += 1
-    return count
+        flags.append(has_code)
+    return flags
 
 
 def package_of(rel):
@@ -77,43 +90,73 @@ def package_of(rel):
     return "graft" if len(rest) == 1 else "graft." + rest[0]
 
 
-def scan(root):
-    """{file: (code, raw)} for every .scala file under `root`."""
+def read_all(root):
+    """{relative path: text} for every .scala file under `root`."""
     out = {}
     for d, _, files in os.walk(root):
         for f in sorted(files):
             if f.endswith(".scala"):
                 p = os.path.join(d, f)
                 with open(p, encoding="utf-8") as fh:
-                    text = fh.read()
-                raw = text.count("\n")
-                out[os.path.relpath(p, root)] = (code_lines(text), raw)
+                    out[os.path.relpath(p, root)] = fh.read()
     return out
+
+
+def scan(root):
+    """{file: (code, raw)} for every .scala file under `root`."""
+    return {rel: (code_lines(text), text.count("\n"))
+            for rel, text in read_all(root).items()}
+
+
+def dups(root):
+    """{file: (duplicated code lines, code lines)} for `root`."""
+    seqs = {rel: [ln.strip() for ln, c in
+                  zip(text.split("\n"), code_line_flags(text)) if c]
+            for rel, text in read_all(root).items()}
+    windows = collections.Counter(
+        tuple(seq[i:i + DUP_WINDOW]) for seq in seqs.values()
+        for i in range(len(seq) - DUP_WINDOW + 1))
+    out = {}
+    for rel, seq in seqs.items():
+        dup = [False] * len(seq)
+        for i in range(len(seq) - DUP_WINDOW + 1):
+            if windows[tuple(seq[i:i + DUP_WINDOW])] > 1:
+                dup[i:i + DUP_WINDOW] = [True] * DUP_WINDOW
+        out[rel] = (sum(dup), len(seq))
+    return out
+
+
+def report(files, per_file):
+    """Print {file: (a, b)} summed per package, then the total."""
+    pkgs = {}
+    for rel, (a, b) in files.items():
+        pa, pb = pkgs.get(package_of(rel), (0, 0))
+        pkgs[package_of(rel)] = (pa + a, pb + b)
+    for pkg in sorted(pkgs):
+        a, b = pkgs[pkg]
+        print(f"  {pkg:32s} {a:7d} {b:7d}")
+        if per_file:
+            for rel in sorted(files):
+                if package_of(rel) == pkg:
+                    fa, fb = files[rel]
+                    print(f"    {os.path.basename(rel):30s} {fa:7d} {fb:7d}")
+    print(f"  {'total':32s} {sum(a for a, _ in files.values()):7d} "
+          f"{sum(b for _, b in files.values()):7d}")
 
 
 def main(argv):
     args = [a for a in argv if not a.startswith("--")]
     repo = args[0] if args else os.path.join(os.path.dirname(__file__), "..")
     per_file = "--files" in argv
+    if "--dups" in argv:
+        files = dups(os.path.join(repo, "src", "main", "scala"))
+        print(f"src/main{'':26s} {'dup':>7s} {'code':>7s}")
+        report(files, per_file)
+        return
     for tree in ("main", "test"):
         root = os.path.join(repo, "src", tree, "scala")
-        files = scan(root)
-        pkgs = {}
-        for rel, (c, r) in files.items():
-            pc, pr = pkgs.get(package_of(rel), (0, 0))
-            pkgs[package_of(rel)] = (pc + c, pr + r)
         print(f"src/{tree}{'':26s} {'code':>7s} {'raw':>7s}")
-        for pkg in sorted(pkgs):
-            c, r = pkgs[pkg]
-            print(f"  {pkg:32s} {c:7d} {r:7d}")
-            if per_file:
-                for rel in sorted(files):
-                    if package_of(rel) == pkg:
-                        fc, fr = files[rel]
-                        print(f"    {os.path.basename(rel):30s} {fc:7d} {fr:7d}")
-        tc = sum(c for c, _ in files.values())
-        tr = sum(r for _, r in files.values())
-        print(f"  {'total':32s} {tc:7d} {tr:7d}")
+        report(scan(root), per_file)
 
 
 if __name__ == "__main__":
