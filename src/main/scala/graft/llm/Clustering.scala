@@ -479,17 +479,8 @@ object Clustering {
              idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
     val base = emb.select(col(idCol).as("vec_id"), col(vecCol).as("emb"))
-    val subRows = (0 until mSub).map { m =>
-      quantRows(base.select(col("vec_id"),
-        slice(col("emb"), m * subDim + 1, subDim).as("emb")),
-        idCol = "vec_id", vecCol = "emb")
-    }
-    val codebooks = subRows.map(r => train(spark, r, stride, iters))
-    val codes = subRows.lazyZip(codebooks).lazyZip(0 until mSub).map {
-      (r, cb, m) =>
-        assign(r, cb).select(col("vec_id"), lit(m).as("sub"),
-          col("cid").as("code"))
-    }.reduce(_ unionByName _)
+    val subRows = subspaceRows(base, mSub, subDim)
+    val (codebooks, codes) = trainEncode(spark, subRows, stride, iters)
     val qids = base.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("query_id"))
     val lut = subRows.lazyZip(codebooks).lazyZip(0 until mSub).map {
@@ -508,12 +499,40 @@ object Clustering {
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("d")).cast("long").as("approx_dist"))
+    flagAgainstExact(rankTopK(approx, k), base, qids, k)
+  }
+
+  /** Quantized (vec_id, pos, qv) rows of each of the `mSub` `subDim`-wide
+    * slices of `base`'s (vec_id, emb) vectors. */
+  private def subspaceRows(base: DataFrame, mSub: Int,
+                           subDim: Int): Seq[DataFrame] =
+    (0 until mSub).map { m =>
+      quantRows(base.select(col("vec_id"),
+        slice(col("emb"), m * subDim + 1, subDim).as("emb")),
+        idCol = "vec_id", vecCol = "emb")
+    }
+
+  /** One codebook per subspace row set in `subRows` (same [[train]]
+    * loop) and every vector's codes (vec_id, sub, code) under them. */
+  private def trainEncode(spark: SparkSession, subRows: Seq[DataFrame],
+                          stride: Int,
+                          iters: Int): (Seq[DataFrame], DataFrame) = {
+    val codebooks = subRows.map(r => train(spark, r, stride, iters))
+    val codes = subRows.lazyZip(codebooks).lazyZip(subRows.indices).map {
+      (r, cb, m) =>
+        assign(r, cb).select(col("vec_id"), lit(m).as("sub"),
+          col("cid").as("code"))
+    }.reduce(_ unionByName _)
+    (codebooks, codes)
+  }
+
+  /** The `k` smallest `approx_dist` candidates per query (ties by
+    * vec_id), numbered 1..k in `rank`. */
+  private def rankTopK(approx: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("approx_dist"), col("vec_id"))
-    val ranked = approx
-      .withColumn("rank", row_number().over(w).cast("long"))
+    approx.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-    flagAgainstExact(ranked, base, qids, k)
   }
 
   /** Exact full-dimension integer top-`k` per query, joined onto the
@@ -593,17 +612,15 @@ object Clustering {
                               codebooks: Seq[DataFrame], codes: DataFrame,
                               mSub: Int, subDim: Int)
 
-  /** Train coarse router + per-subspace PQ codebooks and encode the
-    * corpus: cells-∝-√n policy ([[autoCoarsePolicy]]) with
-    * capped-sample training unless `coarseStride` overrides; pass
-    * `knownN` to skip the sizing count(). */
-  def ivfPqBuild(spark: SparkSession, emb: DataFrame,
-                 coarseStride: Int = 0, mSub: Int = 4, subDim: Int = 16,
-                 stride: Int = 100, iters: Int = 2,
-                 idCol: String = "vec_id",
-                 vecCol: String = "embedding",
-                 knownN: Long = -1L): IvfPqIndex = {
-    val base = emb.select(col(idCol).as("vec_id"), col(vecCol).as("emb"))
+  /** The coarse half of an IVF-PQ build: `gRows` are the quantized
+    * (vec_id, pos, qv) rows, `coarseCb` the trained router and `cells`
+    * each vector's (vec_id, cell). */
+  private final case class Coarse(gRows: DataFrame, coarseCb: DataFrame,
+                                  cells: DataFrame)
+
+  private def coarseBuild(spark: SparkSession, base: DataFrame,
+                          coarseStride: Int, iters: Int,
+                          knownN: Long): Coarse = {
     val gRows = quantRows(base, idCol = "vec_id", vecCol = "emb")
     // A caller-chosen CONSTANT cell count is the measured quadratic
     // (ScaleBench ivfpq_fixed_stride α_bytes 1.92), and full-corpus
@@ -619,19 +636,25 @@ object Clustering {
         (stride0, gRows.filter(col("vec_id") % sampleMod === 0))
       }
     val coarseCb = train(spark, trainRows, cs, iters)
-    val cells = assign(gRows, coarseCb)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val subRows = (0 until mSub).map { m =>
-      quantRows(base.select(col("vec_id"),
-        slice(col("emb"), m * subDim + 1, subDim).as("emb")),
-        idCol = "vec_id", vecCol = "emb")
-    }
-    val codebooks = subRows.map(r => train(spark, r, stride, iters))
-    val codes = subRows.lazyZip(codebooks).lazyZip(0 until mSub).map {
-      (r, cb, m) =>
-        assign(r, cb).select(col("vec_id"), lit(m).as("sub"),
-          col("cid").as("code"))
-    }.reduce(_ unionByName _)
+    Coarse(gRows, coarseCb, assign(gRows, coarseCb)
+      .select(col("vec_id"), col("cid").as("cell")))
+  }
+
+  /** Train coarse router + per-subspace PQ codebooks and encode the
+    * corpus: cells-∝-√n policy ([[autoCoarsePolicy]]) with
+    * capped-sample training unless `coarseStride` overrides; pass
+    * `knownN` to skip the sizing count(). */
+  def ivfPqBuild(spark: SparkSession, emb: DataFrame,
+                 coarseStride: Int = 0, mSub: Int = 4, subDim: Int = 16,
+                 stride: Int = 100, iters: Int = 2,
+                 idCol: String = "vec_id",
+                 vecCol: String = "embedding",
+                 knownN: Long = -1L): IvfPqIndex = {
+    val base = emb.select(col(idCol).as("vec_id"), col(vecCol).as("emb"))
+    val Coarse(_, coarseCb, cells) =
+      coarseBuild(spark, base, coarseStride, iters, knownN)
+    val subRows = subspaceRows(base, mSub, subDim)
+    val (codebooks, codes) = trainEncode(spark, subRows, stride, iters)
     IvfPqIndex(coarseCb, cells, codebooks, codes, mSub, subDim)
   }
 
@@ -674,10 +697,7 @@ object Clustering {
         Seq("query_id", "sub", "code"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("d")).cast("long").as("approx_dist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_dist"), col("vec_id"))
-    approx.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    rankTopK(approx, k)
   }
 
   /** RESIDUAL IVF-PQ — what FAISS IndexIVFPQ actually encodes: the PQ
@@ -713,19 +733,8 @@ object Clustering {
                         vecCol: String = "embedding",
                         knownN: Long = -1L): DataFrame = {
     val base = emb.select(col(idCol).as("vec_id"), col(vecCol).as("emb"))
-    val gRows = quantRows(base, idCol = "vec_id", vecCol = "emb")
-    // cells-∝-√n + capped-sample training default, as in [[ivfPqTopK]]
-    // (pass `knownN` to skip the policy's sizing count(), ditto)
-    val (cs, trainRows) =
-      if (coarseStride > 0) (coarseStride, gRows)
-      else {
-        val (stride0, sampleMod) = autoCoarsePolicy(
-          if (knownN > 0) knownN else base.count())
-        (stride0, gRows.filter(col("vec_id") % sampleMod === 0))
-      }
-    val coarseCb = train(spark, trainRows, cs, iters)
-    val cells = assign(gRows, coarseCb)
-      .select(col("vec_id"), col("cid").as("cell"))
+    val Coarse(gRows, coarseCb, cells) =
+      coarseBuild(spark, base, coarseStride, iters, knownN)
     // residual rows, re-offset positive (see scaladoc)
     val cbByCell = coarseCb.select(col("cid").as("cell"), col("pos"),
       col("cv"))
@@ -741,12 +750,7 @@ object Clustering {
     val subRows = (0 until mSub).map { m =>
       rve.filter(col("pos") >= m * subDim && col("pos") < (m + 1) * subDim)
     }
-    val codebooks = subRows.map(r => train(spark, r, stride, iters))
-    val codes = subRows.lazyZip(codebooks).lazyZip(0 until mSub).map {
-      (r, cb, m) =>
-        assign(r, cb).select(col("vec_id"), lit(m).as("sub"),
-          col("cid").as("code"))
-    }.reduce(_ unionByName _)
+    val (codebooks, codes) = trainEncode(spark, subRows, stride, iters)
     val qids = base.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("query_id"))
     // probe routing (raw-space, as in ivfPqTopK)
@@ -778,11 +782,6 @@ object Clustering {
         Seq("query_id", "cell", "sub", "code"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("d")).cast("long").as("approx_dist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_dist"), col("vec_id"))
-    val ranked = approx
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-    flagAgainstExact(ranked, base, qids, k)
+    flagAgainstExact(rankTopK(approx, k), base, qids, k)
   }
 }

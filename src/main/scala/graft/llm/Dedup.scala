@@ -681,10 +681,10 @@ object Dedup {
     val edges = within
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(across)
-    // incrementalComponents, opened up so the contracted CC result can
-    // also derive the CHANGED-ROW delta (the full remap and the delta
-    // must come from ONE cc frame — CC is iterative, rerunning it for
-    // the delta would double the fold's dominant cost).
+    // incrementalComponents' merge, kept open so the contracted CC
+    // result also derives the CHANGED-ROW delta (the full remap and the
+    // delta must come from ONE cc frame — CC is iterative, rerunning it
+    // for the delta would double the fold's dominant cost).
     // Node ids from the CHECKPOINTED band rows, not from `newShard`
     // (r21): `newShard` is typically the simhash aggregation over the
     // shard's exploded tokens — the fold's expensive per-row term —
@@ -694,27 +694,9 @@ object Dedup {
     // emits every doc (4 band rows each, no filter), so the distinct
     // over the checkpoint is the same id set at the same doc grain.
     val newNodes = banded.select(col("doc_id").as("id")).distinct()
-    // materialized once (r20): contractedClosure's internal checkpoint
-    // re-ran the within+across probe lineage a second time without this
-    val contracted = edges
-      .join(committedLabels.select(col("id").as("src"),
-        col("component").as("src_l")), Seq("src"), "left")
-      .join(committedLabels.select(col("id").as("dst"),
-        col("component").as("dst_l")), Seq("dst"), "left")
-      .select(coalesce(col("src_l"), col("src")).as("src"),
-        coalesce(col("dst_l"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
-    val cc = contractedClosure(contracted)
-    val allLabels = committedLabels.unionByName(
-      newNodes.join(committedLabels, Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("component")))
-    val updated = allLabels
-      .join(cc.select(col("id").as("component"),
-        col("component").as("merged")), Seq("component"), "left")
-      .select(col("id"),
-        coalesce(col("merged"), col("component")).as("component"))
+    val merge = contractMerge(committedLabels, newNodes, edges)
+    val cc = merge.cc
+    val updated = merge.updated
     // Delta: old rows whose label actually moved (their old component
     // is a contracted node that merged to a different min) ∪ the new
     // shard's rows at their final labels. Disjoint by shard-disjointness.
@@ -730,12 +712,7 @@ object Dedup {
     // label and silently split committed clusters (r18 ADVICE). For a
     // genuinely new doc allLabels carries (id, id), so this reduces to
     // the cc-by-id lookup in the non-replay case.
-    val newRows = newNodes
-      .join(allLabels, Seq("id"))
-      .join(cc.select(col("id").as("component"),
-        col("component").as("merged")), Seq("component"), "left")
-      .select(col("id"),
-        coalesce(col("merged"), col("component")).as("component"))
+    val newRows = merge.remap(newNodes.join(merge.allLabels, Seq("id")))
     val labelsDelta = changedOld.unionByName(newRows)
     val newBandRows = banded.select(
       (col("doc_id") +: wordCols.map(col)) :+
@@ -1076,6 +1053,20 @@ object Dedup {
         coalesce(col("_ndl_c"), col("id")).as("component"))
   }
 
+  /** Near-duplicate component labels (id, component) of `docs`
+    * (doc_id, text), with the width [[autoBandPolicy]] picks for `nDocs`
+    * documents: tokens → [[simhashFromTokens]] → [[simhashNearDups]] →
+    * [[nearDupLabels]]. Returns the labels and that width. */
+  def autoNearDupLabels(docs: DataFrame, nDocs: Long): (DataFrame, Int) = {
+    val tokenRows = docs.select(col("doc_id"),
+      explode(TextAnalysis.tokens(col("text"))).as("token"))
+    val bits = autoBandPolicy(nDocs)
+    val pairs = simhashNearDups(simhashFromTokens(tokenRows, bits),
+      bits = bits)
+    (nearDupLabels(docs.select(col("doc_id").as("id")),
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))), bits)
+  }
+
   /** INCREMENTAL connected components — fold a batch of NEW nodes and
     * edges into committed component labels WITHOUT recomputing over the
     * corpus-scale graph. Near-dup discovery only ever ADDS edges
@@ -1099,7 +1090,26 @@ object Dedup {
     * `newEdges`: (src, dst), may touch old or new ids. Returns the
     * updated (id, component) covering old ∪ new nodes. */
   def incrementalComponents(labels: DataFrame, newNodes: DataFrame,
-                            newEdges: DataFrame): DataFrame = {
+                            newEdges: DataFrame): DataFrame =
+    contractMerge(labels, newNodes, newEdges).updated
+
+  /** The merge step shared by [[incrementalComponents]] and
+    * [[addShardNearDups]]: `allLabels` is the committed (id, component)
+    * table plus every unseen new node labelling itself, and `cc` the
+    * closure of the new edges contracted through those labels. */
+  private final case class ContractMerge(allLabels: DataFrame,
+                                         cc: DataFrame) {
+    /** (id, component) rows with each component remapped through `cc`. */
+    def remap(labels: DataFrame): DataFrame = labels
+      .join(cc.select(col("id").as("component"),
+        col("component").as("merged")), Seq("component"), "left")
+      .select(col("id"),
+        coalesce(col("merged"), col("component")).as("component"))
+    def updated: DataFrame = remap(allLabels)
+  }
+
+  private def contractMerge(labels: DataFrame, newNodes: DataFrame,
+                            newEdges: DataFrame): ContractMerge = {
     // contracted graph materialized once (r20) — the closure's internal
     // checkpoint re-ran the batch-edge + label-join lineage without it
     val contracted = newEdges
@@ -1113,14 +1123,9 @@ object Dedup {
       .distinct()
       .localCheckpoint(true)
     val cc = contractedClosure(contracted)
-    val allLabels = labels.unionByName(
+    ContractMerge(labels.unionByName(
       newNodes.join(labels, Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("component")))
-    allLabels
-      .join(cc.select(col("id").as("component"),
-        col("component").as("merged")), Seq("component"), "left")
-      .select(col("id"),
-        coalesce(col("merged"), col("component")).as("component"))
+        .select(col("id"), col("id").as("component"))), cc)
   }
 
   /** DUPLICATED-SUBSTRING SPAN COVERAGE — the exact-substring dedup
@@ -1147,16 +1152,7 @@ object Dedup {
     * nothing is quadratic in corpus size. */
   def dupSpanCoverage(docs: DataFrame, id: Column, text: Column,
                       k: Int): DataFrame = {
-    val tok = docs.select(id.as("doc_id"),
-      posexplode(TextAnalysis.tokens(text)).as(Seq("pos", "token")))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    // concat (not concat_ws) null-propagates: trailing positions with
-    // fewer than k-1 successors drop out via the isNotNull filter.
-    val parts = col("token") +: (1 until k).flatMap(j =>
-      Seq(lit(" "), lead(col("token"), j).over(w)))
-    val sh = tok.select(col("doc_id"), col("pos"),
-        md5(concat(parts: _*)).as("fp"))
-      .filter(col("fp").isNotNull)
+    val sh = kgramFingerprints(tokenPositions(docs, id, text), k)
     val shared = sh.groupBy(col("fp"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") > 1).select("fp")
@@ -1183,6 +1179,25 @@ object Dedup {
         coalesce(col("covered_tokens"), lit(0L)).as("covered_tokens"))
   }
 
+  /** (doc_id, pos, token) for every token of `text`. */
+  private def tokenPositions(docs: DataFrame, id: Column,
+                             text: Column): DataFrame =
+    docs.select(id.as("doc_id"),
+      posexplode(TextAnalysis.tokens(text)).as(Seq("pos", "token")))
+
+  /** (doc_id, pos, fp): md5 of the `k`-gram starting at each position of
+    * [[tokenPositions]] rows, the fingerprint stage of
+    * [[dupSpanCoverage]] and [[dupSpanRemoval]]. */
+  private def kgramFingerprints(tok: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    // concat (not concat_ws) null-propagates: trailing positions with
+    // fewer than k-1 successors drop out via the isNotNull filter.
+    val parts = col("token") +: (1 until k).flatMap(j =>
+      Seq(lit(" "), lead(col("token"), j).over(w)))
+    tok.select(col("doc_id"), col("pos"), md5(concat(parts: _*)).as("fp"))
+      .filter(col("fp").isNotNull)
+  }
+
   /** EXACT-SUBSTRING dedup — the DELETION half of the Lee et al.
     * discipline whose signal [[dupSpanCoverage]] measures: every k-gram
     * occurring in more than one document keeps its tokens only in the
@@ -1200,14 +1215,8 @@ object Dedup {
     * computed inside the same fp aggregate that finds shared grams. */
   def dupSpanRemoval(docs: DataFrame, id: Column, text: Column,
                      k: Int): DataFrame = {
-    val tok = docs.select(id.as("doc_id"),
-      posexplode(TextAnalysis.tokens(text)).as(Seq("pos", "token")))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val parts = col("token") +: (1 until k).flatMap(j =>
-      Seq(lit(" "), lead(col("token"), j).over(w)))
-    val sh = tok.select(col("doc_id"), col("pos"),
-        md5(concat(parts: _*)).as("fp"))
-      .filter(col("fp").isNotNull)
+    val tok = tokenPositions(docs, id, text)
+    val sh = kgramFingerprints(tok, k)
     val owners = sh.groupBy(col("fp"))
       .agg(countDistinct(col("doc_id")).as("nd"),
         min(col("doc_id")).as("owner"))

@@ -461,43 +461,57 @@ object Multimodal {
       rows.map { r =>
         val id = r.getLong(0)
         val b = r.getAs[Array[Byte]](1)
-        var p = 0
-        def readLine(): String = {
-          val start = p
-          while (p < b.length && b(p) != '\n') p += 1
-          val s = new String(b, start, p - start,
-            java.nio.charset.StandardCharsets.US_ASCII)
-          p += 1 // consume \n
-          s
-        }
-        val header = readLine()
-        require(header.startsWith("YUV4MPEG2 "),
-          s"doc $id: not a YUV4MPEG2 stream")
-        val tokens = header.split(' ').drop(1)
-          .map(t => t.head -> t.tail).toMap
-        val w = tokens('W').toInt
-        val h = tokens('H').toInt
-        val fpsNum = tokens('F').split(':')(0).toInt
-        val frameBytes = w * h + 2 * (w / 2) * (h / 2)
-        var frames = 0L
-        var lumaFirst = -1
+        val (v, frames) = parseY4m(id, b)
         var (lumaSum, chromaSum) = (0L, 0L)
-        while (p < b.length) {
-          require(readLine().startsWith("FRAME"),
-            s"doc $id: missing FRAME marker at offset $p")
-          require(p + frameBytes <= b.length,
-            s"doc $id: truncated frame $frames")
-          if (lumaFirst < 0) lumaFirst = b(p) & 0xff
+        for (p <- frames) {
           var i = 0
-          while (i < w * h) { lumaSum += (b(p + i) & 0xff); i += 1 }
-          while (i < frameBytes) { chromaSum += (b(p + i) & 0xff); i += 1 }
-          p += frameBytes
-          frames += 1
+          while (i < v.w * v.h) { lumaSum += (b(p + i) & 0xff); i += 1 }
+          while (i < v.frameBytes) { chromaSum += (b(p + i) & 0xff); i += 1 }
         }
-        Row(id, w, h, fpsNum, frames, lumaFirst, lumaSum, chromaSum)
+        val lumaFirst = frames.headOption.fold(-1)(b(_) & 0xff)
+        Row(id, v.w, v.h, v.fpsNum, frames.size.toLong, lumaFirst,
+          lumaSum, chromaSum)
       }
     }
     spark.createDataFrame(rdd, videoFeatureSchema)
+  }
+
+  /** The header fields of a YUV4MPEG2 C420 stream. */
+  private final case class Y4m(w: Int, h: Int, fpsNum: Int) {
+    def frameBytes: Int = w * h + 2 * (w / 2) * (h / 2)
+  }
+
+  /** The container walk of [[decodeVideo]] and [[decodeVideoFrameLuma]]:
+    * header tokens W/H/F, then one FRAME marker before each frame's
+    * planes. Returns the header and the byte offset of each frame's
+    * planes; fails fast on a malformed container. */
+  private def parseY4m(id: Long, b: Array[Byte]): (Y4m, IndexedSeq[Int]) = {
+    var p = 0
+    def readLine(): String = {
+      val start = p
+      while (p < b.length && b(p) != '\n') p += 1
+      val s = new String(b, start, p - start,
+        java.nio.charset.StandardCharsets.US_ASCII)
+      p += 1 // consume \n
+      s
+    }
+    val header = readLine()
+    require(header.startsWith("YUV4MPEG2 "),
+      s"doc $id: not a YUV4MPEG2 stream")
+    val tokens = header.split(' ').drop(1)
+      .map(t => t.head -> t.tail).toMap
+    val shape = Y4m(tokens('W').toInt, tokens('H').toInt,
+      tokens('F').split(':')(0).toInt)
+    val frames = scala.collection.mutable.ArrayBuffer.empty[Int]
+    while (p < b.length) {
+      require(readLine().startsWith("FRAME"),
+        s"doc $id: missing FRAME marker at offset $p")
+      require(p + shape.frameBytes <= b.length,
+        s"doc $id: truncated frame ${frames.size}")
+      frames += p
+      p += shape.frameBytes
+    }
+    (shape, frames.toIndexedSeq)
   }
 
   val videoFrameLumaSchema: StructType = StructType(Seq(
@@ -520,38 +534,13 @@ object Multimodal {
       rows.flatMap { r =>
         val id = r.getLong(0)
         val b = r.getAs[Array[Byte]](1)
-        var p = 0
-        def readLine(): String = {
-          val start = p
-          while (p < b.length && b(p) != '\n') p += 1
-          val s = new String(b, start, p - start,
-            java.nio.charset.StandardCharsets.US_ASCII)
-          p += 1
-          s
-        }
-        val header = readLine()
-        require(header.startsWith("YUV4MPEG2 "),
-          s"doc $id: not a YUV4MPEG2 stream")
-        val tokens = header.split(' ').drop(1)
-          .map(t => t.head -> t.tail).toMap
-        val w = tokens('W').toInt
-        val h = tokens('H').toInt
-        val frameBytes = w * h + 2 * (w / 2) * (h / 2)
-        val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-        var f = 0L
-        while (p < b.length) {
-          require(readLine().startsWith("FRAME"),
-            s"doc $id: missing FRAME marker at offset $p")
-          require(p + frameBytes <= b.length,
-            s"doc $id: truncated frame $f")
+        val (v, frames) = parseY4m(id, b)
+        frames.zipWithIndex.map { case (p, f) =>
           var lumaSum = 0L
           var i = 0
-          while (i < w * h) { lumaSum += (b(p + i) & 0xff); i += 1 }
-          p += frameBytes
-          out += Row(id, w, h, f, lumaSum)
-          f += 1
+          while (i < v.w * v.h) { lumaSum += (b(p + i) & 0xff); i += 1 }
+          Row(id, v.w, v.h, f.toLong, lumaSum)
         }
-        out
       }
     }
     spark.createDataFrame(rdd, videoFrameLumaSchema)
@@ -981,12 +970,18 @@ object Multimodal {
     val d = java.security.MessageDigest.getInstance("MD5")
     d.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
-  private[graft] def phGray(id: Long, x: Int, y: Int): Int = {
+  private[graft] def phGray(id: Long, x: Int, y: Int): Int =
+    gridGray(phW, id, x, y)
+
+  /** Gray of pixel (x, y) on a `w`×8 grid: md5 of the base image's
+    * coordinates, and a planted near-copy perturbs one pixel at
+    * (id % w, (id / w) % 8). */
+  private def gridGray(w: Int, id: Long, x: Int, y: Int): Int = {
     val b = phBase(id)
     val hv =
       java.lang.Integer.parseInt(md5Hex(s"ph|$b|$x|$y").substring(0, 6), 16)
     val g = hv % 251
-    if (id != b && x == (id % 9).toInt && y == ((id / 9) % 8).toInt)
+    if (id != b && x == (id % w).toInt && y == ((id / w) % 8).toInt)
       (g + 100) % 251
     else g
   }
@@ -1019,18 +1014,28 @@ object Multimodal {
 
   /** (doc_id, payload) with REAL PNG bytes for the perceptual-hash
     * family, synthesized per-partition. */
-  def asPhashImageTable(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
+  def asPhashImageTable(docs: DataFrame): DataFrame =
+    synthImageTable(docs, synthPhashPayload)
+
+  /** [[asPhashImageTable]] or [[asPhash128ImageTable]] of `docs`, for
+    * hash width `bits` (64 or 128). */
+  def phashImageTable(docs: DataFrame)(bits: Int): DataFrame =
+    if (bits == 64) asPhashImageTable(docs) else asPhash128ImageTable(docs)
+
+  /** (doc_id, payload) with `payload(doc_id)` bytes, synthesized
+    * per-partition. */
+  private def synthImageTable(docs: DataFrame,
+                              payload: Long => Array[Byte]): DataFrame = {
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("payload", BinaryType)))
     val rdd = docs.select("doc_id").rdd.mapPartitions { rows =>
       rows.map { r =>
         val id = r.getLong(0)
-        Row(id, synthPhashPayload(id))
+        Row(id, payload(id))
       }
     }
-    spark.createDataFrame(rdd, schema)
+    docs.sparkSession.createDataFrame(rdd, schema)
   }
 
   val dhashSchema: StructType = StructType(Seq(
@@ -1045,35 +1050,41 @@ object Multimodal {
     * image near-dup fingerprint; its canonical downsample size IS 9×8,
     * so for this family the resize stage is the identity and the
     * decode is the real codec boundary. */
-  def dHash64(images: DataFrame): DataFrame = {
-    val spark = images.sparkSession
+  def dHash64(images: DataFrame): DataFrame =
+    dHashTable(images, phW, "phash", dhashSchema)
+
+  /** dHash of each decoded `w`×8 PNG payload in `images` as (doc_id, then
+    * its 32-bit words): bit row·(w−1) + c is [gray(c+1, row) > gray(c,
+    * row)], packed low bit first. */
+  private def dHashTable(images: DataFrame, w: Int, family: String,
+                         schema: StructType): DataFrame = {
     val rdd = images.select("doc_id", "payload").rdd.mapPartitions { rows =>
       javax.imageio.ImageIO.setUseCache(false)
       rows.map { r =>
         val id = r.getLong(0)
         val img = javax.imageio.ImageIO.read(
           new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(img != null && img.getWidth == phW && img.getHeight == phH,
-          s"bad phash payload for doc $id")
-        var lo = 0L; var hi = 0L
+        require(img != null && img.getWidth == w && img.getHeight == phH,
+          s"bad $family payload for doc $id")
+        val words = new Array[Long]((w - 1) * phH / 32)
         var row = 0
         while (row < phH) {
           var c = 0
-          while (c < phW - 1) {
+          while (c < w - 1) {
             val a = img.getRGB(c, row) & 0xff
             val b = img.getRGB(c + 1, row) & 0xff
             if (b > a) {
-              val pos = row * 8 + c
-              if (pos < 32) lo |= 1L << pos else hi |= 1L << (pos - 32)
+              val pos = row * (w - 1) + c
+              words(pos >> 5) |= 1L << (pos & 31)
             }
             c += 1
           }
           row += 1
         }
-        Row(id, lo, hi)
+        Row.fromSeq(id +: words.toSeq)
       }
     }
-    spark.createDataFrame(rdd, dhashSchema)
+    images.sparkSession.createDataFrame(rdd, schema)
   }
 
   /** Banded Hamming near-dup pairing over 64-bit dHashes: 4×16-bit
@@ -1133,31 +1144,14 @@ object Multimodal {
   /** Same md5 gray spec as [[phGray]] over the wider grid; the planted
     * near-copy's single perturbed pixel moves to (id % 17, (id/17) % 8)
     * and still flips at most 2 of the 128 dHash bits. */
-  private[graft] def ph128Gray(id: Long, x: Int, y: Int): Int = {
-    val b = phBase(id)
-    val hv =
-      java.lang.Integer.parseInt(md5Hex(s"ph|$b|$x|$y").substring(0, 6), 16)
-    val g = hv % 251
-    if (id != b && x == (id % 17).toInt && y == ((id / 17) % 8).toInt)
-      (g + 100) % 251
-    else g
-  }
+  private[graft] def ph128Gray(id: Long, x: Int, y: Int): Int =
+    gridGray(ph128W, id, x, y)
 
   /** (doc_id, payload) with REAL 17×8 PNG bytes for the 128-bit
     * perceptual-hash family, synthesized per-partition. */
-  def asPhash128ImageTable(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("payload", BinaryType)))
-    val rdd = docs.select("doc_id").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        Row(id, synthGrayPng(ph128W, phH, ph128Gray(id, _, _)))
-      }
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+  def asPhash128ImageTable(docs: DataFrame): DataFrame =
+    synthImageTable(docs,
+      id => synthGrayPng(ph128W, phH, ph128Gray(id, _, _)))
 
   val dhash128Schema: StructType = StructType(
     StructField("doc_id", LongType) +:
@@ -1167,36 +1161,8 @@ object Multimodal {
     * [gray(c+1, r) > gray(c, r)] on the 17×8 grid, packed as four
     * 32-bit words (h0..h3) so every value stays in non-negative BIGINT
     * space in both engines. */
-  def dHash128(images: DataFrame): DataFrame = {
-    val spark = images.sparkSession
-    val rdd = images.select("doc_id", "payload").rdd.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val id = r.getLong(0)
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(img != null && img.getWidth == ph128W &&
-          img.getHeight == phH, s"bad phash128 payload for doc $id")
-        val words = new Array[Long](4)
-        var row = 0
-        while (row < phH) {
-          var c = 0
-          while (c < ph128W - 1) {
-            val a = img.getRGB(c, row) & 0xff
-            val b = img.getRGB(c + 1, row) & 0xff
-            if (b > a) {
-              val pos = row * 16 + c
-              words(pos >> 5) |= 1L << (pos & 31)
-            }
-            c += 1
-          }
-          row += 1
-        }
-        Row(id, words(0), words(1), words(2), words(3))
-      }
-    }
-    spark.createDataFrame(rdd, dhash128Schema)
-  }
+  def dHash128(images: DataFrame): DataFrame =
+    dHashTable(images, ph128W, "phash128", dhash128Schema)
 
   /** The 4×32-bit pigeonhole band rows of each 128-bit dHash — the
     * bands ARE the packed words: (doc_id, h0..h3, band, band_key).

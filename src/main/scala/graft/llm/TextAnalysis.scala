@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, language ID (marker-word heuristic), quality scoring,
@@ -157,8 +157,22 @@ object TextAnalysis {
   def stratifiedSplit(docs: DataFrame, id: Column, stratum: Column,
                       seed: String, valPct: Int,
                       testPct: Int): DataFrame =
-    docs.select(id.as("doc_id"), stratum.as("stratum"),
-        md5(concat(lit(seed), lit("|"), id.cast("string"))).as("split_hash"))
+    hashSplit(docs, Seq(id.as("doc_id"), stratum.as("stratum")), id, seed,
+      valPct, testPct)
+
+  /** `cols` of `rows` plus sample_bucket, a seeded md5 bucket (0-99) of
+    * `key`, and its split: the top `testPct` buckets are test, the
+    * `valPct` below them val, the rest train. */
+  private def hashSplit(rows: DataFrame, cols: Seq[Column], key: Column,
+                        seed: String, valPct: Int,
+                        testPct: Int): DataFrame = {
+    require(valPct >= 0 && testPct >= 0 && valPct + testPct < 100,
+      s"valPct ($valPct) and testPct ($testPct) must be non-negative " +
+        "and sum below 100 — otherwise the train threshold underflows " +
+        "and the split silently emits no train rows")
+    rows.select(cols :+
+        md5(concat(lit(seed), lit("|"), key.cast("string"))).as("split_hash"):
+        _*)
       .withColumn("sample_bucket",
         expr(s"${hex6Expr("split_hash")} % 100L"))
       .withColumn("split",
@@ -166,6 +180,7 @@ object TextAnalysis {
           .when(col("sample_bucket") < 100L - testPct, "val")
           .otherwise("test"))
       .drop("split_hash")
+  }
 
   /** LEAKAGE-SAFE TRAIN/VAL/TEST SPLIT: assignment hashed at the
     * dedup-CLUSTER grain, not the document grain. A doc-grain hash
@@ -186,22 +201,9 @@ object TextAnalysis {
     * `testPct`. Pure projection over the label table: no extra
     * shuffle beyond what CC already paid, any scale. */
   def leakageSafeSplit(labels: DataFrame, seed: String, valPct: Int,
-                       testPct: Int): DataFrame = {
-    require(valPct >= 0 && testPct >= 0 && valPct + testPct < 100,
-      s"valPct ($valPct) and testPct ($testPct) must be non-negative " +
-        "and sum below 100 — otherwise the train threshold underflows " +
-        "and the split silently emits no train rows")
-    labels.select(col("id").as("doc_id"), col("component"),
-        md5(concat(lit(seed), lit("|"), col("component").cast("string")))
-          .as("split_hash"))
-      .withColumn("sample_bucket",
-        expr(s"${hex6Expr("split_hash")} % 100L"))
-      .withColumn("split",
-        when(col("sample_bucket") < 100L - valPct - testPct, "train")
-          .when(col("sample_bucket") < 100L - testPct, "val")
-          .otherwise("test"))
-      .drop("split_hash")
-  }
+                       testPct: Int): DataFrame =
+    hashSplit(labels, Seq(col("id").as("doc_id"), col("component")),
+      col("component"), seed, valPct, testPct)
 
   /** SHARDED TOP-K HEAVY HITTERS with a VERIFIED exactness bound —
     * the distributed frequent-items shape that never sorts the global
@@ -384,7 +386,7 @@ object TextAnalysis {
     * suffices per pair: merging (l, r) cannot create a new (l, r)
     * adjacency (the merged symbol l+r differs from both halves). */
   private def bpeMergeFlagged(j: DataFrame,
-      wSeq: org.apache.spark.sql.expressions.WindowSpec): DataFrame = {
+      wSeq: WindowSpec): DataFrame = {
     val applyFlags = j.filter(col("is_pair"))
       .withColumn("grp", col("pos") - row_number().over(wSeq))
       .withColumn("do_merge",
@@ -403,6 +405,17 @@ object TextAnalysis {
           .otherwise(col("sym")).as("sym"))
   }
 
+  /** The [[bpeSymbolRows]] of `docs`, their per-doc count
+    * (doc_id, n_syms_before), and the symbol order within each
+    * (doc, pre-token) that every merge round windows over. */
+  private def bpeStart(docs: DataFrame, id: Column,
+                       text: Column): (DataFrame, DataFrame, WindowSpec) = {
+    val rows = bpeSymbolRows(docs, id, text)
+    (rows, rows.groupBy(col("doc_id"))
+        .agg(count(lit(1)).cast("long").as("n_syms_before")),
+      Window.partitionBy(col("doc_id"), col("tok_idx")).orderBy(col("pos")))
+  }
+
   /** `checkpoint` is the per-round lineage truncator: the default
     * [[graft.operators.Ckpt.truncated]] keeps round state in the block
     * store (fastest at oracle scale); pass
@@ -413,11 +426,8 @@ object TextAnalysis {
                     rounds: Int,
                     checkpoint: DataFrame => DataFrame =
                       graft.operators.Ckpt.truncated): DataFrame = {
-    var rows = bpeSymbolRows(docs, id, text)
-    val bef = rows.groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_syms_before"))
-    val wSeq = Window.partitionBy(col("doc_id"), col("tok_idx"))
-      .orderBy(col("pos"))
+    val (start, bef, wSeq) = bpeStart(docs, id, text)
+    var rows = start
     var merges = Seq.empty[DataFrame]
     for (r <- 1 to rounds) {
       val paired = rows.withColumn("nxt", lead(col("sym"), 1).over(wSeq))
@@ -475,11 +485,8 @@ object TextAnalysis {
                      merges: Seq[(String, String)],
                      checkpoint: DataFrame => DataFrame =
                        graft.operators.Ckpt.truncated): DataFrame = {
-    var rows = bpeSymbolRows(docs, id, text)
-    val bef = rows.groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_syms_before"))
-    val wSeq = Window.partitionBy(col("doc_id"), col("tok_idx"))
-      .orderBy(col("pos"))
+    val (start, bef, wSeq) = bpeStart(docs, id, text)
+    var rows = start
     merges.foreach { case (l, r) =>
       val j = rows.withColumn("nxt", lead(col("sym"), 1).over(wSeq))
         .withColumn("is_pair",

@@ -21,17 +21,15 @@ object ClusteringQueries {
   private val CoarseStride = 100
   private val NProbe = 2
 
-  private val dotSql = Q.dotSql("qv2", "cv2")
-
   /** The exact baseline of the recall queries: `qe`/`ce` rows of the
     * first 100 vectors and of the corpus, `norms`, and `ex(query_id,
     * cand_id)`: each query's exact cosine top 5 (ties to the smaller
     * cand_id). */
   private val exactTop5Ctes: String = {
     val dims = Q.embeddingDimCtes("embeddings WHERE vec_id < 100",
-      "embeddings", qv = "qv2", cv = "cv2")
+      "embeddings")
     s"""$dims, ${Q.normsCte("embeddings")}, exact_dots AS (
-       |  SELECT query_id, cand_id, $dotSql AS dot
+       |  SELECT query_id, cand_id, ${Q.dotSql} AS dot
        |  FROM qe JOIN ce USING (pos)
        |  WHERE query_id <> cand_id
        |  GROUP BY query_id, cand_id
@@ -85,8 +83,8 @@ object ClusteringQueries {
       |), prs AS (
       |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
       |  FROM mem a JOIN mem b ON a.cid = b.cid AND a.vec_id < b.vec_id
-      |), ${Q.embeddingDimCtes("corpus", "corpus", "doc_a", "doc_b", "qv2", "cv2")}, dots AS (
-      |  SELECT prs.doc_a, prs.doc_b, $dotSql AS dot
+      |), ${Q.embeddingDimCtes("corpus", "corpus", "doc_a", "doc_b")}, dots AS (
+      |  SELECT prs.doc_a, prs.doc_b, ${Q.dotSql} AS dot
       |  FROM prs
       |  JOIN qe ON qe.doc_a = prs.doc_a
       |  JOIN ce ON ce.doc_b = prs.doc_b AND ce.pos = qe.pos
@@ -125,7 +123,7 @@ object ClusteringQueries {
       |  SELECT query_id, cand_id
       |  FROM probes JOIN assign USING (cid)
       |  WHERE query_id <> cand_id
-      |), ${Q.candCosineTop5Sql("qv2", "cv2")}""".stripMargin) { (s, d) =>
+      |), ${Q.candCosineTop5Sql}""".stripMargin) { (s, d) =>
     val emb = Tables.embeddings(s, d)
     val rows = Clustering.quantRows(emb)
     val cent = Clustering.train(s, rows, Stride, Iters)
@@ -161,7 +159,7 @@ object ClusteringQueries {
       |  FROM probes JOIN assign USING (cid)
       |  WHERE probes.query_id <> assign.cand_id
       |), ivf_dots AS (
-      |  SELECT c.query_id, c.cand_id, $dotSql AS dot
+      |  SELECT c.query_id, c.cand_id, ${Q.dotSql} AS dot
       |  FROM ivf_cand c
       |  JOIN qe ON qe.query_id = c.query_id
       |  JOIN ce ON ce.cand_id = c.cand_id AND ce.pos = qe.pos
@@ -244,7 +242,7 @@ object ClusteringQueries {
       |  FROM probes p JOIN assign a USING (cid)
       |  WHERE p.query_id <> a.cand_id
       |), ivf_dots AS (
-      |  SELECT c.n_probe, c.query_id, c.cand_id, $dotSql AS dot
+      |  SELECT c.n_probe, c.query_id, c.cand_id, ${Q.dotSql} AS dot
       |  FROM ivf_cand c
       |  JOIN qe ON qe.query_id = c.query_id
       |  JOIN ce ON ce.cand_id = c.cand_id AND ce.pos = qe.pos

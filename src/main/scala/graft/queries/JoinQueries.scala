@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -568,22 +569,40 @@ object JoinQueries {
           .as("start_day"))
       .withColumn("end_day",
         col("start_day") + (col("iv_id") % 45).cast("long"))
-    val pt = Tables.lineitem(s, d)
-      .select(datediff(col("l_shipdate").cast("date"), epoch).cast("long")
-          .as("point_day"),
-        col("l_quantity").cast("long").as("qty"))
     val joined = graft.operators.RangeJoin.bucketedIntervalJoin(
-      pt, iv, "point_day", "start_day", "end_day", bucketSize = 32L)
+      shipPoints(s, d), iv, "point_day", "start_day", "end_day",
+      bucketSize = 32L)
+    intervalRollup(iv, joined)
+  }
+
+  /** (point_day, qty[, extra]) per lineitem: the ship day in epoch days,
+    * the points of the interval-join queries. */
+  private def shipPoints(s: SparkSession, d: String,
+                         extra: Column*): DataFrame = {
+    val epoch = lit("1970-01-01").cast("date")
+    Tables.lineitem(s, d)
+      .select(Seq(
+        datediff(col("l_shipdate").cast("date"), epoch).cast("long")
+          .as("point_day"),
+        col("l_quantity").cast("long").as("qty")) ++ extra: _*)
+  }
+
+  /** Per interval of `iv` (iv_id, start_day, end_day), the count and
+    * qty sum of its `joined` points, zero for an empty interval, with
+    * ISO-date bounds and any `extra` columns, ordered by iv_id. */
+  private def intervalRollup(iv: DataFrame, joined: DataFrame,
+                             extra: Column*): DataFrame = {
+    val epoch = lit("1970-01-01").cast("date")
     val agg = joined.groupBy(col("iv_id"))
       .agg(count(lit(1)).as("point_count"), sum(col("qty")).as("total_qty"))
     iv.join(agg, Seq("iv_id"), "left")
-      .select(col("iv_id"),
+      .select(Seq(col("iv_id"),
         date_add(epoch, col("start_day").cast("int")).cast("string")
           .as("start_date"),
         date_add(epoch, col("end_day").cast("int")).cast("string")
           .as("end_date"),
         coalesce(col("point_count"), lit(0L)).as("point_count"),
-        coalesce(col("total_qty"), lit(0L)).as("total_qty"))
+        coalesce(col("total_qty"), lit(0L)).as("total_qty")) ++ extra: _*)
       .orderBy("iv_id")
   }
 
@@ -716,26 +735,12 @@ object JoinQueries {
             datediff(col("o_orderdate").cast("date"), epoch).cast("long"))
           .as("start_day"))
       .withColumn("end_day", col("start_day") + (col("iv_id") % 10))
-    val pt = Tables.lineitem(s, d)
-      .select(datediff(col("l_shipdate").cast("date"), epoch).cast("long")
-          .as("point_day"),
-        col("l_quantity").cast("long").as("qty"),
-        (col("l_orderkey") * 8 + col("l_linenumber")).as("pt_uid"))
+    val pt = shipPoints(s, d,
+      (col("l_orderkey") * 8 + col("l_linenumber")).as("pt_uid"))
     val joined = graft.operators.RangeJoin.saltedBucketedIntervalJoin(
       pt, iv, "point_day", "start_day", "end_day", bucketSize = 8L,
       salts = 8, saltBy = col("pt_uid"))
-    val agg = joined.groupBy(col("iv_id"))
-      .agg(count(lit(1)).as("point_count"), sum(col("qty")).as("total_qty"))
-    iv.join(agg, Seq("iv_id"), "left")
-      .select(col("iv_id"),
-        date_add(epoch, col("start_day").cast("int")).cast("string")
-          .as("start_date"),
-        date_add(epoch, col("end_day").cast("int")).cast("string")
-          .as("end_date"),
-        coalesce(col("point_count"), lit(0L)).as("point_count"),
-        coalesce(col("total_qty"), lit(0L)).as("total_qty"),
-        (col("iv_id") % 4 < 3).as("is_hot"))
-      .orderBy("iv_id")
+    intervalRollup(iv, joined, (col("iv_id") % 4 < 3).as("is_hot"))
   }
 
   val all: Seq[Q] = Seq(j1BroadcastDims, j5OrderContact, j7FactBridge,

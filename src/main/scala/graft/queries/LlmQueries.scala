@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -413,6 +413,25 @@ object LlmQueries {
     val dup = docs.select(col("doc_id"),
       (col("doc_id") =!= min(col("doc_id")).over(
         Window.partitionBy(md5(lower(trim(col("text"))))))).as("is_dup"))
+    val dec = withQualityDecile(s, q, "decile")
+    dec.join(dup, Seq("doc_id"))
+      .groupBy("decile")
+      .agg(count(lit(1)).cast("long").as("n_docs"),
+        sum(when(col("is_dup"), 1L).otherwise(0L)).cast("long")
+          .as("n_dups"),
+        sum(col("n_tokens")).cast("long").as("sum_tokens"),
+        min(col("qscore")).as("min_qscore"),
+        max(col("qscore")).as("max_qscore"))
+      .orderBy("decile")
+  }
+
+  /** `q` (doc_id, ..., qscore) plus its quality decile 1..10 as column
+    * `name`: the nine thresholds t_k are the smallest qscore whose
+    * cumulative count reaches k/10 of the docs, and a doc's decile is
+    * 1 + the number of thresholds below its qscore (the Spark side of
+    * [[decileThresholdCtes]]). */
+  private def withQualityDecile(s: SparkSession, q: DataFrame,
+                                name: String): DataFrame = {
     val hist = q.groupBy("qscore").agg(count(lit(1)).cast("long").as("cnt"))
     val cum = hist.withColumn("cum",
       sum(col("cnt")).over(Window.orderBy(col("qscore"))
@@ -425,18 +444,9 @@ object LlmQueries {
       .groupBy("k").agg(min(col("qscore")).as("t_k"))
     // decile = 1 + #thresholds below: a 9-row broadcast theta-join
     // (HOFs over a literal array would leave codegen — README rule)
-    val dec = q.join(broadcast(thr), col("qscore") > col("t_k"), "left")
-      .groupBy("doc_id", "n_tokens", "qscore")
-      .agg((lit(1L) + count(col("t_k"))).cast("long").as("decile"))
-    dec.join(dup, Seq("doc_id"))
-      .groupBy("decile")
-      .agg(count(lit(1)).cast("long").as("n_docs"),
-        sum(when(col("is_dup"), 1L).otherwise(0L)).cast("long")
-          .as("n_dups"),
-        sum(col("n_tokens")).cast("long").as("sum_tokens"),
-        min(col("qscore")).as("min_qscore"),
-        max(col("qscore")).as("max_qscore"))
-      .orderBy("decile")
+    q.join(broadcast(thr), col("qscore") > col("t_k"), "left")
+      .groupBy(q.columns.map(col): _*)
+      .agg((lit(1L) + count(col("t_k"))).cast("long").as(name))
   }
 
   /** CURRICULUM ORDERING — the training-schedule construction built
@@ -467,19 +477,7 @@ object LlmQueries {
     val q = TA.withQuality(docs, col("text"))
       .select(col("doc_id"),
         round(col("quality_score") * 1e6).cast("long").as("qscore"))
-    val hist = q.groupBy("qscore").agg(count(lit(1)).cast("long").as("cnt"))
-    val cum = hist.withColumn("cum",
-      sum(col("cnt")).over(Window.orderBy(col("qscore"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("long"))
-    val tot = cum.agg(max(col("cum")).as("n_total"))
-    val ks = s.range(1, 10).select(col("id").as("k"))
-    val thr = cum.crossJoin(broadcast(ks)).crossJoin(broadcast(tot))
-      .filter(col("cum") * 10 >= col("n_total") * col("k"))
-      .groupBy("k").agg(min(col("qscore")).as("t_k"))
-    val banded = q.join(broadcast(thr), col("qscore") > col("t_k"), "left")
-      .groupBy("doc_id", "qscore")
-      .agg((lit(1L) + count(col("t_k"))).cast("long").as("band"))
+    val banded = withQualityDecile(s, q, "band")
     banded.select(col("doc_id"), col("band"),
         row_number().over(Window.partitionBy(col("band"))
           .orderBy(md5(concat(lit("cur1|"), col("doc_id").cast("string"))),
@@ -1999,8 +1997,6 @@ object LlmQueries {
       |ORDER BY c.doc_id""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, d)
-    val tokenRows = docs.select(col("doc_id"),
-      explode(TA.tokens(col("text"))).as("token"))
     // Width from Dedup.autoBandPolicy (r16): picks 64-bit at both
     // gate SFs (500/5,000 docs inside the (256, 65536] window);
     // the choice itself is GATED via the band_bits
@@ -2012,12 +2008,8 @@ object LlmQueries {
     // no-op (r15 ADVICE). Sizing count is the memoized
     // Tables.documentsCount — one action per JVM, not per run
     // (r16 ADVICE, the knownN pattern).
-    val bits = Dedup.autoBandPolicy(Tables.documentsCount(s, d))
-    val pairs = Dedup.simhashNearDups(
-      Dedup.simhashFromTokens(tokenRows, bits), bits = bits)
-    val cc = Dedup.nearDupLabels(
-      docs.select(col("doc_id").as("id")),
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+    val (cc, bits) =
+      Dedup.autoNearDupLabels(docs, Tables.documentsCount(s, d))
     val w = Window.partitionBy(col("component"))
       .orderBy(col("text_len").desc, col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -2146,20 +2138,54 @@ object LlmQueries {
       .orderBy("doc_id")
   }
 
-  /** The homogeneous 2-shard fixture of the sharded cap gates:
+  /** The homogeneous fixture of the sharded cap gates:
     * `ids(doc_id, shard)` every 10th document, shard (doc_id // 10) %
-    * 2, and `tok`: 12 shared tokens plus one of 3 variants per doc. */
-  private val hotShardTokCtes: String =
-    """ids AS (
-      |  SELECT doc_id, CAST((doc_id // 10) % 2 AS BIGINT) AS shard
+    * `nShards`, and `tok`: 12 shared tokens plus the variant token 'v'
+    * || `variant` per doc. [[hotShardSig]] is the Spark side. */
+  private def hotShardTokCtes(nShards: Int, variant: String): String =
+    s"""ids AS (
+      |  SELECT doc_id, CAST((doc_id // 10) % $nShards AS BIGINT) AS shard
       |  FROM documents WHERE doc_id % 10 = 0
       |), tok AS (
       |  SELECT doc_id,
       |    'w' || CAST(unnest(generate_series(0, 11)) AS VARCHAR) AS token
       |  FROM ids
       |  UNION ALL
-      |  SELECT doc_id, 'v' || CAST(doc_id % 3 AS VARCHAR) FROM ids
+      |  SELECT doc_id, 'v' || CAST($variant AS VARCHAR) FROM ids
       |)""".stripMargin
+
+  /** The [[hotShardTokCtes]] fixture in Spark: `ids` (doc_id, shard) and
+    * the checkpointed 64-bit simhash (doc_id, simhash) of its tokens. */
+  private def hotShardSig(s: SparkSession, d: String, nShards: Int,
+                          variant: Column): (DataFrame, DataFrame) = {
+    val ids = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id"),
+        expr(s"(doc_id div 10) % $nShards").cast("long").as("shard"))
+    val tokenRows = ids.select(col("doc_id"),
+        explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
+      .unionByName(ids.select(col("doc_id"),
+        concat(lit("v"), variant.cast("string")).as("token")))
+    (ids, Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true))
+  }
+
+  /** The `sig` rows of the docs `ids` puts in shard `k`. */
+  private def shardSlice(sig: DataFrame, ids: DataFrame,
+                         k: Int): DataFrame =
+    sig.join(ids.filter(col("shard") === k).select("doc_id"),
+      Seq("doc_id"), "left_semi")
+
+  /** (doc_id, shard) of `ids` joined to each (doc_id, ...) frame of
+    * `labels` in turn, plus component_size, ordered by doc_id. */
+  private def shardComponents(ids: DataFrame,
+                              labels: DataFrame*): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    labels.foldLeft(ids.select(col("doc_id"), col("shard")))(
+        _.join(_, Seq("doc_id")))
+      .withColumn("component_size",
+        count(lit(1)).over(Window.partitionBy(col("component")))
+          .cast("long"))
+      .orderBy("doc_id")
+  }
 
   /** Dedup — HOT-BUCKET CAP fixture for the SHARDED near-dup paths
     * (r16 ADVICE #2): the single-pass sharded gate's twin replays a
@@ -2182,7 +2208,7 @@ object LlmQueries {
     * reasoned. */
   val ddShardedHotBucketMerge: Q = Q.sql(
     "dd_sharded_hot_bucket_merge",
-    s"""WITH RECURSIVE $hotShardTokCtes, ${simhashCtes(64)}, sized AS (
+    s"""WITH RECURSIVE ${hotShardTokCtes(2, "doc_id % 3")}, ${simhashCtes(64)}, sized AS (
       |  SELECT s.doc_id, i.shard, s.simhash, b.band,
       |    substr(s.simhash, b.band * 16 + 1, 16) AS band_key,
       |    COUNT(*) OVER (PARTITION BY i.shard, b.band,
@@ -2205,15 +2231,7 @@ object LlmQueries {
       |    AS component_size
       |FROM comp c JOIN ids i USING (doc_id)
       |ORDER BY c.doc_id""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
-    val ids = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"),
-        expr("(doc_id div 10) % 2").cast("long").as("shard"))
-    val tokenRows = ids.select(col("doc_id"),
-        explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
-      .unionByName(ids.select(col("doc_id"),
-        concat(lit("v"), (col("doc_id") % 3).cast("string")).as("token")))
-    val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
+    val (ids, sig) = hotShardSig(s, d, 2, col("doc_id") % 3)
     val sharded = sig.join(ids, Seq("doc_id"))
     val single = Dedup.shardedNearDupLabels(sharded,
         maxBucketSize = 8, bits = 64)
@@ -2221,23 +2239,13 @@ object LlmQueries {
     val dir = Q.tempDir("graft_shardhot").toString
     (0 to 1).foreach { k =>
       graft.llm.ShardedNearDupIndex.addShard(s, dir,
-        sig.join(ids.filter(col("shard") === k).select("doc_id"),
-          Seq("doc_id"), "left_semi"),
-        bits = 64, maxBucketSize = 8)
+        shardSlice(sig, ids, k), bits = 64, maxBucketSize = 8)
       ()
     }
     val incr = graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
       .select(col("id").as("doc_id"),
         col("component").as("incr_component"))
-    ids.select(col("doc_id"), col("shard"))
-      .join(single, Seq("doc_id"))
-      .join(incr, Seq("doc_id"))
-      .withColumn("component_size",
-        count(lit(1)).over(Window.partitionBy(col("component")))
-          .cast("long"))
-      .select("doc_id", "shard", "component", "incr_component",
-        "component_size")
-      .orderBy("doc_id")
+    shardComponents(ids, single, incr)
   }
 
   /** 64-bit [[simhashCtes]] of `tok`, then `banded` (4 × 16-bit bands
@@ -2289,7 +2297,7 @@ object LlmQueries {
     * contract as `maxBucketSize`. */
   val ddShardedProbeCapMerge: Q = Q.sql(
     "dd_sharded_probe_cap_merge",
-    s"""WITH RECURSIVE $hotShardTokCtes, $shardBandedCtes, idxcap AS (
+    s"""WITH RECURSIVE ${hotShardTokCtes(2, "doc_id % 3")}, $shardBandedCtes, idxcap AS (
       |  SELECT * FROM (
       |    SELECT doc_id, simhash, band, band_key,
       |      ROW_NUMBER() OVER (PARTITION BY band, band_key
@@ -2304,34 +2312,14 @@ object LlmQueries {
       |  JOIN (SELECT * FROM banded WHERE shard = 1) r
       |    USING (band, band_key)
       |), $shardLabelsSql""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
-    val ids = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"),
-        expr("(doc_id div 10) % 2").cast("long").as("shard"))
-    val tokenRows = ids.select(col("doc_id"),
-        explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
-      .unionByName(ids.select(col("doc_id"),
-        concat(lit("v"), (col("doc_id") % 3).cast("string")).as("token")))
-    val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
+    val (ids, sig) = hotShardSig(s, d, 2, col("doc_id") % 3)
     val dir = Q.tempDir("graft_shardpcap").toString
     graft.llm.ShardedNearDupIndex.seedShards(s, dir,
-      sig.join(ids.filter(col("shard") === 0).select("doc_id"),
-          Seq("doc_id"), "left_semi")
-        .withColumn("shard", lit(0L)),
-      bits = 64)
+      shardSlice(sig, ids, 0).withColumn("shard", lit(0L)), bits = 64)
     graft.llm.ShardedNearDupIndex.addShard(s, dir,
-      sig.join(ids.filter(col("shard") === 1).select("doc_id"),
-        Seq("doc_id"), "left_semi"),
-      bits = 64, probeCap = Some(4))
-    val labels = graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
-      .withColumnRenamed("id", "doc_id")
-    ids.select(col("doc_id"), col("shard"))
-      .join(labels, Seq("doc_id"))
-      .withColumn("component_size",
-        count(lit(1)).over(Window.partitionBy(col("component")))
-          .cast("long"))
-      .select("doc_id", "shard", "component", "component_size")
-      .orderBy("doc_id")
+      shardSlice(sig, ids, 1), bits = 64, probeCap = Some(4))
+    shardComponents(ids, graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
+      .withColumnRenamed("id", "doc_id"))
   }
 
   /** Dedup — STORED probe rank (r19; VERDICT r18 task #2): compaction
@@ -2352,16 +2340,7 @@ object LlmQueries {
     * contributes zero), covering both regimes across the gate SFs. */
   val ddShardedProbeRankCompact: Q = Q.sql(
     "dd_sharded_probe_rank_compact",
-    s"""WITH RECURSIVE ids AS (
-      |  SELECT doc_id, CAST((doc_id // 10) % 3 AS BIGINT) AS shard
-      |  FROM documents WHERE doc_id % 10 = 0
-      |), tok AS (
-      |  SELECT doc_id,
-      |    'w' || CAST(unnest(generate_series(0, 11)) AS VARCHAR) AS token
-      |  FROM ids
-      |  UNION ALL
-      |  SELECT doc_id, 'v' || CAST((doc_id // 10) % 2 AS VARCHAR) FROM ids
-      |), $shardBandedCtes, base_rk AS (
+    s"""WITH RECURSIVE ${hotShardTokCtes(3, "(doc_id // 10) % 2")}, $shardBandedCtes, base_rk AS (
       |  SELECT doc_id, simhash, band, band_key,
       |    ROW_NUMBER() OVER (PARTITION BY band, band_key
       |      ORDER BY doc_id) AS rk
@@ -2395,39 +2374,18 @@ object LlmQueries {
       |  JOIN (SELECT * FROM banded WHERE shard = 2) p
       |    USING (band, band_key)
       |), $shardLabelsSql""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
-    val ids = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"),
-        expr("(doc_id div 10) % 3").cast("long").as("shard"))
-    val tokenRows = ids.select(col("doc_id"),
-        explode(array((0 until 12).map(i => lit(s"w$i")): _*)).as("token"))
-      .unionByName(ids.select(col("doc_id"),
-        concat(lit("v"),
-          expr("(doc_id div 10) % 2").cast("string")).as("token")))
-    val sig = Dedup.simhashFromTokens(tokenRows, 64).localCheckpoint(true)
+    val (ids, sig) = hotShardSig(s, d, 3, expr("(doc_id div 10) % 2"))
     val dir = Q.tempDir("graft_shardrank").toString
     graft.llm.ShardedNearDupIndex.seedShards(s, dir,
-      sig.join(ids.filter(col("shard") === 0).select("doc_id"),
-          Seq("doc_id"), "left_semi")
-        .withColumn("shard", lit(0L)),
-      bits = 64)
+      shardSlice(sig, ids, 0).withColumn("shard", lit(0L)), bits = 64)
     graft.llm.ShardedNearDupIndex.compactBands(s, dir)
     (1 to 2).foreach { k =>
       graft.llm.ShardedNearDupIndex.addShard(s, dir,
-        sig.join(ids.filter(col("shard") === k).select("doc_id"),
-          Seq("doc_id"), "left_semi"),
-        bits = 64, probeCap = Some(12))
+        shardSlice(sig, ids, k), bits = 64, probeCap = Some(12))
       ()
     }
-    val labels = graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
-      .withColumnRenamed("id", "doc_id")
-    ids.select(col("doc_id"), col("shard"))
-      .join(labels, Seq("doc_id"))
-      .withColumn("component_size",
-        count(lit(1)).over(Window.partitionBy(col("component")))
-          .cast("long"))
-      .select("doc_id", "shard", "component", "component_size")
-      .orderBy("doc_id")
+    shardComponents(ids, graft.llm.ShardedNearDupIndex.loadLabels(s, dir)
+      .withColumnRenamed("id", "doc_id"))
   }
 
   /** Dedup — URL canonicalization + dedup through the REAL
@@ -3222,14 +3180,12 @@ object LlmQueries {
       .orderBy("doc_id")
   }
 
-  private val dotSql = Q.dotSql("qv", "cv")
-
   /** Similarity — brute-force cosine top-5 for the first 10 query
     * vectors, decimal-exact dot products, deterministic tie-break. */
   val annBruteForce: Q = Q.sql(
     "ann_cosine_topk",
     s"""WITH ${Q.embeddingDimCtes("embeddings WHERE vec_id < 10", "embeddings")}, dots AS (
-      |  SELECT query_id, cand_id, $dotSql AS dot
+      |  SELECT query_id, cand_id, ${Q.dotSql} AS dot
       |  FROM qe JOIN ce USING (pos)
       |  WHERE query_id <> cand_id
       |  GROUP BY query_id, cand_id
@@ -3251,7 +3207,7 @@ object LlmQueries {
     "ann_hard_negatives",
     s"""WITH ${Q.embeddingDimCtes("embeddings WHERE vec_id % 91 = 0",
                                   "embeddings WHERE vec_id % 7 <> 0")}, dots AS (
-      |  SELECT query_id, cand_id, $dotSql AS dot
+      |  SELECT query_id, cand_id, ${Q.dotSql} AS dot
       |  FROM qe JOIN ce USING (pos)
       |  GROUP BY query_id, cand_id
       |), ${Q.normsCte("embeddings")}, scored AS (
@@ -3330,7 +3286,7 @@ object LlmQueries {
       |  FROM bucketed q JOIN bucketed c USING (bucket)
       |  WHERE q.vec_id <> c.vec_id
       |), ${Q.embeddingDimCtes("bucketed", "bucketed")}, dots AS (
-      |  SELECT cand.query_id, cand.cand_id, cand.bucket, $dotSql AS dot
+      |  SELECT cand.query_id, cand.cand_id, cand.bucket, ${Q.dotSql} AS dot
       |  FROM cand
       |  JOIN qe ON qe.query_id = cand.query_id
       |  JOIN ce ON ce.cand_id = cand.cand_id AND ce.pos = qe.pos
@@ -3379,7 +3335,7 @@ object LlmQueries {
         |  SELECT DISTINCT p.query_id, c.vec_id AS cand_id
         |  FROM probes p JOIN capped c USING (bucket)
         |  WHERE p.query_id <> c.vec_id
-        |), ${Q.candCosineTop5Sql("qv", "cv")}""".stripMargin) { (s, d) =>
+        |), ${Q.candCosineTop5Sql}""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       Similarity.randomHyperplaneLshTopK(emb, emb.select("vec_id"),
         k = 5, bits = bits, seed = "7", maxBucketSize = 32)
@@ -3405,7 +3361,7 @@ object LlmQueries {
       |  FROM cent
       |), ${Q.normsCte("embeddings")}, adots AS (
       |  SELECT ve.vec_id, cente.centroid_id,
-      |    ${Q.dotSql("v", "cv")} AS dot
+      |    SUM(${Q.quantSql("v")} * ${Q.quantSql("cv")}) AS dot
       |  FROM ve JOIN cente ON cente.pos = ve.pos
       |  GROUP BY 1, 2
       |), ranked AS (
@@ -3424,7 +3380,7 @@ object LlmQueries {
       |  SELECT query_id, cand_id
       |  FROM probes JOIN assign USING (centroid_id)
       |  WHERE query_id <> cand_id
-      |), ${Q.candDotCtes("qv", "cv")}, ${Q.cosineTop5Sql}""".stripMargin) { (s, d) =>
+      |), ${Q.candDotCtes}, ${Q.cosineTop5Sql}""".stripMargin) { (s, d) =>
     val emb = Tables.embeddings(s, d)
     Similarity.ivfTopK(emb, emb.select("vec_id"), k = 5,
       centroidStride = 50, nProbe = 2)
@@ -3451,7 +3407,7 @@ object LlmQueries {
         |  FROM buckets a JOIN buckets b USING (bucket)
         |  WHERE a.vec_id < b.vec_id
         |), ${Q.embeddingDimCtes("corpus", "corpus", "doc_a", "doc_b")}, dots AS (
-        |  SELECT cand.doc_a, cand.doc_b, $dotSql AS dot
+        |  SELECT cand.doc_a, cand.doc_b, ${Q.dotSql} AS dot
         |  FROM cand
         |  JOIN qe ON qe.doc_a = cand.doc_a
         |  JOIN ce ON ce.doc_b = cand.doc_b AND ce.pos = qe.pos
@@ -3579,6 +3535,20 @@ object LlmQueries {
       .orderBy("doc_id")
   }
 
+  /** Day 1 and day 2 ids of the two-day phash index chains, the Spark
+    * side of [[phashChainDocs]]: day 1 is every doc but the near-copies
+    * (id % 5 = 4); day 2 the near-copies, every 7th other doc and a
+    * re-crawl copy (doc_id * 2 + 1000000) of every 9th. */
+  private def phashChainDays(s: SparkSession,
+                             d: String): (DataFrame, DataFrame) = {
+    val ids = Tables.documents(s, d).select("doc_id")
+    (ids.filter(col("doc_id") % 5 =!= 4),
+      ids.filter(col("doc_id") % 5 === 4 ||
+          (col("doc_id") % 7 === 0 && col("doc_id") % 5 =!= 4))
+        .unionByName(ids.filter(col("doc_id") % 9 === 0)
+          .select((col("doc_id") * 2 + 1000000L).as("doc_id"))))
+  }
+
   /** Ids of the two-day phash index chains: every document plus a
     * re-crawl copy (doc_id * 2 + 1000000) of every 9th. */
   private val phashChainDocs =
@@ -3590,44 +3560,24 @@ object LlmQueries {
     * <> 4, no copies) is the index, day 2 (near-copies, every 7th, the
     * re-crawls) probes it by band and verifies within Hamming 3. Ends
     * inside the final select, after (doc_id, hit_index, keep). */
-  private val phash64ProbeSql: String =
-    s"""${phashHashCtes(phashChainDocs)}, bnd AS (
-      |  SELECT h.doc_id, h.hash_lo, h.hash_hi, bs.band,
-      |    CASE bs.band WHEN 0 THEN h.hash_lo % 65536
-      |                 WHEN 1 THEN h.hash_lo // 65536
-      |                 WHEN 2 THEN h.hash_hi % 65536
-      |                 ELSE h.hash_hi // 65536 END AS band_key
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) bs
-      |), idx AS (
-      |  SELECT DISTINCT band, band_key, hash_lo, hash_hi
-      |  FROM bnd WHERE doc_id < 1000000 AND doc_id % 5 <> 4
-      |), probe AS (
-      |  SELECT * FROM bnd
-      |  WHERE doc_id >= 1000000 OR doc_id % 5 = 4
-      |     OR (doc_id % 7 = 0 AND doc_id % 5 <> 4)
-      |), hits AS (
-      |  SELECT DISTINCT p.doc_id
-      |  FROM probe p JOIN idx i
-      |    ON i.band = p.band AND i.band_key = p.band_key
-      |  WHERE bit_count(xor(p.hash_lo, i.hash_lo))
-      |      + bit_count(xor(p.hash_hi, i.hash_hi)) <= 3
-      |)
-      |SELECT p.doc_id,
-      |  p.doc_id IN (SELECT doc_id FROM hits) AS hit_index,
-      |  p.doc_id NOT IN (SELECT doc_id FROM hits) AS keep""".stripMargin
+  private val phash64ProbeSql: String = phashProbeSql(64)
 
   /** The 128-bit two-day chain over [[phashChainDocs]]: day 1 (id % 5
     * <> 4, no copies) is the index, day 2 (near-copies, every 7th, the
     * re-crawls) probes it by band and verifies within Hamming 3. Ends
     * inside the final select, after (doc_id, hit_index, keep). */
-  private val phash128ProbeSql: String =
-    s"""${phash128HashCtes(phashChainDocs)}, bnd AS (
-      |  SELECT h.doc_id, h.h0, h.h1, h.h2, h.h3, bs.band,
-      |    CASE bs.band WHEN 0 THEN h.h0 WHEN 1 THEN h.h1
-      |                 WHEN 2 THEN h.h2 ELSE h.h3 END AS band_key
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) bs
+  private val phash128ProbeSql: String = phashProbeSql(128)
+
+  /** The two-day chain of [[phash64ProbeSql]] / [[phash128ProbeSql]] at
+    * hash width `bits`. */
+  private def phashProbeSql(bits: Int): String = {
+    val (hashCtes, cols) =
+      if (bits == 64) (phashHashCtes(phashChainDocs), "hash_lo, hash_hi")
+      else (phash128HashCtes(phashChainDocs), "h0, h1, h2, h3")
+    s"""$hashCtes, bnd AS (
+      |  ${phashBandSql(bits, "h")}
       |), idx AS (
-      |  SELECT DISTINCT band, band_key, h0, h1, h2, h3
+      |  SELECT DISTINCT band, band_key, $cols
       |  FROM bnd WHERE doc_id < 1000000 AND doc_id % 5 <> 4
       |), probe AS (
       |  SELECT * FROM bnd
@@ -3637,12 +3587,39 @@ object LlmQueries {
       |  SELECT DISTINCT p.doc_id
       |  FROM probe p JOIN idx i
       |    ON i.band = p.band AND i.band_key = p.band_key
-      |  WHERE bit_count(xor(p.h0, i.h0)) + bit_count(xor(p.h1, i.h1))
-      |      + bit_count(xor(p.h2, i.h2)) + bit_count(xor(p.h3, i.h3)) <= 3
+      |  WHERE ${phashVerifySql(bits)}
       |)
       |SELECT p.doc_id,
       |  p.doc_id IN (SELECT doc_id FROM hits) AS hit_index,
       |  p.doc_id NOT IN (SELECT doc_id FROM hits) AS keep""".stripMargin
+  }
+
+  /** The four pigeonhole band rows (doc_id, hash words, band, band_key)
+    * of each `bits`-wide hash `h` in the FROM item `from`: 16-bit
+    * slices of hash_lo and hash_hi at 64, the four 32-bit words at
+    * 128. */
+  private def phashBandSql(bits: Int, from: String): String =
+    if (bits == 64)
+      s"""SELECT h.doc_id, h.hash_lo, h.hash_hi, bs.band,
+      |    CASE bs.band WHEN 0 THEN h.hash_lo % 65536
+      |                 WHEN 1 THEN h.hash_lo // 65536
+      |                 WHEN 2 THEN h.hash_hi % 65536
+      |                 ELSE h.hash_hi // 65536 END AS band_key
+      |  FROM $from CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) bs""".stripMargin
+    else
+      s"""SELECT h.doc_id, h.h0, h.h1, h.h2, h.h3, bs.band,
+      |    CASE bs.band WHEN 0 THEN h.h0 WHEN 1 THEN h.h1
+      |                 WHEN 2 THEN h.h2 ELSE h.h3 END AS band_key
+      |  FROM $from CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) bs""".stripMargin
+
+  /** Probe row `p` is within Hamming 3 of index row `i`, at width `bits`. */
+  private def phashVerifySql(bits: Int): String =
+    if (bits == 64)
+      """bit_count(xor(p.hash_lo, i.hash_lo))
+      |      + bit_count(xor(p.hash_hi, i.hash_hi)) <= 3""".stripMargin
+    else
+      """bit_count(xor(p.h0, i.h0)) + bit_count(xor(p.h1, i.h1))
+      |      + bit_count(xor(p.h2, i.h2)) + bit_count(xor(p.h3, i.h3)) <= 3""".stripMargin
 
   /** Multimodal + incremental dedup — PERSISTED perceptual-hash index
     * (the daily-crawl discipline for IMAGES): day 1 commits the base
@@ -3659,12 +3636,7 @@ object LlmQueries {
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
     import graft.llm.PhashIndex
-    val ids = Tables.documents(s, d).select("doc_id")
-    val day1 = ids.filter(col("doc_id") % 5 =!= 4)
-    val day2 = ids.filter(col("doc_id") % 5 === 4 ||
-        (col("doc_id") % 7 === 0 && col("doc_id") % 5 =!= 4))
-      .unionByName(ids.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") * 2 + 1000000L).as("doc_id")))
+    val (day1, day2) = phashChainDays(s, d)
     val dir = Q.tempDir("graft_phidx")
       .toString
     PhashIndex.processBatch(s, dir, _ => Multimodal.asPhashImageTable(day1),
@@ -3691,12 +3663,7 @@ object LlmQueries {
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
     import graft.llm.PhashIndex
-    val ids = Tables.documents(s, d).select("doc_id")
-    val day1 = ids.filter(col("doc_id") % 5 =!= 4)
-    val day2 = ids.filter(col("doc_id") % 5 === 4 ||
-        (col("doc_id") % 7 === 0 && col("doc_id") % 5 =!= 4))
-      .unionByName(ids.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") * 2 + 1000000L).as("doc_id")))
+    val (day1, day2) = phashChainDays(s, d)
     val dir = Q.tempDir("graft_ph128idx").toString
     PhashIndex.processBatch(s, dir,
       _ => Multimodal.asPhash128ImageTable(day1), bits = Some(128))
@@ -3722,21 +3689,19 @@ object LlmQueries {
       |            <= 1.0 THEN 64 ELSE 128 END AS INTEGER) AS band_bits
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
+    phashPolicyChain(s, d, "graft_phpol_s", Tables.documentsCount(s, d))
+  }
+
+  /** The two-day chain of [[phashChainDays]] through the `PhashIndex`
+    * width policy, told to expect `expected` index rows. */
+  private def phashPolicyChain(s: SparkSession, d: String, prefix: String,
+                               expected: Long): DataFrame = {
     import graft.llm.PhashIndex
-    val ids = Tables.documents(s, d).select("doc_id")
-    val day1 = ids.filter(col("doc_id") % 5 =!= 4)
-    val day2 = ids.filter(col("doc_id") % 5 === 4 ||
-        (col("doc_id") % 7 === 0 && col("doc_id") % 5 =!= 4))
-      .unionByName(ids.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") * 2 + 1000000L).as("doc_id")))
-    def toImages(day: org.apache.spark.sql.DataFrame)(bits: Int) =
-      if (bits == 64) Multimodal.asPhashImageTable(day)
-      else Multimodal.asPhash128ImageTable(day)
-    val dir = Q.tempDir("graft_phpol_s").toString
-    val expected = Tables.documentsCount(s, d)
-    PhashIndex.processBatch(s, dir, toImages(day1),
+    val (day1, day2) = phashChainDays(s, d)
+    val dir = Q.tempDir(prefix).toString
+    PhashIndex.processBatch(s, dir, Multimodal.phashImageTable(day1),
       expectedIndexRows = expected)
-    PhashIndex.processBatch(s, dir, toImages(day2),
+    PhashIndex.processBatch(s, dir, Multimodal.phashImageTable(day2),
       expectedIndexRows = expected)
       .orderBy("doc_id")
   }
@@ -3756,23 +3721,7 @@ object LlmQueries {
       |    AS band_bits
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
-    import graft.llm.PhashIndex
-    val ids = Tables.documents(s, d).select("doc_id")
-    val day1 = ids.filter(col("doc_id") % 5 =!= 4)
-    val day2 = ids.filter(col("doc_id") % 5 === 4 ||
-        (col("doc_id") % 7 === 0 && col("doc_id") % 5 =!= 4))
-      .unionByName(ids.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") * 2 + 1000000L).as("doc_id")))
-    def toImages(day: org.apache.spark.sql.DataFrame)(bits: Int) =
-      if (bits == 64) Multimodal.asPhashImageTable(day)
-      else Multimodal.asPhash128ImageTable(day)
-    val dir = Q.tempDir("graft_phpol_l").toString
-    val expected = Tables.documentsCount(s, d) * 40
-    PhashIndex.processBatch(s, dir, toImages(day1),
-      expectedIndexRows = expected)
-    PhashIndex.processBatch(s, dir, toImages(day2),
-      expectedIndexRows = expected)
-      .orderBy("doc_id")
+    phashPolicyChain(s, d, "graft_phpol_l", Tables.documentsCount(s, d) * 40)
   }
 
   /** 64→128-bit INDEX MIGRATION BACKFILL gate (r20; VERDICT r19 task
@@ -3796,12 +3745,7 @@ object LlmQueries {
          prefix = "a_")}, ${phash128HashCtes(
          "SELECT doc_id FROM documents", prefix = "b_",
          lead = false)}, bnd64 AS (
-      |  SELECT h.doc_id, h.hash_lo, h.hash_hi, bs.band,
-      |    CASE bs.band WHEN 0 THEN h.hash_lo % 65536
-      |                 WHEN 1 THEN h.hash_lo // 65536
-      |                 WHEN 2 THEN h.hash_hi % 65536
-      |                 ELSE h.hash_hi // 65536 END AS band_key
-      |  FROM a_h h CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) bs
+      |  ${phashBandSql(64, "a_h h")}
       |), idx64 AS (
       |  SELECT DISTINCT band, band_key, hash_lo, hash_hi
       |  FROM bnd64 WHERE doc_id % 3 = 0
@@ -3809,18 +3753,14 @@ object LlmQueries {
       |  SELECT DISTINCT p.doc_id
       |  FROM (SELECT * FROM bnd64 WHERE doc_id % 3 = 1) p
       |  JOIN idx64 i ON i.band = p.band AND i.band_key = p.band_key
-      |  WHERE bit_count(xor(p.hash_lo, i.hash_lo))
-      |      + bit_count(xor(p.hash_hi, i.hash_hi)) <= 3
+      |  WHERE ${phashVerifySql(64)}
       |), archive AS (
       |  SELECT doc_id FROM documents WHERE doc_id % 3 = 0
       |  UNION
       |  SELECT doc_id FROM documents WHERE doc_id % 3 = 1
       |    AND doc_id NOT IN (SELECT doc_id FROM hits64)
       |), bnd128 AS (
-      |  SELECT h.doc_id, h.h0, h.h1, h.h2, h.h3, bs.band,
-      |    CASE bs.band WHEN 0 THEN h.h0 WHEN 1 THEN h.h1
-      |                 WHEN 2 THEN h.h2 ELSE h.h3 END AS band_key
-      |  FROM b_h h CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) bs
+      |  ${phashBandSql(128, "b_h h")}
       |), idx128 AS (
       |  SELECT DISTINCT band, band_key, h0, h1, h2, h3
       |  FROM bnd128 WHERE doc_id IN (SELECT doc_id FROM archive)
@@ -3831,8 +3771,7 @@ object LlmQueries {
       |  SELECT DISTINCT p.doc_id
       |  FROM probe p JOIN idx128 i
       |    ON i.band = p.band AND i.band_key = p.band_key
-      |  WHERE bit_count(xor(p.h0, i.h0)) + bit_count(xor(p.h1, i.h1))
-      |      + bit_count(xor(p.h2, i.h2)) + bit_count(xor(p.h3, i.h3)) <= 3
+      |  WHERE ${phashVerifySql(128)}
       |)
       |SELECT p.doc_id,
       |  p.doc_id IN (SELECT doc_id FROM hits) AS hit_index,
@@ -3847,21 +3786,18 @@ object LlmQueries {
     val day2 = ids.filter(col("doc_id") % 3 === 1)
     val day3 = ids.filter(col("doc_id") % 3 === 2 ||
       col("doc_id") % 9 === 0 || col("doc_id") % 9 === 1)
-    def toImages(day: org.apache.spark.sql.DataFrame)(bits: Int) =
-      if (bits == 64) Multimodal.asPhashImageTable(day)
-      else Multimodal.asPhash128ImageTable(day)
     val oldDir = Q.tempDir("graft_phmig_old").toString
     val newDir = Q.tempDir("graft_phmig_new").toString
     val expected = Tables.documentsCount(s, d) // ≤ crossover → 64-bit
-    PhashIndex.processBatch(s, oldDir, toImages(day1),
+    PhashIndex.processBatch(s, oldDir, Multimodal.phashImageTable(day1),
       expectedIndexRows = expected)
-    val ann2 = PhashIndex.processBatch(s, oldDir, toImages(day2),
-      expectedIndexRows = expected)
+    val ann2 = PhashIndex.processBatch(s, oldDir,
+      Multimodal.phashImageTable(day2), expectedIndexRows = expected)
     val archive = day1
       .unionByName(ann2.filter(col("keep")).select("doc_id"))
     val nIdx = PhashIndex.migrate(s, oldDir, newDir,
       Multimodal.asPhash128ImageTable(archive))
-    PhashIndex.processBatch(s, newDir, toImages(day3))
+    PhashIndex.processBatch(s, newDir, Multimodal.phashImageTable(day3))
       .withColumn("idx_rows", lit(nIdx))
       .orderBy("doc_id")
   }
@@ -3989,14 +3925,9 @@ object LlmQueries {
       .orderBy("doc_id")
   }
 
-  /** Multimodal — COMPRESSED video: real AVI/RIFF demux + real JPEG
-    * (MJPEG) decompression per frame. Frames are uniform gray at
-    * quality 1.0 — the measured exactness envelope of the JDK JPEG
-    * codec (see Multimodal's MJPEG section comment) — so the decoded
-    * gray values, and their sum over every frame of every doc, are
-    * closed-form oracle predictions through an actually-lossy codec. */
-  val mmMjpeg: Q = Q.sql(
-    "mm_mjpeg_decode",
+  /** `d` (doc_id, frame count n, gray g) of the synthesized MJPEG clips
+    * and the start of the select over it: doc_id, width, height. */
+  private val mjpegSelectHead: String =
     """WITH d AS (
       |  SELECT doc_id,
       |    CAST(2 + doc_id % 4 AS BIGINT) AS n,
@@ -4005,7 +3936,17 @@ object LlmQueries {
       |)
       |SELECT doc_id,
       |  CAST(16 + (doc_id % 5) * 8 AS INTEGER) AS width,
-      |  CAST(16 + (doc_id % 3) * 8 AS INTEGER) AS height,
+      |  CAST(16 + (doc_id % 3) * 8 AS INTEGER) AS height,""".stripMargin
+
+  /** Multimodal — COMPRESSED video: real AVI/RIFF demux + real JPEG
+    * (MJPEG) decompression per frame. Frames are uniform gray at
+    * quality 1.0 — the measured exactness envelope of the JDK JPEG
+    * codec (see Multimodal's MJPEG section comment) — so the decoded
+    * gray values, and their sum over every frame of every doc, are
+    * closed-form oracle predictions through an actually-lossy codec. */
+  val mmMjpeg: Q = Q.sql(
+    "mm_mjpeg_decode",
+    s"""$mjpegSelectHead
       |  CAST(n AS INTEGER) AS container_frames,
       |  n AS n_frames,
       |  CAST(g AS INTEGER) AS gray_first,
@@ -4027,15 +3968,7 @@ object LlmQueries {
     * time table breaks the hash. */
   val mmMov: Q = Q.sql(
     "mm_mov_decode",
-    """WITH d AS (
-      |  SELECT doc_id,
-      |    CAST(2 + doc_id % 4 AS BIGINT) AS n,
-      |    CAST(doc_id % 200 AS BIGINT) AS g
-      |  FROM documents
-      |)
-      |SELECT doc_id,
-      |  CAST(16 + (doc_id % 5) * 8 AS INTEGER) AS width,
-      |  CAST(16 + (doc_id % 3) * 8 AS INTEGER) AS height,
+    s"""$mjpegSelectHead
       |  CAST(2400 AS INTEGER) AS timescale,
       |  CAST(n * 100 AS BIGINT) AS duration_ts,
       |  CAST(n AS INTEGER) AS container_frames,
@@ -4218,12 +4151,7 @@ object LlmQueries {
   val mmPhashNearDup: Q = Q.sql(
     "mm_phash_neardup",
     s"""${phashHashCtes()}, banded AS (
-      |  SELECT h.doc_id, h.hash_lo, h.hash_hi, bs.band,
-      |    CASE bs.band WHEN 0 THEN h.hash_lo % 65536
-      |                 WHEN 1 THEN h.hash_lo // 65536
-      |                 WHEN 2 THEN h.hash_hi % 65536
-      |                 ELSE h.hash_hi // 65536 END AS band_key
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) bs
+      |  ${phashBandSql(64, "h")}
       |), cand AS (
       |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
       |    l.hash_lo AS lo_a, l.hash_hi AS hi_a,
@@ -4516,20 +4444,13 @@ object LlmQueries {
       |  cs.naive_is_leaky, CAST(64 AS BIGINT) AS band_bits
       |FROM sp JOIN cs USING (component)
       |ORDER BY sp.doc_id""".stripMargin) { (s, d) =>
-    val docs = Tables.documents(s, d)
-    val tokenRows = docs.select(col("doc_id"),
-      explode(TA.tokens(col("text"))).as("token"))
     // autoBandPolicy width + twin-replayed DefaultBucketCap, gated
     // via band_bits — see dd_cluster_canonical (identical r16
     // migration; this is the consumer where band saturation
     // silently under-merges = LEAKS, so the policy matters most).
     // Sizing count memoized per dir (r16 ADVICE, knownN pattern).
-    val bits = Dedup.autoBandPolicy(Tables.documentsCount(s, d))
-    val pairs = Dedup.simhashNearDups(
-      Dedup.simhashFromTokens(tokenRows, bits), bits = bits)
-    val cc = Dedup.nearDupLabels(
-      docs.select(col("doc_id").as("id")),
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+    val (cc, bits) = Dedup.autoNearDupLabels(Tables.documents(s, d),
+      Tables.documentsCount(s, d))
     val sp = TA.leakageSafeSplit(cc, seed = "split14",
         valPct = 10, testPct = 10)
       .withColumn("nh",

@@ -106,24 +106,24 @@ object Q {
   def quantSql(x: String): String =
     s"CAST(ROUND(CAST($x AS DOUBLE) * 1000000) AS BIGINT)"
 
-  /** Quantized dot product of the value columns `a` and `b`. */
-  def dotSql(a: String, b: String): String =
-    s"SUM(${quantSql(a)} * ${quantSql(b)})"
+  /** Quantized dot product of the [[embeddingDimCtes]] value columns
+    * `qv` and `cv`. */
+  val dotSql: String = s"SUM(${quantSql("qv")} * ${quantSql("cv")})"
 
-  /** CTEs `qe(<qId>, <qv>, pos)` and `ce(<cId>, <cv>, pos)`: one row
+  /** CTEs `qe(<qId>, qv, pos)` and `ce(<cId>, cv, pos)`: one row
     * per dimension of each embedding in `qFrom` (the query side) and in
     * `cFrom` (the candidates), FROM clauses over `embeddings`-shaped
     * rows; `pos` is 1-based. */
   def embeddingDimCtes(qFrom: String, cFrom: String,
-                       qId: String = "query_id", cId: String = "cand_id",
-                       qv: String = "qv", cv: String = "cv"): String = {
+                       qId: String = "query_id",
+                       cId: String = "cand_id"): String = {
     def dims(cte: String, id: String, value: String, from: String) =
       s"""$cte AS (
          |  SELECT vec_id AS $id, unnest(embedding) AS $value,
          |         unnest(generate_series(1, len(embedding))) AS pos
          |  FROM $from
          |)""".stripMargin
-    dims("qe", qId, qv, qFrom) + ", " + dims("ce", cId, cv, cFrom)
+    dims("qe", qId, "qv", qFrom) + ", " + dims("ce", cId, "cv", cFrom)
   }
 
   /** CTE `norms(id, norm)`: the quantized L2 norm of every embedding in
@@ -139,9 +139,9 @@ object Q {
   /** [[embeddingDimCtes]] over all of `embeddings`, then `dots(query_id,
     * cand_id, dot)`: the quantized dot product of each candidate pair
     * in `cand(query_id, cand_id)`. */
-  def candDotCtes(qv: String, cv: String): String =
-    s"""${embeddingDimCtes("embeddings", "embeddings", qv = qv, cv = cv)}, dots AS (
-       |  SELECT cand.query_id, cand.cand_id, ${dotSql(qv, cv)} AS dot
+  val candDotCtes: String =
+    s"""${embeddingDimCtes("embeddings", "embeddings")}, dots AS (
+       |  SELECT cand.query_id, cand.cand_id, $dotSql AS dot
        |  FROM cand
        |  JOIN qe ON qe.query_id = cand.query_id
        |  JOIN ce ON ce.cand_id = cand.cand_id AND ce.pos = qe.pos
@@ -169,8 +169,8 @@ object Q {
   /** [[candDotCtes]], [[normsCte]] over `embeddings`, then
     * [[cosineTop5Sql]]: the exact cosine top 5 of each query among its
     * candidates `cand(query_id, cand_id)`. */
-  def candCosineTop5Sql(qv: String, cv: String): String =
-    s"${candDotCtes(qv, cv)}, ${normsCte("embeddings")}, $cosineTop5Sql"
+  val candCosineTop5Sql: String =
+    s"$candDotCtes, ${normsCte("embeddings")}, $cosineTop5Sql"
 
   // ---- Scratch-dir hygiene (r12 VERDICT nit #1): queries that COMMIT
   // AtomicTables / stream checkpoints build under temp directories which

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
@@ -113,30 +114,7 @@ object ShopifyChainQueries {
       col("o_orderkey").as("id"),
       concat(lit("dlt"), col("o_orderkey").cast("string")).as("_dlt_id"))
     val staged = Shopify.orderFulfillments(rawFulfillments, rawOrders)
-    val stagedOrders = o.select(
-      col("o_orderkey").as("shopify_order_id"),
-      when(col("o_orderkey") % 2 === 0, "web").otherwise("pos")
-        .as("source_name"),
-      when(col("o_orderkey") % 3 === 0, col("o_totalprice") * 0.01)
-        .otherwise(0.0).as("total_discounts"))
-    val attribution = o.select(
-      col("o_orderkey").as("shopify_order_id"),
-      when(col("o_orderkey") % 4 === 0, "google_ads").as("utm_source"),
-      lit(null).cast("string").as("utm_medium"),
-      lit(null).cast("string").as("utm_campaign"),
-      when(col("o_orderkey") % 5 === 0, "https://www.google.com/search")
-        .when(col("o_orderkey") % 5 === 1,
-          "https://partner.example.com/link").as("referrer"),
-      lit(null).cast("string").as("landing_page"))
-    Shopify.ordersEnriched(stagedOrders, Some(staged), attribution)
-      .select(
-        col("shopify_order_id"),
-        col("fulfillment_latest_status"),
-        col("tracking_number"), col("tracking_company"),
-        col("fulfilled_at").cast("string").as("fulfilled_at"),
-        col("acquisition_channel"), col("has_discount"),
-        col("has_tracking"))
-      .orderBy("shopify_order_id")
+    enrichedOrders(o, Some(staged))
   }
 
   /** A6 — the REAL `customerEnrichment` rollup over synthesized
@@ -245,6 +223,14 @@ object ShopifyChainQueries {
       |  FALSE AS has_tracking
       |FROM src ORDER BY shopify_order_id""".stripMargin) { (s, d) =>
     val o = Tables.orders(s, d)
+    enrichedOrders(o, None)
+  }
+
+  /** `Shopify.ordersEnriched` over staged orders and attribution
+    * synthesized from `orders` (the [[shopifySrcCte]] rules), with the
+    * fulfillment source `staged` present or absent. */
+  private def enrichedOrders(o: DataFrame,
+                             staged: Option[DataFrame]): DataFrame = {
     val stagedOrders = o.select(
       col("o_orderkey").as("shopify_order_id"),
       when(col("o_orderkey") % 2 === 0, "web").otherwise("pos")
@@ -260,7 +246,7 @@ object ShopifyChainQueries {
         .when(col("o_orderkey") % 5 === 1,
           "https://partner.example.com/link").as("referrer"),
       lit(null).cast("string").as("landing_page"))
-    Shopify.ordersEnriched(stagedOrders, None, attribution)
+    Shopify.ordersEnriched(stagedOrders, staged, attribution)
       .select(
         col("shopify_order_id"),
         col("fulfillment_latest_status"),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -23,15 +24,19 @@ object StreamingQueries {
       |FROM events
       |GROUP BY 1, 2
       |ORDER BY window_start, event_type""".stripMargin) { (s, d) =>
+    windowTotals(s, d, window(col("ts"), "1 hour"))
+  }
+
+  /** Event count and decimal-exact value sum per (window start, event
+    * type) of the events' `win` window column. */
+  private def windowTotals(s: SparkSession, d: String,
+                           win: Column): DataFrame =
     Tables.events(s, d)
-      .groupBy(
-        window(col("ts"), "1 hour")("start").cast("string")
-          .as("window_start"),
+      .groupBy(win("start").cast("string").as("window_start"),
         col("event_type"))
       .agg(count(lit(1)).as("event_count"),
         dsum(col("value")).as("total_value"))
       .orderBy("window_start", "event_type")
-  }
 
   /** Sliding 1-hour windows every 30 minutes per event type — the
     * overlapping twin of `st_tumbling_window` (each event in exactly 2
@@ -55,14 +60,7 @@ object StreamingQueries {
       |FROM e
       |GROUP BY 1, 2
       |ORDER BY window_start, event_type""".stripMargin) { (s, d) =>
-    Tables.events(s, d)
-      .groupBy(
-        window(col("ts"), "1 hour", "30 minutes")("start").cast("string")
-          .as("window_start"),
-        col("event_type"))
-      .agg(count(lit(1)).as("event_count"),
-        dsum(col("value")).as("total_value"))
-      .orderBy("window_start", "event_type")
+    windowTotals(s, d, window(col("ts"), "1 hour", "30 minutes"))
   }
 
   /** Gap-based sessionization (30-min inactivity): lag → new-session
@@ -297,48 +295,18 @@ object StreamingQueries {
       |GROUP BY user_id
       |ORDER BY user_id""".stripMargin) { (s, d) =>
     import graft.streaming.EventStream
-    // transformWithState requires the RocksDB provider; scope it to
-    // this run so the session keeps its default store (Verify/Bench
-    // run queries sequentially — no conf race). State partitions by
-    // the EventStream.statePartitions policy, same scoping: one
-    // RocksDB instance per partition per batch is the fixed cost, and
-    // the emitted rows are partition-count-invariant (keyed state).
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val partKey = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(provKey)
-    val prevParts = s.conf.get(partKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    s.conf.set(partKey, EventStream.statePartitions(s).toString)
+    // RocksDB provider and the statePartitions policy scoped to this
+    // run: one RocksDB instance per partition per batch is the fixed
+    // cost, and the emitted rows are partition-count-invariant (keyed
+    // state).
     val out = Q.tempDir("st_rt_out")
       .resolve("emissions").toString
     val ckpt = Q.tempDir("st_rt_ckpt")
       .toString
-    try {
-      // the file stream source needs a DIRECTORY (the landing-dir shape
-      // real streaming ingest has); testdata ships events as one file —
-      // stage it via hard link (copy fallback), O(1) metadata
-      val landing = Q.tempDir("st_rt_land")
-      val src = java.nio.file.Paths.get(s"$d/events.parquet")
-      val dst = landing.resolve("events.parquet")
-      try java.nio.file.Files.createLink(dst, src)
-      catch { case _: Exception =>
-        java.nio.file.Files.copy(src, dst); () }
-      val stream = EventStream.readEvents(s, landing.toString)
-      val q = EventStream.runningTotals(stream).toDF()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch {
-          (df: org.apache.spark.sql.DataFrame, _: Long) =>
-            df.write.mode("append").parquet(out); ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      s.conf.set(partKey, prevParts)
-      prev match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None => s.conf.unset(provKey)
-      }
+    EventStream.withStateStore(s) {
+      val landing = landEvents(d, "st_rt_land")
+      EventStream.drainToParquet(EventStream.runningTotals(
+        EventStream.readEvents(s, landing.toString)).toDF(), ckpt, out)
     }
     // one cumulative emission per (user, batch-touched): keep the last
     s.read.parquet(out)
@@ -346,6 +314,20 @@ object StreamingQueries {
       .agg(max(col("n_events")).as("n_events"),
         max_by(col("value_cents"), col("n_events")).as("value_cents"))
       .orderBy("user_id")
+  }
+
+  /** A scratch landing dir holding the sf dir `d`'s events file: the
+    * file stream source needs a DIRECTORY (the landing-dir shape real
+    * streaming ingest has) and testdata ships events as one file, so
+    * it is staged by hard link (copy fallback), O(1) metadata. */
+  private def landEvents(d: String, prefix: String): java.nio.file.Path = {
+    val landing = Q.tempDir(prefix)
+    val src = java.nio.file.Paths.get(s"$d/events.parquet")
+    val dst = landing.resolve("events.parquet")
+    try java.nio.file.Files.createLink(dst, src)
+    catch { case _: Exception =>
+      java.nio.file.Files.copy(src, dst); () }
+    landing
   }
 
   /** Sessionized `events` in integer micros: `flagged` marks each
@@ -392,71 +374,20 @@ object StreamingQueries {
       |FROM sess GROUP BY user_id, session_id
       |ORDER BY user_id, session_start_us""".stripMargin) { (s, d) =>
     import graft.streaming.EventStream
-    import org.apache.spark.sql.types.LongType
-    // provider + state-partition policy scoped exactly as in
-    // st_running_totals; the resumed pass reads the count pinned in the
-    // checkpoint either way.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val partKey = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(provKey)
-    val prevParts = s.conf.get(partKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    s.conf.set(partKey, EventStream.statePartitions(s).toString)
-    val landing = Q.tempDir("st_stm_land")
+    // provider + state-partition policy scoped as in st_running_totals
     val out = Q.tempDir("st_stm_out")
       .resolve("emissions").toString
     val ckpt = Q.tempDir("st_stm_ckpt")
       .toString
-    try {
-      val src = java.nio.file.Paths.get(s"$d/events.parquet")
-      val dst = landing.resolve("events.parquet")
-      try java.nio.file.Files.createLink(dst, src)
-      catch { case _: Exception =>
-        java.nio.file.Files.copy(src, dst); () }
-      def runPass(): Unit = {
-        val q = EventStream.timerSessions(
-            EventStream.readEvents(s, landing.toString)).toDF()
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch {
-            (df: org.apache.spark.sql.DataFrame, _: Long) =>
-              df.write.mode("append").parquet(out); ()
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    EventStream.withStateStore(s) {
+      val landing = landEvents(d, "st_stm_land")
+      def runPass(): Unit = EventStream.drainToParquet(
+        EventStream.timerSessions(
+          EventStream.readEvents(s, landing.toString)).toDF(), ckpt, out)
       runPass()
-      // sentinel in the FILE's raw shape (ts flavor drifts across
-      // testdata generations): max raw ts + 2 days, other columns
-      // overridden or null, written physically compatible and moved
-      // into the landing dir for the resumed pass
-      val raw = s.read.parquet(s"$d/events.parquet")
-      val bumped =
-        if (raw.schema("ts").dataType == LongType)
-          col("ts") + lit(2L * 86400L * 1000000000L) // epoch NANOS
-        else col("ts") + expr("INTERVAL 2 DAYS")
-      val overrides = Map[String, org.apache.spark.sql.Column](
-        "event_id" -> lit(-1L), "user_id" -> lit(-1L),
-        "event_type" -> lit("sentinel"), "value" -> lit(0.0),
-        "ts" -> bumped)
-      val sentinel = raw.agg(max(col("ts")).as("ts"))
-        .select(raw.schema.fields.toSeq.map(f =>
-          overrides.getOrElse(f.name, lit(null))
-            .cast(f.dataType).as(f.name)): _*)
-      val stage = Q.tempDir("st_stm_stage")
-      sentinel.coalesce(1).write.mode("overwrite")
-        .parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
-      java.nio.file.Files.move(java.nio.file.Paths.get(part),
-        landing.resolve("z_sentinel.parquet"))
+      EventStream.stageSentinel(s, s"$d/events.parquet", landing,
+        Q.tempDir("st_stm_stage"))
       runPass()
-    } finally {
-      s.conf.set(partKey, prevParts)
-      prev match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None => s.conf.unset(provKey)
-      }
     }
     s.read.parquet(out).filter(col("user_id") >= 0)
       .orderBy("user_id", "session_start_us")

@@ -34,16 +34,79 @@ object EventStream {
     * a toy-volume pass SLOWER with more cores — the driver's r20 bench
     * measured st_session_timers at 8c/32c ratio 0.53 (8 cores beat 32).
     * Production sizing is state-VOLUME-driven (target state bytes per
-    * partition: keys × bytes/key / ~1 GB per store instance), set via
-    * the conf override below and pinned in the checkpoint thereafter —
-    * by nature independent of how wide the submitting driver happens to
-    * be. Default: `spark.graft.streaming.statePartitions` when set,
-    * else min(cores, 8) — full parallelism below 8 cores, flat instance
-    * count above, so per-core bench comparisons measure the plan. */
+    * partition: keys × bytes/key / ~1 GB per store instance) and pinned
+    * in the checkpoint by the first pass — by nature independent of how
+    * wide the submitting driver happens to be. Here: min(cores, 8) —
+    * full parallelism below 8 cores, flat instance count above, so
+    * per-core bench comparisons measure the plan. */
   def statePartitions(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.streaming.statePartitions")
-      .map(_.toInt)
-      .getOrElse(math.min(spark.sparkContext.defaultParallelism, 8))
+    math.min(spark.sparkContext.defaultParallelism, 8)
+
+  /** Runs `body` with the RocksDB state-store provider (which
+    * transformWithState requires) and [[statePartitions]] shuffle
+    * partitions set on `spark`, then restores both confs as they were —
+    * a conf that was unset is unset again — also when `body` throws.
+    * Harnesses run queries one at a time, so the scoping races with no
+    * other query. A resumed pass reads the partition count pinned in its
+    * checkpoint either way. */
+  def withStateStore[T](spark: SparkSession)(body: => T): T = {
+    val scoped = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming." +
+          "state.RocksDBStateStoreProvider"),
+      "spark.sql.shuffle.partitions" -> statePartitions(spark).toString)
+    val set = spark.conf.getAll
+    val prev = scoped.map { case (k, _) => k -> set.get(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Starts `stream` with each micro-batch appended to parquet at `out`
+    * through `foreachBatch` (checkpoint at `ckpt`), processes every
+    * input available, then stops it. */
+  def drainToParquet(stream: DataFrame, ckpt: String, out: String): Unit = {
+    val q = stream.writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        df.write.mode("append").parquet(out); ()
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** Moves into `landing`, as `z_sentinel.parquet`, one event in the raw
+    * file shape of the events at `eventsPath`: ts 2 days past their max
+    * (epoch NANOS when the raw `ts` is a long — its flavor drifts
+    * across testdata generations), event_id and user_id -1, event_type
+    * "sentinel", value 0, every other column null. A resumed pass over
+    * `landing` then moves the watermark past every real event, so every
+    * open session closes; the sentinel user's own stays open. `stage`
+    * is an empty scratch dir for the write. */
+  def stageSentinel(spark: SparkSession, eventsPath: String,
+                    landing: java.nio.file.Path,
+                    stage: java.nio.file.Path): Unit = {
+    val raw = spark.read.parquet(eventsPath)
+    val bumped =
+      if (raw.schema("ts").dataType == LongType)
+        col("ts") + lit(2L * 86400L * 1000000000L) // epoch NANOS
+      else col("ts") + expr("INTERVAL 2 DAYS")
+    val overrides = Map[String, org.apache.spark.sql.Column](
+      "event_id" -> lit(-1L), "user_id" -> lit(-1L),
+      "event_type" -> lit("sentinel"), "value" -> lit(0.0),
+      "ts" -> bumped)
+    raw.agg(max(col("ts")).as("ts"))
+      .select(raw.schema.fields.toSeq.map(f =>
+        overrides.getOrElse(f.name, lit(null))
+          .cast(f.dataType).as(f.name)): _*)
+      .coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    val part = java.nio.file.Files.list(stage).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).head
+    java.nio.file.Files.move(java.nio.file.Paths.get(part),
+      landing.resolve("z_sentinel.parquet"))
+  }
 
   /** File-source stream of events with normalized timestamp. The
     * physical flavor of `ts` drifts across testdata generations
@@ -63,15 +126,7 @@ object EventStream {
   /** Watermarked tumbling-window counts/sums per event type. */
   def tumblingAgg(events: DataFrame, window: String = "1 hour",
                   watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window),
-        col("event_type"))
-      .agg(count(lit(1)).as("event_count"),
-        sum(col("value")).as("total_value"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("event_type"), col("event_count"), col("total_value"))
+    slidingAgg(events, window, window, watermark)
 
   /** Watermarked SLIDING-window counts/sums per event type — the
     * overlapping-window sibling of [[tumblingAgg]] (duration a multiple
@@ -419,15 +474,22 @@ object EventStream {
 
   /** [[RunningTotalsProcessor]] wired over the events shape. */
   def runningTotals(events: DataFrame)
-      : org.apache.spark.sql.Dataset[UserTotals] = {
+      : org.apache.spark.sql.Dataset[UserTotals] =
+    perUserState(events, new RunningTotalsProcessor)
+
+  /** `processor` over the events shape (event_id, user_id, event_type,
+    * value), keyed by user, with no timers. */
+  private def perUserState[T <: Product :
+      scala.reflect.runtime.universe.TypeTag](events: DataFrame,
+      processor: org.apache.spark.sql.streaming.StatefulProcessor[
+        Long, EventRow, T]): org.apache.spark.sql.Dataset[T] = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val spark = events.sparkSession
     import spark.implicits._
     events.selectExpr("event_id", "user_id", "event_type", "value")
       .as[EventRow]
       .groupByKey(_.user_id)
-      .transformWithState(new RunningTotalsProcessor,
-        TimeMode.None(), OutputMode.Append())
+      .transformWithState(processor, TimeMode.None(), OutputMode.Append())
   }
 
   final case class TypeCount(user_id: Long, event_type: String, n: Long)
@@ -467,16 +529,8 @@ object EventStream {
 
   /** [[TypeCountsProcessor]] wired over the events shape. */
   def typeCounts(events: DataFrame)
-      : org.apache.spark.sql.Dataset[TypeCount] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.selectExpr("event_id", "user_id", "event_type", "value")
-      .as[EventRow]
-      .groupByKey(_.user_id)
-      .transformWithState(new TypeCountsProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
+      : org.apache.spark.sql.Dataset[TypeCount] =
+    perUserState(events, new TypeCountsProcessor)
 
   final case class RecentEvents(user_id: Long, recent_ids: Seq[Long])
 
@@ -508,16 +562,8 @@ object EventStream {
 
   /** [[RecentEventsProcessor]] wired over the events shape. */
   def recentEvents(events: DataFrame, n: Int = 3)
-      : org.apache.spark.sql.Dataset[RecentEvents] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.selectExpr("event_id", "user_id", "event_type", "value")
-      .as[EventRow]
-      .groupByKey(_.user_id)
-      .transformWithState(new RecentEventsProcessor(n),
-        TimeMode.None(), OutputMode.Append())
-  }
+      : org.apache.spark.sql.Dataset[RecentEvents] =
+    perUserState(events, new RecentEventsProcessor(n))
 
   final case class TimedEvent(event_id: Long, user_id: Long,
                               ts_us: Long, value: Double)

@@ -308,14 +308,7 @@ object ScaleBench {
   private def clusterCanonical(s: SparkSession, dir: String): Long = {
     // full corpus, mirroring the migrated consumer (sample dropped r15)
     val docs = docsOf(s, dir)
-    val tokenRows = docs.select(col("doc_id"),
-      explode(TA.tokens(col("text"))).as("token"))
-    val bits = Dedup.autoBandPolicy(Tables.documentsCount(s, dir))
-    val pairs = Dedup.simhashNearDups(
-      Dedup.simhashFromTokens(tokenRows, bits), bits = bits)
-    val cc = Dedup.nearDupLabels(
-      docs.select(col("doc_id").as("id")),
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+    val (cc, _) = Dedup.autoNearDupLabels(docs, Tables.documentsCount(s, dir))
     val w = Window.partitionBy(col("component"))
       .orderBy(col("text_len").desc, col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -360,14 +353,13 @@ object ScaleBench {
         (col("doc_id") % 7 === 0 && col("doc_id") % 5 =!= 4))
       .unionByName(ids.filter(col("doc_id") % 9 === 0)
         .select((col("doc_id") * 2 + 1000000000L).as("doc_id")))
-    def images(day: DataFrame)(b: Int) =
-      if (b == 64) Multimodal.asPhashImageTable(day)
-      else Multimodal.asPhash128ImageTable(day)
     val idx = java.nio.file.Files.createTempDirectory(s"graft_scale_ph$bits")
     try {
-      PhashIndex.processBatch(s, idx.toString, images(day1),
+      PhashIndex.processBatch(s, idx.toString,
+        Multimodal.phashImageTable(day1),
         bits = Some(bits)).count()
-      PhashIndex.processBatch(s, idx.toString, images(day2),
+      PhashIndex.processBatch(s, idx.toString,
+        Multimodal.phashImageTable(day2),
         bits = Some(bits)).count()
     } finally Q.deleteRecursively(idx)
   }
@@ -377,16 +369,9 @@ object ScaleBench {
     * families (simhash_band16 + cc_full) plus a projection — one row
     * confirming the composition inherits their exponents. */
   private def leakageSplit(s: SparkSession, dir: String): Long = {
-    val docs = docsOf(s, dir)
-    val tokenRows = docs.select(col("doc_id"),
-      explode(TA.tokens(col("text"))).as("token"))
     // policy-driven width, mirroring the r16 consumer (128-bit at 100×)
-    val bits = Dedup.autoBandPolicy(Tables.documentsCount(s, dir))
-    val pairs = Dedup.simhashNearDups(
-      Dedup.simhashFromTokens(tokenRows, bits), bits = bits)
-    val cc = Dedup.nearDupLabels(
-      docs.select(col("doc_id").as("id")),
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+    val (cc, _) = Dedup.autoNearDupLabels(docsOf(s, dir),
+      Tables.documentsCount(s, dir))
     TA.leakageSafeSplit(cc, seed = "split14", valPct = 10, testPct = 10)
       .count()
   }
@@ -519,52 +504,25 @@ object ScaleBench {
       probeCap = Some(512)).count()
   }
 
+  /** The st_session_timers composition over the amplified events dir:
+    * a drain, a watermark-advancing sentinel, and a resumed drain that
+    * closes every remaining session, under the gated query's state-store
+    * scope. */
   private def sessionTimers(s: SparkSession, dir: String): Long = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
     val landing = s"$dir/events.parquet"
     val scratch = java.nio.file.Files.createTempDirectory("graft_scale_st")
     val out = scratch.resolve("emissions").toString
     val ckpt = scratch.resolve("ckpt").toString
-    try {
-      def runPass(): Unit = {
-        val q = EventStream.timerSessions(
-            EventStream.readEvents(s, landing)).toDF()
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch {
-            (df: org.apache.spark.sql.DataFrame, _: Long) =>
-              df.write.mode("append").parquet(out); ()
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    try EventStream.withStateStore(s) {
+      def runPass(): Unit = EventStream.drainToParquet(
+        EventStream.timerSessions(EventStream.readEvents(s, landing)).toDF(),
+        ckpt, out)
       runPass()
-      // watermark-advancing sentinel: close every remaining session on
-      // the checkpoint-resumed pass (amplified events are TimestampType)
-      val raw = s.read.parquet(landing)
-      val sentinel = raw.agg(max(col("ts")).as("mx"))
-        .select(lit(-1L).as("event_id"),
-          (col("mx") + expr("INTERVAL 2 DAYS")).as("ts"),
-          lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-          lit(0.0).as("value"), lit(null).cast("string").as("props"))
-      val stage = scratch.resolve("stage")
-      sentinel.coalesce(1).write.mode("overwrite")
-        .parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
-      java.nio.file.Files.move(java.nio.file.Paths.get(part),
-        java.nio.file.Paths.get(s"$landing/z_sentinel.parquet"))
+      EventStream.stageSentinel(s, landing,
+        java.nio.file.Paths.get(landing), scratch.resolve("stage"))
       runPass()
       s.read.parquet(out).filter(col("user_id") >= 0).count()
-    } finally {
-      Q.deleteRecursively(scratch)
-      prev match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None => s.conf.unset(provKey)
-      }
-    }
+    } finally Q.deleteRecursively(scratch)
   }
 
   /** Range-join A/B over amplified events ([[graft.operators.RangeJoin]]):

@@ -27,6 +27,53 @@ object OracleSqlDigest {
   }
 }
 
+/** Plan-equivalence check for refactors: `Test/runMain graft.PlanDigest
+  * <dataDir> [name,name,...|-] [planDir]` builds each registry query (or
+  * the named ones; `-` for all) over `dataDir` in turn and prints `name
+  * sha256`, the hash of its optimized plan's tree string with
+  * expression ids, RDD ids and temp-dir paths masked; with `planDir` it
+  * also writes each masked tree to `planDir/<name>.txt`. The tree is
+  * not canonicalized: canonicalization orders commutative operands by
+  * hash codes that include a JVM-identity class hash, so the same plan
+  * prints differently from one run to the next.
+  * Run it on two trees and diff the output: a line that matches means
+  * the refactor left that plan as it was. Run it twice on one tree to
+  * find the plans that differ between runs (a random seed or a
+  * collected value in the plan). A build that commits state (index
+  * chains, streaming) may differ in what the masks do not cover;
+  * compare those by output instead. */
+object PlanDigest {
+  def masked(plan: String): String = plan
+    .replaceAll("#\\d+L?", "#")
+    .replaceAll("RDD\\[\\d+\\]", "RDD[]")
+    .replaceAll("(file:)?" + java.util.regex.Pattern.quote(
+      System.getProperty("java.io.tmpdir")) + "[^\\s,\\])]*", "<tmp>")
+
+  def main(args: Array[String]): Unit = {
+    val only = args.lift(1).filter(_ != "-")
+      .map(_.split(",").map(_.trim).toSet)
+    val planDir = args.lift(2).map(java.nio.file.Paths.get(_))
+    planDir.foreach(java.nio.file.Files.createDirectories(_))
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    spark.sparkContext.setLogLevel("ERROR")
+    for (q <- SparkEntry.registry.sortBy(_.name)
+         if only.forall(_.contains(q.name))) {
+      val line = try {
+        val plan = q.build(spark, args(0)).queryExecution.optimizedPlan
+        val text = masked(plan.treeString)
+        planDir.foreach(d =>
+          java.nio.file.Files.writeString(d.resolve(s"${q.name}.txt"), text))
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        md.digest(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          .map(b => f"${b & 0xff}%02x").mkString
+      } catch { case e: Throwable => s"FAILED ${e.getClass.getSimpleName}" }
+      finally { spark.catalog.clearCache(); queries.Q.cleanupScratch() }
+      println(s"${q.name} $line")
+    }
+    spark.stop()
+  }
+}
+
 /** Quietness-evidence plumbing (r19 VERDICT task #6): /proc/stat
   * parsing, window pct math, and the floor-commit REFUSAL verdict
   * Bench applies before overwriting bench/BENCH.json, plus a guard that
@@ -106,6 +153,16 @@ class BenchInfraSpec extends AnyFunSuite {
       }
     }
     assert(missing.isEmpty, s"docs name mains that do not exist: $missing")
+  }
+
+  test("PlanDigest masks expression ids, RDD ids and temp paths only") {
+    val tmp = System.getProperty("java.io.tmpdir")
+    val a = s"Project [id#12L, x#3]\n+- LogicalRDD MapPartitionsRDD[7], " +
+      s"Relation [id#12L] parquet file:$tmp/graft_x123/t, false"
+    val b = s"Project [id#40L, x#9]\n+- LogicalRDD MapPartitionsRDD[91], " +
+      s"Relation [id#40L] parquet $tmp/graft_x987/t, false"
+    assert(PlanDigest.masked(a) == PlanDigest.masked(b))
+    assert(PlanDigest.masked(a) != PlanDigest.masked(a.replace("x#3", "y#3")))
   }
 
   test("oracle SQL is byte-stable: every query's text matches its committed digest") {

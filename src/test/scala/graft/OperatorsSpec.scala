@@ -1448,4 +1448,16 @@ class OperatorsSpec extends SparkSpec {
     assert(TextAnalysis.leakageSafeSplit(labels, "s", 10, 10)
       .select("split").distinct().count() >= 1L)
   }
+
+  test("TextAnalysis.stratifiedSplit: invalid pct split fails at entry") {
+    import graft.llm.TextAnalysis
+    val docs = (1L to 50L).map(i => (i, "a")).toDF("doc_id", "src")
+    val e = intercept[IllegalArgumentException] {
+      TextAnalysis.stratifiedSplit(docs, $"doc_id", $"src", "s",
+        valPct = 60, testPct = 50)
+    }
+    assert(e.getMessage.contains("sum below 100"))
+    assert(TextAnalysis.stratifiedSplit(docs, $"doc_id", $"src", "s", 10, 10)
+      .filter($"split" === "train").count() >= 1L)
+  }
 }

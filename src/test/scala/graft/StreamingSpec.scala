@@ -831,4 +831,35 @@ class StreamingSpec extends SparkSpec {
     assert(sessions.filter(col("session_end") < col("session_start"))
       .count() == 0)
   }
+
+  test("withStateStore restores provider and shuffle partitions after a throwing body") {
+    val provKey = "spark.sql.streaming.stateStore.providerClass"
+    val partKey = "spark.sql.shuffle.partitions"
+    def explicit(k: String) = spark.conf.getAll.get(k)
+    val before = (explicit(provKey), explicit(partKey))
+    def throwing(): Unit = intercept[IllegalStateException] {
+      EventStream.withStateStore(spark) {
+        assert(explicit(provKey).exists(_.endsWith("RocksDBStateStoreProvider")))
+        assert(explicit(partKey) ==
+          Some(EventStream.statePartitions(spark).toString))
+        throw new IllegalStateException("body failed")
+      }
+    }
+    try {
+      // provider unset before: unset again, not pinned to its default
+      spark.conf.unset(provKey)
+      spark.conf.set(partKey, "3")
+      throwing()
+      assert(explicit(provKey) == None)
+      assert(explicit(partKey) == Some("3"))
+      // provider set before: that value comes back
+      spark.conf.set(provKey, "custom.Provider")
+      throwing()
+      assert(explicit(provKey) == Some("custom.Provider"))
+      assert(explicit(partKey) == Some("3"))
+    } finally {
+      before._1.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
+      before._2.fold(spark.conf.unset(partKey))(spark.conf.set(partKey, _))
+    }
+  }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Code-only line counts for the Scala sources.
 
-Usage: python3 tools/loc.py [repo_root] [--files] [--dups]
+Usage: python3 tools/loc.py [repo_root] [--files] [--dups [--runs]]
 
 Counts lines that carry code: blank lines, `//` line comments and
 `/* ... */` block comments (scaladoc included, nesting honoured) do not
@@ -16,6 +16,9 @@ Deleting comments does not reduce the code figure; deleting code does.
 inside a window of 6 consecutive code lines (each stripped of leading
 and trailing whitespace) that appears at least twice anywhere in
 src/main: a measure of copied text, for finding what to share.
+`--runs` adds one line per copied run (a maximal stretch of such
+lines in one file), as `file:first-last ~ partner_file:line`, where
+the partner is another place the run's first window appears.
 """
 import collections
 import os
@@ -109,21 +112,40 @@ def scan(root):
 
 
 def dups(root):
-    """{file: (duplicated code lines, code lines)} for `root`."""
-    seqs = {rel: [ln.strip() for ln, c in
-                  zip(text.split("\n"), code_line_flags(text)) if c]
-            for rel, text in read_all(root).items()}
-    windows = collections.Counter(
-        tuple(seq[i:i + DUP_WINDOW]) for seq in seqs.values()
-        for i in range(len(seq) - DUP_WINDOW + 1))
-    out = {}
-    for rel, seq in seqs.items():
-        dup = [False] * len(seq)
+    """({file: (duplicated code lines, code lines)}, copied runs) for
+    `root`; a run is (file, first line, last line, partner file, partner
+    line), line numbers 1-based in the source text."""
+    seqs = {}
+    for rel, text in read_all(root).items():
+        lines = text.split("\n")
+        seqs[rel] = [(n + 1, ln.strip()) for n, (ln, c) in
+                     enumerate(zip(lines, code_line_flags(text))) if c]
+    windows = collections.defaultdict(list)
+    for rel, seq in sorted(seqs.items()):
         for i in range(len(seq) - DUP_WINDOW + 1):
-            if windows[tuple(seq[i:i + DUP_WINDOW])] > 1:
-                dup[i:i + DUP_WINDOW] = [True] * DUP_WINDOW
-        out[rel] = (sum(dup), len(seq))
-    return out
+            key = tuple(ln for _, ln in seq[i:i + DUP_WINDOW])
+            windows[key].append((rel, seq[i][0]))
+    out, runs = {}, []
+    for rel, seq in sorted(seqs.items()):
+        dup = [None] * len(seq)
+        for i in range(len(seq) - DUP_WINDOW + 1):
+            where = windows[tuple(ln for _, ln in seq[i:i + DUP_WINDOW])]
+            if len(where) > 1:
+                partner = next(w for w in where if w != (rel, seq[i][0]))
+                for j in range(i, i + DUP_WINDOW):
+                    dup[j] = dup[j] or partner
+        out[rel] = (sum(d is not None for d in dup), len(seq))
+        i = 0
+        while i < len(seq):
+            if dup[i] is None:
+                i += 1
+                continue
+            j = i
+            while j + 1 < len(seq) and dup[j + 1] is not None:
+                j += 1
+            runs.append((rel, seq[i][0], seq[j][0]) + dup[i])
+            i = j + 1
+    return out, runs
 
 
 def report(files, per_file):
@@ -149,9 +171,12 @@ def main(argv):
     repo = args[0] if args else os.path.join(os.path.dirname(__file__), "..")
     per_file = "--files" in argv
     if "--dups" in argv:
-        files = dups(os.path.join(repo, "src", "main", "scala"))
+        files, runs = dups(os.path.join(repo, "src", "main", "scala"))
         print(f"src/main{'':26s} {'dup':>7s} {'code':>7s}")
         report(files, per_file)
+        if "--runs" in argv:
+            for rel, first, last, prel, pline in runs:
+                print(f"  {rel}:{first}-{last} ~ {prel}:{pline}")
         return
     for tree in ("main", "test"):
         root = os.path.join(repo, "src", tree, "scala")
