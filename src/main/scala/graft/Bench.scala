@@ -10,23 +10,8 @@ object Bench {
     // signal. min-of-2 + GC between queries keeps the number anchored
     // to the plan, not to the JVM's history.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    // Resolve bench/BENCH.json against the REPO ROOT, not the JVM cwd
-    // (r12 ADVICE: a Bench launched elsewhere wrote the round artifact
-    // to the wrong place — or threw — AFTER the full ~170s run). Walk
-    // up from cwd to the nearest build.sbt; env var overrides. Resolved
-    // BEFORE the run starts so a bad launch dir fails in ms, not
-    // minutes.
-    val repoRoot: java.nio.file.Path =
-      sys.env.get("SPARK_GRAFT_REPO_ROOT")
-        .map(java.nio.file.Paths.get(_))
-        .orElse {
-          Iterator.iterate(java.nio.file.Paths.get("").toAbsolutePath)(
-              _.getParent)
-            .takeWhile(_ != null)
-            .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
-        }
-        .getOrElse(sys.error(
-          "Bench: no build.sbt above cwd and SPARK_GRAFT_REPO_ROOT unset"))
+    // Resolved before the run starts so a bad launch dir fails in ms.
+    val repoRoot = tools.Measure.repoRoot()
     // Provenance stamp (r12 VERDICT nit #2): who produced the committed
     // artifact, plus a timestamp-free run id, so BASELINE.md's round
     // table and bench/BENCH.json can't diverge silently.
@@ -38,8 +23,7 @@ object Bench {
     // (r19 VERDICT tasks #2/#6): bytes detect plan regressions on noisy
     // days; the steal pct of each MIN-achieving sample is the quietness
     // evidence a committed floor needs. See tools/Measure.scala.
-    val stageMetrics = new tools.StageMetrics
-    spark.sparkContext.addSparkListener(stageMetrics)
+    val sampler = new tools.Sampler(spark)
     val stealMaxPct = sys.env.get("SPARK_GRAFT_STEAL_MAX_PCT")
       .map(_.toDouble).getOrElse(tools.Steal.DefaultMaxPct)
     // Warm the session (codegen, parquet footer reads, shuffle machinery)
@@ -58,52 +42,22 @@ object Bench {
     // query names to time instead of the full registry.
     val only: Option[Set[String]] =
       if (args.nonEmpty) Some(args.toSet) else None
-    // Spark's ContextCleaner reclaims shuffle files / broadcast blocks
-    // only AFTER their weak references are enqueued by a GC (it relies on
-    // spark.cleaner.periodicGC.interval=30min otherwise). 81 sequential
-    // queries in one JVM therefore accumulate dead shuffle state that
-    // inflates later queries' times (the r03 "regressions" that judge
-    // re-runs could not reproduce). An explicit GC between queries makes
-    // the cleaner timely; the short sleep lets its async drain finish.
-    def reclaim(): Unit = {
-      spark.catalog.clearCache()
-      // scratch dirs from the previous sample are dead once its count()
-      // returned; each rebuild allocates fresh ones (r12 VERDICT nit #1)
-      queries.Q.cleanupScratch()
-      System.gc()
-      Thread.sleep(200)
-    }
-    // One measured sample: wall seconds + the sample's stage-byte
-    // totals + the steal pct over its window. Bytes snap AFTER a
-    // listener-bus drain so late-completing stages aren't dropped.
-    final case class S(sec: Double, shuffle: Long, out: Long,
-                       steal: Option[Double])
-    def measured(body: () => Unit): S = {
-      reclaim()
-      stageMetrics.reset()
-      val st0 = tools.Steal.sample()
-      val t0 = System.nanoTime()
-      try body() catch { case _: Throwable => () }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val st1 = tools.Steal.sample()
-      org.apache.spark.sql.graftinternal.ListenerBusDrain
-        .waitUntilEmpty(spark, 2000)
-      val (shuf, _, _, out) = stageMetrics.snap
-      S(sec, shuf, out, tools.Steal.pct(st0, st1))
-    }
+    // A query whose sample throws is FAILED: its time runs only to the
+    // throw, so it takes no more samples and refuses the floor below.
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map {
       case (name, fn) =>
-        def sample(): S = measured(() => fn(spark, sfDir).count())
+        def sample(): tools.Sample = sampler.sample(fn(spark, sfDir).count())
         var samples = (1 to reps).map(_ => sample())
         // Multi-second queries carry the most headline weight and the
         // most per-sample noise: take a third sample for them (judge
         // min-of-3 methodology) so one GC pause or compilation stall
         // cannot inflate the reported min.
-        while (samples.map(_.sec).min > 1.5 && samples.size < 3)
+        while (samples.map(_.sec).min > 1.5 && samples.size < 3 &&
+               !samples.exists(_.failed))
           samples = samples :+ sample()
-        name -> samples.minBy(_.sec)
+        name -> samples.find(_.failed).getOrElse(samples.minBy(_.sec))
     }
     // Mart-layer throughput, not just per-query latency: wall time of the
     // full reference ModelDag (every model materialized through the
@@ -119,7 +73,7 @@ object Bench {
     // per-query rows got reps + adaptive third samples.
     def minOf2(body: () => Double): (Double, Option[Double]) = {
       def rep(): (Double, Option[Double]) = {
-        reclaim()
+        sampler.reclaim()
         val st0 = tools.Steal.sample()
         val w = body()
         (w, tools.Steal.pct(st0, tools.Steal.sample()))
@@ -174,7 +128,7 @@ object Bench {
         : Option[Seq[(Double, Map[String, Double], Option[Double])]] =
       if (only.forall(_.contains("refdemo_sf01_total")))
         Some(Seq.fill(2) {
-          reclaim()
+          sampler.reclaim()
           val st0 = tools.Steal.sample()
           val (w, times) = dagRun(ref.RefFixturesScale.inputs(spark, sfDir))
           (w, times, tools.Steal.pct(st0, tools.Steal.sample()))
@@ -207,7 +161,7 @@ object Bench {
             .write.mode("overwrite").parquet(target)
         }
         val out = Seq.fill(2) {
-          reclaim()
+          sampler.reclaim()
           val wh = java.nio.file.Files
             .createTempDirectory("graft_bench_corpus_wh")
           try {
@@ -238,13 +192,13 @@ object Bench {
       else None
     val corpusMin: Option[CorpusRep] = corpusRuns.map(_.minBy(_.total))
     val total = results.map(_._2.sec).sum
-    // Quietness verdict over the MIN-achieving samples of every
-    // reported number (queries + both refdemo keys): the committed
-    // floor is refused when any reported min was taken under steal.
-    val (stealQuiet, stealWorst) = tools.Steal.verdict(
-      results.map(_._2.steal) ++ refdemo.map(_._2) ++
-        refdemoSf.map(_._2) ++ corpusMin.map(_.steal),
-      stealMaxPct)
+    // Floor verdict over the MIN-achieving samples of every reported
+    // number (queries + both refdemo keys + corpus): the committed floor
+    // is refused when any query failed or any reported min was taken
+    // under steal.
+    val floor = tools.Measure.floor(results,
+      refdemo.map(_._2).toSeq ++ refdemoSf.map(_._2) ++
+        corpusMin.map(_.steal), stealMaxPct)
     // Locale.ROOT: a comma decimal separator would corrupt the JSON.
     def sec(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -255,11 +209,11 @@ object Bench {
     // pct — bytes are host-invariant for a fixed plan, so a
     // round-over-round byte jump is a plan regression even when wall
     // is noise.
-    def qmap(f: S => Double): String =
+    def qmap(f: tools.Sample => Double): String =
       results.map { case (k, v) => s"\"" + k + "\":" + sec(f(v)) }
         .mkString("{", ",", "}")
-    val qShuffle = qmap(_.shuffle / 1048576.0)
-    val qOut = qmap(_.out / 1048576.0)
+    val qShuffle = qmap(_.stages.shuffleBytes / 1048576.0)
+    val qOut = qmap(_.stages.outBytes / 1048576.0)
     val qSteal = qmap(_.steal.getOrElse(-1.0))
     // Slowest 10 models (plus wall + read-back) of EACH sf01 rep — the
     // per-model instrumentation the bimodality hunt needs (see dagRun).
@@ -292,27 +246,31 @@ object Bench {
     // (BENCH_r02's total was truncated away with the old key order).
     queries.Q.cleanupScratch() // last sample / refdemo fixtures
     spark.stop()
+    val failedJson = floor.failed.map(n => s"\"$n\"").mkString("[", ",", "]")
     val json =
-      s"""{"sf":"$sfDir","reps":$reps,"runner":"$runner","run_id":"$runId","steal_quiet":$stealQuiet,"steal_worst_pct":${sec(stealWorst)},"steal_threshold_pct":${sec(stealMaxPct)},"queries":$qs,"query_shuffle_mb":$qShuffle,"query_output_mb":$qOut,"query_steal_pct":$qSteal,$refdemoJson"unit":"sec","metric":"total","value":${sec(total)}}"""
+      s"""{"sf":"$sfDir","reps":$reps,"runner":"$runner","run_id":"$runId","steal_quiet":${floor.stealQuiet},"steal_worst_pct":${sec(floor.stealWorst)},"steal_threshold_pct":${sec(stealMaxPct)},"queries":$qs,"query_shuffle_mb":$qShuffle,"query_output_mb":$qOut,"query_steal_pct":$qSteal,$refdemoJson"failed_queries":$failedJson,"unit":"sec","metric":"total","value":${sec(total)}}"""
     // Self-contained artifact (judge r11 task #1): the driver keeps only
     // the last 2,000 chars of stdout, which truncates the per-query head
     // block out of BENCH_r{N}.json. Persist the FULL JSON in-repo so
     // round-over-round per-query comparison survives by artifact alone.
     // Full runs only — local subset iterations must not clobber the
-    // round's committed numbers. A run whose min-achieving samples were
-    // NOT quiet (steal over threshold) is refused the floor file and
-    // lands in BENCH_REJECTED.json instead (r19 task #6) — the r19
-    // committed floor carried 60–81 s of steal excess precisely because
-    // nothing enforced this.
+    // round's committed numbers. A run with a failed query, or whose
+    // min-achieving samples were NOT quiet (steal over threshold), is
+    // refused the floor file and lands in BENCH_REJECTED.json instead
+    // (r19 task #6) — the r19 committed floor carried 60–81 s of steal
+    // excess precisely because nothing enforced this.
     if (only.isEmpty) {
-      val name = if (stealQuiet) "bench/BENCH.json"
+      val name = if (floor.accepted) "bench/BENCH.json"
                  else "bench/BENCH_REJECTED.json"
       val out = repoRoot.resolve(name)
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out,
         (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      if (!stealQuiet) System.err.println(
-        f"[bench] STEAL REFUSAL: worst min-sample steal $stealWorst%.2f%% " +
+      if (floor.failed.nonEmpty) System.err.println(
+        s"[bench] FAILURE REFUSAL: ${floor.failed.mkString(", ")} failed " +
+          s"— floor NOT updated; wrote $name")
+      if (!floor.stealQuiet) System.err.println(
+        f"[bench] STEAL REFUSAL: worst min-sample steal ${floor.stealWorst}%.2f%% " +
           f"> $stealMaxPct%.2f%% — floor NOT updated; wrote $name")
     }
     println(json)

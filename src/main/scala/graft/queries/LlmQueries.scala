@@ -3538,15 +3538,35 @@ object LlmQueries {
   /** Day 1 and day 2 ids of the two-day phash index chains, the Spark
     * side of [[phashChainDocs]]: day 1 is every doc but the near-copies
     * (id % 5 = 4); day 2 the near-copies, every 7th other doc and a
-    * re-crawl copy (doc_id * 2 + 1000000) of every 9th. */
-  private def phashChainDays(s: SparkSession,
-                             d: String): (DataFrame, DataFrame) = {
+    * re-crawl copy (doc_id * 2 + copyBase) of every 9th. The gates use
+    * [[PhashCopyBase]]; a larger base keeps the copies above the ids of
+    * an amplified corpus. */
+  private def phashChainDays(s: SparkSession, d: String,
+                             copyBase: Long): (DataFrame, DataFrame) = {
     val ids = Tables.documents(s, d).select("doc_id")
     (ids.filter(col("doc_id") % 5 =!= 4),
       ids.filter(col("doc_id") % 5 === 4 ||
           (col("doc_id") % 7 === 0 && col("doc_id") % 5 =!= 4))
         .unionByName(ids.filter(col("doc_id") % 9 === 0)
-          .select((col("doc_id") * 2 + 1000000L).as("doc_id"))))
+          .select((col("doc_id") * 2 + copyBase).as("doc_id"))))
+  }
+
+  /** Re-crawl copy id base of the gated phash chains. */
+  private val PhashCopyBase = 1000000L
+
+  /** The two-day chain of [[phashChainDays]] through a fresh `bits`-wide
+    * [[graft.llm.PhashIndex]]: day 1 is committed, day 2 probes the
+    * committed version. Returns day 2's (doc_id, hit_index, keep). */
+  private[graft] def phashIndexChain(s: SparkSession, d: String, bits: Int,
+                                     copyBase: Long): DataFrame = {
+    import graft.llm.PhashIndex
+    val (day1, day2) = phashChainDays(s, d, copyBase)
+    val dir = Q.tempDir(s"graft_ph${bits}idx").toString
+    PhashIndex.processBatch(s, dir, Multimodal.phashImageTable(day1),
+      bits = Some(bits))
+    PhashIndex.processBatch(s, dir, Multimodal.phashImageTable(day2),
+      bits = Some(bits))
+      .drop("band_bits").orderBy("doc_id")
   }
 
   /** Ids of the two-day phash index chains: every document plus a
@@ -3635,15 +3655,7 @@ object LlmQueries {
     s"""$phash64ProbeSql
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
-    import graft.llm.PhashIndex
-    val (day1, day2) = phashChainDays(s, d)
-    val dir = Q.tempDir("graft_phidx")
-      .toString
-    PhashIndex.processBatch(s, dir, _ => Multimodal.asPhashImageTable(day1),
-      bits = Some(64))
-    PhashIndex.processBatch(s, dir, _ => Multimodal.asPhashImageTable(day2),
-      bits = Some(64))
-      .drop("band_bits").orderBy("doc_id")
+    phashIndexChain(s, d, 64, PhashCopyBase)
   }
 
   /** Multimodal + incremental dedup — the 128-BIT persisted
@@ -3662,14 +3674,7 @@ object LlmQueries {
     s"""$phash128ProbeSql
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
-    import graft.llm.PhashIndex
-    val (day1, day2) = phashChainDays(s, d)
-    val dir = Q.tempDir("graft_ph128idx").toString
-    PhashIndex.processBatch(s, dir,
-      _ => Multimodal.asPhash128ImageTable(day1), bits = Some(128))
-    PhashIndex.processBatch(s, dir,
-      _ => Multimodal.asPhash128ImageTable(day2), bits = Some(128))
-      .drop("band_bits").orderBy("doc_id")
+    phashIndexChain(s, d, 128, PhashCopyBase)
   }
 
   /** Multimodal + incremental dedup — the WIDTH-POLICY front door
@@ -3697,7 +3702,7 @@ object LlmQueries {
   private def phashPolicyChain(s: SparkSession, d: String, prefix: String,
                                expected: Long): DataFrame = {
     import graft.llm.PhashIndex
-    val (day1, day2) = phashChainDays(s, d)
+    val (day1, day2) = phashChainDays(s, d, PhashCopyBase)
     val dir = Q.tempDir(prefix).toString
     PhashIndex.processBatch(s, dir, Multimodal.phashImageTable(day1),
       expectedIndexRows = expected)

@@ -1,24 +1,23 @@
 package graft.tools
 
-/** Shared measurement plumbing for [[graft.Bench]] and [[ScaleBench]]
-  * (r19 VERDICT tasks #2/#6): per-sample stage-metric byte totals (the
-  * steal-immune plan signal) and hypervisor-steal sampling from
-  * `/proc/stat` (the quietness evidence that was previously manual
-  * vmstat discipline in BASELINE.md prose).
-  */
+import org.apache.spark.sql.SparkSession
 
-/** Per-sample stage-metric accumulator: total shuffle bytes (r+w),
-  * disk spill, summed per-task peak execution memory, and sink-output
-  * bytes. Register ONCE per session; `reset()` before a sample, drain
-  * the listener bus, then `snap`. Bytes are host- and steal-INVARIANT
-  * for a fixed plan, so round-over-round plan regressions stay
-  * detectable even when wall time is noise (SCALE.md doctrine;
-  * promoted from ScaleBench's private listener in r20 so Bench records
-  * them per query in bench/BENCH.json).
-  */
+/** Shared measurement plumbing for [[graft.Bench]] and [[ScaleBench]]:
+  * the one sampling loop, per-sample stage totals (the steal-immune plan
+  * signal) and hypervisor-steal sampling from `/proc/stat` (the
+  * quietness evidence). */
+
+/** Per-sample stage-metric accumulator: total shuffle bytes and records
+  * (read + written), disk spill, summed per-task peak execution memory,
+  * and sink-output bytes. Register ONCE per session; `reset()` before a
+  * sample, drain the listener bus, then `snap`. Bytes are host- and
+  * steal-INVARIANT for a fixed plan, so round-over-round plan
+  * regressions stay detectable even when wall time is noise (SCALE.md
+  * doctrine). Records are exact where compressed bytes are not: block
+  * size depends on the row order inside a partition. */
 final class StageMetrics extends org.apache.spark.scheduler.SparkListener {
-  private var shuffleRead = 0L
-  private var shuffleWrite = 0L
+  private var shuffleBytes = 0L
+  private var shuffleRecords = 0L
   private var spill = 0L
   private var peakMem = 0L
   private var outBytes = 0L
@@ -27,8 +26,10 @@ final class StageMetrics extends org.apache.spark.scheduler.SparkListener {
       : Unit = synchronized {
     val m = sc.stageInfo.taskMetrics
     if (m != null) {
-      shuffleRead += m.shuffleReadMetrics.totalBytesRead
-      shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+      shuffleBytes += m.shuffleReadMetrics.totalBytesRead +
+        m.shuffleWriteMetrics.bytesWritten
+      shuffleRecords += m.shuffleReadMetrics.recordsRead +
+        m.shuffleWriteMetrics.recordsWritten
       spill += m.diskBytesSpilled
       peakMem = math.max(peakMem, m.peakExecutionMemory)
       // sink-output bytes (parquet/commit writes): the COMMIT-COST
@@ -38,12 +39,96 @@ final class StageMetrics extends org.apache.spark.scheduler.SparkListener {
     }
   }
   def reset(): Unit = synchronized {
-    shuffleRead = 0; shuffleWrite = 0; spill = 0; peakMem = 0
+    shuffleBytes = 0; shuffleRecords = 0; spill = 0; peakMem = 0
     outBytes = 0
   }
-  /** (shuffle bytes r+w, spill bytes, peak exec memory, output bytes). */
-  def snap: (Long, Long, Long, Long) =
-    synchronized((shuffleRead + shuffleWrite, spill, peakMem, outBytes))
+  def snap: StageTotals = synchronized(
+    StageTotals(shuffleBytes, shuffleRecords, spill, peakMem, outBytes))
+}
+
+final case class StageTotals(shuffleBytes: Long, shuffleRecords: Long,
+                             spill: Long, peakMem: Long, outBytes: Long)
+
+/** One measured sample: wall seconds, the body's row count, the stage
+  * totals and the steal pct of its window. `error` is what the body
+  * threw; a failed sample's time runs only to the throw, so it is no
+  * measurement of the body. */
+final case class Sample(sec: Double, rows: Long, stages: StageTotals,
+                        steal: Option[Double], error: Option[Throwable]) {
+  def failed: Boolean = error.isDefined
+}
+
+/** The sampling loop of Bench and ScaleBench. Each sample first
+  * reclaims the previous one's state, then times the body alone and
+  * snaps the stage totals of exactly its stages. */
+final class Sampler(spark: SparkSession) {
+  private val metrics = new StageMetrics
+  spark.sparkContext.addSparkListener(metrics)
+
+  /** Listener events are async: drain before a sample's reset (earlier
+    * stages stay out) and before its snap (late stages stay in). */
+  private def drain(): Unit = org.apache.spark.sql.graftinternal.ListenerBusDrain
+    .waitUntilEmpty(spark, Measure.DrainTimeoutMs)
+
+  /** Spark's ContextCleaner frees shuffle files and broadcasts only after
+    * a GC, so back-to-back samples inflate each other (the r03
+    * "regressions"): uncache, delete scratch dirs, GC, let it drain. */
+  def reclaim(): Unit = {
+    spark.catalog.clearCache()
+    graft.queries.Q.cleanupScratch()
+    System.gc()
+    Thread.sleep(200)
+    drain()
+  }
+
+  def sample(body: => Long): Sample = {
+    reclaim()
+    metrics.reset()
+    val st0 = Steal.sample()
+    val t0 = System.nanoTime()
+    val (rows, error) =
+      try (body, None) catch { case e: Throwable => (-1L, Some(e)) }
+    val sec = (System.nanoTime() - t0) / 1e9
+    val stealPct = Steal.pct(st0, Steal.sample())
+    drain()
+    Sample(sec, rows, metrics.snap, stealPct, error)
+  }
+}
+
+object Measure {
+
+  /** Listener-bus drain bound; it only matters when the bus is stuck. */
+  val DrainTimeoutMs = 30000L
+
+  /** Repo root for the committed `bench/` artifacts: the
+    * SPARK_GRAFT_REPO_ROOT deployment path, else the nearest build.sbt
+    * above the working directory, never the JVM cwd itself (r12 ADVICE). */
+  def repoRoot(): java.nio.file.Path =
+    sys.env.get("SPARK_GRAFT_REPO_ROOT").map(java.nio.file.Paths.get(_))
+      .orElse {
+        Iterator.iterate(java.nio.file.Paths.get("").toAbsolutePath)(
+            _.getParent)
+          .takeWhile(_ != null)
+          .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
+      }
+      .getOrElse(sys.error(
+        "no build.sbt above cwd and SPARK_GRAFT_REPO_ROOT unset"))
+
+  /** Floor-commit verdict of a Bench run: its failed queries and
+    * [[Steal.verdict]] over the reported samples' and other reps' steal
+    * pcts. The committed floor is refused on either. */
+  final case class Floor(failed: Seq[String], stealQuiet: Boolean,
+                         stealWorst: Double) {
+    def accepted: Boolean = failed.isEmpty && stealQuiet
+  }
+
+  def floor(queries: Seq[(String, Sample)],
+            otherStealPcts: Seq[Option[Double]],
+            thresholdPct: Double): Floor = {
+    val (quiet, worst) = Steal.verdict(
+      queries.map(_._2.steal) ++ otherStealPcts, thresholdPct)
+    Floor(queries.collect { case (n, s) if s.failed => n }, quiet, worst)
+  }
 }
 
 /** Hypervisor-steal sampling from `/proc/stat`. Two same-day r19
@@ -51,10 +136,10 @@ final class StageMetrics extends org.apache.spark.scheduler.SparkListener {
   * shuffle bytes purely from 9–28% steal bursts, and the committed
   * r19 bench floor carries 60–81 s of documented steal excess — wall
   * numbers taken without quietness evidence are not floors. Bench and
-  * ScaleBench now sample steal around every measured rep and persist
-  * it in their JSON artifacts; Bench additionally REFUSES to overwrite
-  * the committed `bench/BENCH.json` floor when the min-achieving
-  * samples were not quiet (writing `BENCH_REJECTED.json` instead).
+  * ScaleBench sample steal around every measured rep and persist it in
+  * their JSON artifacts; Bench additionally REFUSES to overwrite the
+  * committed `bench/BENCH.json` floor when the min-achieving samples
+  * were not quiet (writing `BENCH_REJECTED.json` instead).
   */
 object Steal {
 

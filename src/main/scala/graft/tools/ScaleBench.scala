@@ -1,11 +1,11 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Sessions, Tables}
-import graft.llm.{Clustering, CorpusIndex, Dedup, TextAnalysis => TA}
-import graft.queries.Q
+import graft.{Sessions, SparkEntry, Tables}
+import graft.llm.{Clustering, CorpusIndex, Dedup, ShardedNearDupIndex,
+  TextAnalysis => TA}
+import graft.queries.{LlmQueries, Q}
 import graft.streaming.EventStream
 
 /** MEASURED SCALING EXPONENTS for the heaviest operator families — the
@@ -18,6 +18,12 @@ import graft.streaming.EventStream
   * worker pool — the property that lets the same plan ride a
   * 1000-executor cluster by adding workers; α ≈ 2 is a design bug at
   * 100 TB no cluster can absorb.
+  *
+  * A family with a registry twin IS that query: its [[Fam]] names it
+  * and runs `SparkEntry.queries(name)` over the amplified dir (same
+  * table file names), so a new family with a twin is added by name.
+  * The phash chains call the gates' chain builder. Every other family
+  * calls operators and says in one line why it has no twin.
   *
   * AMPLIFICATION preserves each family's work DISTRIBUTION instead of
   * inflating it artificially: the corpus is k salted replicas, each
@@ -55,10 +61,11 @@ import graft.streaming.EventStream
   * per-sample noise is the largest fraction of the measurement); one
   * sample at k ≥ 10 (multi-minute runs, relative noise small, and
   * stateful families — kmeans memo, streaming checkpoints — must not
-  * re-run against warm artifacts). A family whose sample exceeds the
-  * cutoff (default 300 s) skips its remaining scales and reports the
-  * exponent over the scales that ran. Output: a table on stdout plus
-  * `bench/SCALE.json`; SCALE.md's "Measured scaling" section cites it.
+  * re-run against warm artifacts), each through Bench's [[Sampler]]. A
+  * family whose sample exceeds the cutoff (default 300 s) skips its
+  * remaining scales and reports the exponent over the scales that ran.
+  * Output: a table on stdout plus `bench/SCALE.json`; SCALE.md's
+  * "Measured scaling" section cites it.
   *
   * Usage: `sbt "runMain graft.tools.ScaleBench [family...]"` with
   * env SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / SPARK_GRAFT_SCALE_CUTOFF
@@ -99,25 +106,26 @@ object ScaleBench {
   private def affine(s: String, a: Int, b: Int): String =
     s.indices.map(idx => s((a * idx + b) % s.length)).mkString
 
-  /** k salted replicas of `documents`: ids shifted by DocStride; the
-    * token alphabet permuted per replica by [[affine]] (letters; 26·4
-    * distinct maps) + rotation (digits) so cross-replica texts share
-    * no tokens and near-dup families see k independent 1× corpora. */
-  private[tools] def amplifyDocs(spark: SparkSession, src: String, k: Int,
-                                 out: String): Unit = {
+  /** Replica `i` of a documents frame: ids shifted by i·DocStride, the
+    * token alphabet permuted by [[affine]] (letters; 26·4 distinct
+    * maps) + rotation (digits), so texts of two replicas share no
+    * tokens and near-dup families see independent 1× corpora. */
+  private def docReplica(docs: DataFrame, i: Int): DataFrame = {
     val lower = "abcdefghijklmnopqrstuvwxyz"
     val digits = "0123456789"
+    docs
+      .withColumn("doc_id", col("doc_id") + lit(i * DocStride))
+      .withColumn("text", translate(col("text"), lower + digits,
+        affine(lower, 2 * (i / 26) + 1, i % 26) + rot(digits, i % 10)))
+  }
+
+  /** k salted replicas ([[docReplica]] 0..k-1) of `documents`. */
+  private[tools] def amplifyDocs(spark: SparkSession, src: String, k: Int,
+                                 out: String): Unit = {
     val docs = Tables.documents(spark, src)
     require(k <= 104, s"amplifyDocs: $k replicas exceed the 104 distinct " +
       "letter mappings (4 affine blocks × 26 rotations)")
-    (0 until k).map { i =>
-      docs.select(
-        (col("doc_id") + lit(i * DocStride)).as("doc_id"),
-        translate(col("text"), lower + digits,
-          affine(lower, 2 * (i / 26) + 1, i % 26) +
-            rot(digits, i % 10)).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ unionByName _)
+    (0 until k).map(docReplica(docs, _)).reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
   }
 
@@ -202,31 +210,10 @@ object ScaleBench {
       .write.mode("overwrite").parquet(s"$out/refm_receipts.parquet")
   }
 
-  // ---- families (each mirrors its registered oracle query's plan) ----
+  // ---- bodies of the families that are not a registry name ----
 
   private def docsOf(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
-
-  private def ccFull(s: SparkSession, dir: String): Long = {
-    val g = Q.docGraph(docsOf(s, dir))
-    Dedup.connectedComponents(g.nodes, g.edges).count()
-  }
-
-  private def ccIncremental(s: SparkSession, dir: String): Long = {
-    val g = Q.docGraph(docsOf(s, dir))
-    Dedup.incrementalComponents(
-      Dedup.connectedComponents(g.oldNodes, g.oldStar),
-      g.newNodes, g.newEdges).count()
-  }
-
-  private def minhashLsh(s: SparkSession, dir: String): Long = {
-    val shingled = TA.shingleRows(docsOf(s, dir),
-      col("doc_id"), col("text"), 3).distinct()
-    val bands = Dedup.minhashBands(shingled, bands = 4, rowsPerBand = 2)
-    val candidates = Dedup.lshCandidates(bands, maxBucketSize = 64)
-    Dedup.jaccardVerify(candidates, shingled)
-      .filter(col("jaccard") >= 0.8).count()
-  }
 
   /** DEPLOYMENT-GRAIN commit cost of the persisted corpus index (r16
     * VERDICT task #1's measurement): the daily batch is held FIXED at
@@ -277,10 +264,6 @@ object ScaleBench {
     } finally Q.deleteRecursively(idx)
   }
 
-  private def bpe(s: SparkSession, dir: String): Long =
-    TA.bpeTrainApply(docsOf(s, dir), col("doc_id"), col("text"),
-      rounds = 2).count()
-
   /** The disk-checkpointed BPE arm (r16 VERDICT stretch #9): identical
     * work to `bpe_train_apply` but per-round symbol state goes through
     * [[graft.operators.Ckpt.durable]] (parquet round-trip) instead of
@@ -296,85 +279,23 @@ object ScaleBench {
       checkpoint = graft.operators.Ckpt.durable(s"$dir/_bpe_ckpt"))
       .count()
 
-  /** simhash → banded near-dup pairs → CC → representative (the
-    * dd_cluster_canonical composition, heaviest committed chain).
-    * r15: 64-bit/16-bit-band layout, matching the migrated consumer —
-    * the r14 measurement of this family on the 32-bit layout (shuffle-
-    * tail α≈1.54 from 256-key band saturation) is what motivated the
-    * migration. r16: width now from `Dedup.autoBandPolicy`, matching
-    * the policy-driven consumer — at 100× (500k docs) the policy
-    * steps to 128-bit, which is exactly the measured fix for the r15
-    * 100× row's 1.74 shuffle-tail (16-bit band saturation onset). */
-  private def clusterCanonical(s: SparkSession, dir: String): Long = {
-    // full corpus, mirroring the migrated consumer (sample dropped r15)
-    val docs = docsOf(s, dir)
-    val (cc, _) = Dedup.autoNearDupLabels(docs, Tables.documentsCount(s, dir))
-    val w = Window.partitionBy(col("component"))
-      .orderBy(col("text_len").desc, col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cc.select(col("id").as("doc_id"), col("component"))
-      .join(docs.select(col("doc_id"),
-        length(trim(col("text"))).cast("long").as("text_len")),
-        Seq("doc_id"))
-      .withColumn("representative_id", first(col("doc_id")).over(w))
-      .count()
-  }
+  /** The dd_phash_index_chain / dd_phash128_index_chain build at
+    * scale: day-1 images synthesized + dHash'd + committed to a
+    * [[graft.llm.PhashIndex]] AtomicTable at `bits`, day-2 probes
+    * (near-copies, re-crawls, fresh) verified against the committed
+    * version. Payload synthesis + JDK codec decode ∝ corpus (the codec
+    * boundary is mapPartitions — expect α≈1); the open question this
+    * measures is the PER-COMMIT overhead of the index AtomicTable
+    * versioning at growing batch sizes. The 64-bit arm keeps its
+    * measured 1.43@100× shuffle tail as the saturated contrast (16-bit
+    * band keys); the 128-bit arm's probe candidates are |index|/2^32
+    * per band, so its expected shuffle tail is ≈ 1 at every measurable
+    * scale. Re-crawl copy ids start at [[PhashCopyBase]], above every
+    * amplified id (100× tops out below 10⁹). */
+  private def phashChain(s: SparkSession, dir: String, bits: Int): Long =
+    LlmQueries.phashIndexChain(s, dir, bits, PhashCopyBase).count()
 
-  /** Band-width A/B: candidate+verify pair generation only (no CC), at
-    * 32-bit/8-bit-band vs 64-bit/16-bit-band layouts — the measured
-    * basis for the "band width is the corpus-scale knob" claim
-    * (Dedup.simhashNearDups scaladoc / SCALE.md). */
-  private def simhashPairs(s: SparkSession, dir: String,
-                           bits: Int): Long = {
-    val tokenRows = docsOf(s, dir).filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"),
-        explode(TA.tokens(col("text"))).as("token"))
-    Dedup.simhashNearDups(Dedup.simhashFromTokens(tokenRows, bits),
-      maxBucketSize = 512, bits = bits).count()
-  }
-
-  /** The dd_phash_index_chain composition at scale: day-1 images
-    * synthesized + dHash'd + committed to a [[graft.llm.PhashIndex]]
-    * AtomicTable at `bits`, day-2 probes (near-copies, re-crawls,
-    * fresh) verified against the committed version. Payload synthesis
-    * + JDK codec decode ∝ corpus (the codec boundary is mapPartitions —
-    * expect α≈1); the open question this measures is the PER-COMMIT
-    * overhead of the index AtomicTable versioning at growing batch
-    * sizes. The 64-bit arm keeps its measured 1.43@100× shuffle tail as
-    * the saturated contrast (16-bit band keys); the 128-bit arm's probe
-    * candidates are |index|/2^32 per band, so its expected shuffle tail
-    * is ≈ 1 at every measurable scale. Synthetic day-2 id offset sits
-    * above every amplified id (30× tops out ~3·10⁸). */
-  private def phashChain(s: SparkSession, dir: String, bits: Int): Long = {
-    import graft.llm.{Multimodal, PhashIndex}
-    val ids = docsOf(s, dir).select("doc_id")
-    val day1 = ids.filter(col("doc_id") % 5 =!= 4)
-    val day2 = ids.filter(col("doc_id") % 5 === 4 ||
-        (col("doc_id") % 7 === 0 && col("doc_id") % 5 =!= 4))
-      .unionByName(ids.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") * 2 + 1000000000L).as("doc_id")))
-    val idx = java.nio.file.Files.createTempDirectory(s"graft_scale_ph$bits")
-    try {
-      PhashIndex.processBatch(s, idx.toString,
-        Multimodal.phashImageTable(day1),
-        bits = Some(bits)).count()
-      PhashIndex.processBatch(s, idx.toString,
-        Multimodal.phashImageTable(day2),
-        bits = Some(bits)).count()
-    } finally Q.deleteRecursively(idx)
-  }
-
-  /** The t_leakage_safe_split composition at scale: 64-bit simhash →
-    * banded pairs → CC → cluster-grain split. Composes two measured
-    * families (simhash_band16 + cc_full) plus a projection — one row
-    * confirming the composition inherits their exponents. */
-  private def leakageSplit(s: SparkSession, dir: String): Long = {
-    // policy-driven width, mirroring the r16 consumer (128-bit at 100×)
-    val (cc, _) = Dedup.autoNearDupLabels(docsOf(s, dir),
-      Tables.documentsCount(s, dir))
-    TA.leakageSafeSplit(cc, seed = "split14", valPct = 10, testPct = 10)
-      .count()
-  }
+  private val PhashCopyBase = 1000000000L
 
   private def ivfpq(s: SparkSession, dir: String, k: Int,
                     scaledStride: Boolean): Long = {
@@ -454,54 +375,37 @@ object ScaleBench {
     * expected wall tail is well under 1, and the ACROSS stage's
     * all-shards-at-once 1.17 shuffle tail (the r16 weak mark,
     * `sharded_merge` family) should not appear here at all. */
-  private def shardedIncPrep(s: SparkSession, dir: String,
-                             k: Int,
-                             state: String = "shardinc_state"): Unit = {
-    val lower = "abcdefghijklmnopqrstuvwxyz"
-    val digits = "0123456789"
+  private def shardedIncPrep(s: SparkSession, dir: String, k: Int,
+                             state: String): Unit = {
     val docs = docsOf(s, dir)
-    // the new shard: replica index k (amplifyDocs wrote 0..k-1), same
-    // affine/rotation discipline so it shares no tokens with any
-    // committed shard beyond chance
-    docs.filter(col("doc_id") < DocStride).select(
-        (col("doc_id") + lit(k * DocStride)).as("doc_id"),
-        translate(col("text"), lower + digits,
-          affine(lower, 2 * (k / 26) + 1, k % 26) +
-            rot(digits, k % 10)).as("text"))
+    // the new shard: replica k (amplifyDocs wrote 0..k-1), so it shares
+    // no tokens with any committed shard beyond chance
+    docReplica(docs.filter(col("doc_id") < DocStride), k)
+      .select("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/new_shard.parquet")
     val tokenRows = docs.select(col("doc_id"),
       explode(TA.tokens(col("text"))).as("token"))
     val sharded = Dedup.simhashFromTokens(tokenRows, 64)
       .withColumn("shard", expr(s"doc_id div ${DocStride}"))
-    graft.llm.ShardedNearDupIndex.seedShards(s,
-      s"$dir/$state", sharded, bits = 64)
+    ShardedNearDupIndex.seedShards(s, s"$dir/$state", sharded, bits = 64)
     ()
   }
 
-  private def shardedIncremental(s: SparkSession, dir: String): Long = {
-    val newShard = s.read.parquet(s"$dir/new_shard.parquet")
-    val tokenRows = newShard.select(col("doc_id"),
-      explode(TA.tokens(col("text"))).as("token"))
-    graft.llm.ShardedNearDupIndex.addShard(s, s"$dir/shardinc_state",
-      Dedup.simhashFromTokens(tokenRows, 64), bits = 64).count()
-  }
-
-  /** probeCap-ENABLED fold against a COMPACTED index (r19; VERDICT r18
-    * task #2's done-criterion): prep compacts the seeded bands so
-    * `probe_rk` is materialized, and the fold caps via the stored-rank
+  /** Folds the new shard into the committed state at `dir/state`.
+    * `probeCap` set is the r19 arm (VERDICT r18 task #2's
+    * done-criterion): against a `compactBands`-compacted index, whose
+    * `probe_rk` is materialized, the fold caps via the stored-rank
     * FILTER + delta-only window. The claim under measurement: the
     * capped fold's shuffle stays ∝ new shard as committed shards grow
     * (the r18 form re-windowed the ENTIRE committed index per fold —
     * shuffle ∝ index by construction). */
-  private def shardedIncrementalCapped(s: SparkSession,
-                                       dir: String): Long = {
-    val newShard = s.read.parquet(s"$dir/new_shard.parquet")
-    val tokenRows = newShard.select(col("doc_id"),
-      explode(TA.tokens(col("text"))).as("token"))
-    graft.llm.ShardedNearDupIndex.addShard(s,
-      s"$dir/shardinc_state_capped",
+  private def shardedFold(s: SparkSession, dir: String, state: String,
+                          probeCap: Option[Int]): Long = {
+    val tokenRows = s.read.parquet(s"$dir/new_shard.parquet")
+      .select(col("doc_id"), explode(TA.tokens(col("text"))).as("token"))
+    ShardedNearDupIndex.addShard(s, s"$dir/$state",
       Dedup.simhashFromTokens(tokenRows, 64), bits = 64,
-      probeCap = Some(512)).count()
+      probeCap = probeCap).count()
   }
 
   /** The st_session_timers composition over the amplified events dir:
@@ -659,64 +563,81 @@ object ScaleBench {
     * second sample at small scales is meaningful (stateful families —
     * kmeans train memo, streaming checkpoints, sentinel-mutated landing
     * dirs — must measure the cold run only); prep: un-timed per-scale
-    * state preparation (committed indexes/labels the day starts from). */
-  private final case class Fam(name: String, needs: Set[String],
-                               rep: Boolean,
-                               run: (SparkSession, String, Int) => Long,
-                               prep: Option[(SparkSession, String, Int) => Unit]
-                                 = None)
+    * state preparation (committed indexes/labels the day starts from);
+    * query: the registry query the family runs, when it has a twin. */
+  private[graft] final case class Fam(
+      name: String, needs: Set[String], rep: Boolean,
+      run: (SparkSession, String, Int) => Long,
+      prep: Option[(SparkSession, String, Int) => Unit] = None,
+      query: Option[String] = None)
 
-  private val families: Seq[Fam] = Seq(
-    Fam("cc_full", Set("documents"), rep = true,
-      (s, d, _) => ccFull(s, d)),
-    Fam("cc_incremental", Set("documents"), rep = true,
-      (s, d, _) => ccIncremental(s, d)),
-    Fam("minhash_lsh", Set("documents"), rep = true,
-      (s, d, _) => minhashLsh(s, d)),
+  private object Fam {
+    /** A family that runs registry query `query` over the amplified
+      * documents. */
+    def twin(name: String, query: String): Fam =
+      Fam(name, Set("documents"), rep = true,
+        (s, d, _) => SparkEntry.queries(query)(s, d).count(),
+        query = Some(query))
+  }
+
+  private[graft] val families: Seq[Fam] = Seq(
+    Fam.twin("cc_full", "dd_cc_components"),
+    Fam.twin("cc_incremental", "dd_cc_incremental"),
+    Fam.twin("minhash_lsh", "dd_minhash_lsh_jaccard"),
+    // no twin: an even/odd day split — dd_incremental_index_chain keys
+    // on id % 3, which the DocStride shift does not keep
     Fam("index_chain", Set("documents"), rep = true,
       (s, d, _) => indexChain(s, d)),
-    Fam("cluster_canonical", Set("documents"), rep = true,
-      (s, d, _) => clusterCanonical(s, d)),
-    Fam("simhash_band8", Set("documents"), rep = true,
-      (s, d, _) => simhashPairs(s, d, bits = 32)),
-    Fam("simhash_band16", Set("documents"), rep = true,
-      (s, d, _) => simhashPairs(s, d, bits = 64)),
-    Fam("simhash_band32", Set("documents"), rep = true,
-      (s, d, _) => simhashPairs(s, d, bits = 128)),
-    Fam("bpe_train_apply", Set("documents"), rep = true,
-      (s, d, _) => bpe(s, d)),
+    Fam.twin("cluster_canonical", "dd_cluster_canonical"),
+    Fam.twin("simhash_band8", "dd_simhash_neardup"),
+    Fam.twin("simhash_band16", "dd_simhash64_neardup"),
+    Fam.twin("simhash_band32", "dd_simhash128_neardup"),
+    Fam.twin("bpe_train_apply", "t_bpe_train_apply"),
+    // no twin: no gated query checkpoints BPE rounds to disk
     Fam("bpe_durable", Set("documents"), rep = true,
       (s, d, _) => bpeDurable(s, d)),
+    // no twin (both arms): the strides follow the scale, the ann_ivfpq
+    // gate pins them
     Fam("ivfpq_fixed_stride", Set("embeddings"), rep = false,
       (s, d, k) => ivfpq(s, d, k, scaledStride = false)),
     Fam("ivfpq_sqrt_cells", Set("embeddings"), rep = false,
       (s, d, k) => ivfpq(s, d, k, scaledStride = true)),
+    // no twin: serves a fixed query batch from an index built in prep
     Fam("ivfpq_query_fixed", Set("embeddings"), rep = true,
       (s, d, _) => ivfpqQueryFixed(s, d),
       prep = Some((s, d, _) => ivfpqQueryFixedPrep(s, d))),
+    // no twin (all three sharded families): the shard is the
+    // amplification replica, the gates shard on id % 3
     Fam("sharded_merge", Set("documents"), rep = true,
       (s, d, _) => shardedMerge(s, d)),
     Fam("sharded_incremental", Set("documents"), rep = false,
-      (s, d, _) => shardedIncremental(s, d),
-      prep = Some((s, d, k) => shardedIncPrep(s, d, k))),
+      (s, d, _) => shardedFold(s, d, "shardinc_state", probeCap = None),
+      prep = Some((s, d, k) => shardedIncPrep(s, d, k, "shardinc_state"))),
     Fam("sharded_incremental_capped", Set("documents"), rep = false,
-      (s, d, _) => shardedIncrementalCapped(s, d),
+      (s, d, _) => shardedFold(s, d, "shardinc_state_capped",
+        probeCap = Some(512)),
       prep = Some((s, d, k) => {
         // own state dir: sharing the uncapped family's would make this
         // fold a replay of an already-merged shard, not a real fold
-        shardedIncPrep(s, d, k, state = "shardinc_state_capped")
-        graft.llm.ShardedNearDupIndex.compactBands(s,
-          s"$d/shardinc_state_capped")
+        shardedIncPrep(s, d, k, "shardinc_state_capped")
+        ShardedNearDupIndex.compactBands(s, s"$d/shardinc_state_capped")
         ()
       })),
+    // no twin: one day per replica, the number of days grows with scale
     Fam("index_commit_days", Set("documents"), rep = false,
       (s, d, k) => indexCommitDays(s, d, k)),
+    // st_session_timers' body drains into its own scratch dirs; the
+    // family calls the same EventStream helpers on the amplified events
     Fam("session_timers", Set("events"), rep = false,
       (s, d, _) => sessionTimers(s, d)),
+    // no twin (both arms): the A/B rolls up per interval owner, and the
+    // unkeyed arm is the deliberate superlinear case no gate runs
     Fam("range_join_unkeyed", Set("events"), rep = true,
       (s, d, _) => rangeJoin(s, d, keyed = false)),
     Fam("range_join_keyed", Set("events"), rep = true,
       (s, d, _) => rangeJoin(s, d, keyed = true)),
+    // no twin (both arms): the day's batch is replica 0's chain edges,
+    // the gate splits by id % 10
     Fam("lpa_full", Set("documents"), rep = true,
       (s, d, _) => lpaFull(s, d),
       prep = Some((s, d, _) => lpaPrep(s, d))),
@@ -727,8 +648,9 @@ object ScaleBench {
       (s, d, _) => phashChain(s, d, bits = 64)),
     Fam("phash128_index_chain", Set("documents"), rep = true,
       (s, d, _) => phashChain(s, d, bits = 128)),
-    Fam("leakage_split", Set("documents"), rep = true,
-      (s, d, _) => leakageSplit(s, d)),
+    Fam.twin("leakage_split", "t_leakage_safe_split"),
+    // no twin (both ref families): mart models run in the ModelDag,
+    // not the registry
     Fam("ref_pricing_history", Set("refmarts"), rep = true,
       (s, d, _) => refPricing(s, d),
       prep = Some((s, d, _) => refPricingPrep(s, d))),
@@ -736,9 +658,61 @@ object ScaleBench {
       (s, d, _) => refMargin(s, d),
       prep = Some((s, d, _) => refMarginPrep(s, d))))
 
-  // Per-sample stage metrics live in tools/Measure.scala (shared with
-  // Bench since r20 — bytes are the steal-immune half of every
-  // measurement here).
+  /** One family's measured point at scale `k`: the min-time sample. */
+  private[graft] final case class Pt(k: Int, sample: Sample)
+
+  /** Runs `fams` at each of `scales` over amplified copies of the sf
+    * dir `sfDir` and returns each family's points in ascending scale.
+    * A family whose best sample exceeds `cutoff` seconds skips the
+    * larger scales; a failed sample throws. */
+  private[graft] def sweep(spark: SparkSession, sfDir: String,
+                           scales: Seq[Int], fams: Seq[Fam],
+                           cutoff: Double): Seq[(Fam, Seq[Pt])] = {
+    val sampler = new Sampler(spark)
+    // absorb JIT/parquet/shuffle ramp outside the measured window
+    Tables.documents(spark, sfDir).groupBy(col("lang")).count().collect()
+    val results = scala.collection.mutable.Map.empty[String,
+      scala.collection.mutable.ArrayBuffer[Pt]]
+    val skipped = scala.collection.mutable.Set.empty[String]
+    for (k <- scales.sorted) {
+      val amp = java.nio.file.Files.createTempDirectory(s"graft_scale_${k}x")
+      try {
+        val needed = fams.filterNot(f => skipped(f.name))
+          .flatMap(_.needs).toSet
+        if (needed("documents")) amplifyDocs(spark, sfDir, k, amp.toString)
+        if (needed("embeddings")) amplifyEmb(spark, sfDir, k, amp.toString)
+        if (needed("events")) amplifyEvents(spark, sfDir, k, amp.toString)
+        if (needed("refmarts")) amplifyRefMarts(spark, sfDir, k, amp.toString)
+        for (f <- fams if !skipped(f.name)) {
+          f.prep.foreach(p => p(spark, amp.toString, k))
+          def sample(): Sample = {
+            val s = sampler.sample(f.run(spark, amp.toString, k))
+            s.error.foreach(e => throw new RuntimeException(
+              s"ScaleBench: ${f.name} failed at ${k}x", e))
+            s
+          }
+          val s1 = sample()
+          val best =
+            if (f.rep && k <= 3) { val s2 = sample(); if (s2.sec < s1.sec) s2 else s1 }
+            else s1
+          println(f"[scale] ${f.name}%-22s ${k}%2dx  ${best.sec}%8.2f s" +
+            f"  ${best.stages.shuffleBytes / 1048576.0}%9.1f MB shuffle" +
+            f"  ${best.stages.spill / 1048576.0}%7.1f MB spill" +
+            f"  (${best.rows}%d rows)" +
+            best.steal.map(p => f"  st=$p%.1f%%").getOrElse(""))
+          results.getOrElseUpdate(f.name,
+            scala.collection.mutable.ArrayBuffer.empty) += Pt(k, best)
+          if (best.sec > cutoff) {
+            skipped += f.name
+            println(f"[scale] ${f.name}: ${best.sec}%.1f s > cutoff " +
+              f"$cutoff%.0f s — skipping larger scales")
+          }
+        }
+      } finally Q.deleteRecursively(amp)
+    }
+    sampler.reclaim() // the last sample's scratch dirs
+    fams.flatMap(f => results.get(f.name).map(f -> _.toSeq))
+  }
 
   /** Least-squares slope of ln(t) on ln(k). */
   private def alpha(pts: Seq[(Int, Double)]): Option[Double] = {
@@ -751,6 +725,60 @@ object ScaleBench {
     val den = xs.map(x => (x - mx) * (x - mx)).sum
     if (den == 0) None
     else Some(xs.zip(ys).map { case (x, y) => (x - mx) * (y - my) }.sum / den)
+  }
+
+  private def sec(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** Prints one family's row of the stdout table and returns its
+    * `"name":{...}` entry of `bench/SCALE.json`, with the measurement
+    * settings it ran under (sf/cpus/cutoff): subset runs merge into a
+    * committed artifact whose top-level fields describe only the LAST
+    * run (e.g. the range_join arms ran to 100× while the sweep stops at
+    * 30×). */
+  private[graft] def familyReport(f: Fam, pts: Seq[Pt], sfDir: String,
+                                cpus: String, cutoff: Double): String = {
+    val a = alpha(pts.map(p => (p.k, p.sample.sec)))
+    // Tail exponent over the two LARGEST scales: per-run fixed
+    // overhead (JIT, session/stream init) deflates the full-range
+    // fit — which would OVERSTATE scalability — while by the tail
+    // the data term dominates. This is the asymptotic signal SCALE.md
+    // cites; the full fit is kept as the overhead-inclusive view.
+    def tailOf(sel: Sample => Double): Option[Double] =
+      pts.takeRight(2) match {
+        case Seq(p1, p2) if sel(p1.sample) > 0 && sel(p2.sample) > 0 &&
+                            p1.k != p2.k =>
+          Some(math.log(sel(p2.sample) / sel(p1.sample)) /
+            math.log(p2.k.toDouble / p1.k))
+        case _ => None
+      }
+    val tail = tailOf(_.sec)
+    // shuffle-BYTES tail exponent: a linear-time family with
+    // superlinear shuffle is still a scale bug
+    val shufTail = tailOf(_.stages.shuffleBytes.toDouble)
+    // output-BYTES tail: the commit-cost signal (write ∝ index vs
+    // ∝ batch is invisible to both wall and shuffle at small scales)
+    val outTail = tailOf(_.stages.outBytes.toDouble)
+    def fmt(o: Option[Double]) = o.map(x => f"$x%6.2f").getOrElse("   n/a")
+    println(f"${f.name}%-22s ${fmt(a)} ${fmt(tail)} ${fmt(shufTail)}" +
+      f" ${fmt(outTail)}  " +
+      pts.map(p => s"${p.k}x=${sec(p.sample.sec)}s").mkString("  "))
+    def arr(v: Pt => Any): String = pts.map(v).mkString("[", ",", "]")
+    def opt(o: Option[Double]): String = o.map(sec).getOrElse("null")
+    // steal pct per point (quietness evidence — r19 task #6): a wall
+    // tail cited from points with nonzero steal is suspect; -1 means
+    // the sample was unavailable (off-Linux).
+    s""""${f.name}":{"scales":${arr(_.k)},""" +
+      s""""secs":${arr(p => sec(p.sample.sec))},"rows":${arr(_.sample.rows)},""" +
+      s""""shuffle_bytes":${arr(_.sample.stages.shuffleBytes)},""" +
+      s""""shuffle_records":${arr(_.sample.stages.shuffleRecords)},""" +
+      s""""spill_bytes":${arr(_.sample.stages.spill)},""" +
+      s""""peak_exec_mem":${arr(_.sample.stages.peakMem)},""" +
+      s""""output_bytes":${arr(_.sample.stages.outBytes)},""" +
+      s""""steal_pct":${arr(p => sec(p.sample.steal.getOrElse(-1.0)))},""" +
+      s""""sf":"$sfDir","cpus":"$cpus","cutoff":$cutoff,""" +
+      s""""alpha":${opt(a)},"alpha_tail":${opt(tail)},""" +
+      s""""shuffle_tail":${opt(shufTail)},"output_tail":${opt(outTail)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -767,136 +795,17 @@ object ScaleBench {
       s"known: ${families.map(_.name).mkString(", ")}")
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
-    // absorb JIT/parquet/shuffle ramp outside the measured window
-    Tables.documents(spark, sfDir).groupBy(col("lang")).count().collect()
-
-    // listener events are async: drain the bus before a sample's reset
-    // (prep stages stay out) and before its snapshot (late-completing
-    // stages stay in), as Bench does
-    def drain(): Unit = org.apache.spark.sql.graftinternal.ListenerBusDrain
-      .waitUntilEmpty(spark, 30000L)
-    def reclaim(): Unit = {
-      spark.catalog.clearCache(); System.gc(); Thread.sleep(200); drain()
-    }
-    final case class Pt(k: Int, sec: Double, rows: Long,
-                        shuffle: Long, spill: Long, peakMem: Long,
-                        outBytes: Long, stealPct: Option[Double])
-    val results = scala.collection.mutable.Map.empty[String,
-      scala.collection.mutable.ArrayBuffer[Pt]]
-    val skipped = scala.collection.mutable.Set.empty[String]
-
-    for (k <- scales.sorted) {
-      val amp = java.nio.file.Files.createTempDirectory(s"graft_scale_${k}x")
-      try {
-        val needed = fams.filterNot(f => skipped(f.name))
-          .flatMap(_.needs).toSet
-        if (needed("documents")) amplifyDocs(spark, sfDir, k, amp.toString)
-        if (needed("embeddings")) amplifyEmb(spark, sfDir, k, amp.toString)
-        if (needed("events")) amplifyEvents(spark, sfDir, k, amp.toString)
-        if (needed("refmarts")) amplifyRefMarts(spark, sfDir, k, amp.toString)
-        for (f <- fams if !skipped(f.name)) {
-          f.prep.foreach(p => p(spark, amp.toString, k))
-          def sample(): Pt = {
-            reclaim()
-            metrics.reset()
-            val st0 = Steal.sample()
-            val t0 = System.nanoTime()
-            val n = f.run(spark, amp.toString, k)
-            val sec = (System.nanoTime() - t0) / 1e9
-            val stealPct = Steal.pct(st0, Steal.sample())
-            drain()
-            val (sh, sp, pm, ob) = metrics.snap
-            Pt(k, sec, n, sh, sp, pm, ob, stealPct)
-          }
-          val s1 = sample()
-          val best =
-            if (f.rep && k <= 3) { val s2 = sample(); if (s2.sec < s1.sec) s2 else s1 }
-            else s1
-          println(f"[scale] ${f.name}%-22s ${k}%2dx  ${best.sec}%8.2f s" +
-            f"  ${best.shuffle / 1048576.0}%9.1f MB shuffle" +
-            f"  ${best.spill / 1048576.0}%7.1f MB spill" +
-            f"  (${best.rows}%d rows)" +
-            best.stealPct.map(p => f"  st=$p%.1f%%").getOrElse(""))
-          results.getOrElseUpdate(f.name,
-            scala.collection.mutable.ArrayBuffer.empty) += best
-          if (best.sec > cutoff) {
-            skipped += f.name
-            println(f"[scale] ${f.name}: ${best.sec}%.1f s > cutoff " +
-              f"$cutoff%.0f s — skipping larger scales")
-          }
-        }
-      } finally Q.deleteRecursively(amp)
-    }
+    val results = sweep(spark, sfDir, scales, fams, cutoff)
     spark.stop()
 
-    def sec(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     println()
     println(f"${"family"}%-22s ${"alpha"}%6s ${"tail"}%6s ${"shufA"}%6s ${"outA"}%6s  t(k) ...")
-    val famJson = fams.filter(f => results.contains(f.name)).map { f =>
-      val pts = results(f.name).toSeq
-      val a = alpha(pts.map(p => (p.k, p.sec)))
-      // Tail exponent over the two LARGEST scales: per-run fixed
-      // overhead (JIT, session/stream init) deflates the full-range
-      // fit — which would OVERSTATE scalability — while by the tail
-      // the data term dominates. This is the asymptotic signal SCALE.md
-      // cites; the full fit is kept as the overhead-inclusive view.
-      def tailOf(sel: Pt => Double): Option[Double] =
-        pts.takeRight(2) match {
-          case Seq(p1, p2) if sel(p1) > 0 && sel(p2) > 0 && p1.k != p2.k =>
-            Some(math.log(sel(p2) / sel(p1)) /
-              math.log(p2.k.toDouble / p1.k))
-          case _ => None
-        }
-      val tail = tailOf(_.sec)
-      // shuffle-BYTES tail exponent: a linear-time family with
-      // superlinear shuffle is still a scale bug
-      val shufTail = tailOf(_.shuffle.toDouble)
-      // output-BYTES tail: the commit-cost signal (write ∝ index vs
-      // ∝ batch is invisible to both wall and shuffle at small scales)
-      val outTail = tailOf(_.outBytes.toDouble)
-      def fmt(o: Option[Double]) = o.map(x => f"$x%6.2f").getOrElse("   n/a")
-      println(f"${f.name}%-22s ${fmt(a)} ${fmt(tail)} ${fmt(shufTail)}" +
-        f" ${fmt(outTail)}  " +
-        pts.map(p => s"${p.k}x=${sec(p.sec)}s").mkString("  "))
-      val scalesJ = pts.map(_.k).mkString("[", ",", "]")
-      val secsJ = pts.map(p => sec(p.sec)).mkString("[", ",", "]")
-      val rowsJ = pts.map(_.rows).mkString("[", ",", "]")
-      val shufJ = pts.map(_.shuffle).mkString("[", ",", "]")
-      val spillJ = pts.map(_.spill).mkString("[", ",", "]")
-      val peakJ = pts.map(_.peakMem).mkString("[", ",", "]")
-      val outJ = pts.map(_.outBytes).mkString("[", ",", "]")
-      // steal pct per point (quietness evidence — r19 task #6): a wall
-      // tail cited from points with nonzero steal is suspect; -1 means
-      // the sample was unavailable (off-Linux).
-      val stealJ = pts.map(p => sec(p.stealPct.getOrElse(-1.0)))
-        .mkString("[", ",", "]")
-      // per-family measurement metadata (sf/cpus/cutoff): subset runs
-      // merge into a committed artifact whose top-level fields describe
-      // only the LAST run — each family must carry the settings it was
-      // actually measured under (e.g. the range_join arms ran to 100×
-      // while the sweep stops at 30×).
-      s""""${f.name}":{"scales":$scalesJ,"secs":$secsJ,"rows":$rowsJ,""" +
-        s""""shuffle_bytes":$shufJ,"spill_bytes":$spillJ,""" +
-        s""""peak_exec_mem":$peakJ,"output_bytes":$outJ,""" +
-        s""""steal_pct":$stealJ,""" +
-        s""""sf":"$sfDir","cpus":"$cpus","cutoff":$cutoff,""" +
-        s""""alpha":${a.map(sec).getOrElse("null")},""" +
-        s""""alpha_tail":${tail.map(sec).getOrElse("null")},""" +
-        s""""shuffle_tail":${shufTail.map(sec).getOrElse("null")},""" +
-        s""""output_tail":${outTail.map(sec).getOrElse("null")}}"""
-    }.mkString("{", ",", "}")
+    val famJson = results.map { case (f, pts) =>
+      familyReport(f, pts, sfDir, cpus, cutoff) }.mkString("{", ",", "}")
     val json = s"""{"sf":"$sfDir","cpus":"$cpus","cutoff":$cutoff,""" +
       s""""families":$famJson}"""
     if (scales.size >= 3) {
-      val repoRoot = Iterator.iterate(
-          java.nio.file.Paths.get("").toAbsolutePath)(_.getParent)
-        .takeWhile(_ != null)
-        .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
-        .getOrElse(sys.error("ScaleBench: no build.sbt above cwd"))
-      val out = repoRoot.resolve("bench/SCALE.json")
+      val out = Measure.repoRoot().resolve("bench/SCALE.json")
       java.nio.file.Files.createDirectories(out.getParent)
       // Full sweeps replace the artifact; SUBSET runs (explicit family
       // args) merge their families into the committed file so a new or

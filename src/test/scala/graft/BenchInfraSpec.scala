@@ -132,11 +132,7 @@ class BenchInfraSpec extends AnyFunSuite {
   }
 
   test("docs name only mains that exist: every runMain graft.<X> loads") {
-    val root = Iterator.iterate(
-        java.nio.file.Paths.get("").toAbsolutePath)(_.getParent)
-      .takeWhile(_ != null)
-      .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
-      .getOrElse(fail("no build.sbt above the working directory"))
+    val root = graft.tools.Measure.repoRoot()
     val docs = Seq("README.md", "CLAUDE.md", ".claude/skills/verify/SKILL.md")
     val runMain = """runMain (graft\.[\w.]+)""".r
     val targets = docs.flatMap { doc =>
@@ -153,6 +149,14 @@ class BenchInfraSpec extends AnyFunSuite {
       }
     }
     assert(missing.isEmpty, s"docs name mains that do not exist: $missing")
+  }
+
+  test("every ScaleBench family that names a query names a registry query") {
+    val twins = graft.tools.ScaleBench.families.flatMap(f => f.query.map(f.name -> _))
+    assert(twins.size == 9, s"families with a registry twin: $twins")
+    val registry = SparkEntry.registry.map(_.name).toSet
+    val missing = twins.filterNot { case (_, q) => registry(q) }
+    assert(missing.isEmpty, s"families name queries not in the registry: $missing")
   }
 
   test("PlanDigest masks expression ids, RDD ids and temp paths only") {
