@@ -3,24 +3,31 @@ package graft.cli
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.corpus.{CorpusDemoSource, CorpusPipeline}
 import graft.functions.Fns
 import graft.ingest.Ingest
 import graft.operators.MergeUpsert
 import graft.quality.Checks
 import graft.ref.{Catalog, ModelDag}
+import graft.tools.DagLint
 
 /** UNIFIED PIPELINE DRIVER — the one-command counterpart of the
   * reference's `orchestrator.py run_full_pipeline(mode)`
   * (orchestrator.py:506-573): sources in priority order with a
   * processed-file mtime skip (orchestrator.py:86-141) → raw-layer load
   * (DLT merge semantics) → the full transform DAG → non-fatal data-
-  * quality checks, all inside ONE SparkSession.
+  * quality checks, all inside ONE SparkSession and one governed
+  * [[Pass]] (recovery, snapshot manifest, DagLint).
   *
   * {{{
   * runMain graft.cli.Main --seed        --data DIR [--warehouse DIR]
   * runMain graft.cli.Main --incremental --data DIR [--warehouse DIR]
   * runMain graft.cli.Main               # self-demo: seed → incremental → skip
   * }}}
+  *
+  * `--corpus` runs the same loop over [[graft.corpus.CorpusPipeline]]
+  * instead; `--maintain` sweeps the warehouse after the passes and
+  * `--strict` fails on any DagLint finding of any pass.
   *
   * Source layout (see [[DemoSource]] for a generated example):
   * `seed/` holds the historical workbooks (+ `company_enrichment
@@ -53,7 +60,7 @@ object Main {
                           txnRecovered: Seq[String] = Nil,
                           txnRolledBack: Seq[String] = Nil,
                           manifestSeq: Long = -1L,
-                          lint: Option[graft.tools.DagLint.Report] = None) {
+                          lint: Option[DagLint.Report] = None) {
     def source(name: String): SourceRun = sources.find(_.source == name).get
   }
 
@@ -82,66 +89,41 @@ object Main {
     val spark = graft.Sessions.pipeline(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("WARN")
-    val dataArg = optValue(args, "--data")
     val wh = optValue(args, "--warehouse").getOrElse(
       Files.createTempDirectory("graft_cli_wh").toString)
     val seed = args.contains("--seed")
     val inc = args.contains("--incremental")
     require(!(seed && inc), "--seed and --incremental are mutually exclusive")
-    val strict = args.contains("--strict")
-    def checkStrict(r: Report): Report = {
-      if (strict && r.lint.exists(!_.ok)) {
+    val corpus = args.contains("--corpus")
+    // one printed pass of the selected driver; --strict turns a DagLint
+    // finding into a non-zero exit
+    def pass(mode: String, data: String): Unit = {
+      val lint =
+        if (corpus) printCorpus(CorpusPipeline.run(spark, mode, data, wh))
+        else print(run(spark, mode, data, wh, optValue(args, "--source")))
+      if (args.contains("--strict") && lint.exists(!_.ok)) {
         System.err.println("[cli] --strict: daglint violations — failing")
         spark.stop()
         sys.exit(1)
       }
-      r
     }
-    if (args.contains("--corpus")) {
-      // LLM-corpus pipeline driver (r19 VERDICT task #1) — same shapes
-      // as the reference DAG below: --data runs one governed pass;
-      // no --data runs the self-demo (seed → incremental → skip).
-      import graft.corpus.{CorpusDemoSource, CorpusPipeline}
-      dataArg match {
-        case Some(data) =>
-          require(seed || inc, "pass --seed or --incremental with --data")
-          printCorpus(CorpusPipeline.run(spark,
-            if (seed) "seed" else "incremental", data, wh))
-        case None =>
-          val dataP = Files.createTempDirectory("graft_corpus_demo")
-          CorpusDemoSource.write(spark, dataP, upTo = 2)
-          println(s"[cli] corpus demo batches at $dataP, warehouse at $wh")
-          printCorpus(CorpusPipeline.run(spark, "seed", dataP.toString, wh))
-          CorpusDemoSource.write(spark, dataP, upTo = 3) // next drop lands
-          printCorpus(CorpusPipeline.run(spark, "incremental",
-            dataP.toString, wh))
-          printCorpus(CorpusPipeline.run(spark, "incremental",
-            dataP.toString, wh)) // skip pass
-      }
-      if (args.contains("--maintain")) {
-        val actions = CorpusPipeline.maintain(spark, wh)
-        if (actions.isEmpty) println("[cli] maintenance: steady state")
-        else actions.foreach(a => println(
-          s"[cli] maintenance: ${a.table} ${a.action} (${a.detail})"))
-      }
-      spark.stop()
-      return
-    }
-    dataArg match {
+    optValue(args, "--data") match {
       case Some(data) =>
         require(seed || inc, "pass --seed or --incremental with --data")
-        print(checkStrict(run(spark, if (seed) "seed" else "incremental",
-          data, wh, optValue(args, "--source"))))
+        pass(if (seed) "seed" else "incremental", data)
       case None => // self-demo over a generated tree: seed → inc → skip
-        val data = DemoSource.write(spark,
-          Files.createTempDirectory("graft_cli_demo")).toString
-        println(s"[cli] demo source tree at $data, warehouse at $wh")
-        print(checkStrict(run(spark, "seed", data, wh)))
-        print(checkStrict(run(spark, "incremental", data, wh)))
-        print(checkStrict(run(spark, "incremental", data, wh)))
+        val dir = Files.createTempDirectory("graft_cli_demo")
+        if (corpus) CorpusDemoSource.write(spark, dir, upTo = 2)
+        else DemoSource.write(spark, dir)
+        println(s"[cli] demo source tree at $dir, warehouse at $wh")
+        pass("seed", dir.toString)
+        if (corpus) CorpusDemoSource.write(spark, dir, upTo = 3) // next drop
+        pass("incremental", dir.toString)
+        pass("incremental", dir.toString) // skip pass
     }
     if (args.contains("--maintain")) {
-      val actions = maintain(spark, wh)
+      val actions =
+        if (corpus) CorpusPipeline.maintain(spark, wh) else maintain(spark, wh)
       if (actions.isEmpty) println("[cli] maintenance: steady state")
       else actions.foreach(a => println(
         s"[cli] maintenance: ${a.table} ${a.action} (${a.detail})"))
@@ -149,72 +131,49 @@ object Main {
     spark.stop()
   }
 
-  private def printCorpus(r: graft.corpus.CorpusPipeline.Report): Unit = {
+  /** The pass summary both drivers print after their model count;
+    * `detail` is the driver's own part. */
+  private def summary(quality: Seq[Checks.Result], skipped: Seq[String],
+                      detail: String, manifestSeq: Long,
+                      lint: Option[DagLint.Report],
+                      status: String): String = {
+    val lintNote = lint match {
+      case Some(l) if !l.ok =>
+        s", daglint RED (${l.unaccepted.size} unaccepted, " +
+          s"${l.stale.size} stale, ${l.staleExposures.size} stale-exposure)"
+      case Some(l) =>
+        s", daglint ok (${l.violations.size} accepted)"
+      case None => ""
+    }
+    (if (skipped.isEmpty) ""
+     else s" (${skipped.size} unchanged, served from cache)") + detail +
+      s", ${quality.size} quality checks " +
+      s"(${quality.count(!_.passed)} failed), snapshot manifest seq " +
+      s"$manifestSeq$lintNote → $status"
+  }
+
+  /** Prints `r`; returns its lint (for `--strict`). */
+  private def printCorpus(r: CorpusPipeline.Report)
+      : Option[DagLint.Report] = {
     r.batches.foreach(b => println(
       s"[cli] corpus batch ${b.batch} (ordinal ${b.ordinal}): " +
         s"${b.status}, ${b.rowsIn} in, ${b.keptCurated} curated, " +
         s"${b.keptExact} past exact dedup"))
-    val failed = r.quality.filterNot(_.passed)
-    val skipNote =
-      if (r.modelsSkipped.isEmpty) ""
-      else s" (${r.modelsSkipped.size} unchanged, served from cache)"
-    println(s"[cli] corpus ${r.mode}: ${r.models} models$skipNote, " +
-      s"${r.canonicalDocs} canonical docs, export " +
-      s"${if (r.exportRewritten) "rewritten" else "served"}, " +
-      s"${r.quality.size} quality checks (${failed.size} failed), " +
-      s"manifest seq ${r.manifestSeq} → ${r.overallStatus}")
+    println(s"[cli] corpus ${r.mode}: ${r.models} models" +
+      summary(r.quality, r.modelsSkipped, s", ${r.canonicalDocs} " +
+        "canonical docs, export " +
+        (if (r.exportRewritten) "rewritten" else "served"),
+        r.manifestSeq, r.lint, r.overallStatus))
+    r.lint
   }
 
-  /** POST-RUN TABLE SERVICES over the key marts (dbt's post-hook /
-    * auto-OPTIMIZE slot): compact fragmented versions, (re)ANALYZE
-    * fresh commits so the stats-driven broadcast advisor has numbers,
-    * vacuum beyond retention — all decided from committed metadata
-    * ([[graft.operators.Maintenance]]); a steady-state warehouse runs
-    * zero actions.
-    *
-    * Base+delta INDEX dirs (anything committed under
-    * `warehouseRoot/index/` — the persisted dedup indexes a streaming
-    * or daily-crawl deployment accretes) are swept by the same loop:
-    * Maintenance plans `compact_to_base` on delta debt (r18, task #5's
-    * guard makes this safe — the snapshot rules refuse delta layouts)
-    * and nothing else, so the merged view is byte-identical before and
-    * after. */
+  /** Post-run table services over the key marts and every index dir
+    * ([[Pass.maintain]]). */
   def maintain(spark: SparkSession, warehouseRoot: String)
-      : Seq[graft.operators.Maintenance.Action] = {
-    import graft.operators.Maintenance
-    val marts = Seq(
-      "fct_orders" -> Seq("order_number"),
-      "fct_companies" -> Seq("company_domain_key")
-    ).flatMap { case (t, keys) =>
-      Maintenance.run(spark, s"$warehouseRoot/mart/$t",
-        Maintenance.Policy(statsCols = keys))
-    }
-    marts ++ maintainIndexes(spark, warehouseRoot)
-  }
-
-  /** Index-dir half of [[maintain]], shared with the corpus pipeline
-    * ([[graft.corpus.CorpusPipeline.maintain]] sweeps the same
-    * `warehouse/index/` layout its folds commit into — one production
-    * sweep, not per-driver copies). */
-  def maintainIndexes(spark: SparkSession, warehouseRoot: String)
-      : Seq[graft.operators.Maintenance.Action] = {
-    import graft.operators.Maintenance
-    val idxRoot = new org.apache.hadoop.fs.Path(s"$warehouseRoot/index")
-    val fs = idxRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    import graft.operators.AtomicTable
-    if (!fs.exists(idxRoot)) Nil
-      else fs.listStatus(idxRoot).toSeq.filter(_.isDirectory)
-        .map(_.getPath).sortBy(_.toString).flatMap { p =>
-          // A dir with committed versions at its own level is one table;
-          // any other is an index of nested tables (a ShardedNearDupIndex
-          // commits at <name>/{labels,bands}, never at <name> itself —
-          // r18 ADVICE: a flat listing planned Nil for them), swept and
-          // reported as "<index>/<table>" by the index itself.
-          if (AtomicTable.committedVersions(spark, p.toString).nonEmpty)
-            Maintenance.run(spark, p.toString, Maintenance.Policy())
-          else graft.llm.ShardedNearDupIndex.maintain(spark, p.toString)
-        }
-  }
+      : Seq[graft.operators.Maintenance.Action] =
+    Pass.maintain(spark, warehouseRoot, Seq(
+      "mart/fct_orders" -> Seq("order_number"),
+      "mart/fct_companies" -> Seq("company_domain_key")))
 
   private def optValue(args: Array[String], flag: String): Option[String] =
     args.indexOf(flag) match {
@@ -224,58 +183,30 @@ object Main {
         Some(args(i + 1))
     }
 
-  private def print(r: Report): Unit = {
+  /** Prints `r`; returns its lint (for `--strict`). */
+  private def print(r: Report): Option[DagLint.Report] = {
     r.sources.foreach { s =>
       println(s"[cli] source ${s.source}: ${s.status}" +
         (if (s.tables.isEmpty) ""
          else s.tables.toSeq.sorted
            .map { case (t, n) => s"$t=$n" }.mkString(" (", ", ", ")")))
     }
-    val failed = r.quality.filterNot(_.passed)
-    val skipNote =
-      if (r.modelsSkipped.isEmpty) ""
-      else s" (${r.modelsSkipped.size} unchanged, served from cache)"
-    val lintNote = r.lint match {
-      case Some(l) if !l.ok =>
-        s", daglint RED (${l.unaccepted.size} unaccepted, " +
-          s"${l.stale.size} stale, ${l.staleExposures.size} stale-exposure)"
-      case Some(l) =>
-        s", daglint ok (${l.violations.size} accepted)"
-      case None => ""
-    }
-    println(s"[cli] ${r.mode}: ${r.models} models materialized$skipNote, " +
-      s"${r.quality.size} quality checks " +
-      s"(${failed.size} failed), snapshot manifest seq ${r.manifestSeq}" +
-      s"$lintNote → ${r.overallStatus}")
+    println(s"[cli] ${r.mode}: ${r.models} models materialized" +
+      summary(r.quality, r.modelsSkipped, "", r.manifestSeq, r.lint,
+        r.overallStatus))
+    r.lint
   }
 
-  /** One full pipeline pass. Testable entry: everything `main` does
-    * minus session/arg handling. `sourceFilter` mirrors the reference's
-    * `--source` flag (orchestrator.py main): only the named source's
-    * pipeline runs; others report `filtered` and the transform reads
-    * their previously committed raw tables. */
+  /** One full pipeline pass, a [[Pass]] over the reference DAG.
+    * Testable entry: everything `main` does minus session/arg
+    * handling. `sourceFilter` mirrors the reference's `--source` flag
+    * (orchestrator.py main): only the named source's pipeline runs;
+    * others report `filtered` and the transform reads their previously
+    * committed raw tables. */
   def run(spark: SparkSession, mode: String, dataDir: String,
           warehouseDir: String,
-          sourceFilter: Option[String] = None): Report = {
-    require(mode == "seed" || mode == "incremental", s"bad mode $mode")
-    // ---- 0. crash recovery + skip-unchanged catalog ----
-    // Repair any transaction a previous run crashed mid-publish BEFORE
-    // anything commits: recover() must run before new commits or a new
-    // version could collide with a crashed transaction's staged dir
-    // (TxnCommit reserves journaled versions as the second guard). The
-    // reference's orchestrator runs its state checks every cycle
-    // (orchestrator.py:506-573); this is the lakehouse equivalent.
-    val (txnFwd, txnBack) = graft.operators.TxnCommit.recover(
-      spark, s"$warehouseDir/_txn")
-    txnFwd.foreach(id => System.err.println(
-      s"[cli] txn recovery: rolled FORWARD crashed transaction $id"))
-    txnBack.foreach(id => System.err.println(
-      s"[cli] txn recovery: rolled BACK incomplete transaction $id"))
-    // skipUnchanged: models whose build plan + committed inputs are
-    // byte-identical to their latest committed version are SERVED, not
-    // rebuilt (ResultCache plan+input fingerprints — dbt's "skip
-    // unchanged model", orchestrator.py:86-141 via mtimes).
-    val cat = new Catalog(spark, warehouseDir, skipUnchanged = true)
+          sourceFilter: Option[String] = None): Report =
+      Pass.run(spark, mode, warehouseDir, "cli") { cat =>
     val store = new Ingest.StateStore(
       s"$warehouseDir/_state/processed_files.json")
     // Operator-error guard, NOT a source failure — checked before any
@@ -326,49 +257,16 @@ object Main {
       explicitNameMappings = mappingsConfig(dataDir))
     val out = ModelDag.run(cat, raw)
 
-    // ---- 3. quality checks, non-fatal (orchestrator.py:466-504).
-    //      Drift checks compare the two most recent committed versions,
-    //      so a seed run passes vacuously and every incremental run gets
-    //      a real "did the refresh halve the table" alarm. ----
-    val quality = Checks.runAll(qualityBattery(out) ++
-      Seq("fct_orders", "fct_companies").flatMap(t => Seq(
-        Checks.snapshotDrift(spark, s"${cat.root}/mart/$t", t,
-          maxRelDrift = 0.5),
-        // column-level contract alarm — row-count drift can't see a
-        // dropped/retyped column (metadata-only, no data scan)
-        Checks.schemaDrift(spark, s"${cat.root}/mart/$t", t))))
-    // ---- 4. cross-table snapshot publication: ONE manifest pinning
-    //      every table this run committed or served, so a warehouse
-    //      reader spanning several marts resolves all of them at a
-    //      single commit point (SnapshotManifest.snapshot) — the
-    //      cross-model half of the reference's per-statement MVCC
-    //      consistency. A reader opened mid-run stays on the previous
-    //      manifest (all-old) until this publish lands (r13 VERDICT #2). ----
-    val manifestSeq = graft.operators.SnapshotManifest.publish(spark,
-      s"$warehouseDir/_snapshots",
-      cat.commits.toSeq.sortBy(_._1).map { case (d, v) =>
-        graft.operators.TxnCommit.Staged(d, v) })
-
-    // ---- 5. DAG structure lint over the lineage this run observed —
-    //      the slot where the reference runs dbt_project_evaluator
-    //      (packages.yml:4-5). Non-fatal here; `main --strict` turns an
-    //      unaccepted violation into a non-zero exit (r13 VERDICT #3). ----
-    val lint = graft.tools.DagLint.check(cat.lineage)
-    lint.unaccepted.foreach(v =>
-      System.err.println(s"[cli] daglint violation: $v"))
-    lint.stale.foreach { case (k, m) =>
-      System.err.println(s"[cli] daglint stale accept: $k $m") }
-    lint.staleExposures.foreach(m =>
-      System.err.println(s"[cli] daglint stale exposure (now consumed): $m"))
-
-    val overall =
-      if (sources.exists(_.status == "failed")) "partial_failure"
-      else if (quality.exists(!_.passed)) "quality_issues"
-      else "success"
-    Report(mode, sources, out.size, quality, overall,
-      modelsSkipped = cat.skipped, txnRecovered = txnFwd,
-      txnRolledBack = txnBack, manifestSeq = manifestSeq,
-      lint = Some(lint))
+    // ---- 3. the mart battery plus drift alarms on the two key marts
+    //      (a seed passes the drift pair vacuously; every incremental
+    //      run gets a real "did the refresh halve the table" alarm) ----
+    Pass.Built(qualityBattery(out) ++
+      Seq("fct_orders", "fct_companies").flatMap(Pass.drift(cat, "mart", _)),
+      o => Report(mode, sources, out.size, o.quality, o.overallStatus,
+        modelsSkipped = o.modelsSkipped, txnRecovered = o.txnRecovered,
+        txnRolledBack = o.txnRolledBack, manifestSeq = o.manifestSeq,
+        lint = Some(o.lint)),
+      sourceFailed = sources.exists(_.status == "failed"))
   }
 
   /** QuickBooks XLSX source: discover per mode, mtime skip, land each

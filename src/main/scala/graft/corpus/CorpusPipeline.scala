@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.cli.Pass
 import graft.llm.{BandIndex, CorpusIndex, Dedup, ShardedNearDupIndex,
   TextAnalysis}
 import graft.operators.MergeUpsert
@@ -12,7 +13,7 @@ import graft.quality.Checks
 import graft.ref.Catalog
 
 /** GOVERNED END-TO-END CORPUS PIPELINE (r19 VERDICT task #1): the
-  * LLM-side counterpart of [[graft.cli.Main]]'s reference DAG driver.
+  * LLM-side counterpart of the reference DAG driver.
   * The ~95 individually-gated LLM operators compose here into ONE
   * production pass over a warehouse:
   *
@@ -23,16 +24,15 @@ import graft.ref.Catalog
   *   [[TextAnalysis.leakageSafeSplit]] → [[graft.llm.Packing]] pack
   *   assignment → [[TextAnalysis.writeShards]] training-shard export
   *
-  * under the SAME governance battery the reference DAG gets from
-  * `cli.Main`: crash recovery ([[graft.operators.TxnCommit]]' journal
-  * replay), atomic versioned commits, skip-unchanged plan+input
-  * fingerprints (an unchanged re-run serves every committed snapshot
-  * and rebuilds nothing), one cross-table snapshot manifest per pass,
-  * DagLint over the observed lineage, non-fatal quality checks, and
-  * the `warehouse/index/` maintenance sweep
-  * ([[graft.cli.Main.maintainIndexes]] — the index dirs this pipeline
-  * commits are maintained by the production sweep, not test
-  * scaffolding).
+  * inside the SAME governed frame as the reference DAG, [[Pass]]:
+  * crash recovery ([[graft.operators.TxnCommit]]' journal replay),
+  * atomic versioned commits, skip-unchanged plan+input fingerprints (an
+  * unchanged re-run serves every committed snapshot and rebuilds
+  * nothing), non-fatal quality checks, one cross-table snapshot
+  * manifest per pass, DagLint over the observed lineage, and the
+  * `warehouse/index/` maintenance sweep ([[Pass.maintain]] — the index
+  * dirs this pipeline commits are maintained by the production sweep,
+  * not test scaffolding).
   *
   * Batch model: `dataDir/batches/batch_*` parquet directories, sorted
   * by name, are immutable drops (a daily crawl's deliveries). `seed`
@@ -85,7 +85,9 @@ object CorpusPipeline {
                           exportRewritten: Boolean,
                           canonicalDocs: Long,
                           lint: Option[graft.tools.DagLint.Report],
-                          stageWalls: Seq[(String, Double)] = Nil)
+                          stageWalls: Seq[(String, Double)] = Nil,
+                          txnRecovered: Seq[String] = Nil,
+                          txnRolledBack: Seq[String] = Nil)
 
   private def exactDir(wh: String) = s"$wh/index/corpus_hashes"
   private def neardupDir(wh: String) = s"$wh/index/neardup"
@@ -125,20 +127,15 @@ object CorpusPipeline {
     docs.select(col("doc_id"),
       explode(TextAnalysis.tokens(col("text"))).as("token"))
 
-  /** One full governed pass; see the object scaladoc. `mode` is
-    * "seed" (bulk-boot, fresh warehouse) or "incremental" (fold each
-    * new batch; no new batches → a skip pass that serves every
-    * committed snapshot). */
+  /** One full governed pass ([[Pass]]); see the object
+    * scaladoc. `mode` is "seed" (bulk-boot, fresh warehouse) or
+    * "incremental" (fold each new batch; no new batches → a skip pass
+    * that serves every committed snapshot). */
   def run(spark: SparkSession, mode: String, dataDir: String,
           warehouseDir: String,
           nSeedShards: Int = 4, valPct: Int = 5, testPct: Int = 5,
-          packBudget: Long = 512L, nExportShards: Int = 8): Report = {
-    require(mode == "seed" || mode == "incremental", s"bad mode $mode")
-    val (txnFwd, txnBack) = graft.operators.TxnCommit.recover(
-      spark, s"$warehouseDir/_txn")
-    (txnFwd ++ txnBack).foreach(id => System.err.println(
-      s"[corpus] txn recovery: $id"))
-    val cat = new Catalog(spark, warehouseDir, skipUnchanged = true)
+          packBudget: Long = 512L, nExportShards: Int = 8): Report =
+      Pass.run(spark, mode, warehouseDir, "corpus") { cat =>
     val store = new graft.ingest.Ingest.StateStore(
       s"$warehouseDir/_state/corpus_batches.json")
     val nd = neardupDir(warehouseDir)
@@ -246,46 +243,32 @@ object CorpusPipeline {
         coalesce(sum(col("_bad")), lit(0L)).as("_bad"),
         count(when(col("_nsp") > 1, lit(1))).as("_leak"))
       .head()
-    (Checks.runAll(canon.results ++ Seq(
+    (canon.results ++ Seq(
       Checks.Result("not_null(split)", "split_assignment",
         splitRow.getAs[Long]("_nulls")),
       Checks.Result("accepted_values(split)", "split_assignment",
         splitRow.getAs[Long]("_bad")),
       Checks.Result("leakage_free_split", "split_assignment",
         splitRow.getAs[Long]("_leak")),
-      Checks.uniqueCombination(packed, "packed_train", Seq("doc_id")),
-      Checks.snapshotDrift(spark, s"$warehouseDir/corpus/canonical_docs",
-        "canonical_docs", maxRelDrift = 0.5),
-      Checks.schemaDrift(spark, s"$warehouseDir/corpus/canonical_docs",
-        "canonical_docs"))), canon.rows)
+      Checks.uniqueCombination(packed, "packed_train", Seq("doc_id"))) ++
+      Pass.drift(cat, "corpus", "canonical_docs"), canon.rows)
     }
 
-    // ---- 5. one snapshot manifest pinning everything this pass
-    //      committed or served + DagLint over the observed lineage ----
-    val manifestSeq = graft.operators.SnapshotManifest.publish(spark,
-      s"$warehouseDir/_snapshots",
-      cat.commits.toSeq.sortBy(_._1).map { case (d, v) =>
-        graft.operators.TxnCommit.Staged(d, v) })
     // packed_train and the decisions tables are TERMINAL products —
     // consumed by the training reader / replay recovery, not by a
     // downstream model — i.e. DagLint exposures, the dbt `exposure:`
     // declaration.
-    val lint = graft.tools.DagLint.check(cat.lineage,
-      exposed = graft.tools.DagLint.exposures ++
-        Set("corpus.packed_train") ++
+    Pass.Built(quality,
+      o => Report(mode, batches, models = cat.commits.size, o.quality,
+        o.overallStatus, modelsSkipped = o.modelsSkipped,
+        manifestSeq = o.manifestSeq, exportRewritten = exportRewritten,
+        // rode the quality pass's canonical_docs aggregate (r21) — the
+        // r20 form paid a separate COUNT(*) job here
+        canonicalDocs = canonicalRows,
+        lint = Some(o.lint), stageWalls = walls.toSeq,
+        txnRecovered = o.txnRecovered, txnRolledBack = o.txnRolledBack),
+      exposed = Set("corpus.packed_train") ++
         cat.lineage.keys.filter(_.startsWith("corpus.decisions_")))
-    lint.unaccepted.foreach(v =>
-      System.err.println(s"[corpus] daglint violation: $v"))
-
-    val overall =
-      if (quality.exists(!_.passed)) "quality_issues" else "success"
-    Report(mode, batches, models = cat.commits.size, quality, overall,
-      modelsSkipped = cat.skipped, manifestSeq = manifestSeq,
-      exportRewritten = exportRewritten,
-      // rode the quality pass's canonical_docs aggregate (r21) — the
-      // r20 form paid a separate COUNT(*) job here
-      canonicalDocs = canonicalRows,
-      lint = Some(lint), stageWalls = walls.toSeq)
   }
 
   /** Bulk-boot: every present batch in ONE single-pass fold (ordinal
@@ -400,21 +383,12 @@ object CorpusPipeline {
       .select(col("doc_id"), col("text"), col("lang_id"),
         col("n_tokens"), col("quality_score"), col("source"))
 
-  /** Post-run table services: the corpus marts' compaction/ANALYZE/
-    * vacuum policies plus the SHARED `warehouse/index/` sweep — the
-    * same production sweep `cli.Main --maintain` runs, so the index
-    * dirs this pipeline creates are maintained by policy, not test
-    * scaffolding. */
+  /** Post-run table services over the corpus marts and every index
+    * dir ([[Pass.maintain]] — the same production sweep the
+    * reference DAG's `--maintain` runs). */
   def maintain(spark: SparkSession, warehouseRoot: String)
-      : Seq[graft.operators.Maintenance.Action] = {
-    import graft.operators.Maintenance
-    val marts = Seq(
-      "canonical_docs" -> Seq("doc_id"),
-      "packed_train" -> Seq("doc_id")
-    ).flatMap { case (t, keys) =>
-      Maintenance.run(spark, s"$warehouseRoot/corpus/$t",
-        Maintenance.Policy(statsCols = keys))
-    }
-    marts ++ graft.cli.Main.maintainIndexes(spark, warehouseRoot)
-  }
+      : Seq[graft.operators.Maintenance.Action] =
+    Pass.maintain(spark, warehouseRoot, Seq(
+      "corpus/canonical_docs" -> Seq("doc_id"),
+      "corpus/packed_train" -> Seq("doc_id")))
 }

@@ -69,23 +69,38 @@ object Ingest {
   /** S12 — processed-file state: path → mtime, persisted as a tiny JSON
     * file; a source is skipped when no tracked file changed
     * (orchestrator.py:86-141). Minimal hand-rolled JSON (flat string→
-    * long map) to stay dependency-free. */
+    * long map) to stay dependency-free. Keys are escaped (`\` and `"`),
+    * a save goes to a tmp file renamed into place, and a load accepts
+    * only a file its own encoder reproduces byte for byte — a torn or
+    * foreign file fails loudly instead of reading as fewer entries
+    * (the corpus pass numbers its folds by the entry count). */
   final class StateStore(statePath: String) {
-    private def parse(s: String): Map[String, Long] =
-      "\"([^\"]+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(s)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap
+    private def encode(state: Map[String, Long]): String =
+      state.toSeq.sorted.map { case (k, v) =>
+        s""""${k.replace("\\", "\\\\").replace("\"", "\\\"")}": $v"""
+      }.mkString("{", ", ", "}")
+
+    private def decode(s: String): Map[String, Long] = {
+      val state = "\"((?:[^\"\\\\]|\\\\.)*)\": (\\d+)".r
+        .findAllMatchIn(s)
+        .map(m => m.group(1).replaceAll("\\\\(.)", "$1") ->
+          m.group(2).toLong).toMap
+      if (encode(state) != s) throw new IllegalStateException(
+        s"$statePath is not a state file this store wrote (torn?)")
+      state
+    }
 
     def load(): Map[String, Long] = {
       val p = Paths.get(statePath)
-      if (Files.exists(p)) parse(Files.readString(p)) else Map.empty
+      if (Files.exists(p)) decode(Files.readString(p)) else Map.empty
     }
 
     def save(state: Map[String, Long]): Unit = {
-      val json = state.toSeq.sorted
-        .map { case (k, v) => s""""${k.replace("\"", "\\\"")}": $v""" }
-        .mkString("{", ", ", "}")
-      Files.createDirectories(Paths.get(statePath).getParent)
-      Files.writeString(Paths.get(statePath), json)
+      val p = Paths.get(statePath)
+      Files.createDirectories(p.getParent)
+      val tmp = p.resolveSibling(s".${p.getFileName}.tmp")
+      Files.writeString(tmp, encode(state))
+      Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
 
     /** True when any of `paths` is new or has a changed mtime. */

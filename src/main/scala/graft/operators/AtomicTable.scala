@@ -248,35 +248,11 @@ object AtomicTable {
     else out).parquet(dataPath(w.dir, w.version).toString)
   }
 
-  private[graft] val StageThreadName = "graft-commit-stage"
-
-  /** Step 2 of [[commitStaged]]. When one write fails, its siblings'
-    * jobs are cancelled and their threads awaited before the failure
-    * propagates: a retry must never race a still-running overwrite of
-    * the same `v_<n>`. */
+  /** Step 2 of [[commitStaged]], through [[Par]]: a failed write
+    * cancels its siblings before the failure propagates. */
   private[operators] def stageWrites(spark: SparkSession,
                                      writes: Seq[Write]): Unit =
-    if (writes.size == 1) writeData(writes.head)
-    else if (writes.nonEmpty) {
-      import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
-      val sc = spark.sparkContext
-      val tag = s"graft-stage-${java.util.UUID.randomUUID}"
-      val pool = Executors.newFixedThreadPool(writes.size,
-        (r: Runnable) => new Thread(r, StageThreadName))
-      try writes.map(w => pool.submit(new Runnable { def run(): Unit = {
-        sc.addJobTag(tag)
-        sc.setInterruptOnCancel(true)
-        writeData(w)
-      }})).foreach { f =>
-        try f.get() catch { case e: ExecutionException => throw e.getCause }
-      } catch {
-        case e: Throwable =>
-          sc.cancelJobsWithTag(tag)
-          pool.shutdownNow()
-          pool.awaitTermination(1, TimeUnit.MINUTES)
-          throw e
-      } finally pool.shutdown()
-    }
+    Par.run(spark, writes.map(w => () => writeData(w)))
 
   /** Step 4 of [[commitStaged]] — the ONE place `_commit_<n>` markers
     * are created, in the given order. An existing marker is left as is

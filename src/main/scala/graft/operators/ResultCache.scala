@@ -1,32 +1,26 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
 
-/** PLAN-FINGERPRINT RESULT CACHE — materialized-view-lite: re-running
-  * the SAME query over UNCHANGED inputs returns the committed result
-  * of the previous run instead of recomputing (dbt's "skip unchanged
-  * model" at query granularity, or a poor man's incremental
-  * materialized view with full-recompute refresh).
+/** PLAN + INPUT FINGERPRINT — the key of the skip-unchanged model
+  * cache ([[graft.ref.Catalog]] with `skipUnchanged`): a model whose
+  * build plan and inputs fingerprint identical to its latest committed
+  * version is served, not rebuilt (dbt's "skip unchanged model").
   *
-  * The cache key couples WHAT is computed with WHAT it reads:
-  *   - the canonicalized optimized plan's `semanticHash` — alias
-  *     names, attribute ids and cosmetic differences hash equal,
-  *     semantic changes don't;
+  * The key couples WHAT is computed with WHAT it reads:
+  *   - the canonicalized plan's `semanticHash` — alias names,
+  *     attribute ids and cosmetic differences hash equal, semantic
+  *     changes don't;
   *   - per input relation (every `HadoopFsRelation` scan in the plan):
   *     root paths + file count + a hash of each file's path, length
   *     and modification time, over the files Spark will read — any
   *     upstream rewrite, append or recommit changes the key.
   *
-  * Results are committed [[AtomicTable]]s under `cacheDir/<key>`, so
-  * cache writes are crash-safe and a reader never sees a half-written
-  * entry; re-validation is driver-side metadata (the file listing
-  * each input's scan already holds). At warehouse scale this is the difference between a
-  * dashboard refresh re-running a 30-minute aggregate and serving the
-  * committed snapshot — with staleness exactly 'inputs unchanged',
-  * never a TTL guess. */
+  * Re-validation is driver-side metadata (the file listing each
+  * input's scan already holds), so staleness is exactly 'inputs
+  * changed', never a TTL guess. */
 object ResultCache {
 
   /** Cache key: semantic plan hash + input signatures.
@@ -77,46 +71,5 @@ object ResultCache {
     md.update(planHash.toString.getBytes("UTF-8"))
     md.update(inputs.getBytes("UTF-8"))
     md.digest().map("%02x".format(_)).mkString
-  }
-
-  final case class CacheResult(df: DataFrame, key: String, hit: Boolean)
-
-  /** Serve `df`'s result from the cache when its fingerprint matches a
-    * committed entry; otherwise compute, commit, and serve the
-    * committed snapshot (so hit and miss return the same
-    * parquet-backed shape). */
-  def getOrCompute(df: DataFrame, cacheDir: String): CacheResult = {
-    val spark = df.sparkSession
-    val key = fingerprint(df)
-    val entryDir = s"$cacheDir/$key"
-    AtomicTable.read(spark, entryDir) match {
-      case Some(cached) => CacheResult(cached, key, hit = true)
-      case None =>
-        AtomicTable.commit(df, entryDir,
-          AtomicTable.nextVersion(spark, entryDir))
-        CacheResult(AtomicTable.read(spark, entryDir).get, key,
-          hit = false)
-    }
-  }
-
-  /** Drop entries not touched (marker mtime) in the last `maxAgeMs` —
-    * the cache's vacuum. Returns dropped keys. */
-  def evict(spark: SparkSession, cacheDir: String,
-            maxAgeMs: Long): Seq[String] = {
-    val root = new Path(cacheDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    val now = System.currentTimeMillis()
-    fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
-      val markers = fs.listStatus(st.getPath)
-        .filter(_.getPath.getName.startsWith("_commit_"))
-      val newest =
-        if (markers.isEmpty) 0L
-        else markers.map(_.getModificationTime).max
-      if (now - newest > maxAgeMs) {
-        fs.delete(st.getPath, true)
-        Some(st.getPath.getName)
-      } else None
-    }
   }
 }

@@ -3558,15 +3558,27 @@ object LlmQueries {
     * [[graft.llm.PhashIndex]]: day 1 is committed, day 2 probes the
     * committed version. Returns day 2's (doc_id, hit_index, keep). */
   private[graft] def phashIndexChain(s: SparkSession, d: String, bits: Int,
-                                     copyBase: Long): DataFrame = {
+                                     copyBase: Long): DataFrame =
+    phashChain(s, d, s"graft_ph${bits}idx", copyBase, Some(bits))
+      .drop("band_bits").orderBy("doc_id")
+
+  /** The two-day chain of [[phashChainDays]] through one fresh
+    * [[graft.llm.PhashIndex]] under `prefix`, `bits` and
+    * `expectedIndexRows` passed to both `processBatch` calls: day 1 is
+    * committed, day 2 probes the committed version. Returns day 2's
+    * (doc_id, hit_index, keep, band_bits). */
+  private def phashChain(s: SparkSession, d: String, prefix: String,
+                         copyBase: Long, bits: Option[Int] = None,
+                         expectedIndexRows: Long = Long.MaxValue)
+      : DataFrame = {
     import graft.llm.PhashIndex
     val (day1, day2) = phashChainDays(s, d, copyBase)
-    val dir = Q.tempDir(s"graft_ph${bits}idx").toString
-    PhashIndex.processBatch(s, dir, Multimodal.phashImageTable(day1),
-      bits = Some(bits))
-    PhashIndex.processBatch(s, dir, Multimodal.phashImageTable(day2),
-      bits = Some(bits))
-      .drop("band_bits").orderBy("doc_id")
+    val dir = Q.tempDir(prefix).toString
+    def batch(day: DataFrame) = PhashIndex.processBatch(s, dir,
+      Multimodal.phashImageTable(day), bits = bits,
+      expectedIndexRows = expectedIndexRows)
+    batch(day1)
+    batch(day2)
   }
 
   /** Ids of the two-day phash index chains: every document plus a
@@ -3694,21 +3706,8 @@ object LlmQueries {
       |            <= 1.0 THEN 64 ELSE 128 END AS INTEGER) AS band_bits
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
-    phashPolicyChain(s, d, "graft_phpol_s", Tables.documentsCount(s, d))
-  }
-
-  /** The two-day chain of [[phashChainDays]] through the `PhashIndex`
-    * width policy, told to expect `expected` index rows. */
-  private def phashPolicyChain(s: SparkSession, d: String, prefix: String,
-                               expected: Long): DataFrame = {
-    import graft.llm.PhashIndex
-    val (day1, day2) = phashChainDays(s, d, PhashCopyBase)
-    val dir = Q.tempDir(prefix).toString
-    PhashIndex.processBatch(s, dir, Multimodal.phashImageTable(day1),
-      expectedIndexRows = expected)
-    PhashIndex.processBatch(s, dir, Multimodal.phashImageTable(day2),
-      expectedIndexRows = expected)
-      .orderBy("doc_id")
+    phashChain(s, d, "graft_phpol_s", PhashCopyBase,
+      expectedIndexRows = Tables.documentsCount(s, d)).orderBy("doc_id")
   }
 
   /** Large-corpus arm of the width policy: expected index size is
@@ -3726,7 +3725,8 @@ object LlmQueries {
       |    AS band_bits
       |FROM (SELECT DISTINCT doc_id FROM probe) p
       |ORDER BY p.doc_id""".stripMargin) { (s, d) =>
-    phashPolicyChain(s, d, "graft_phpol_l", Tables.documentsCount(s, d) * 40)
+    phashChain(s, d, "graft_phpol_l", PhashCopyBase,
+      expectedIndexRows = Tables.documentsCount(s, d) * 40).orderBy("doc_id")
   }
 
   /** 64→128-bit INDEX MIGRATION BACKFILL gate (r20; VERDICT r19 task

@@ -2,6 +2,7 @@ package graft.ref
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import graft.operators.Par
 
 /** Deterministic topological runner for the reference's model DAG
   * (SURVEY §3.2) — stages 1-3 of the orchestrator collapsed into one
@@ -13,7 +14,8 @@ import org.apache.spark.sql.functions.{col, lit}
   * order.
   *
   * SCHEDULING: independent sibling models materialize CONCURRENTLY
-  * (bounded thread pool, [[par]]) — the dbt `--threads` discipline.
+  * (bounded thread pool, [[graft.operators.Par]]; a failed model
+  * cancels its siblings' jobs) — the dbt `--threads` discipline.
   * Waves are placed at the DAG's natural frontiers (post-`orders`
   * intermediates; the two contact chains; the mart fan-outs around the
   * `fct_order_line_items` → `fct_company_orders` pinch), so results are
@@ -21,37 +23,6 @@ import org.apache.spark.sql.functions.{col, lit}
   * changes (measured on the fixture DAG: ~27 s → see BASELINE.md r08).
   */
 object ModelDag {
-
-  /** dbt `--threads` equivalent: materialize INDEPENDENT models
-    * concurrently. Spark supports concurrent job submission from
-    * multiple driver threads (each `saveTable` is its own job), so
-    * sibling models — whose inputs are all already materialized —
-    * can overlap their write/commit/read cycles instead of serializing
-    * ~50 small jobs. On a cluster this is what keeps executors busy
-    * while one model's final single-task stages drain. Failures
-    * propagate with the original cause; the pool is bounded so a wide
-    * wave cannot flood the scheduler. */
-  /** Wave-pool width (dbt `--threads`): 8 — pools of 3 and the FAIR
-    * scheduler were measured slower (OPTIMIZATION_r21.md). */
-  private val DagThreads = 8
-
-  private def par[A](thunks: (() => A)*): Seq[A] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(thunks.size, DagThreads)))
-    try {
-      val futs = thunks.map(t =>
-        pool.submit(new java.util.concurrent.Callable[A] {
-          def call(): A = t()
-        }))
-      futs.map { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-      }
-    } finally pool.shutdown()
-  }
 
   /** Raw inputs, reference-shaped (FIXTURES.md). */
   final case class RawInputs(
@@ -77,7 +48,7 @@ object ModelDag {
     // ---- consolidation job (python pre-transform, SURVEY §3.3) ----
     // The two mapping builders and their stagings are independent
     // chains — run raw→staging per chain, chains in parallel.
-    val mappingChains = par[(DataFrame, DataFrame)](
+    val mappingChains = Par.run[(DataFrame, DataFrame)](cat.spark, Seq(
       () => {
         val r = cat.saveTable("raw", "domain_mapping",
           DomainConsolidation.buildDomainMapping(raw.customers,
@@ -91,7 +62,7 @@ object ModelDag {
             raw.explicitNameMappings))
         (r, cat.saveTable("staging", "customer_name_mapping",
           Staging.customerNameMapping(r)))
-      })
+      }))
     val (domainMappingRaw, stgDomainMapping) = mappingChains(0)
     val (nameMappingRaw, stgNameMapping) = mappingChains(1)
 
@@ -121,7 +92,7 @@ object ModelDag {
       Intermediate.orders(typed))
     // Six siblings whose inputs (orders, stgItems, staged mappings) are
     // all materialized: one parallel wave.
-    val wave = par[DataFrame](
+    val wave = Par.run[DataFrame](cat.spark, Seq(
       () => cat.saveTable("intermediate", "customer_revenue",
         Intermediate.customerRevenue(orders)),
       () => cat.saveTable("intermediate", "items_enriched",
@@ -134,7 +105,7 @@ object ModelDag {
         Intermediate.productFamily(stgItems)),
       () => cat.saveTable("intermediate", "customer_company_mapping",
         Intermediate.customerCompanyMapping(stgCustomers, stgDomainMapping,
-          stgNameMapping)))
+          stgNameMapping))))
     val (revenue, itemsEnriched, materialType) = (wave(0), wave(1), wave(2))
     val (itemKits, productFamily, mapping) = (wave(3), wave(4), wave(5))
     val consolidation = cat.saveTable("intermediate",
@@ -147,7 +118,7 @@ object ModelDag {
     //      stays outside the pool (views are lazy; only tables cost). ----
     val cleanContacts = cat.saveView("staging", "customer_contacts_clean",
       Staging.customerContactsClean(raw.customers))
-    val contactChains = par[Seq[DataFrame]](
+    val contactChains = Par.run[Seq[DataFrame]](cat.spark, Seq(
       () => {
         val contacts = cat.saveTable("intermediate", "customer_contacts",
           Contacts.customerContacts(stgCustomers))
@@ -177,7 +148,7 @@ object ModelDag {
             consolidation))
         Seq(emailParsed, namesEnriched, qualityScored, personMappingFixed,
           dimContactsFixed)
-      })
+      }))
     val Seq(contacts, personMapping, dimContacts) = contactChains(0)
     val Seq(emailParsed, namesEnriched, qualityScored, personMappingFixed,
       dimContactsFixed) = contactChains(1)
@@ -231,7 +202,7 @@ object ModelDag {
         col("primary_phone").as("primary_contact_phone"),
         col("contact_role").as("primary_contact_role"))
     // Wave M1: four marts whose lineages are disjoint at this point.
-    val m1 = par[DataFrame](
+    val m1 = Par.run[DataFrame](cat.spark, Seq(
       () => cat.saveTable("mart", "fct_orders",
         Marts.fctOrders(orders, shopify, Some(primaryContacts))),
       () => cat.saveTable("mart", "fct_products",
@@ -248,7 +219,7 @@ object ModelDag {
           case None => Marts.fctCompanies(consolidation)
         }),
       () => cat.saveTable("mart", "bridge_customer_company",
-        Marts.bridgeCustomerCompany(mapping)))
+        Marts.bridgeCustomerCompany(mapping))))
     val (fctOrders, fctProducts) = (m1(0), m1(1))
     val (fctCompanies, bridge) = (m1(2), m1(3))
     val fctLineItems = cat.saveTable("mart", "fct_order_line_items",
@@ -259,7 +230,7 @@ object ModelDag {
     // Wave M2: everything downstream of the (companyOrders, fctOrders,
     // fctLineItems, fctProducts, fctCompanies) frontier — ten
     // independent lineages (two of them short chains), one wave.
-    val m2 = par[Seq[DataFrame]](
+    val m2 = Par.run[Seq[DataFrame]](cat.spark, Seq(
       () => Seq(cat.saveTable("mart", "dim_company_health",
         Marts.dimCompanyHealth(companyOrders, fctCompanies, AsOfDate))),
       () => {
@@ -307,7 +278,7 @@ object ModelDag {
             "sales_price").distinct(), Seq("snapshot_date"))
         Seq(inv, cat.saveTable("mart", "fct_inventory_history",
           TimeSeries.fctInventoryHistory(inv, fctProducts)))
-      })
+      }))
     val companyHealth = m2(0).head
     val Seq(companyProducts, periodSpending) = m2(1)
     val (aging, dso) = (m2(2).head, m2(3).head)

@@ -123,16 +123,14 @@ class CorpusPipelineSpec extends SparkSpec {
     skipRun
     val statePath = java.nio.file.Paths.get(
       s"$wh/_state/corpus_batches.json")
-    val orig = java.nio.file.Files.readString(statePath)
     val labelsBefore = graft.llm.ShardedNearDupIndex
       .loadLabels(spark, s"$wh/index/neardup").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val bandsVersionsBefore = graft.operators.AtomicTable
       .committedVersions(spark, s"$wh/index/neardup/bands")
     // simulate a crash BEFORE the processed mark: forget batch_003
-    val rolledBack = orig.split(",").filterNot(_.contains("batch_003"))
-      .mkString(",").replaceAll(",\\s*}", "}")
-    java.nio.file.Files.writeString(statePath, rolledBack)
+    val store = new graft.ingest.Ingest.StateStore(statePath.toString)
+    store.save(store.load().filterNot(_._1.contains("batch_003")))
     val replay = CorpusPipeline.run(spark, "incremental", data, wh)
     assert(replay.batches.map(_.ordinal) == Seq(2L)) // same ordinal
     // decisions were REUSED (the committed model, not a recompute
@@ -160,5 +158,25 @@ class CorpusPipelineSpec extends SparkSpec {
       s"maintenance did not converge: $again")
     assert(again.forall(a => !a.table.startsWith("labels") &&
       !a.table.startsWith("bands")), s"unqualified nested names: $again")
+  }
+
+  test("startup txn recovery: a crashed publish is rolled forward by the next corpus pass") {
+    skipRun
+    import graft.operators.{AtomicTable, TxnCommit}
+    import spark.implicits._
+    // simulate a publisher that crashed AFTER its journal write (the
+    // commit point): data staged, journal present, no markers yet
+    val aux = s"$wh/corpus/aux_recovered_table"
+    val staged = TxnCommit.stage(spark,
+      Seq(aux -> Seq((1L, "x")).toDF("k", "v")))
+    TxnCommit.writeJournal(spark, s"$wh/_txn", "crash1", staged)
+    assert(AtomicTable.read(spark, aux).isEmpty) // invisible pre-recovery
+    val r = CorpusPipeline.run(spark, "incremental", data, wh)
+    assert(r.txnRecovered == Seq("crash1"), r.toString)
+    assert(r.txnRolledBack.isEmpty)
+    assert(AtomicTable.read(spark, aux).get.count() == 1L)
+    // steady state: nothing to repair on the next pass
+    assert(CorpusPipeline.run(spark, "incremental", data, wh)
+      .txnRecovered.isEmpty)
   }
 }

@@ -367,4 +367,25 @@ class IngestSpec extends SparkSpec {
         System.currentTimeMillis() + 5000))
     assert(store.changed(Seq(f)))
   }
+
+  test("StateStore: a key holding a quote or a backslash round-trips") {
+    val store = new Ingest.StateStore(s"${tmpDirWith()}/state/done.json")
+    val keys = Seq("a\"b.xlsx", "c\\d.xlsx", "plain.xlsx")
+    keys.foreach(store.markDone)
+    assert(keys.forall(store.isDone), store.load().toString)
+    assert(store.load().keySet == keys.toSet)
+  }
+
+  test("StateStore: a torn state file fails loudly instead of reading as fewer entries") {
+    val path = s"${tmpDirWith()}/state/done.json"
+    val store = new Ingest.StateStore(path)
+    Seq("batch_001", "batch_002", "batch_003").foreach(store.markDone)
+    assert(store.load().size == 3)
+    // a write cut off after the second entry: every byte it holds is
+    // the start of the full file
+    val full = Files.readString(Paths.get(path))
+    Files.writeString(Paths.get(path),
+      full.substring(0, full.indexOf(", \"batch_003\"")))
+    intercept[IllegalStateException](store.load())
+  }
 }

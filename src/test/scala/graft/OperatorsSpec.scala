@@ -443,9 +443,37 @@ class OperatorsSpec extends SparkSpec {
     assert(AtomicTable.committedVersions(spark, tb).isEmpty)
     // no staging thread outlives the call ...
     assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
-      t.getName == AtomicTable.StageThreadName && t.isAlive))
+      t.getName == graft.operators.Par.ThreadName && t.isAlive))
     // ... and the sibling's Spark job was cancelled, not left writing
     val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 10L * 1000000000L
+    while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(100L)
+    assert(tracker.getActiveJobIds.isEmpty)
+  }
+
+  test("Par: a failed model wave cancels its siblings' jobs and leaves no runner behind") {
+    import graft.operators.Par
+    import scala.jdk.CollectionConverters._
+    val slow = udf((k: Long) => { Thread.sleep(30000L); k })
+    val tracker = spark.sparkContext.statusTracker
+    // one model fails while its sibling's job is running
+    def failOnceSiblingRuns(): Int = {
+      val until = System.nanoTime() + 10L * 1000000000L
+      while (tracker.getActiveJobIds.isEmpty && System.nanoTime() < until)
+        Thread.sleep(50L)
+      throw new IllegalStateException("model failed")
+    }
+    val t0 = System.nanoTime()
+    intercept[IllegalStateException] {
+      Par.run(spark, Seq(
+        () => failOnceSiblingRuns(),
+        () => spark.range(0, 2, 1, 2).select(slow(col("id")))
+          .collect().length))
+    }
+    assert((System.nanoTime() - t0) / 1e9 < 25.0)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.getName == Par.ThreadName && t.isAlive))
     val deadline = System.nanoTime() + 10L * 1000000000L
     while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
       Thread.sleep(100L)
@@ -752,39 +780,44 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("ResultCache: same query + same inputs hit; changed inputs or semantics miss") {
-    import graft.operators.{AtomicTable, ResultCache}
+    import graft.ref.Catalog
     val base = java.nio.file.Files.createTempDirectory("rcache")
     val inDir = base.resolve("in").toString
-    val cacheDir = base.resolve("cache").toString
+    val wh = base.resolve("wh").toString
     (1L to 100L).map(i => (i, i % 7)).toDF("k", "g")
       .write.parquet(inDir)
     def q() = spark.read.parquet(inDir).groupBy("g")
       .agg(count(lit(1)).as("n"), sum(col("k")).as("s"))
-    val r1 = ResultCache.getOrCompute(q(), cacheDir)
-    assert(!r1.hit)
-    val r2 = ResultCache.getOrCompute(q(), cacheDir)
-    assert(r2.hit && r2.key == r1.key)
-    assert(r2.df.orderBy("g").collect().toSeq ==
-      r1.df.orderBy("g").collect().toSeq)
+    // one skip-unchanged pass saving `df` as model mart.q:
+    // (committed snapshot, served from the previous version?)
+    def save(df: org.apache.spark.sql.DataFrame) = {
+      val cat = new Catalog(spark, wh, skipUnchanged = true)
+      val out = cat.saveTable("mart", "q", df)
+      (out, cat.skipped == Seq("mart.q"))
+    }
+    val (r1, hit1) = save(q())
+    assert(!hit1)
+    val (r2, hit2) = save(q())
+    assert(hit2)
+    assert(r2.orderBy("g").collect().toSeq ==
+      r1.orderBy("g").collect().toSeq)
     // cosmetic differences hash equal (canonicalized semantic hash)
     val cosmetic = spark.read.parquet(inDir)
       .select(col("k").as("kk"), col("g"))
       .groupBy("g").agg(count(lit(1)).as("n"), sum(col("kk")).as("s"))
-    assert(ResultCache.getOrCompute(cosmetic, cacheDir).hit)
-    // a semantic change misses
+    assert(save(cosmetic)._2)
+    // a semantic change misses (and commits); the original misses back
     val semantic = spark.read.parquet(inDir).filter(col("k") > 10)
       .groupBy("g").agg(count(lit(1)).as("n"), sum(col("k")).as("s"))
-    assert(!ResultCache.getOrCompute(semantic, cacheDir).hit)
+    assert(!save(semantic)._2)
+    assert(!save(q())._2)
+    assert(save(q())._2)
     // appending input data invalidates the entry
     Seq((101L, 3L)).toDF("k", "g")
       .write.mode("append").parquet(inDir)
-    val r3 = ResultCache.getOrCompute(q(), cacheDir)
-    assert(!r3.hit && r3.key != r1.key)
-    assert(r3.df.agg(sum(col("n"))).head().getLong(0) == 101L)
-    // eviction drops stale entries
-    val dropped = ResultCache.evict(spark, cacheDir, maxAgeMs = -1L)
-    assert(dropped.nonEmpty)
-    assert(!ResultCache.getOrCompute(q(), cacheDir).hit) // cold again
+    val (r3, hit3) = save(q())
+    assert(!hit3)
+    assert(r3.agg(sum(col("n"))).head().getLong(0) == 101L)
   }
 
   test("SchemaContract: additions and widening pass, removal/narrowing/incompatible fail") {
@@ -1049,24 +1082,29 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("ResultCache: changes inside a hive-partitioned input invalidate") {
-    import graft.operators.ResultCache
+    import graft.ref.Catalog
     val base = java.nio.file.Files.createTempDirectory("rcache_part")
     val inDir = base.resolve("in").toString
-    val cacheDir = base.resolve("cache").toString
+    val wh = base.resolve("wh").toString
     (1L to 100L).map(i => (i, i % 4)).toDF("k", "p")
       .write.partitionBy("p").parquet(inDir)
     def q() = spark.read.parquet(inDir)
       .agg(sum(col("k")).as("s"), count(lit(1)).as("n"))
-    assert(!ResultCache.getOrCompute(q(), cacheDir).hit)
-    assert(ResultCache.getOrCompute(q(), cacheDir).hit)
+    def save() = {
+      val cat = new Catalog(spark, wh, skipUnchanged = true)
+      val out = cat.saveTable("mart", "q", q())
+      (out, cat.skipped == Seq("mart.q"))
+    }
+    assert(!save()._2)
+    assert(save()._2)
     // data files live under partition SUBDIRS — a top-level-only
     // fingerprint walk signs them 0|0|0 and this append would serve a
     // stale aggregate (r11 nit #1)
     Seq((1000L, 2L)).toDF("k", "p")
       .write.mode("append").partitionBy("p").parquet(inDir)
-    val r = ResultCache.getOrCompute(q(), cacheDir)
-    assert(!r.hit)
-    assert(r.df.head().getLong(0) == 5050L + 1000L)
+    val (r, hit) = save()
+    assert(!hit)
+    assert(r.head().getLong(0) == 5050L + 1000L)
   }
 
   test("ResultCache: ANALYZE of an input leaves its fingerprint unchanged") {
