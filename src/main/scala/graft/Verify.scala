@@ -43,21 +43,8 @@ object Verify {
         queries.Q.cleanupScratch()
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => wanted.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = graft.operators.MetaFile.encode(
+      SparkEntry.oracleSql.filter { case (k, _) => wanted.contains(k) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Belt and braces: even if nothing threw, require that every wanted
     // name actually produced a result dir on disk.

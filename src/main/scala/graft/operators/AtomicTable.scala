@@ -95,17 +95,6 @@ object AtomicTable {
     committedVersions(spark, dir).lastOption
       .map(v => dataPath(dir, v).toString)
 
-  private def readWriterId(f: FileSystem, dir: String): Option[String] = {
-    val wp = writerPath(dir)
-    if (!f.exists(wp)) None
-    else Some {
-      val in = f.open(wp)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    }
-  }
-
   /** Write `df` as version `version` and commit it ([[commitStaged]]
     * with one write). Idempotent: a version that already has a marker
     * is not rewritten, but the replay still prunes, so a crash between
@@ -138,14 +127,16 @@ object AtomicTable {
     *     explicit "I know these versions are mine/compatible".
     *   - `_writer` creation uses create-no-overwrite, so two first
     *     writers racing produce one winner and one reader-of-the-file —
-    *     never a silent split lineage. */
+    *     never a silent split lineage. This is the one metadata file not
+    *     written through [[MetaFile]]'s tmp + rename: first-writer-wins
+    *     must be atomic, and only create-no-overwrite makes it so; its
+    *     read goes through [[MetaFile.readText]]. */
   private def bindWriter(spark: SparkSession, dir: String,
                          writerId: Option[String],
                          adoptExisting: Boolean): Unit = {
-    val f = fs(spark, dir)
     writerId.foreach { id =>
       val wp = writerPath(dir)
-      val bound = readWriterId(f, dir) match {
+      val bound = MetaFile.readText(spark, wp) match {
         case Some(existing) => Some(existing)
         case None =>
           if (committedVersions(spark, dir).nonEmpty && !adoptExisting)
@@ -158,7 +149,7 @@ object AtomicTable {
           // create-no-overwrite: concurrent first writers race to one
           // winner; the loser re-reads and validates below.
           try {
-            val out = f.create(wp, false)
+            val out = fs(spark, dir).create(wp, false)
             try out.write(
               id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
             finally out.close()
@@ -167,7 +158,7 @@ object AtomicTable {
             case e: java.io.IOException =>
               // Only a LOST RACE leaves the file present; a transient IO
               // failure must surface, not silently skip lineage binding.
-              readWriterId(f, dir) match {
+              MetaFile.readText(spark, wp) match {
                 case some @ Some(_) => some
                 case None => throw e
               }

@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
   *
   * Layout: `v_<n>/_file_stats.json` — an underscore file, so Spark's
   * file index never treats it as data; it travels and dies with its
-  * version (commit-time retention pruning deletes the whole dir).
+  * version (commit-time retention pruning deletes the whole dir). It is
+  * written and read through [[MetaFile]], so a reader sees the whole
+  * manifest or none, never a torn one that lists fewer files.
   *
   * Scale shape: stats collection is ONE distributed scan of the freshly
   * committed files (groupBy input_file_name → min/max per dim), with a
@@ -33,10 +35,12 @@ object DataSkipping {
 
   val ManifestName = "_file_stats.json"
 
+  /** One dimension's [lo, hi] over one file. */
+  final case class DimRange(name: String, lo: Long, hi: Long)
+
   /** Per-file stats row: file name (not full path — versions move) and
-    * per-dimension [min, max]. */
-  final case class FileStat(file: String, mins: Map[String, Long],
-                            maxs: Map[String, Long])
+    * per-dimension ranges. */
+  final case class FileStat(file: String, dims: Seq[DimRange])
 
   /** Collect per-file min/max of each (name, expr) dimension over the
     * parquet files at `dataPath` and write the manifest there.
@@ -52,52 +56,26 @@ object DataSkipping {
       .agg(aggs.head, aggs.tail: _*)
       .collect()
       .map { r =>
-        val fileName = new Path(r.getString(0)).getName
-        FileStat(fileName,
-          dims.map { case (n, _) =>
-            n -> r.getLong(r.fieldIndex(s"_min_$n")) }.toMap,
-          dims.map { case (n, _) =>
-            n -> r.getLong(r.fieldIndex(s"_max_$n")) }.toMap)
+        FileStat(new Path(r.getString(0)).getName, dims.map { case (n, _) =>
+          DimRange(n, r.getLong(r.fieldIndex(s"_min_$n")),
+            r.getLong(r.fieldIndex(s"_max_$n")))
+        })
       }.toSeq.sortBy(_.file)
-    val json = stats.map { s =>
-      val per = s.mins.keys.toSeq.sorted.map { n =>
-        s""""$n":[${s.mins(n)},${s.maxs(n)}]"""
-      }.mkString(",")
-      s"""{"file":"${s.file}",$per}"""
-    }.mkString("[", ",", "]")
-    val f = new Path(dataPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = f.create(new Path(s"$dataPath/$ManifestName"), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    MetaFile.write(spark, new Path(dataPath, ManifestName), stats)
     stats
   }
 
-  /** Parse the manifest at `dataPath`, if present. (Hand-rolled JSON —
-    * the format is fully controlled by [[writeManifest]].) */
+  /** The manifest at `dataPath`; None when absent or undecodable (a
+    * torn or older-layout file never reads as fewer files). */
   def readManifest(spark: SparkSession, dataPath: String)
-      : Option[Seq[FileStat]] = {
-    val p = new Path(s"$dataPath/$ManifestName")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val raw = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val entry = """\{"file":"([^"]+)"((?:,"[^"]+":\[-?\d+,-?\d+\])*)\}""".r
-      val dim = """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r
-      Some(entry.findAllMatchIn(raw).map { m =>
-        val dims = dim.findAllMatchIn(m.group(2)).map { d =>
-          (d.group(1), d.group(2).toLong, d.group(3).toLong)
-        }.toSeq
-        FileStat(m.group(1),
-          dims.map(d => d._1 -> d._2).toMap,
-          dims.map(d => d._1 -> d._3).toMap)
-      }.toSeq)
-    }
-  }
+      : Option[Seq[FileStat]] =
+    MetaFile.read[Seq[FileStat]](spark, new Path(dataPath, ManifestName))
 
   val BloomManifestName = "_file_bloom.json"
+
+  /** One file's serialized Bloom filter (base64 on disk). */
+  final case class FileBloom(file: String, bloom: Array[Byte])
+  final case class BloomManifest(column: String, files: Seq[FileBloom])
 
   /** Per-file BLOOM manifest for POINT-LOOKUP skipping — the second
     * half of lakehouse data skipping: min/max stats prune range probes
@@ -120,75 +98,50 @@ object DataSkipping {
   def writeBloomManifest(spark: SparkSession, dataPath: String,
                          column: String,
                          expectedItems: Long = 1000000L,
-                         numBits: Long = 1L << 23): Seq[(String, Array[Byte])] = {
+                         numBits: Long = 1L << 23): Seq[FileBloom] = {
     graft.plans.Bloom.register(spark)
-    val rows = spark.read.parquet(dataPath)
+    val files = spark.read.parquet(dataPath)
       .groupBy(input_file_name().as("_file"))
       .agg(expr(s"${graft.plans.Bloom.aggName}(xxhash64($column), " +
         s"${expectedItems}L, ${numBits}L)").as("bloom"))
       .collect()
-      .map(r => (new Path(r.getString(0)).getName,
+      .map(r => FileBloom(new Path(r.getString(0)).getName,
         r.getAs[Array[Byte]](1)))
-      .toSeq.sortBy(_._1)
-    val b64 = java.util.Base64.getEncoder
-    val json = s"""{"column":"$column","files":[""" + rows.map {
-      case (f, b) =>
-        s"""{"file":"$f","bloom":"${b64.encodeToString(b)}"}"""
-    }.mkString(",") + "]}"
-    val fs = new Path(dataPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(s"$dataPath/$BloomManifestName"), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    rows
+      .toSeq.sortBy(_.file)
+    MetaFile.write(spark, new Path(dataPath, BloomManifestName),
+      BloomManifest(column, files))
+    files
   }
 
-  /** Parse the bloom manifest at `dataPath`: (column, file → filter
-    * bytes). */
+  /** The bloom manifest at `dataPath`; None when absent or undecodable. */
   def readBloomManifest(spark: SparkSession, dataPath: String)
-      : Option[(String, Seq[(String, Array[Byte])])] = {
-    val p = new Path(s"$dataPath/$BloomManifestName")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val colRe = """^\{"column":"([^"]+)"""".r
-      val entry = """\{"file":"([^"]+)","bloom":"([^"]+)"\}""".r
-      val column = colRe.findFirstMatchIn(raw).map(_.group(1))
-      val dec = java.util.Base64.getDecoder
-      column.map { c =>
-        (c, entry.findAllMatchIn(raw)
-          .map(m => (m.group(1), dec.decode(m.group(2)))).toSeq)
-      }
-    }
-  }
+      : Option[BloomManifest] =
+    MetaFile.read[BloomManifest](spark, new Path(dataPath, BloomManifestName))
 
   /** Read the latest committed version touching ONLY files whose Bloom
     * filter might contain ANY of `values` (values must be literals of
     * the indexed column's type — the probe hashes them with the same
     * `xxhash64` the build used). No false negatives: the selection is a
     * superset of matching rows, callers still apply the row predicate.
-    * Falls back to the full snapshot when no manifest (or a manifest
-    * for a different column) exists. */
+    * Falls back to the full snapshot when no readable manifest (or a
+    * manifest for a different column) exists. */
   def readBloomSkipping(spark: SparkSession, tableDir: String,
                         column: String, values: Seq[Any]): DataFrame = {
     val dataPath = AtomicTable.latestDataPath(spark, tableDir).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $tableDir"))
     readBloomManifest(spark, dataPath) match {
-      case Some((c, files)) if c == column && files.nonEmpty =>
+      case Some(BloomManifest(c, files)) if c == column && files.nonEmpty =>
         // ONE local job hashes every probe value (one row, N columns) —
         // a per-value spark.range(1).head() loop launches O(values)
         // driver-side jobs for what is a pure function (r11 nit #2).
         val row = spark.range(1)
           .select(values.map(v => xxhash64(lit(v))): _*).head()
         val hashes = values.indices.map(row.getLong(_))
-        val keep = files.filter { case (_, bytes) =>
+        val keep = files.filter { f =>
           val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(bytes))
+            new java.io.ByteArrayInputStream(f.bloom))
           hashes.exists(bf.mightContainLong)
-        }.map { case (f, _) => s"$dataPath/$f" }
+        }.map(f => s"$dataPath/${f.file}")
         if (keep.isEmpty) spark.read.parquet(dataPath).limit(0)
         else spark.read.parquet(keep: _*)
       case _ => spark.read.parquet(dataPath)
@@ -199,9 +152,9 @@ object DataSkipping {
     * overlap every `ranges` interval (dim name → inclusive [lo, hi]).
     * File selection is a SUPERSET of the matching rows — callers still
     * apply their row predicate; skipping only reduces I/O. Falls back
-    * to the full snapshot when no manifest exists or nothing matches
-    * semantics-wise (empty selection reads nothing via limit(0) on the
-    * full schema, keeping downstream plans resolvable). */
+    * to the full snapshot when no readable manifest exists; an empty
+    * selection reads nothing via limit(0) on the full schema, keeping
+    * downstream plans resolvable. */
   def readSkipping(spark: SparkSession, tableDir: String,
                    ranges: Map[String, (Long, Long)]): DataFrame = {
     val dataPath = AtomicTable.latestDataPath(spark, tableDir).getOrElse(
@@ -212,7 +165,7 @@ object DataSkipping {
         val keep = stats.filter { s =>
           ranges.forall { case (n, (lo, hi)) =>
             // unknown dim name => cannot prune on it => keep the file
-            s.mins.get(n).forall(mn => s.maxs(n) >= lo && mn <= hi)
+            s.dims.find(_.name == n).forall(d => d.hi >= lo && d.lo <= hi)
           }
         }.map(s => s"$dataPath/${s.file}")
         if (keep.isEmpty)

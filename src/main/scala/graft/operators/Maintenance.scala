@@ -12,10 +12,10 @@ import org.apache.spark.sql.SparkSession
   *   - COMPACT when the latest version is fragmented (more than
   *     `maxFiles` files AND mean file size under `smallFileBytes`) —
   *     the small-files problem a streaming upsert sink accretes.
-  *   - ANALYZE when the latest version has no `_table_stats.json` —
-  *     every fresh commit invalidates stats, and the stats feed
-  *     [[TableStats.joinWithAdvisor]] / the injected
-  *     [[graft.plans.StatsBroadcastRule]].
+  *   - ANALYZE when the latest version has no readable stats
+  *     ([[TableStats.stored]]) — every fresh commit invalidates stats, a
+  *     torn or older-layout stats file reads as none, and the stats
+  *     feed the injected [[graft.plans.StatsBroadcastRule]].
   *   - VACUUM when more versions are retained than `retainVersions`.
   *   - COMPACT_TO_BASE when a base+delta dir ([[AtomicTable.isDeltaLayout]])
   *     has accumulated more than `maxDeltas` uncovered deltas — the
@@ -70,10 +70,9 @@ object Maintenance {
               s"$nFiles files, mean ${meanBytes}B < ${policy.smallFileBytes}B"))
           else Nil
         val analyze =
-          if (policy.statsCols.nonEmpty && !fs.exists(
-            new Path(s"$dataPath/${TableStats.ManifestName}")))
-            Seq(Action(table, "analyze",
-              s"no ${TableStats.ManifestName} on latest version"))
+          if (policy.statsCols.nonEmpty &&
+            TableStats.stored(spark, dataPath).isEmpty)
+            Seq(Action(table, "analyze", "no readable stats on latest version"))
           else Nil
         val versions = AtomicTable.committedVersions(spark, dir)
         val vacuum =

@@ -61,7 +61,7 @@ object SnapshotManifest {
       .flatMap(st => seqOf(st.getPath.getName))
       .sorted(Ordering[Long].reverse)
     seqs.iterator.flatMap { s =>
-      VersionRecord.read(f, manifestPath(manifestDir, s)).collect {
+      VersionRecord.read(spark, manifestPath(manifestDir, s)).collect {
         case (pins, None) => (s, pins.map(p => p.dir -> p.version).toMap)
       }
     }.nextOption()
@@ -70,12 +70,15 @@ object SnapshotManifest {
   /** Publish a new snapshot: previous manifest overlaid with `staged`
     * (freshly committed (dir, version) pairs). Call AFTER the tables'
     * markers exist — [[AtomicTable.commitStaged]] sequences this. The
-    * write is [[VersionRecord.write]]'s tmp + rename, so a reader
+    * write is [[MetaFile.writeOnce]]'s tmp + rename, so a reader
     * listing mid-write sees no `manifest_<seq>` or the complete one; a
     * torn file from a crashed same-seq writer ([[latest]] skips it —
     * that is how `seq` landed on it) is reclaimed, and a valid occupant
-    * (a concurrent publisher won the seq) fails loudly. Returns the new
-    * manifest seq. */
+    * (a concurrent publisher won the seq) fails loudly, its pins kept.
+    * On `file:` the occupant is checked before the rename, so a
+    * publisher landing between that check and the rename still
+    * replaces the seq; stores whose rename refuses an existing target
+    * close that window. Returns the new manifest seq. */
   def publish(spark: SparkSession, manifestDir: String,
               staged: Seq[TxnCommit.Staged]): Long = {
     val prev = latest(spark, manifestDir)

@@ -14,17 +14,19 @@ import org.apache.spark.sql.functions._
   * Why it matters at 100 TB: Spark's own `autoBroadcastJoinThreshold`
   * sees only FILE SIZES at plan time — a 10 GB-on-disk dim that
   * filters to 1k rows, or a table behind a view, defeats it. Committed
-  * row-count stats let the PIPELINE decide (`joinWithAdvisor`): hint
-  * `broadcast()` when the committed stats say the dim is small, let
-  * sort-merge + AQE handle it otherwise — dbt's "analyze after load"
-  * discipline feeding Catalyst the numbers it can't infer.
+  * row-count stats let the planner decide
+  * ([[graft.plans.StatsBroadcastRule]]): hint `broadcast()` when the
+  * committed stats say the dim is small, let sort-merge + AQE handle it
+  * otherwise — dbt's "analyze after load" discipline feeding Catalyst
+  * the numbers it can't infer.
   *
   * Stats collection is ONE aggregate pass over the table (count +
   * count_distinct + min/max per column — Spark plans the multi-distinct
   * via one Expand, a single shuffle); the result is #columns rows of
-  * driver-held JSON. min/max are stored as strings of the column's own
-  * cast — collect stats on integer/string/date columns (double
-  * formatting is not engine-portable, README determinism rules).
+  * driver-held JSON, written through [[MetaFile]]. min/max are stored
+  * as strings of the column's own cast — collect stats on
+  * integer/string/date columns (double formatting is not
+  * engine-portable, README determinism rules).
   */
 object TableStats {
 
@@ -61,50 +63,21 @@ object TableStats {
     val dataPath = AtomicTable.latestDataPath(spark, tableDir).getOrElse(
       sys.error(s"analyze: no committed version under $tableDir"))
     val stats = compute(spark.read.parquet(dataPath), cols)
-    val json = stats.map { s =>
-      def q(o: Option[String]) =
-        o.map(v => "\"" + v.replace("\"", "\\\"") + "\"").getOrElse("null")
-      s"""{"column":"${s.column}","rows":${s.nRows},""" +
-        s""""non_null":${s.nonNull},"ndv":${s.ndv},""" +
-        s""""min":${q(s.minS)},"max":${q(s.maxS)}}"""
-    }.mkString("[", ",", "]")
-    val p = new Path(s"$dataPath/$ManifestName")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    MetaFile.write(spark, new Path(dataPath, ManifestName), stats)
     stats
   }
 
-  /** Committed row count of the table's latest version, from the
-    * manifest — O(1) metadata, no scan. None when never analyzed. */
-  def committedRows(spark: SparkSession, tableDir: String): Option[Long] = {
-    AtomicTable.latestDataPath(spark, tableDir).flatMap { dataPath =>
-      val p = new Path(s"$dataPath/$ManifestName")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        in.close()
-        "\"rows\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
-          .map(_.group(1).toLong)
-      }
-    }
-  }
+  /** The stats stored in the committed version dir `dataPath` — O(1)
+    * metadata, no scan. None when never analyzed, or when the manifest
+    * does not decode (torn, or an older layout): re-ANALYZE. */
+  def stored(spark: SparkSession, dataPath: String): Option[Seq[ColStat]] =
+    MetaFile.read[Seq[ColStat]](spark, new Path(dataPath, ManifestName))
 
-  /** STATS-DRIVEN broadcast decision: join `fact` to the committed dim
-    * at `dimDir`, hinting `broadcast()` iff the dim's ANALYZEd row
-    * count is ≤ `broadcastMaxRows`. Un-analyzed dims fall through to
-    * Spark's own planning (never guess small). */
-  def joinWithAdvisor(spark: SparkSession, fact: DataFrame,
-                      dimDir: String, keys: Seq[String],
-                      broadcastMaxRows: Long = 1000000L): DataFrame = {
-    val dim = AtomicTable.read(spark, dimDir).getOrElse(
-      sys.error(s"joinWithAdvisor: no committed version under $dimDir"))
-    committedRows(spark, dimDir) match {
-      case Some(n) if n <= broadcastMaxRows => fact.join(broadcast(dim), keys)
-      case _ => fact.join(dim, keys)
-    }
-  }
+  /** Analyzed row count of the version at `dataPath`. */
+  def rowsAt(spark: SparkSession, dataPath: String): Option[Long] =
+    stored(spark, dataPath).flatMap(_.headOption).map(_.nRows)
+
+  /** Committed row count of the table's latest version (see [[rowsAt]]). */
+  def committedRows(spark: SparkSession, tableDir: String): Option[Long] =
+    AtomicTable.latestDataPath(spark, tableDir).flatMap(rowsAt(spark, _))
 }

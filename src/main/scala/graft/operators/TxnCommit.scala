@@ -65,9 +65,8 @@ object TxnCommit {
     * later recover() publish the wrong transaction's data (r11 ADVICE). */
   private def journalReserved(spark: SparkSession,
                               journalDir: String): Map[String, Long] = {
-    val jf = AtomicTable.fs(spark, journalDir)
     journals(spark, journalDir)
-      .flatMap(VersionRecord.read(jf, _).toSeq.flatMap(_._1))
+      .flatMap(VersionRecord.read(spark, _).toSeq.flatMap(_._1))
       .groupBy(_.dir).view.mapValues(_.map(_.version).max).toMap
   }
 
@@ -136,7 +135,7 @@ object TxnCommit {
       : (Seq[String], Seq[String]) = {
     val jf = AtomicTable.fs(spark, journalDir)
     val records = journals(spark, journalDir)
-      .map(p => p -> VersionRecord.read(jf, p))
+      .map(p => p -> VersionRecord.read(spark, p))
     val (fwd, back) = records.partition { case (_, r) =>
       r.exists(_._1.forall(s => AtomicTable.hasData(spark, s.dir, s.version)))
     }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo,
   Join, JoinHint, LogicalPlan, Project, Filter}
@@ -9,11 +8,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
 
 /** STATS-DRIVEN AUTO-BROADCAST as an injected Catalyst optimizer rule —
-  * the [[graft.operators.TableStats]] advisor moved INTO the planner,
-  * so every join in the session benefits without call-site changes
-  * (`TableStats.joinWithAdvisor` is the explicit-call form; this is the
-  * `SparkSessionExtensions` form — the (c) tier of the extension
-  * ladder: a real `Rule[LogicalPlan]`, not an expression).
+  * [[graft.operators.TableStats]]' committed row counts read INSIDE the
+  * planner, so every join in the session benefits without call-site
+  * changes (the `SparkSessionExtensions` form — the (c) tier of the
+  * extension ladder: a real `Rule[LogicalPlan]`, not an expression).
   *
   * Mechanics: a join side that scans a committed AtomicTable version
   * whose ANALYZEd manifest (`_table_stats.json`, written by
@@ -26,8 +24,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   * intent wins), and un-analyzed tables never match (the rule cannot
   * guess small).
   *
-  * Scale note: the rule's cost is a manifest-existence probe per scan
-  * node, memoized per data path for the rule instance's lifetime —
+  * Scale note: the rule's cost is one manifest read per scan node
+  * (`TableStats.rowsAt`; a missing or undecodable manifest is no
+  * hint), memoized per data path for the rule instance's lifetime —
   * driver-side metadata, no scans. This is exactly the gap it closes
   * at 100 TB: Spark's `autoBroadcastJoinThreshold` sees on-disk BYTES
   * at plan time, so a dim behind a selective filter (or a view) plans
@@ -46,18 +45,7 @@ class StatsBroadcastRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * joins in a long-lived session (r11 ADVICE). */
   private def manifestRows(dataPath: String): Option[Long] =
     cache.get(dataPath).getOrElse {
-      val p = new Path(
-        s"$dataPath/${graft.operators.TableStats.ManifestName}")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val probed =
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          in.close()
-          "\"rows\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
-            .map(_.group(1).toLong)
-        }
+      val probed = graft.operators.TableStats.rowsAt(spark, dataPath)
       if (probed.isDefined) cache(dataPath) = probed
       probed
     }

@@ -656,7 +656,7 @@ object AggQueries {
     * and min/max (string-cast — integer/string columns only, double
     * formatting is not engine-portable) in ONE aggregate pass (Spark
     * plans the multi-distinct via a single Expand). These are the
-    * numbers `TableStats.joinWithAdvisor` uses for stats-driven
+    * numbers `graft.plans.StatsBroadcastRule` uses for stats-driven
     * broadcast decisions the file-size heuristic can't make. */
   val a19TableStats: Q = Q.sql(
     "a19_table_stats",

@@ -1,7 +1,7 @@
 package graft.ref
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.AtomicTable
+import graft.operators.{AtomicTable, MetaFile}
 
 /** Four-layer warehouse namespace over parquet directories — the Spark
   * stand-in for the reference's Postgres schemas raw/staging/intermediate/
@@ -163,28 +163,11 @@ final class Catalog(val spark: SparkSession, val root: String,
   // Skipped models cascade: an unchanged upstream keeps its version
   // dir, so downstream fingerprints over it are unchanged too. Any
   // fingerprint instability (e.g. an RDD-backed local relation) can
-  // only MISS — a stale serve would need a hash collision.
+  // only MISS — a stale serve would need a hash collision. The record
+  // is plain text through MetaFile (tmp + rename: a reader sees the old
+  // record or the whole new one).
   private def fpPath(p: String) =
     new org.apache.hadoop.fs.Path(s"$p/_model_fingerprint")
-
-  private def fpRecord(p: String): Option[String] = {
-    val f = fpPath(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(fpPath(p))) None
-    else {
-      val in = f.open(fpPath(p))
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
-  }
-
-  private def recordFp(p: String, version: Long, key: String): Unit = {
-    val f = fpPath(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = f.create(fpPath(p), true)
-    try out.write(s"$version|$key".getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
 
   /** Commit-or-serve: when skip-unchanged is on and the table's LATEST
     * committed version was built from this exact (plan, inputs)
@@ -199,7 +182,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       else None
     val hit = key.exists(k =>
       AtomicTable.committedVersions(spark, p).lastOption.exists(
-        v => fpRecord(p).contains(s"$v|$k")))
+        v => MetaFile.readText(spark, fpPath(p)).contains(s"$v|$k")))
     (key, hit)
   }
 
@@ -214,7 +197,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     else {
       val v = AtomicTable.nextVersion(spark, p)
       commit(v)
-      key.foreach(recordFp(p, v, _))
+      key.foreach(k => MetaFile.writeText(spark, fpPath(p), s"$v|$k"))
     }
     recordCommit(p)
     AtomicTable.read(spark, p).get

@@ -810,13 +810,13 @@ object ScaleBench {
       // Full sweeps replace the artifact; SUBSET runs (explicit family
       // args) merge their families into the committed file so a new or
       // re-measured family doesn't require re-running all the others
-      // (Jackson is Spark's bundled JSON parser).
+      // (through MetaFile's Jackson mapper, Spark's bundled JSON parser).
       // Guarded: a malformed or families-less committed artifact falls
       // back to replace instead of NPE/ClassCastException mid-merge.
       val payload =
         if (only.isEmpty || !java.nio.file.Files.exists(out)) json
         else try {
-          val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+          val mapper = graft.operators.MetaFile.mapper
           val prev = mapper.readTree(out.toFile)
           val pfRaw = if (prev != null && prev.isObject)
             prev.get("families") else null

@@ -756,27 +756,6 @@ class OperatorsSpec extends SparkSpec {
     assert(stats("v").nonNull == 3 && stats("v").ndv == 3 &&
       stats("v").minS.contains("a") && stats("v").maxS.contains("c"))
     assert(TableStats.committedRows(spark, dimDir).contains(4L))
-    // stats-driven broadcast: isolate from Spark's own size heuristic
-    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(thresholdKey)
-    spark.conf.set(thresholdKey, "-1")
-    try {
-      val fact = (1L to 100L).map(i => (i % 4 + 1, i)).toDF("k", "x")
-      def planOf(df: org.apache.spark.sql.DataFrame): String = {
-        df.collect(); df.queryExecution.executedPlan.toString
-      }
-      // analyzed + small enough -> advisor hints broadcast
-      assert(planOf(TableStats.joinWithAdvisor(spark, fact, dimDir,
-        Seq("k"))).contains("BroadcastHashJoin"))
-      // analyzed but above the cap -> no hint, sort-merge
-      assert(!planOf(TableStats.joinWithAdvisor(spark, fact, dimDir,
-        Seq("k"), broadcastMaxRows = 2)).contains("BroadcastHashJoin"))
-      // never analyzed -> never guess small
-      val rawDir = base.resolve("raw").toString
-      AtomicTable.commit(dim, rawDir, 0L)
-      assert(!planOf(TableStats.joinWithAdvisor(spark, fact, rawDir,
-        Seq("k"))).contains("BroadcastHashJoin"))
-    } finally spark.conf.set(thresholdKey, prev)
   }
 
   test("ResultCache: same query + same inputs hit; changed inputs or semantics miss") {
@@ -1254,8 +1233,9 @@ class OperatorsSpec extends SparkSpec {
     val written = DataSkipping.writeBloomManifest(spark, dataPath, "k",
       expectedItems = 10000L, numBits = 1L << 17)
     assert(written.size == 8)
-    val (c, files) = DataSkipping.readBloomManifest(spark, dataPath).get
-    assert(c == "k" && files.map(_._1) == written.map(_._1))
+    val DataSkipping.BloomManifest(c, files) =
+      DataSkipping.readBloomManifest(spark, dataPath).get
+    assert(c == "k" && files.map(_.file) == written.map(_.file))
     val full = AtomicTable.read(spark, dir).get
 
     // present key: exactly its row, from (almost certainly) one file

@@ -552,8 +552,8 @@ class RefPipelineSpec extends SparkSpec {
     val dataDir = AtomicTable.latestDataPath(spark, tableDir).get
     // the z-ordered commit wrote the per-file stats manifest
     val stats = DataSkipping.readManifest(spark, dataDir).get
-    assert(stats.nonEmpty &&
-      stats.head.mins.keySet == Set("product_bucket", "month_bucket"))
+    assert(stats.nonEmpty && stats.head.dims.map(_.name).toSet ==
+      Set("product_bucket", "month_bucket"))
     val full = AtomicTable.read(spark, tableDir).get
     // probe a real (product, month): bucket it EXACTLY like the writer
     val probe = full.orderBy("product_service", "order_date")
