@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.corpus.{CorpusDemoSource, CorpusPipeline}
 import graft.functions.Fns
 import graft.ingest.Ingest
-import graft.operators.MergeUpsert
+import graft.operators.{MergeUpsert, SnapshotManifest}
 import graft.quality.Checks
 import graft.ref.{Catalog, ModelDag}
 import graft.tools.DagLint
@@ -57,8 +57,7 @@ object Main {
                           models: Int, quality: Seq[Checks.Result],
                           overallStatus: String,
                           modelsSkipped: Seq[String] = Nil,
-                          txnRecovered: Seq[String] = Nil,
-                          txnRolledBack: Seq[String] = Nil,
+                          recovered: Seq[SnapshotManifest.Staged] = Nil,
                           manifestSeq: Long = -1L,
                           lint: Option[DagLint.Report] = None) {
     def source(name: String): SourceRun = sources.find(_.source == name).get
@@ -263,8 +262,8 @@ object Main {
     Pass.Built(qualityBattery(out) ++
       Seq("fct_orders", "fct_companies").flatMap(Pass.drift(cat, "mart", _)),
       o => Report(mode, sources, out.size, o.quality, o.overallStatus,
-        modelsSkipped = o.modelsSkipped, txnRecovered = o.txnRecovered,
-        txnRolledBack = o.txnRolledBack, manifestSeq = o.manifestSeq,
+        modelsSkipped = o.modelsSkipped, recovered = o.recovered,
+        manifestSeq = o.manifestSeq,
         lint = Some(o.lint)),
       sourceFailed = sources.exists(_.status == "failed"))
   }

@@ -1,8 +1,7 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
-import graft.operators.{AtomicTable, Maintenance, SnapshotManifest,
-  TxnCommit}
+import graft.operators.{AtomicTable, Maintenance, SnapshotManifest}
 import graft.quality.Checks
 import graft.ref.Catalog
 import graft.tools.DagLint
@@ -14,11 +13,10 @@ import graft.tools.DagLint
   * every cycle (orchestrator.py:506-573). A driver brings its sources,
   * models and quality battery; the frame owns the order of the steps:
   *
-  *   1. recover: [[TxnCommit.recover]] rolls any transaction a crashed
-  *      run left in `_txn` forward (fully staged) or back. The
-  *      skip-unchanged [[Catalog]] is built only after it, so nothing a
-  *      body commits can collide with a crashed transaction's staged
-  *      version;
+  *   1. recover: [[SnapshotManifest.recover]] marks every version the
+  *      latest `_snapshots` manifest committed that a crashed run left
+  *      unmarked. The skip-unchanged [[Catalog]] is built only after
+  *      it, so nothing a body commits can reuse a committed version;
   *   2. build: the body lands its sources, builds its models (a model
   *      whose plan and inputs match its latest committed version is
   *      served, not rebuilt) and hands back its quality results;
@@ -39,8 +37,7 @@ object Pass {
   final case class Outcome(quality: Seq[Checks.Result],
                            overallStatus: String,
                            modelsSkipped: Seq[String],
-                           txnRecovered: Seq[String],
-                           txnRolledBack: Seq[String],
+                           recovered: Seq[SnapshotManifest.Staged],
                            manifestSeq: Long,
                            lint: DagLint.Report)
 
@@ -58,16 +55,16 @@ object Pass {
              tag: String)(body: Catalog => Built[A]): A = {
     require(mode == "seed" || mode == "incremental", s"bad mode $mode")
     def log(msg: String): Unit = System.err.println(s"[$tag] $msg")
-    val (fwd, back) = TxnCommit.recover(spark, s"$warehouseDir/_txn")
-    fwd.foreach(id => log(s"txn recovery: rolled FORWARD crashed transaction $id"))
-    back.foreach(id => log(s"txn recovery: rolled BACK incomplete transaction $id"))
+    val manifestDir = s"$warehouseDir/_snapshots"
+    val recovered = SnapshotManifest.recover(spark, manifestDir)
+    recovered.foreach(p =>
+      log(s"recovery: marked ${p.dir} v_${p.version}, committed by the manifest"))
     val cat = new Catalog(spark, warehouseDir, skipUnchanged = true)
     val built = body(cat)
     val quality = Checks.runAll(built.checks)
-    val manifestSeq = SnapshotManifest.publish(spark,
-      s"$warehouseDir/_snapshots",
+    val manifestSeq = SnapshotManifest.publish(spark, manifestDir,
       cat.commits.toSeq.sortBy(_._1).map { case (d, v) =>
-        TxnCommit.Staged(d, v) })
+        SnapshotManifest.Staged(d, v) })
     val lint = DagLint.check(cat.lineage,
       exposed = DagLint.exposures ++ built.exposed)
     lint.unaccepted.foreach(v => log(s"daglint violation: $v"))
@@ -78,7 +75,7 @@ object Pass {
       if (built.sourceFailed) "partial_failure"
       else if (quality.exists(!_.passed)) "quality_issues"
       else "success"
-    built.report(Outcome(quality, status, cat.skipped, fwd, back,
+    built.report(Outcome(quality, status, cat.skipped, recovered,
       manifestSeq, lint))
   }
 

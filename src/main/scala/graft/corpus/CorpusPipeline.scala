@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.cli.Pass
 import graft.llm.{BandIndex, CorpusIndex, Dedup, ShardedNearDupIndex,
   TextAnalysis}
-import graft.operators.MergeUpsert
+import graft.operators.{MergeUpsert, SnapshotManifest}
 import graft.quality.Checks
 import graft.ref.Catalog
 
@@ -25,7 +25,7 @@ import graft.ref.Catalog
   *   assignment → [[TextAnalysis.writeShards]] training-shard export
   *
   * inside the SAME governed frame as the reference DAG, [[Pass]]:
-  * crash recovery ([[graft.operators.TxnCommit]]' journal replay),
+  * crash recovery ([[SnapshotManifest.recover]]),
   * atomic versioned commits, skip-unchanged plan+input fingerprints (an
   * unchanged re-run serves every committed snapshot and rebuilds
   * nothing), non-fatal quality checks, one cross-table snapshot
@@ -86,8 +86,7 @@ object CorpusPipeline {
                           canonicalDocs: Long,
                           lint: Option[graft.tools.DagLint.Report],
                           stageWalls: Seq[(String, Double)] = Nil,
-                          txnRecovered: Seq[String] = Nil,
-                          txnRolledBack: Seq[String] = Nil)
+                          recovered: Seq[SnapshotManifest.Staged] = Nil)
 
   private def exactDir(wh: String) = s"$wh/index/corpus_hashes"
   private def neardupDir(wh: String) = s"$wh/index/neardup"
@@ -266,7 +265,7 @@ object CorpusPipeline {
         // r20 form paid a separate COUNT(*) job here
         canonicalDocs = canonicalRows,
         lint = Some(o.lint), stageWalls = walls.toSeq,
-        txnRecovered = o.txnRecovered, txnRolledBack = o.txnRolledBack),
+        recovered = o.recovered),
       exposed = Set("corpus.packed_train") ++
         cat.lineage.keys.filter(_.startsWith("corpus.decisions_")))
   }

@@ -152,21 +152,6 @@ object ShardedNearDupIndex {
   private val LabelSchema = StructType(Seq(
     StructField("id", LongType), StructField("component", LongType)))
 
-  /** Fail fast on a labels dir committed in the legacy snapshot
-    * layout (r18 ADVICE): a delta commit onto it writes the
-    * `_layout_delta` marker and flips the dir, so readMerged would
-    * union full snapshot versions (lacking `lab_v`) as live deltas —
-    * duplicate rows plus a missing-column failure whose shape depends
-    * on which parquet file Spark samples for the schema. Mixed layouts
-    * are unsupported, so refuse them at the write boundary instead. */
-  private def requireLabelLayout(spark: SparkSession, dir: String): Unit = {
-    val ld = labelsDir(dir)
-    require(AtomicTable.committedVersions(spark, ld).isEmpty ||
-      AtomicTable.isDeltaLayout(spark, ld),
-      s"labels dir $ld is committed in the snapshot layout; folding " +
-        "upsert deltas onto it is unsupported — seed a fresh dir")
-  }
-
   /** Committed (id, component) labels; empty before the first shard.
     * On the upsert-delta layout this is the RESOLVED view — one
     * merge-on-read scan + a last-writer-wins hash aggregate per id
@@ -209,7 +194,6 @@ object ShardedNearDupIndex {
   def seedShards(spark: SparkSession, dir: String, sharded: DataFrame,
                  bits: Int, maxHamming: Int = 3,
                  maxBucketSize: Int = Dedup.DefaultBucketCap): DataFrame = {
-    requireLabelLayout(spark, dir)
     // ONE simhash pass per seed (r21): `sharded` is the signature
     // aggregation over the corpus's exploded tokens, and both the
     // label chain and the bands delta below consume it in separately-
@@ -220,14 +204,17 @@ object ShardedNearDupIndex {
     val labels = Dedup.shardedNearDupLabels(sh, maxHamming,
       maxBucketSize, bits).select(col("id"), col("component"))
     val bands = Dedup.bandRows(sh, bits, Nil)
-    AtomicTable.commitDelta(withNullRank(bands), bandsDir(dir), 0L)
-    // the seed IS the first delta (every row is new). Deliberately NOT
-    // coalesced: unlike the per-fold deltas this one is corpus-sized —
-    // the bulk-migration write should stay as parallel as the labels
-    // plan, and compactLabels/compactToBase own the file-count budget
-    // afterwards.
-    AtomicTable.commitDelta(labels.withColumn(LabV, lit(0L)),
-      labelsDir(dir), 0L)
+    // the seed IS the first delta of both tables (every row is new),
+    // committed as ONE [[AtomicTable.commitStaged]] call like
+    // [[addShard]]'s, so its layout check refuses a snapshot-layout
+    // labels dir before either write. Deliberately NOT coalesced: unlike
+    // the per-fold deltas this one is corpus-sized — the bulk-migration
+    // write should stay as parallel as the labels plan, and
+    // compactLabels/compactToBase own the file-count budget afterwards.
+    AtomicTable.commitStaged(spark, Seq(
+      AtomicTable.Write(withNullRank(bands), bandsDir(dir), 0L, delta = true),
+      AtomicTable.Write(labels.withColumn(LabV, lit(0L)), labelsDir(dir), 0L,
+        delta = true)))
     loadLabels(spark, dir)
   }
 
@@ -241,7 +228,6 @@ object ShardedNearDupIndex {
                maxBucketSize: Int = Dedup.DefaultBucketCap,
                version: Option[Long] = None,
                probeCap: Option[Int] = None): DataFrame = {
-    requireLabelLayout(spark, dir)
     val v = version.getOrElse(
       AtomicTable.nextVersion(spark, labelsDir(dir)))
     val m = Dedup.addShardNearDups(

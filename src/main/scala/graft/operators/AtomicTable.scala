@@ -83,8 +83,15 @@ object AtomicTable {
     * deployment retaining more versions gets deeper history for free. */
   def readVersion(spark: SparkSession, dir: String,
                   version: Long): Option[DataFrame] =
-    if (isCommitted(spark, dir, version) &&
-      fs(spark, dir).exists(dataPath(dir, version)))
+    if (isCommitted(spark, dir, version)) readData(spark, dir, version)
+    else None
+
+  /** Version `version`'s data, marker or not (None when its data dir is
+    * absent) — [[SnapshotManifest.Snapshot]] reads a pinned version
+    * through this: the manifest, not the marker, committed it. */
+  private[operators] def readData(spark: SparkSession, dir: String,
+                                  version: Long): Option[DataFrame] =
+    if (hasData(spark, dir, version))
       Some(spark.read.parquet(dataPath(dir, version).toString))
     else None
 
@@ -194,43 +201,53 @@ object AtomicTable {
                          adoptExisting: Boolean = false)
 
   /** THE commit path: every publish ([[commit]], [[commitDelta]], the
-    * sharded fold, [[TxnCommit.commitAll]]) runs these steps in order —
-    * one protocol for batch, streaming and compaction writers, as in
-    * Delta Lake:
-    *   1. bind each write's lineage, write the layout marker for deltas
+    * sharded fold, [[SnapshotManifest.commitAll]]) runs these steps in
+    * order — one protocol for batch, streaming and compaction writers,
+    * as in Delta Lake:
+    *   1. refuse, before any side effect, a duplicate (dir, version)
+    *      pair (two writes of one pair would overwrite the same data
+    *      path concurrently) and any write whose kind disagrees with its
+    *      dir's layout: a snapshot commit onto a base+delta dir would
+    *      prune live deltas, a delta commit onto a snapshot dir would
+    *      union its retained snapshots in as deltas;
+    *   2. bind each write's lineage, write the layout marker for deltas
     *      (before the marker check, so the snapshot-only guards see a
     *      base+delta dir even across a replay's no-op), and skip
     *      versions already committed;
-    *   2. stage the pending data — one write inline, several
+    *   3. stage the pending data — one write inline, several
     *      concurrently (overlapping jobs back-fill task slots);
-    *   3. write `journal`, if given: the multi-table commit point;
-    *   4. create the markers in caller order — the per-table
+    *   4. publish a [[SnapshotManifest]] to `manifestDir`, if given: the
+    *      multi-table commit point;
+    *   5. create the markers in caller order — the per-table
     *      visibility point, so ordering contracts ("bands before
     *      labels") hold as under sequential commits, and a crash before
     *      a marker leaves only invisible `v_<n>` orphans a replay
-    *      overwrites;
-    *   5. prune each snapshot write to its `retainVersions`;
-    *   6. publish a [[SnapshotManifest]] to `manifestDir`, if given.
-    * The (dir, version) pairs must be distinct — two writes of one pair
-    * would overwrite the same data path concurrently. */
+    *      overwrites (or, past step 4, pins [[SnapshotManifest.recover]]
+    *      marks);
+    *   6. prune each snapshot write to its `retainVersions`. */
   def commitStaged(spark: SparkSession, writes: Seq[Write],
-                   journal: Option[String] = None,
                    manifestDir: Option[String] = None): Unit = {
-    val all = writes.map(w => TxnCommit.Staged(w.dir, w.version))
+    val all = writes.map(w => SnapshotManifest.Staged(w.dir, w.version))
     require(all.distinct.size == all.size,
       s"commitStaged: duplicate (dir, version) in ${all.mkString(", ")}")
+    writes.foreach { w =>
+      val deltaDir = isDeltaLayout(spark, w.dir)
+      require(if (w.delta) deltaDir ||
+          committedVersions(spark, w.dir).isEmpty else !deltaDir,
+        s"commitStaged: a ${if (w.delta) "delta" else "snapshot"} commit " +
+          s"onto ${w.dir}, committed in the " +
+          s"${if (deltaDir) "base+delta" else "snapshot"} layout, would " +
+          "lose committed rows; mixed layouts are unsupported")
+    }
     val pending = writes.filter { w =>
       bindWriter(spark, w.dir, w.writerId, w.adoptExisting)
       if (w.delta) fs(spark, w.dir).create(layoutMarkerPath(w.dir), true).close()
       !isCommitted(spark, w.dir, w.version)
     }
-    val staged = pending.map(w => TxnCommit.Staged(w.dir, w.version))
     stageWrites(spark, pending)
-    if (pending.nonEmpty)
-      journal.foreach(VersionRecord.write(spark, _, staged, manifestDir))
-    markers(spark, staged)
-    writes.filterNot(_.delta).foreach(w => prune(spark, w.dir, w.retainVersions))
     manifestDir.foreach(SnapshotManifest.publish(spark, _, all))
+    markers(spark, pending.map(w => SnapshotManifest.Staged(w.dir, w.version)))
+    writes.filterNot(_.delta).foreach(w => prune(spark, w.dir, w.retainVersions))
   }
 
   private def writeData(w: Write): Unit = {
@@ -239,17 +256,17 @@ object AtomicTable {
     else out).parquet(dataPath(w.dir, w.version).toString)
   }
 
-  /** Step 2 of [[commitStaged]], through [[Par]]: a failed write
+  /** Step 3 of [[commitStaged]], through [[Par]]: a failed write
     * cancels its siblings before the failure propagates. */
   private[operators] def stageWrites(spark: SparkSession,
                                      writes: Seq[Write]): Unit =
     Par.run(spark, writes.map(w => () => writeData(w)))
 
-  /** Step 4 of [[commitStaged]] — the ONE place `_commit_<n>` markers
+  /** Step 5 of [[commitStaged]] — the ONE place `_commit_<n>` markers
     * are created, in the given order. An existing marker is left as is
     * (its mtime is the commit time [[vacuum]] ages by). */
   private[operators] def markers(spark: SparkSession,
-                                 staged: Seq[TxnCommit.Staged]): Unit =
+                                 staged: Seq[SnapshotManifest.Staged]): Unit =
     staged.foreach(s =>
       fs(spark, s.dir).createNewFile(markerPath(s.dir, s.version)))
 
@@ -262,7 +279,7 @@ object AtomicTable {
     f.delete(dataPath(dir, version), true)
   }
 
-  /** Step 5 of [[commitStaged]]: keep the `retainVersions` highest
+  /** Step 6 of [[commitStaged]]: keep the `retainVersions` highest
     * committed versions BY POSITION (a non-contiguous version jump
     * still leaves the immediately previous snapshot for reader grace). */
   private def prune(spark: SparkSession, dir: String,
@@ -271,7 +288,7 @@ object AtomicTable {
       .foreach(dropVersion(spark, dir, _))
 
   /** True when version `version`'s data dir exists, committed or not —
-    * [[TxnCommit.recover]]'s roll-forward test. */
+    * [[SnapshotManifest.recover]]'s roll-forward test. */
   private[operators] def hasData(spark: SparkSession, dir: String,
                                  version: Long): Boolean =
     fs(spark, dir).exists(dataPath(dir, version))
@@ -334,7 +351,7 @@ object AtomicTable {
         new Path(dst, p.getName), false,
         spark.sparkContext.hadoopConfiguration)
     }
-    markers(spark, Seq(TxnCommit.Staged(dir, version)))
+    markers(spark, Seq(SnapshotManifest.Staged(dir, version)))
     prune(spark, dir, retainVersions)
     DeleteReport(version, all.size, affectedPaths.size, untouched.size,
       rowsDeleted)

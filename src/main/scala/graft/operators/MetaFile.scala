@@ -11,8 +11,8 @@ import org.apache.commons.io.IOUtils
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** The ONE codec for graft's own metadata files — the txn journal, the
-  * snapshot manifest, ANALYZE stats, the file-stats and Bloom manifests,
+/** The ONE codec for graft's own metadata files — the snapshot
+  * manifest, ANALYZE stats, the file-stats and Bloom manifests,
   * the model fingerprint and the `_writer` binding: how each is encoded,
   * written and read. The reference gets atomic swaps from Postgres DDL
   * transactions; here every record is published the way a Delta log
@@ -31,13 +31,12 @@ import org.apache.spark.sql.SparkSession
   *     share one), then renamed into place, so a reader sees the old
   *     file or the whole new one.
   *   - READ: None when the file is absent or does not decode; each
-  *     caller keeps its own fallback (previous manifest seq, journal
-  *     roll-back, full scan, no broadcast hint). An IOException still
-  *     propagates — a transient read error must never roll back a
-  *     committed journal.
+  *     caller keeps its own fallback (previous manifest seq, full scan,
+  *     no broadcast hint). An IOException still propagates — a
+  *     transient read error must never hide a committed manifest.
   *
   * [[writeOnce]] is the write-once form for records whose name is
-  * claimed by exactly one writer (journal ids, manifest seqs). Renames
+  * claimed by exactly one writer (manifest seqs). Renames
   * on `file:` overwrite, so the occupant is checked BEFORE the rename:
   * a valid occupant fails loudly, a torn one is replaced. Between that
   * check and the rename a concurrent writer can still land on `file:`;

@@ -804,7 +804,7 @@ object UnionScalarQueries {
   }
 
   /** S16 — CROSS-TABLE SNAPSHOT-READ INVARIANCE through the REAL
-    * `TxnCommit.commitAll(manifestDir)` → `SnapshotManifest.snapshot` →
+    * `SnapshotManifest.commitAll` → `SnapshotManifest.snapshot` →
     * `Snapshot.read` chain (the governance path `cli.Main` publishes
     * per run): epoch 1 commits two tables (a date-bounded orders subset
     * and a keyed customer subset) under one manifest; a reader pins
@@ -826,25 +826,24 @@ object UnionScalarQueries {
       |WHERE CAST(o_orderdate AS DATE) < DATE '1996-01-01'
       |GROUP BY 2
       |ORDER BY src, k""".stripMargin) { (s, d) =>
-    import graft.operators.{SnapshotManifest, TxnCommit}
+    import graft.operators.SnapshotManifest
     val base = Q.tempDir("graft_snapread").toString
     val (ta, tb) = (s"$base/orders_sub", s"$base/customer_sub")
-    val journal = s"$base/_txn"
     val manifests = s"$base/_snapshots"
     val orders = Tables.orders(s, d)
     val cust = Tables.customer(s, d)
-    TxnCommit.commitAll(s, journal, "epoch1", Seq(
+    SnapshotManifest.commitAll(s, manifests, Seq(
       ta -> orders.filter(col("o_orderdate").cast("date") <
           to_date(lit("1996-01-01")))
         .select("o_orderpriority"),
       tb -> cust.filter(col("c_custkey") % 3 === 0)
-        .select("c_mktsegment")), Some(manifests))
+        .select("c_mktsegment")))
     val snap = SnapshotManifest.snapshot(s, manifests).get
     // epoch 2 advances latest on BOTH tables; the pinned reader must
     // not see it
-    TxnCommit.commitAll(s, journal, "epoch2", Seq(
+    SnapshotManifest.commitAll(s, manifests, Seq(
       ta -> orders.select("o_orderpriority"),
-      tb -> cust.select("c_mktsegment")), Some(manifests))
+      tb -> cust.select("c_mktsegment")))
     val c = snap.read(tb)
       .groupBy(col("c_mktsegment").as("k"))
       .agg(count(lit(1)).cast("long").as("n"))

@@ -12,9 +12,9 @@ import graft.cli.{DemoSource, Main}
 class CliSpec extends SparkSpec {
 
   private lazy val data = DemoSource.write(spark,
-    java.nio.file.Files.createTempDirectory("cli_spec_src")).toString
+    tempRoot("cli_spec_src")).toString
   private lazy val wh =
-    java.nio.file.Files.createTempDirectory("cli_spec_wh").toString
+    tempRoot("cli_spec_wh").toString
 
   // Sequential lazy pipeline runs shared across tests (ScalaTest runs
   // tests in declaration order within a suite).
@@ -181,13 +181,13 @@ class CliSpec extends SparkSpec {
 
   test("a failing source is isolated: others load, transform still runs") {
     val data2 = DemoSource.write(spark,
-      java.nio.file.Files.createTempDirectory("cli_spec_src2")).toString
+      tempRoot("cli_spec_src2")).toString
     // corrupt the trade-show workbook: not a zip at all
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$data2/trade_shows/trade_show_leads.xlsx"),
       "this is not a workbook".getBytes)
     val wh2 =
-      java.nio.file.Files.createTempDirectory("cli_spec_wh3").toString
+      tempRoot("cli_spec_wh3").toString
     val r = Main.run(spark, "seed", data2, wh2)
     assert(r.source("quickbooks").status == "loaded")
     assert(r.source("trade_shows").status == "failed")
@@ -276,7 +276,7 @@ class CliSpec extends SparkSpec {
 
   test("incremental without a seeded warehouse fails fast") {
     val freshWh =
-      java.nio.file.Files.createTempDirectory("cli_spec_wh2").toString
+      tempRoot("cli_spec_wh2").toString
     val e = intercept[IllegalArgumentException] {
       Main.run(spark, "incremental", data, freshWh)
     }
@@ -310,20 +310,20 @@ class CliSpec extends SparkSpec {
 
   test("startup txn recovery: a crashed publish is rolled forward by the next run") {
     seedRun; incRun; rerun
-    import graft.operators.{AtomicTable, TxnCommit}
+    import graft.operators.{AtomicTable, SnapshotManifest}
     import spark.implicits._
-    // simulate a publisher that crashed AFTER its journal write (the
-    // commit point): data staged, journal present, no markers yet
+    // simulate a publisher that crashed AFTER its manifest publish (the
+    // commit point): data staged, manifest pins it, no markers yet
     val aux = s"$wh/mart/aux_recovered_table"
-    val staged = TxnCommit.stage(spark,
+    val staged = SnapshotManifest.stage(spark,
       Seq(aux -> Seq((1L, "x")).toDF("k", "v")))
-    TxnCommit.writeJournal(spark, s"$wh/_txn", "crash1", staged)
+    SnapshotManifest.publish(spark, s"$wh/_snapshots", staged)
     assert(AtomicTable.read(spark, aux).isEmpty) // invisible pre-recovery
     val r = Main.run(spark, "incremental", data, wh)
-    assert(r.txnRecovered == Seq("crash1"), r.toString)
+    assert(r.recovered == staged, r.toString)
     assert(AtomicTable.read(spark, aux).get.count() == 1L)
     // steady state: nothing to repair on the next pass
-    assert(Main.run(spark, "incremental", data, wh).txnRecovered.isEmpty)
+    assert(Main.run(spark, "incremental", data, wh).recovered.isEmpty)
   }
 
   test("pipeline session: injected stats rule broadcasts an analyzed mart dim") {

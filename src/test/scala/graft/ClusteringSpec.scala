@@ -159,7 +159,7 @@ class ClusteringSpec extends SparkSpec {
         col("rank")))
     val idx = Clustering.ivfPqBuild(spark, emb,
       coarseStride = 100, stride = 100)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_idx")
+    val dir = tempRoot("ivfpq_idx")
     val roundTripped = try {
       idx.coarseCb.write.parquet(s"$dir/coarse")
       idx.cells.write.parquet(s"$dir/cells")

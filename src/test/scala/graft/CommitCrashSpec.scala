@@ -1,15 +1,14 @@
 package graft
 
-import graft.operators.{AtomicTable, SnapshotManifest, TxnCommit}
+import graft.operators.{AtomicTable, SnapshotManifest}
 
 /** Crash-phase matrix for the commit path. Each case is stopped after
-  * every step it reaches — data staged, journal written, each marker,
-  * manifest published — with the crash state built through the
-  * stage/journal seams and plain per-table commits. Before recovery a
-  * latest reader resolves only marked versions and a snapshot reader
-  * sees all-old or all-new; after `TxnCommit.recover` plus a replay of
-  * the same call, committed versions and row sets equal an uncrashed
-  * run. */
+  * every step it reaches — data staged, manifest published, each
+  * marker — with the crash state built through the stage/publish seams
+  * and plain per-table commits. Before recovery a latest reader
+  * resolves only marked versions and a snapshot reader sees all-old or
+  * all-new; after `SnapshotManifest.recover` plus a replay of the same
+  * call, committed versions and row sets equal an uncrashed run. */
 class CommitCrashSpec extends SparkSpec {
   import spark.implicits._
 
@@ -17,8 +16,7 @@ class CommitCrashSpec extends SparkSpec {
   private def rows(d: org.apache.spark.sql.DataFrame): Set[Long] =
     d.collect().map(_.getLong(0)).toSet
 
-  private def newRoot(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
+  private def newRoot(name: String): String = tempRoot(name).toString
 
   /** Committed versions and each version's rows, per table name. */
   private def tableState(root: String, names: Seq[String])
@@ -37,14 +35,15 @@ class CommitCrashSpec extends SparkSpec {
     })
 
   /** Runs `crash` (build one crash state) then the checks; `before`
-    * asserts the pre-recovery reader view, `replay` re-issues the call
-    * unless recovery already rolled its transaction forward. */
+    * asserts the pre-recovery reader view, then the call is replayed
+    * unless the crash passed its commit point (`committed`, judged
+    * before recovery): that commit has happened, and a replay would be
+    * a second one. */
   private def crashCase(label: String, names: Seq[String],
                         prior: String => Unit, call: String => Unit,
                         crashes: Seq[(String, String => Unit)],
                         before: String => Unit,
-                        rolledForward: Seq[String] => Boolean =
-                          _ => false): Unit = {
+                        committed: String => Boolean = _ => false): Unit = {
     val clean = newRoot(s"crash_${label}_clean")
     prior(clean); call(clean)
     val want = (tableState(clean, names), pins(clean))
@@ -53,8 +52,9 @@ class CommitCrashSpec extends SparkSpec {
       prior(root)
       crash(root)
       withClue(s"$label, crash after $point, before recovery: ")(before(root))
-      val (fwd, _) = TxnCommit.recover(spark, s"$root/_txn")
-      if (!rolledForward(fwd)) call(root)
+      val done = committed(root)
+      SnapshotManifest.recover(spark, s"$root/_snapshots")
+      if (!done) call(root)
       withClue(s"$label, crash after $point, recovered + replayed: ") {
         assert((tableState(root, names), pins(root)) == want)
       }
@@ -71,7 +71,7 @@ class CommitCrashSpec extends SparkSpec {
       call = root => AtomicTable.commit(df(3L, 4L), s"$root/t", 2L),
       crashes = Seq(
         "staged" -> (root =>
-          TxnCommit.stage(spark, Seq(s"$root/t" -> df(3L, 4L)))),
+          SnapshotManifest.stage(spark, Seq(s"$root/t" -> df(3L, 4L)))),
         // marker created, retention not yet applied
         "marker" -> (root => AtomicTable.commit(df(3L, 4L), s"$root/t",
           2L, retainVersions = 3))),
@@ -96,10 +96,10 @@ class CommitCrashSpec extends SparkSpec {
         AtomicTable.Write(df(2L), s"$root/bands", 1L, delta = true),
         AtomicTable.Write(df(20L), s"$root/labels", 1L, delta = true))),
       crashes = Seq(
-        "staged" -> (root => TxnCommit.stage(spark, Seq(
+        "staged" -> (root => SnapshotManifest.stage(spark, Seq(
           s"$root/bands" -> df(2L), s"$root/labels" -> df(20L)))),
         "marker_bands" -> (root => {
-          TxnCommit.stage(spark, Seq(s"$root/labels" -> df(20L)))
+          SnapshotManifest.stage(spark, Seq(s"$root/labels" -> df(20L)))
           AtomicTable.commitDelta(df(2L), s"$root/bands", 1L)
         }),
         "marker_labels" -> (root => {
@@ -121,36 +121,30 @@ class CommitCrashSpec extends SparkSpec {
   test("crash phases: journaled two-table commit with a manifest") {
     def tables(root: String, a: Long, b: Long) =
       Seq(s"$root/a" -> df(a), s"$root/b" -> df(b))
-    def journal(root: String) = s"$root/_txn"
     def manifests(root: String) = s"$root/_snapshots"
-    def journaled(root: String): Seq[TxnCommit.Staged] = {
-      val staged = TxnCommit.stage(spark, tables(root, 3L, 4L),
-        Some(journal(root)))
-      TxnCommit.writeJournal(spark, journal(root), "t1", staged,
-        Some(manifests(root)))
+    // the commit point: both versions staged, the manifest pinning them
+    def published(root: String): Seq[SnapshotManifest.Staged] = {
+      val staged = SnapshotManifest.stage(spark, tables(root, 3L, 4L))
+      SnapshotManifest.publish(spark, manifests(root), staged)
       staged
     }
-    def mark(root: String, staged: Seq[TxnCommit.Staged], n: Int): Unit =
+    def mark(root: String, staged: Seq[SnapshotManifest.Staged],
+             n: Int): Unit =
       staged.zip(tables(root, 3L, 4L)).take(n).foreach {
         case (s, (d, frame)) => AtomicTable.commit(frame, d, s.version,
           retainVersions = Int.MaxValue)
       }
     crashCase("journaled", Seq("a", "b"),
-      prior = root => TxnCommit.commitAll(spark, journal(root), "t0",
-        tables(root, 1L, 2L), Some(manifests(root))),
-      call = root => TxnCommit.commitAll(spark, journal(root), "t1",
-        tables(root, 3L, 4L), Some(manifests(root))),
+      prior = root => SnapshotManifest.commitAll(spark, manifests(root),
+        tables(root, 1L, 2L)),
+      call = root => SnapshotManifest.commitAll(spark, manifests(root),
+        tables(root, 3L, 4L)),
       crashes = Seq(
         "staged" -> (root =>
-          TxnCommit.stage(spark, tables(root, 3L, 4L), Some(journal(root)))),
-        "journal" -> (root => journaled(root)),
-        "marker_a" -> (root => mark(root, journaled(root), 1)),
-        "marker_b" -> (root => mark(root, journaled(root), 2)),
-        "manifest" -> (root => {
-          val staged = journaled(root)
-          mark(root, staged, 2)
-          SnapshotManifest.publish(spark, manifests(root), staged)
-        })),
+          SnapshotManifest.stage(spark, tables(root, 3L, 4L))),
+        "manifest" -> (root => published(root)),
+        "marker_a" -> (root => mark(root, published(root), 1)),
+        "marker_b" -> (root => mark(root, published(root), 2))),
       before = root => {
         val aNew = AtomicTable.isCommitted(spark, s"$root/a", 1L)
         val bNew = AtomicTable.isCommitted(spark, s"$root/b", 1L)
@@ -162,27 +156,43 @@ class CommitCrashSpec extends SparkSpec {
         val seen = (rows(snap.read(s"$root/a")), rows(snap.read(s"$root/b")))
         assert(seen == ((Set(1L), Set(2L))) || seen == ((Set(3L), Set(4L))))
       },
-      // a transaction recover() rolled forward has committed; replaying
-      // it would be a second transaction
-      rolledForward = _.contains("t1"))
+      committed = root => pins(root).contains(Map("a" -> 1L, "b" -> 1L)))
   }
 
   test("torn journal: a truncated two-table journal never rolls one table forward") {
+    // the manifest is the commit record: a torn one commits nothing
     val root = newRoot("crash_torn")
     val (ta, tb) = (s"$root/a", s"$root/b")
-    val journal = s"$root/_txn"
-    TxnCommit.commitAll(spark, journal, "t0", Seq(ta -> df(1L), tb -> df(2L)))
-    val staged = TxnCommit.stage(spark, Seq(ta -> df(3L), tb -> df(4L)),
-      Some(journal))
+    val manifests = s"$root/_snapshots"
+    SnapshotManifest.commitAll(spark, manifests,
+      Seq(ta -> df(1L), tb -> df(2L)))
+    val staged = SnapshotManifest.stage(spark,
+      Seq(ta -> df(3L), tb -> df(4L)))
     assert(staged.map(_.version) == Seq(1L, 1L))
-    // the journal was cut after its first entry: both data dirs exist,
-    // so a lenient parse would see a complete one-table transaction
-    java.nio.file.Files.write(java.nio.file.Paths.get(journal, "txn_t1.json"),
+    // the manifest was cut after its first entry: both data dirs exist,
+    // so a lenient parse would see a complete one-table commit
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(manifests, "manifest_000000000001.json"),
       s"""[{"dir":"$ta","version":1},{"dir":"$tb","ver""".getBytes("UTF-8"))
-    val (fwd, _) = TxnCommit.recover(spark, journal)
-    assert(fwd.isEmpty)
+    assert(SnapshotManifest.recover(spark, manifests).isEmpty)
     assert(rows(AtomicTable.read(spark, ta).get) == Set(1L))
     assert(rows(AtomicTable.read(spark, tb).get) == Set(2L))
-    assert(TxnCommit.recover(spark, journal) == ((Nil, Nil)))
+    assert(SnapshotManifest.snapshot(spark, manifests).get.seq == 0L)
+    assert(SnapshotManifest.recover(spark, manifests).isEmpty)
+  }
+
+  test("recover: a pinned version whose marker was pruned is not marked again") {
+    val root = newRoot("crash_pruned")
+    val ta = s"$root/a"
+    val manifests = s"$root/_snapshots"
+    SnapshotManifest.commitAll(spark, manifests, Seq(ta -> df(1L)))
+    AtomicTable.commit(df(2L), ta, 1L)
+    // a crash inside the prune of v_0: marker deleted, data dir left
+    java.nio.file.Files.delete(java.nio.file.Paths.get(ta, "_commit_0"))
+    assert(new java.io.File(s"$ta/v_0").isDirectory)
+    assert(SnapshotManifest.latest(spark, manifests).get._2 == Map(ta -> 0L))
+    assert(SnapshotManifest.recover(spark, manifests).isEmpty)
+    assert(AtomicTable.committedVersions(spark, ta) == Seq(1L))
+    assert(rows(AtomicTable.read(spark, ta).get) == Set(2L))
   }
 }

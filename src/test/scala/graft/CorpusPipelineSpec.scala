@@ -12,10 +12,10 @@ import graft.corpus.{CorpusDemoSource, CorpusPipeline}
 class CorpusPipelineSpec extends SparkSpec {
 
   private lazy val dataP =
-    java.nio.file.Files.createTempDirectory("corpus_spec_src")
+    tempRoot("corpus_spec_src")
   private lazy val data = CorpusDemoSource.write(spark, dataP, upTo = 2)
   private lazy val wh =
-    java.nio.file.Files.createTempDirectory("corpus_spec_wh").toString
+    tempRoot("corpus_spec_wh").toString
 
   private lazy val seedRun = CorpusPipeline.run(spark, "seed", data, wh)
   private lazy val incRun = {
@@ -162,21 +162,20 @@ class CorpusPipelineSpec extends SparkSpec {
 
   test("startup txn recovery: a crashed publish is rolled forward by the next corpus pass") {
     skipRun
-    import graft.operators.{AtomicTable, TxnCommit}
+    import graft.operators.{AtomicTable, SnapshotManifest}
     import spark.implicits._
-    // simulate a publisher that crashed AFTER its journal write (the
-    // commit point): data staged, journal present, no markers yet
+    // simulate a publisher that crashed AFTER its manifest publish (the
+    // commit point): data staged, manifest pins it, no markers yet
     val aux = s"$wh/corpus/aux_recovered_table"
-    val staged = TxnCommit.stage(spark,
+    val staged = SnapshotManifest.stage(spark,
       Seq(aux -> Seq((1L, "x")).toDF("k", "v")))
-    TxnCommit.writeJournal(spark, s"$wh/_txn", "crash1", staged)
+    SnapshotManifest.publish(spark, s"$wh/_snapshots", staged)
     assert(AtomicTable.read(spark, aux).isEmpty) // invisible pre-recovery
     val r = CorpusPipeline.run(spark, "incremental", data, wh)
-    assert(r.txnRecovered == Seq("crash1"), r.toString)
-    assert(r.txnRolledBack.isEmpty)
+    assert(r.recovered == staged, r.toString)
     assert(AtomicTable.read(spark, aux).get.count() == 1L)
     // steady state: nothing to repair on the next pass
     assert(CorpusPipeline.run(spark, "incremental", data, wh)
-      .txnRecovered.isEmpty)
+      .recovered.isEmpty)
   }
 }

@@ -7,7 +7,7 @@ class IngestSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDirWith(names: String*): String = {
-    val d = Files.createTempDirectory("ingest_spec")
+    val d = tempRoot("ingest_spec")
     names.foreach(n => Files.writeString(d.resolve(n), "x"))
     d.toString
   }
@@ -58,7 +58,7 @@ class IngestSpec extends SparkSpec {
   test("chunkedBackfill: resumes after a crash, idempotent re-run, observed row counts") {
     import org.apache.spark.sql.functions.col
     import graft.operators.AtomicTable
-    val base = Files.createTempDirectory("backfill")
+    val base = tempRoot("backfill")
     val target = base.resolve("t").toString
     val store = new Ingest.StateStore(base.resolve("state.json").toString)
     val data = Seq(
@@ -109,7 +109,7 @@ class IngestSpec extends SparkSpec {
       Seq(2L -> "amount_negative", 3L -> "date_unparseable",
         4L -> "amount_negative"))
     // the DLQ discipline: both halves commit; nothing is lost
-    val base = Files.createTempDirectory("dlq")
+    val base = tempRoot("dlq")
     AtomicTable.commit(good, base.resolve("good").toString, 0L)
     AtomicTable.commit(bad, base.resolve("dlq").toString, 0L)
     val total = AtomicTable.read(spark, base.resolve("good").toString)
@@ -146,7 +146,7 @@ class IngestSpec extends SparkSpec {
   test("saveTableObserved: metrics ride the commit write, no extra action needed") {
     import graft.operators.AtomicTable
     import graft.ref.Catalog
-    val root = Files.createTempDirectory("cat_obs").toString
+    val root = tempRoot("cat_obs").toString
     val cat = new Catalog(spark, root)
     val df = Seq((1L, Some("x")), (2L, None), (3L, None))
       .toDF("id", "maybe")
@@ -300,7 +300,7 @@ class IngestSpec extends SparkSpec {
 
   test("xlsx: readManyAsRows skips non-xlsx files and sheetless workbooks") {
     import graft.sources.Xlsx
-    val dir = Files.createTempDirectory("xlsx_mixed")
+    val dir = tempRoot("xlsx_mixed")
     val goodSheet = s"""<?xml version="1.0"?><worksheet $wbNs><sheetData><row r="1"><c r="A1" t="inlineStr"><is><t>Name</t></is></c></row><row r="2"><c r="A2" t="inlineStr"><is><t>alpha</t></is></c></row></sheetData></worksheet>"""
     Files.write(dir.resolve("2024-06-01_data.xlsx"),
       oneSheetWorkbook("Data", goodSheet, None))

@@ -231,7 +231,7 @@ class LlmSpec extends SparkSpec {
 
   test("NearDupIndex: day-2 re-crawl hits committed bands, fresh doc does not") {
     import graft.llm.NearDupIndex
-    val dir = java.nio.file.Files.createTempDirectory("ndidx").toString
+    val dir = tempRoot("ndidx").toString
     val day1 = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),
       (2L, "completely different words appear in this one here now"))
@@ -712,7 +712,7 @@ class LlmSpec extends SparkSpec {
   test("CorpusIndex: committed versions accumulate fps across batches") {
     import graft.llm.CorpusIndex
     import graft.operators.AtomicTable
-    val dir = java.nio.file.Files.createTempDirectory("fpidx_spec").toString
+    val dir = tempRoot("fpidx_spec").toString
     val day1 = Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha"))
       .toDF("doc_id", "text")
     val out1 = CorpusIndex.processBatch(spark, dir, day1, $"doc_id", $"text")
@@ -869,7 +869,7 @@ class LlmSpec extends SparkSpec {
   }
 
   test("PhashIndex: committed index flags copies and re-crawls, keeps fresh images") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_phidx_spec")
+    val dir = tempRoot("graft_phidx_spec")
       .toString
     def imgs(ids: Seq[Long]) =
       Multimodal.asPhashImageTable(ids.toDF("doc_id"))
@@ -918,7 +918,7 @@ class LlmSpec extends SparkSpec {
       assert(ham <= 2, s"near-copy $i hamming $ham")
     }
     // the persisted 128-bit chain: re-crawl + near-copy flagged, fresh kept
-    val dir = java.nio.file.Files.createTempDirectory("graft_ph128_spec")
+    val dir = tempRoot("graft_ph128_spec")
       .toString
     def imgs(ids: Seq[Long]) =
       Multimodal.asPhash128ImageTable(ids.toDF("doc_id"))
@@ -954,7 +954,7 @@ class LlmSpec extends SparkSpec {
     def check(name: String, load: String => org.apache.spark.sql.DataFrame)
              (run: (String, Seq[Long], Int) => Unit): Unit = {
       val dirs = Seq(2, 0).map { every =>
-        val d = java.nio.file.Files.createTempDirectory(s"ce_$name")
+        val d = tempRoot(s"ce_$name")
           .toString
         batches.foreach(run(d, _, every))
         d
@@ -989,7 +989,7 @@ class LlmSpec extends SparkSpec {
     val zeros = "0" * 64
     val ones = "1" * 64
     def sig(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "simhash")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ups_spec")
+    val dir = tempRoot("graft_ups_spec")
       .resolve("idx").toString
     def resolved: Map[Long, Long] =
       ShardedNearDupIndex.loadLabels(spark, dir).collect()
@@ -1039,7 +1039,7 @@ class LlmSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((2L, 0L)))
     // legacy snapshot layout (a pre-upsert-delta labels dir) stays
     // readable
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ups_spec2")
+    val dir2 = tempRoot("graft_ups_spec2")
       .resolve("idx").toString
     graft.operators.AtomicTable.commit(
       Seq(1L -> 1L, 2L -> 1L, 3L -> 3L).toDF("id", "component"),
@@ -1054,6 +1054,13 @@ class LlmSpec extends SparkSpec {
       ShardedNearDupIndex.addShard(spark, dir2, sig(5L -> zeros),
         bits = 64)
     }
+    // a seed onto it is refused before its bands delta lands
+    assertThrows[IllegalArgumentException] {
+      ShardedNearDupIndex.seedShards(spark, dir2,
+        sig(5L -> zeros).withColumn("shard", lit(0L)), bits = 64)
+    }
+    assert(graft.operators.AtomicTable
+      .committedVersions(spark, s"$dir2/bands").isEmpty)
   }
 
   test("phash banding: Hamming<=3 always shares a band; 4 spread bits can evade") {

@@ -29,7 +29,7 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("parity with Hadoop's LocalFileSystem: modes under a umask, setPermission, owner, group") {
-    val base = Files.createTempDirectory("localfs_parity")
+    val base = tempRoot("localfs_parity")
     for (umask <- Seq("022", "027")) {
       val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
       conf.set(FsPermission.UMASK_LABEL, umask)
@@ -67,7 +67,7 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("FileContext parity with Hadoop's LocalFs: mkdir and create modes") {
-    val base = Files.createTempDirectory("localfs_fc_parity")
+    val base = tempRoot("localfs_fc_parity")
     def probe(afs: String, side: String) = {
       val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
       conf.set("fs.AbstractFileSystem.file.impl", afs)
@@ -95,7 +95,7 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("getFileLinkStatus: a symlink still reports isSymlink and its target") {
-    val base = Files.createTempDirectory("localfs_link")
+    val base = tempRoot("localfs_link")
     val target = Files.write(base.resolve("t"), Array[Byte](1))
     val link = Files.createSymbolicLink(base.resolve("l"), target)
     val dangling = Files.createSymbolicLink(base.resolve("d"),
@@ -122,7 +122,7 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("FileContext rename with OVERWRITE replaces its target, checksum included") {
-    val base = Files.createTempDirectory("localfs_rename")
+    val base = tempRoot("localfs_rename")
     val fc = FileContext.getFileContext(spark.sparkContext.hadoopConfiguration)
     def put(p: Path, s: String): Unit = {
       val out = fc.create(p, EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
@@ -203,7 +203,7 @@ class LocalFsSpec extends SparkSpec {
 
   test("zero chmod/ls/readlink/stat forks: staged commit + read, saveTable, one RocksDB micro-batch") {
     import graft.operators.AtomicTable
-    val base = Files.createTempDirectory("localfs_forks")
+    val base = tempRoot("localfs_forks")
     val df = spark.range(100).select(col("id"), (col("id") % 7).as("g"))
     val src = base.resolve("src").toString
     df.write.parquet(src)

@@ -77,7 +77,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("partitioned table write: month filter lands in PartitionFilters") {
-    val root = java.nio.file.Files.createTempDirectory("cat_part").toString
+    val root = tempRoot("cat_part").toString
     val cat = new graft.ref.Catalog(spark, root)
     val df = Seq(
       (1L, "2024-01", 10.0), (2L, "2024-01", 20.0), (3L, "2024-02", 30.0))
@@ -105,7 +105,7 @@ class OperatorsSpec extends SparkSpec {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.Exchange
-    val dir = java.nio.file.Files.createTempDirectory("bucket_join")
+    val dir = tempRoot("bucket_join")
     val orders = (1L to 400L).map(k => (k, s"s${k % 3}"))
       .toDF("o_orderkey", "o_orderstatus")
     val lineitem = (1L to 1200L).map(i => (i % 400 + 1, i * 0.5))
@@ -145,7 +145,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("compact: rewrites the latest snapshot with fewer files, same rows") {
     import graft.operators.AtomicTable
-    val dir = java.nio.file.Files.createTempDirectory("compact_spec")
+    val dir = tempRoot("compact_spec")
       .resolve("t").toString
     val df = (0L until 1000L).toDF("v").repartition(16)
     AtomicTable.commit(df, dir, 0L)
@@ -196,7 +196,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("Catalog.saveTable is atomic: a reader mid-overwrite sees the old version, never a torn table") {
     import graft.operators.AtomicTable
-    val root = java.nio.file.Files.createTempDirectory("cat_atomic").toString
+    val root = tempRoot("cat_atomic").toString
     val cat = new graft.ref.Catalog(spark, root)
     cat.saveTable("mart", "t", Seq((1L, "night-1")).toDF("k", "v"))
     // An in-flight dashboard reader resolves the committed version BEFORE
@@ -220,7 +220,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("Catalog: legacy plain-parquet dirs load and exist; orphan version dirs do neither") {
-    val root = java.nio.file.Files.createTempDirectory("cat_legacy").toString
+    val root = tempRoot("cat_legacy").toString
     val cat = new graft.ref.Catalog(spark, root)
     // pre-atomic layout: parquet files directly under the table path
     Seq((1L, "legacy")).toDF("k", "v")
@@ -237,7 +237,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("AtomicTable: a second writer lineage fails fast, never silently drops") {
     import graft.operators.AtomicTable
-    val dir = java.nio.file.Files.createTempDirectory("atomic_writer")
+    val dir = tempRoot("atomic_writer")
       .resolve("t").toString
     val df = Seq((1L, "a")).toDF("k", "v")
     AtomicTable.commit(df, dir, 0L, writerId = Some("ckpt-A"))
@@ -260,7 +260,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("AtomicTable: pruning keeps the two highest committed versions by position") {
     import graft.operators.AtomicTable
-    val dir = java.nio.file.Files.createTempDirectory("atomic_prune")
+    val dir = tempRoot("atomic_prune")
       .resolve("t").toString
     def df(n: Long) = Seq((n, s"v$n")).toDF("k", "v")
     AtomicTable.commit(df(0), dir, 0L)
@@ -283,7 +283,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("AtomicTable: writer adoption of a pre-existing unbound table is explicit") {
     import graft.operators.AtomicTable
-    val dir = java.nio.file.Files.createTempDirectory("atomic_adopt")
+    val dir = tempRoot("atomic_adopt")
       .resolve("t").toString
     // Batch path (no writerId) mints versions but no _writer file.
     AtomicTable.commit(Seq((1L, "a")).toDF("k", "v"), dir, 0L)
@@ -310,7 +310,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("AtomicTable.diff tags insert/delete/update, drops unchanged, rejects uncommitted") {
     import graft.operators.AtomicTable
-    val dir = java.nio.file.Files.createTempDirectory("at_diff").toString
+    val dir = tempRoot("at_diff").toString
     val v1 = Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30))
       .toDF("k", "s", "n")
     val v2 = Seq((1L, "a", 10), (2L, "B", 20), (4L, "d", 40))
@@ -327,7 +327,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("AtomicTable: vacuum applies count and age retention, keeps latest") {
     import graft.operators.AtomicTable
-    val dir = java.nio.file.Files.createTempDirectory("atomic_vacuum")
+    val dir = tempRoot("atomic_vacuum")
       .resolve("t").toString
     def df(n: Long) = Seq((n, s"v$n")).toDF("k", "v")
     // retainVersions=10 keeps deep history for vacuum to manage.
@@ -350,7 +350,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("AtomicTable base+delta: merged read, idempotent deltas, compaction epochs") {
     import graft.operators.AtomicTable
-    val dir = java.nio.file.Files.createTempDirectory("atomic_delta")
+    val dir = tempRoot("atomic_delta")
       .resolve("t").toString
     def df(ks: Long*) = ks.map(k => (k, s"v$k")).toDF("k", "v")
     def merged: Set[Long] = AtomicTable.readMerged(spark, dir)
@@ -386,7 +386,7 @@ class OperatorsSpec extends SparkSpec {
     assert(AtomicTable.committedBases(spark, dir) == Seq(2L, 3L))
     assert(merged == Set(1L, 2L, 3L, 4L, 5L))
     // an all-empty table (only zero-row deltas) reads as None
-    val dir2 = java.nio.file.Files.createTempDirectory("atomic_delta2")
+    val dir2 = tempRoot("atomic_delta2")
       .resolve("t").toString
     AtomicTable.commitDelta(df().limit(0), dir2, 0L)
     assert(AtomicTable.committedVersions(spark, dir2) == Seq(0L))
@@ -395,7 +395,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("commitStaged: parallel delta writes, markers in order, idempotent") {
     import graft.operators.AtomicTable
-    val root = java.nio.file.Files.createTempDirectory("atomic_staged")
+    val root = tempRoot("atomic_staged")
     val bandsDir = root.resolve("bands").toString
     val labelsDir = root.resolve("labels").toString
     def df(ks: Long*) = ks.map(k => (k, s"v$k")).toDF("k", "v")
@@ -425,7 +425,7 @@ class OperatorsSpec extends SparkSpec {
   test("commitStaged: a failed write cancels its sibling and commits nothing") {
     import graft.operators.AtomicTable
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Files.createTempDirectory("atomic_fail")
+    val root = tempRoot("atomic_fail")
     val (ta, tb) = (root.resolve("a").toString, root.resolve("b").toString)
     val boom = udf((k: Long) =>
       if (k >= 0L) throw new IllegalStateException("boom") else k)
@@ -482,7 +482,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("commitStaged: a duplicate (dir, version) pair is rejected before any write") {
     import graft.operators.AtomicTable
-    val dir = java.nio.file.Files.createTempDirectory("atomic_dup")
+    val dir = tempRoot("atomic_dup")
       .resolve("t").toString
     def df(k: Long) = Seq(k).toDF("k")
     intercept[IllegalArgumentException] {
@@ -493,9 +493,35 @@ class OperatorsSpec extends SparkSpec {
     assert(!new java.io.File(dir).exists())
   }
 
+  test("commitStaged: a write whose kind disagrees with its dir's layout is refused before any write") {
+    import graft.operators.AtomicTable
+    val root = tempRoot("atomic_mixed")
+    val (deltas, snaps) = (root.resolve("d").toString,
+      root.resolve("s").toString)
+    def df(from: Long, n: Long) = spark.range(from, from + n).toDF("k")
+    (0L until 3L).foreach(v => AtomicTable.commitDelta(df(v * 10L, 10L),
+      deltas, v))
+    // a snapshot commit would keep the two highest versions by position
+    // and drop deltas v_0 and v_1
+    intercept[IllegalArgumentException](
+      AtomicTable.commit(df(100L, 5L), deltas, 3L))
+    assert(AtomicTable.readMerged(spark, deltas).get.count() == 30L)
+    assert(AtomicTable.committedVersions(spark, deltas) == Seq(0L, 1L, 2L))
+    assert(!new java.io.File(s"$deltas/v_3").exists())
+    // a delta commit would flip the dir and union the retained
+    // snapshots in as live deltas
+    AtomicTable.commit(df(0L, 10L), snaps, 0L)
+    AtomicTable.commit(df(10L, 10L), snaps, 1L)
+    intercept[IllegalArgumentException](
+      AtomicTable.commitDelta(df(20L, 5L), snaps, 2L))
+    assert(!AtomicTable.isDeltaLayout(spark, snaps))
+    assert(AtomicTable.read(spark, snaps).get.count() == 10L)
+    assert(!new java.io.File(s"$snaps/v_2").exists())
+  }
+
   test("base+delta guards: vacuum/deleteWhere refuse, compact delegates, Maintenance plans debt") {
     import graft.operators.{AtomicTable, Maintenance}
-    val dir = java.nio.file.Files.createTempDirectory("atomic_guard")
+    val dir = tempRoot("atomic_guard")
       .resolve("t").toString
     def df(ks: Long*) = ks.map(k => (k, s"v$k")).toDF("k", "v")
     def merged: Set[Long] = AtomicTable.readMerged(spark, dir)
@@ -527,7 +553,7 @@ class OperatorsSpec extends SparkSpec {
     assert(merged == (0L to 14L).toSet)
     assert(Maintenance.plan(spark, dir, policy).isEmpty)
     // a snapshot dir is untouched by the guard: vacuum still works
-    val dir2 = java.nio.file.Files.createTempDirectory("atomic_guard2")
+    val dir2 = tempRoot("atomic_guard2")
       .resolve("t").toString
     (0L to 3L).foreach(v =>
       AtomicTable.commit(df(v), dir2, v, retainVersions = 10))
@@ -578,7 +604,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("DataSkipping: manifest round-trips; 2-d probe reads a strict file subset") {
     import graft.operators.{AtomicTable, DataSkipping, ZOrder}
-    val dir = java.nio.file.Files.createTempDirectory("skip_tbl")
+    val dir = tempRoot("skip_tbl")
       .resolve("t").toString
     // 64x64 grid of (a, b) dims with a payload; z-clustered into 16
     // files, stats manifest per file.
@@ -695,7 +721,7 @@ class OperatorsSpec extends SparkSpec {
   test("Checks.snapshotDrift flags a large version-over-version count swing") {
     import graft.operators.AtomicTable
     import graft.quality.Checks
-    val dir = java.nio.file.Files.createTempDirectory("atomic_drift")
+    val dir = tempRoot("atomic_drift")
       .resolve("t").toString
     def df(n: Int) = (1 to n).map(i => (i.toLong, s"r$i")).toDF("k", "v")
     // Fewer than two versions: vacuously passes (incl. missing table).
@@ -717,7 +743,7 @@ class OperatorsSpec extends SparkSpec {
   test("Checks.schemaChanges reports added/removed/retyped columns, latest two versions only") {
     import graft.operators.AtomicTable
     import graft.quality.Checks
-    val dir = java.nio.file.Files.createTempDirectory("atomic_sdrift")
+    val dir = tempRoot("atomic_sdrift")
       .resolve("t").toString
     // Fewer than two versions (incl. missing table): no changes.
     assert(Checks.schemaChanges(spark, s"$dir-nope").isEmpty)
@@ -742,7 +768,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("TableStats: analyze persists exact stats; advisor broadcasts only analyzed-small dims") {
     import graft.operators.{AtomicTable, TableStats}
-    val base = java.nio.file.Files.createTempDirectory("tstats")
+    val base = tempRoot("tstats")
     val dimDir = base.resolve("dim").toString
     val dim = Seq((1L, "a"), (2L, "b"), (2L, null), (3L, "c"))
       .toDF("k", "v")
@@ -760,7 +786,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("ResultCache: same query + same inputs hit; changed inputs or semantics miss") {
     import graft.ref.Catalog
-    val base = java.nio.file.Files.createTempDirectory("rcache")
+    val base = tempRoot("rcache")
     val inDir = base.resolve("in").toString
     val wh = base.resolve("wh").toString
     (1L to 100L).map(i => (i, i % 7)).toDF("k", "g")
@@ -832,7 +858,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("Maintenance: fragmented table converges to compacted+analyzed+pruned in one pass") {
     import graft.operators.{AtomicTable, Maintenance, TableStats}
-    val dir = java.nio.file.Files.createTempDirectory("maint")
+    val dir = tempRoot("maint")
       .resolve("t").toString
     // fragment: 32 tiny files
     val df = (0L until 2048L).map(i => (i, s"v$i")).toDF("k", "v")
@@ -860,68 +886,69 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("TxnCommit: all-or-nothing multi-table publish across crash points") {
-    import graft.operators.{AtomicTable, TxnCommit}
-    val base = java.nio.file.Files.createTempDirectory("txn")
+    import graft.operators.{AtomicTable, SnapshotManifest}
+    val base = tempRoot("txn")
     val (ta, tb) = (base.resolve("a").toString, base.resolve("b").toString)
-    val journal = base.resolve("_txn").toString
+    val manifests = base.resolve("_snapshots").toString
     def rows(dir: String): Option[Long] =
       AtomicTable.read(spark, dir).map(_.count())
     def df(n: Int) = (1 to n).map(i => (i.toLong, s"r$i")).toDF("k", "v")
     // happy path: both tables appear together
-    TxnCommit.commitAll(spark, journal, "t1",
+    SnapshotManifest.commitAll(spark, manifests,
       Seq(ta -> df(3), tb -> df(5)))
     assert(rows(ta).contains(3L) && rows(tb).contains(5L))
-    // crash AFTER the journal write (commit point) but before markers:
-    // readers still see v0 everywhere; recover rolls FORWARD
-    val staged = TxnCommit.stage(spark, Seq(ta -> df(4), tb -> df(6)))
-    TxnCommit.writeJournal(spark, journal, "t2", staged)
+    // crash AFTER the manifest (commit point) but before the markers:
+    // latest readers still see v0 everywhere; recover rolls FORWARD
+    val staged = SnapshotManifest.stage(spark, Seq(ta -> df(4), tb -> df(6)))
+    SnapshotManifest.publish(spark, manifests, staged)
     assert(rows(ta).contains(3L) && rows(tb).contains(5L))
-    val (fwd, back) = TxnCommit.recover(spark, journal)
-    assert(fwd == Seq("t2") && back.isEmpty)
+    assert(SnapshotManifest.recover(spark, manifests) == staged)
     assert(rows(ta).contains(4L) && rows(tb).contains(6L))
-    // crash MID-STAGE (journal written, one data dir lost): recover
-    // rolls BACK — neither table advances
-    val staged2 = TxnCommit.stage(spark, Seq(ta -> df(7), tb -> df(8)))
-    TxnCommit.writeJournal(spark, journal, "t3", staged2)
+    // crash BEFORE the manifest (staged, one data dir lost): nothing to
+    // repair — neither table advances, and the next commit overwrites
+    // the orphan at the same version
+    val staged2 = SnapshotManifest.stage(spark, Seq(ta -> df(7), tb -> df(8)))
     val lost = new org.apache.hadoop.fs.Path(s"$tb/v_${staged2(1).version}")
     lost.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(lost, true)
-    val (fwd2, back2) = TxnCommit.recover(spark, journal)
-    assert(fwd2.isEmpty && back2 == Seq("t3"))
+    assert(SnapshotManifest.recover(spark, manifests).isEmpty)
     assert(rows(ta).contains(4L) && rows(tb).contains(6L))
+    assert(SnapshotManifest.commitAll(spark, manifests,
+      Seq(ta -> df(2), tb -> df(1))) == staged2)
+    assert(rows(ta).contains(2L) && rows(tb).contains(1L))
     // recovery is idempotent / quiet when there is nothing to repair
-    assert(TxnCommit.recover(spark, journal) == ((Nil, Nil)))
+    assert(SnapshotManifest.recover(spark, manifests).isEmpty)
   }
 
   test("SnapshotManifest: cross-table readers see both-old or both-new, never mixed") {
-    import graft.operators.{AtomicTable, SnapshotManifest, TxnCommit}
-    val base = java.nio.file.Files.createTempDirectory("snap")
+    import graft.operators.{AtomicTable, SnapshotManifest}
+    val base = tempRoot("snap")
     val (ta, tb) = (base.resolve("a").toString, base.resolve("b").toString)
-    val journal = base.resolve("_txn").toString
     val manifests = base.resolve("_snapshots").toString
     def df(n: Int) = (1 to n).map(i => (i.toLong, s"r$i")).toDF("k", "v")
-    TxnCommit.commitAll(spark, journal, "t1",
-      Seq(ta -> df(3), tb -> df(3)), Some(manifests))
+    SnapshotManifest.commitAll(spark, manifests,
+      Seq(ta -> df(3), tb -> df(3)))
     val snap0 = SnapshotManifest.snapshot(spark, manifests).get
     assert(snap0.read(ta).count() == 3L && snap0.read(tb).count() == 3L)
     // a reader opened BEFORE a publish stays on both-old after it lands
-    TxnCommit.commitAll(spark, journal, "t2",
-      Seq(ta -> df(5), tb -> df(7)), Some(manifests))
+    SnapshotManifest.commitAll(spark, manifests,
+      Seq(ta -> df(5), tb -> df(7)))
     assert(snap0.read(ta).count() == 3L && snap0.read(tb).count() == 3L)
     val snap1 = SnapshotManifest.snapshot(spark, manifests).get
     assert(snap1.read(ta).count() == 5L && snap1.read(tb).count() == 7L)
-    // MID-PUBLISH: table A's markers landed, manifest not yet written
-    // (simulated by a manifest-less commitAll of A alone). A
+    // MID-PUBLISH: table A's marker landed, manifest not yet written
+    // (simulated by a manifest-less commit of A alone). A
     // latest-resolving reader sees the mixed state; a snapshot reader
     // opened at this instant still sees the LAST manifest — both-old.
-    TxnCommit.commitAll(spark, journal, "t3", Seq(ta -> df(9)))
+    AtomicTable.commit(df(9), ta, AtomicTable.nextVersion(spark, ta),
+      retainVersions = Int.MaxValue)
     assert(AtomicTable.read(spark, ta).get.count() == 9L) // mixed, if unpinned
     val snapMid = SnapshotManifest.snapshot(spark, manifests).get
     assert(snapMid.seq == snap1.seq)
     assert(snapMid.read(ta).count() == 5L && snapMid.read(tb).count() == 7L)
     // the next snapshot publish re-converges
-    TxnCommit.commitAll(spark, journal, "t4",
-      Seq(ta -> df(2), tb -> df(2)), Some(manifests))
+    SnapshotManifest.commitAll(spark, manifests,
+      Seq(ta -> df(2), tb -> df(2)))
     val snap2 = SnapshotManifest.snapshot(spark, manifests).get
     assert(snap2.read(ta).count() == 2L && snap2.read(tb).count() == 2L)
     // a snapshot older than the retention window fails LOUDLY on its
@@ -938,14 +965,13 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("SnapshotManifest: torn manifest rejected with fallback; recover republishes a crashed snapshot txn") {
-    import graft.operators.{SnapshotManifest, TxnCommit}
-    val base = java.nio.file.Files.createTempDirectory("snaptorn")
+    import graft.operators.{AtomicTable, SnapshotManifest}
+    val base = tempRoot("snaptorn")
     val (ta, tb) = (base.resolve("a").toString, base.resolve("b").toString)
-    val journal = base.resolve("_txn").toString
     val manifests = base.resolve("_snapshots").toString
     def df(n: Int) = (1 to n).map(i => (i.toLong, s"r$i")).toDF("k", "v")
-    TxnCommit.commitAll(spark, journal, "t1",
-      Seq(ta -> df(3), tb -> df(3)), Some(manifests))
+    SnapshotManifest.commitAll(spark, manifests,
+      Seq(ta -> df(3), tb -> df(3)))
     // TORN manifest at the next seq (crashed writer without atomic
     // rename): strict parsing must reject it and serve seq 0 — not a
     // partial pin map that fails reads spuriously (r13 ADVICE)
@@ -959,30 +985,25 @@ class OperatorsSpec extends SparkSpec {
     // zero-byte file (create-then-crash) is equally rejected
     java.nio.file.Files.write(torn, Array.emptyByteArray)
     assert(SnapshotManifest.snapshot(spark, manifests).get.seq == 0L)
-    // CRASH between the markers and the manifest publish: journal (with
-    // manifestDir) + markers exist, manifest missing. recover() rolls
-    // forward AND republishes, reclaiming the torn seq-1 slot — without
-    // it snapshot readers would stay pinned pre-crash forever.
-    val staged = TxnCommit.stage(spark,
-      Seq(ta -> df(5), tb -> df(7)), Some(journal))
-    TxnCommit.writeJournal(spark, journal, "t2", staged, Some(manifests))
-    val (fwd, back) = TxnCommit.recover(spark, journal)
-    assert(fwd == Seq("t2") && back.isEmpty)
+    // CRASH between the manifest publish and the markers: the publish
+    // reclaims the torn seq-1 slot, so snapshot readers see the commit
+    // at once; latest readers wait for recover() to create the markers.
+    val staged = SnapshotManifest.stage(spark, Seq(ta -> df(5), tb -> df(7)))
+    assert(SnapshotManifest.publish(spark, manifests, staged) == 1L)
     val snap2 = SnapshotManifest.snapshot(spark, manifests).get
     assert(snap2.seq == 1L)
     assert(snap2.read(ta).count() == 5L && snap2.read(tb).count() == 7L)
-    // a plain (non-snapshot) journal still recovers without a manifest
-    val staged2 = TxnCommit.stage(spark, Seq(ta -> df(9)), Some(journal))
-    TxnCommit.writeJournal(spark, journal, "t3", staged2)
-    val (fwd2, _) = TxnCommit.recover(spark, journal)
-    assert(fwd2 == Seq("t3"))
+    assert(AtomicTable.read(spark, ta).get.count() == 3L)
+    assert(SnapshotManifest.recover(spark, manifests) == staged)
+    assert(AtomicTable.read(spark, ta).get.count() == 5L &&
+      AtomicTable.read(spark, tb).get.count() == 7L)
     assert(SnapshotManifest.snapshot(spark, manifests).get.seq == 1L)
     graft.queries.Q.deleteRecursively(base)
   }
 
   test("deleteWhere: rewrites only files containing victims, byte-copies the rest") {
     import graft.operators.AtomicTable
-    val dir = java.nio.file.Files.createTempDirectory("tdel")
+    val dir = tempRoot("tdel")
       .resolve("t").toString
     // 8 range-clustered files: each key lives in exactly one file
     val df = (0L until 4096L).map(i => (i, s"v$i")).toDF("k", "v")
@@ -1020,7 +1041,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("deleteWhere: NULL-key rows in rewritten files survive the erasure") {
     import graft.operators.AtomicTable
-    val dir = java.nio.file.Files.createTempDirectory("tdelnull")
+    val dir = tempRoot("tdelnull")
       .resolve("t").toString
     // one file: every NULL-key row is co-located with the victim, the
     // worst case for a non-null-safe keep predicate (`!isin` is NULL
@@ -1037,23 +1058,21 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("TxnCommit: outstanding journal versions are reserved by new commits") {
-    import graft.operators.{AtomicTable, TxnCommit}
-    val base = java.nio.file.Files.createTempDirectory("txnres")
+    import graft.operators.{AtomicTable, SnapshotManifest}
+    val base = tempRoot("txnres")
     val ta = base.resolve("a").toString
-    val journal = base.resolve("_txn").toString
+    val manifests = base.resolve("_snapshots").toString
     def df(n: Int) = (1 to n).map(i => (i.toLong, s"r$i")).toDF("k", "v")
-    TxnCommit.commitAll(spark, journal, "t1", Seq(ta -> df(3)))
-    // t2 crashes after its journal write (commit point reached)
-    val staged = TxnCommit.stage(spark, Seq(ta -> df(4)), Some(journal))
-    TxnCommit.writeJournal(spark, journal, "t2", staged)
-    // a commit BEFORE recover must not reuse t2's version number —
-    // nextVersion counts only markers, so without journal reservation
-    // t3 would overwrite t2's staged dir and a later recover would
-    // publish t3's data under t2's identity (r11 ADVICE)
-    val s3 = TxnCommit.commitAll(spark, journal, "t3", Seq(ta -> df(9)))
+    SnapshotManifest.commitAll(spark, manifests, Seq(ta -> df(3)))
+    // t2 crashes after its manifest publish (commit point reached)
+    val staged = SnapshotManifest.stage(spark, Seq(ta -> df(4)))
+    SnapshotManifest.publish(spark, manifests, staged)
+    // the next commitAll must not reuse t2's version number —
+    // nextVersion counts only markers, so without recovering first t3
+    // would overwrite the data t2's manifest committed (r11 ADVICE)
+    val s3 = SnapshotManifest.commitAll(spark, manifests, Seq(ta -> df(9)))
     assert(s3.head.version > staged.head.version)
-    val (fwd, back) = TxnCommit.recover(spark, journal)
-    assert(fwd == Seq("t2") && back.isEmpty)
+    assert(SnapshotManifest.recover(spark, manifests).isEmpty)
     // latest = t3 (higher version); t2's snapshot intact at its version
     assert(AtomicTable.read(spark, ta).get.count() == 9L)
     assert(AtomicTable.readVersion(spark, ta, staged.head.version)
@@ -1062,7 +1081,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("ResultCache: changes inside a hive-partitioned input invalidate") {
     import graft.ref.Catalog
-    val base = java.nio.file.Files.createTempDirectory("rcache_part")
+    val base = tempRoot("rcache_part")
     val inDir = base.resolve("in").toString
     val wh = base.resolve("wh").toString
     (1L to 100L).map(i => (i, i % 4)).toDF("k", "p")
@@ -1088,7 +1107,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("ResultCache: ANALYZE of an input leaves its fingerprint unchanged") {
     import graft.operators.{AtomicTable, ResultCache, TableStats}
-    val dir = java.nio.file.Files.createTempDirectory("rcache_stats")
+    val dir = tempRoot("rcache_stats")
       .resolve("t").toString
     AtomicTable.commit((1L to 50L).map(i => (i, i % 3)).toDF("k", "g"),
       dir, 0L)
@@ -1173,7 +1192,7 @@ class OperatorsSpec extends SparkSpec {
   test("StatsBroadcastRule: injected extension broadcasts analyzed-small committed dims") {
     import graft.operators.{AtomicTable, TableStats}
     import org.apache.spark.sql.SparkSession
-    val base = java.nio.file.Files.createTempDirectory("sbr")
+    val base = tempRoot("sbr")
     val dimDir = base.resolve("dim").toString
     val rawDir = base.resolve("raw").toString
     val dim = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
@@ -1219,7 +1238,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("Bloom skipping: point lookup opens a strict file subset, no false negatives") {
     import graft.operators.{AtomicTable, DataSkipping}
-    val dir = java.nio.file.Files.createTempDirectory("bloom_tbl")
+    val dir = tempRoot("bloom_tbl")
       .resolve("t").toString
     // 4096 unique keys range-partitioned into 8 files: each key lives
     // in exactly one file, the point-lookup worst case for min/max
@@ -1345,7 +1364,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("Ckpt.durable: disk round-trip keeps values, flat stats, earlier rounds stay readable") {
     import graft.operators.Ckpt
-    val dir = java.nio.file.Files.createTempDirectory("ckpt_durable")
+    val dir = tempRoot("ckpt_durable")
     val ck = Ckpt.durable(dir.toString)
     val src = spark.range(0, 50).toDF("id")
       .withColumn("s", concat(lit("v"), col("id")))

@@ -12,7 +12,7 @@ import graft.quality.Checks
 class RefPipelineSpec extends SparkSpec {
 
   private lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft_wh_spec").toString
+    tempRoot("graft_wh_spec").toString
 
   private lazy val cat: Catalog = new Catalog(spark, warehouse)
 
@@ -637,7 +637,7 @@ class RefPipelineSpec extends SparkSpec {
     // REAL injected violation through the extraction path: a mini
     // catalog whose mart scans a raw model directly
     val bad = new Catalog(spark,
-      java.nio.file.Files.createTempDirectory("daglint_bad").toString)
+      tempRoot("daglint_bad").toString)
     import spark.implicits._
     val rawT = bad.saveTable("raw", "src",
       Seq((1L, "a"), (2L, "b")).toDF("k", "v"))

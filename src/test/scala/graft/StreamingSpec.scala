@@ -8,7 +8,7 @@ class StreamingSpec extends SparkSpec {
   /** File-source streams need a directory; stage the single events file
     * into a temp dir once. */
   private lazy val eventsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("events_stream")
+    val dir = tempRoot("events_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -125,7 +125,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val docs = (1L to 500L).toList.toDF("doc_id")
     val shuffled = TA.corpusShuffle(docs, col("doc_id"), "sh1", nShards = 4)
-    val out = java.nio.file.Files.createTempDirectory("shards").toString
+    val out = tempRoot("shards").toString
     TA.writeShards(shuffled, out)
     val shardDirs = new java.io.File(out).listFiles()
       .filter(_.getName.startsWith("shard=")).sortBy(_.getName)
@@ -145,7 +145,7 @@ class StreamingSpec extends SparkSpec {
     // Simulate at-least-once redelivery: the same events file staged
     // twice in the source dir; dropDuplicatesWithinWatermark must emit
     // each event_id exactly once.
-    val dir = java.nio.file.Files.createTempDirectory("events_dup")
+    val dir = tempRoot("events_dup")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events_a.parquet"))
@@ -170,7 +170,7 @@ class StreamingSpec extends SparkSpec {
     // one arbitrarily (the bug fixed in r07): run the REGISTERED query
     // on a perturbed source and check full-row semantics.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("events_perturb")
+    val dir = tempRoot("events_perturb")
     Seq(
       (1L, 10L, "click", 1.5, 1700000000000000L),
       (1L, 10L, "click", 9.9, 1700000000000000L), // same id, new payload
@@ -208,13 +208,13 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("ts", TimestampType), StructField("v", StringType)))
-    val srcDir = java.nio.file.Files.createTempDirectory("upsert_src")
-    val target = java.nio.file.Files.createTempDirectory("upsert_tgt")
+    val srcDir = tempRoot("upsert_src")
+    val target = tempRoot("upsert_tgt")
       .resolve("t").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("upsert_ckpt")
+    val ckpt = tempRoot("upsert_ckpt")
       .toString
     def stage(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("upsert_stage")
+      val tmp = tempRoot("upsert_stage")
       import spark.implicits._
       rows.toDF("k", "v")
         .select(col("k"), current_timestamp().as("ts"), col("v"))
@@ -247,11 +247,11 @@ class StreamingSpec extends SparkSpec {
       StructField("user_id", LongType),
       StructField("event_type", StringType),
       StructField("value", DoubleType)))
-    val srcDir = java.nio.file.Files.createTempDirectory("tws_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("tws_ckpt").toString
+    val srcDir = tempRoot("tws_src")
+    val ckpt = tempRoot("tws_ckpt").toString
     def stage(name: String,
               rows: Seq[(Long, Long, String, Double)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("tws_stage")
+      val tmp = tempRoot("tws_stage")
       import spark.implicits._
       rows.toDF("event_id", "user_id", "event_type", "value")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -312,10 +312,10 @@ class StreamingSpec extends SparkSpec {
       StructField("user_id", LongType),
       StructField("event_type", StringType),
       StructField("value", DoubleType)))
-    val srcDir = java.nio.file.Files.createTempDirectory("twse_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("twse_ckpt").toString
+    val srcDir = tempRoot("twse_src")
+    val ckpt = tempRoot("twse_ckpt").toString
     def stage(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("twse_stage")
+      val tmp = tempRoot("twse_stage")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).head
@@ -395,11 +395,11 @@ class StreamingSpec extends SparkSpec {
       StructField("user_id", LongType),
       StructField("event_type", StringType),
       StructField("value", DoubleType)))
-    val srcDir = java.nio.file.Files.createTempDirectory("twsm_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("twsm_ckpt").toString
+    val srcDir = tempRoot("twsm_src")
+    val ckpt = tempRoot("twsm_ckpt").toString
     def stage(name: String,
               rows: Seq[(Long, Long, String, Double)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("twsm_stage")
+      val tmp = tempRoot("twsm_stage")
       import spark.implicits._
       rows.toDF("event_id", "user_id", "event_type", "value")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -453,11 +453,11 @@ class StreamingSpec extends SparkSpec {
       StructField("user_id", LongType),
       StructField("event_type", StringType),
       StructField("value", DoubleType)))
-    val srcDir = java.nio.file.Files.createTempDirectory("twsl_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("twsl_ckpt").toString
+    val srcDir = tempRoot("twsl_src")
+    val ckpt = tempRoot("twsl_ckpt").toString
     def stage(name: String,
               rows: Seq[(Long, Long, String, Double)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("twsl_stage")
+      val tmp = tempRoot("twsl_stage")
       import spark.implicits._
       rows.toDF("event_id", "user_id", "event_type", "value")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -509,8 +509,8 @@ class StreamingSpec extends SparkSpec {
       StructField("user_id", LongType),
       StructField("ts", TimestampType),
       StructField("value", DoubleType)))
-    val srcDir = java.nio.file.Files.createTempDirectory("twst_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("twst_ckpt").toString
+    val srcDir = tempRoot("twst_src")
+    val ckpt = tempRoot("twst_ckpt").toString
     val t0us = java.time.Instant.parse("2024-01-01T00:00:00Z")
       .getEpochSecond * 1000000L
     def ts(offsetUs: Long) =
@@ -518,7 +518,7 @@ class StreamingSpec extends SparkSpec {
         (t0us + offsetUs) / 1000000L, ((t0us + offsetUs) % 1000000L) * 1000L))
     def stage(name: String,
               rows: Seq[(Long, Long, java.sql.Timestamp, Double)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("twst_stage")
+      val tmp = tempRoot("twst_stage")
       import spark.implicits._
       rows.toDF("event_id", "user_id", "ts", "value")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -577,14 +577,14 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     import graft.llm.{Multimodal, PhashIndex}
     val schema = StructType(Seq(StructField("doc_id", LongType)))
-    val srcDir = java.nio.file.Files.createTempDirectory("ph_src")
-    val sIdx = java.nio.file.Files.createTempDirectory("ph_sidx")
+    val srcDir = tempRoot("ph_src")
+    val sIdx = tempRoot("ph_sidx")
       .resolve("t").toString
-    val bIdx = java.nio.file.Files.createTempDirectory("ph_bidx")
+    val bIdx = tempRoot("ph_bidx")
       .resolve("t").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ph_ckpt").toString
+    val ckpt = tempRoot("ph_ckpt").toString
     def stage(name: String, ids: Seq[Long]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("ph_stage")
+      val tmp = tempRoot("ph_stage")
       import spark.implicits._
       ids.toDF("doc_id").coalesce(1).write.mode("overwrite")
         .parquet(tmp.toString)
@@ -630,11 +630,11 @@ class StreamingSpec extends SparkSpec {
     // DEFAULT-width arm (r19, the weak-mark closure): a fresh sink with
     // no expected size commits the scale-safe 128-bit layout and
     // matches the 128-bit PhashIndex batch twin
-    val sIdx2 = java.nio.file.Files.createTempDirectory("ph_sidx2")
+    val sIdx2 = tempRoot("ph_sidx2")
       .resolve("t").toString
-    val bIdx2 = java.nio.file.Files.createTempDirectory("ph_bidx2")
+    val bIdx2 = tempRoot("ph_bidx2")
       .resolve("t").toString
-    val ckpt2 = java.nio.file.Files.createTempDirectory("ph_ckpt2").toString
+    val ckpt2 = tempRoot("ph_ckpt2").toString
     def runOnce2(): Unit = {
       val stream2 = spark.readStream.schema(schema).parquet(srcDir.toString)
       val q2 = EventStream.phashDedupSink(stream2, sIdx2, ckpt2,
@@ -673,16 +673,16 @@ class StreamingSpec extends SparkSpec {
     import graft.llm.NearDupIndex
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("text", StringType)))
-    val srcDir = java.nio.file.Files.createTempDirectory("nd_src")
-    val sIdx = java.nio.file.Files.createTempDirectory("nd_sidx")
+    val srcDir = tempRoot("nd_src")
+    val sIdx = tempRoot("nd_sidx")
       .resolve("t").toString
-    val bIdx = java.nio.file.Files.createTempDirectory("nd_bidx")
+    val bIdx = tempRoot("nd_bidx")
       .resolve("t").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("nd_ckpt").toString
+    val ckpt = tempRoot("nd_ckpt").toString
     def doc(i: Long): (Long, String) =
       (i, s"alpha beta gamma delta epsilon zeta variant$i tail words")
     def stage(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("nd_stage")
+      val tmp = tempRoot("nd_stage")
       import spark.implicits._
       rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite")
         .parquet(tmp.toString)
@@ -725,13 +725,13 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("v", StringType)))
-    val srcDir = java.nio.file.Files.createTempDirectory("crash_src")
-    val target = java.nio.file.Files.createTempDirectory("crash_tgt")
+    val srcDir = tempRoot("crash_src")
+    val target = tempRoot("crash_tgt")
       .resolve("t").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("crash_ckpt")
+    val ckpt = tempRoot("crash_ckpt")
       .toString
     def stage(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("crash_stage")
+      val tmp = tempRoot("crash_stage")
       import spark.implicits._
       rows.toDF("k", "v").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
@@ -774,12 +774,12 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("v", StringType)))
-    val srcDir = java.nio.file.Files.createTempDirectory("vac_src")
-    val target = java.nio.file.Files.createTempDirectory("vac_tgt")
+    val srcDir = tempRoot("vac_src")
+    val target = tempRoot("vac_tgt")
       .resolve("t").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("vac_ckpt").toString
+    val ckpt = tempRoot("vac_ckpt").toString
     def stage(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("vac_stage")
+      val tmp = tempRoot("vac_stage")
       import spark.implicits._
       rows.toDF("k", "v").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)

@@ -28,7 +28,7 @@ class TimestampFlavorSpec extends SparkSpec {
     * flavor and returns the dir (the `Tables.events` layout). */
   private def writeFlavor(flavor: String): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(s"tsf_$flavor")
+    val dir = tempRoot(s"tsf_$flavor")
     val base = fixture.toDF("event_id", "ts")
     val df = flavor match {
       // surfaced as LongType by the reader — same shape as parquet
@@ -44,7 +44,7 @@ class TimestampFlavorSpec extends SparkSpec {
     }
     // Stage as a single FILE named events.parquet (the testdata layout —
     // the streaming reader treats the dir as a file source).
-    val tmp = java.nio.file.Files.createTempDirectory(s"tsf_stage_$flavor")
+    val tmp = tempRoot(s"tsf_stage_$flavor")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = java.nio.file.Files.list(tmp).toArray.map(_.toString)
       .filter(_.endsWith(".parquet")).head

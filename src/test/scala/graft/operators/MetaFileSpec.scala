@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, Path => JPath}
+import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -16,17 +16,7 @@ import org.apache.spark.sql.functions._
 class MetaFileSpec extends graft.SparkSpec {
   import spark.implicits._
 
-  private val roots = scala.collection.mutable.ListBuffer.empty[JPath]
-
-  private def tmp(name: String): String = {
-    roots += Files.createTempDirectory(name)
-    roots.last.toString
-  }
-
-  override def afterAll(): Unit = {
-    roots.foreach(graft.queries.Q.deleteRecursively)
-    super.afterAll()
-  }
+  private def tmp(name: String): String = tempRoot(name).toString
 
   private def bytes(p: String): Array[Byte] = Files.readAllBytes(Paths.get(p))
 
@@ -62,14 +52,14 @@ class MetaFileSpec extends graft.SparkSpec {
     df.collect().map(_.toSeq).toSet
 
   test("MetaFile: strict decode rejects torn, empty, trailing and missing-field input") {
-    val good = TxnCommit.Staged("d", 1234567890123L)
+    val good = SnapshotManifest.Staged("d", 1234567890123L)
     val text = MetaFile.encode(Seq(good))
     assert(text == """[{"dir":"d","version":1234567890123}]""")
-    assert(MetaFile.decode[Seq[TxnCommit.Staged]](text).contains(Seq(good)))
+    assert(MetaFile.decode[Seq[SnapshotManifest.Staged]](text).contains(Seq(good)))
     Seq(text.dropRight(1), "", text + "]", text + "x",
       """[{"dir":"d"}]""", """[{"dir":"d","version":null}]""",
       """[{"dir":"d","version":1,"extra":2}]""").foreach { bad =>
-      assert(MetaFile.decode[Seq[TxnCommit.Staged]](bad).isEmpty, bad)
+      assert(MetaFile.decode[Seq[SnapshotManifest.Staged]](bad).isEmpty, bad)
     }
     val bloom = DataSkipping.FileBloom("f", Array[Byte](0, -1, 7))
     val back = MetaFile.decode[DataSkipping.FileBloom](MetaFile.encode(bloom))
@@ -80,13 +70,8 @@ class MetaFileSpec extends graft.SparkSpec {
     val root = tmp("meta_txn")
     val (ta, tb) = (s"$root/a", s"$root/b")
     val manifests = s"$root/_snapshots"
-    TxnCommit.commitAll(spark, s"$root/_txn", "t0",
-      Seq(ta -> Seq(1L).toDF("k"), tb -> Seq(2L).toDF("k")), Some(manifests))
-    val staged = Seq(TxnCommit.Staged(ta, 7L), TxnCommit.Staged(tb, 8L))
-    TxnCommit.writeJournal(spark, s"$root/_txn", "t1", staged, Some(manifests))
-    val journal = s"$root/_txn/txn_t1.json"
-    sweep[VersionRecord.Record](journal, (staged, Some(manifests)))(
-      VersionRecord.read(spark, new Path(journal)))
+    SnapshotManifest.commitAll(spark, manifests,
+      Seq(ta -> Seq(1L).toDF("k"), tb -> Seq(2L).toDF("k")))
     val manifest = s"$manifests/manifest_000000000000.json"
     sweep(manifest, (0L, Map(ta -> 0L, tb -> 0L)))(
       SnapshotManifest.latest(spark, manifests))
@@ -168,28 +153,21 @@ class MetaFileSpec extends graft.SparkSpec {
 
   test("write-once: a journal or manifest written over a valid one fails and keeps the occupant") {
     val root = tmp("meta_once")
-    val journalDir = s"$root/_txn"
-    val first = Seq(TxnCommit.Staged(s"$root/a", 1L))
-    val second = Seq(TxnCommit.Staged(s"$root/b", 2L))
-    TxnCommit.writeJournal(spark, journalDir, "t1", first)
-    val journal = s"$journalDir/txn_t1.json"
-    val before = bytes(journal).toSeq
-    intercept[IllegalStateException](
-      TxnCommit.writeJournal(spark, journalDir, "t1", second))
-    assert(bytes(journal).toSeq == before)
+    val first = Seq(SnapshotManifest.Staged(s"$root/a", 1L))
+    val second = Seq(SnapshotManifest.Staged(s"$root/b", 2L))
     val manifests = s"$root/_snapshots"
     assert(SnapshotManifest.publish(spark, manifests, first) == 0L)
     val manifest = s"$manifests/manifest_000000000000.json"
     val pins = bytes(manifest).toSeq
     // a second publisher that resolved the same seq
     intercept[IllegalStateException](
-      VersionRecord.write(spark, manifest, second))
+      SnapshotManifest.write(spark, manifests, 0L, second))
     assert(bytes(manifest).toSeq == pins)
     assert(SnapshotManifest.latest(spark, manifests)
       .contains((0L, Map(s"$root/a" -> 1L))))
     // a torn occupant is reclaimed
     put(manifest, pins.take(5).toArray)
-    VersionRecord.write(spark, manifest, second)
+    SnapshotManifest.write(spark, manifests, 0L, second)
     assert(SnapshotManifest.latest(spark, manifests)
       .contains((0L, Map(s"$root/b" -> 2L))))
   }
